@@ -221,9 +221,11 @@ def test_minhash_shuffles_are_signature_sized(spark):
     # formatted plan prints each exchange's Input [...] on the next line)
     lines = formatted_plan(df).splitlines()
     for i, ln in enumerate(lines):
-        if ln.startswith("(") and ") Exchange" in ln and "hashpartitioning" in lines[i + 2]:
-            inp = lines[i + 1]
-            assert "shingle" not in inp and "text#" not in inp, f"{ln}\n{inp}"
+        if ln.startswith("(") and ") Exchange" in ln:
+            assert i + 2 < len(lines), f"plan ends on an Exchange line: {ln}"
+            if "hashpartitioning" in lines[i + 2]:
+                inp = lines[i + 1]
+                assert "shingle" not in inp and "text#" not in inp, f"{ln}\n{inp}"
 
 
 def test_spread_input_guard(spark):
@@ -524,6 +526,21 @@ def test_tfidf_top_terms_plan_and_values(spark):
     assert rows[0].score >= rows[1].score >= rows[2].score
     # rank-1 must beat every other term of the doc on (score, term) order
     assert rows[0].score == rows[0].tf * (1000 * docs.count() // rows[0].df)
+
+
+def test_global_rank_windows_are_bounded(spark):
+    """The partition-less rank windows of bm25_topk (query-term pick)
+    and vocab_coverage (top-V types) are filtered on a literal rank
+    bound, so Spark executes each as a TakeOrderedAndProject top-k
+    instead of sorting the whole vocabulary.  (bm25's per-term window
+    plans a WindowGroupLimit, which says nothing about the global one.)"""
+    from texel_spark.operators.text import bm25_topk, vocab_coverage
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    for df in (bm25_topk(docs), vocab_coverage(docs)):
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "TakeOrderedAndProject" in plan, plan
 
 
 def test_streaming_repetition_stats_parity(spark, tmp_path):

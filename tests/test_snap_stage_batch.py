@@ -179,3 +179,27 @@ def test_stage_wkt_text_stable_under_batch_composition(spark):
     mixed = wkt_of([clean, odd], "d-clean")
     assert alone == mixed
     assert alone  # the clean row did emit
+
+
+def test_stage_empty_geometries_emit_nothing():
+    """EMPTY spans (POLYGON / MULTIPOLYGON / POINT EMPTY) emit no rows and
+    leave the clean row that shares their batch unchanged."""
+    from texel_spark.operators.snap_tiles import _process_batch
+
+    tms = load_embedded("NetherlandsRDNewQuad")
+    tm_ids = [5, 9]
+    cfg = SnapConfig(ignore_outside_grid=True, keep_points_and_lines=True)
+    clean = ("d-clean", 0, "POLYGON ((155000 463000, 156000 463000, 156000 464000, 155000 464000))")
+    empties = [("d-poly", 1, "POLYGON EMPTY"), ("d-multi", 2, "MULTIPOLYGON EMPTY"), ("d-point", 3, "POINT EMPTY")]
+
+    def run(rows):
+        pdf = pd.DataFrame(
+            {"doc_id": [r[0] for r in rows], "span_idx": [r[1] for r in rows], "wkt": [r[2] for r in rows]}
+        )
+        return _process_batch(pdf, tms, tm_ids, cfg)
+
+    alone = run([clean])
+    mixed = run([clean, *empties])
+    assert set(mixed["doc_id"]) == {"d-clean"}
+    assert mixed.to_dict("records") == alone.to_dict("records")
+    assert len(alone) == len(tm_ids)

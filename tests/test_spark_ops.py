@@ -1535,15 +1535,22 @@ def test_tile_diff_statuses(spark):
     assert expected, "fixture must touch some tiles"
 
 
-def test_vocab_rank_two_level_parity(spark):
-    """The size-gated bucketed (two-level) vocabulary rank and the single
-    bounded window produce byte-identical results - the gate is a plan
-    choice, never a semantics choice."""
-    from texel_spark.operators.text import bm25_topk, tfidf_top_terms, vocab_coverage
+def test_word_count_operators_match_duckdb_oracles(spark):
+    """tfidf_top_terms, bm25_topk and vocab_coverage return exactly the
+    rows of their DuckDB oracles on the sf0.01 documents table."""
+    duckdb = pytest.importorskip("duckdb")
+    from texel_spark.operators import text
 
-    docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    for fn, kw in ((vocab_coverage, {}), (bm25_topk, {}), (tfidf_top_terms, {})):
-        a = sorted(map(tuple, fn(docs, two_level=False, **kw).collect()))
-        b = sorted(map(tuple, fn(docs, two_level=True, **kw).collect()))
-        assert a == b, f"{fn.__name__} two-level mismatch"
-        assert len(a) > 0
+    path = "/root/testdata/sf0.01/documents.parquet"
+    docs = spark.read.parquet(path)
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}')")
+    for fn, sql in (
+        (text.tfidf_top_terms, text.tfidf_top_terms_sql),
+        (text.bm25_topk, text.bm25_topk_sql),
+        (text.vocab_coverage, text.vocab_coverage_sql),
+    ):
+        got = sorted(map(tuple, fn(docs).collect()))
+        want = sorted(con.sql(sql()).fetchall())
+        assert got == want, f"{fn.__name__} differs from its DuckDB oracle"
+        assert len(got) > 0

@@ -9,28 +9,6 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import LongType
 
 
-@pandas_udf(LongType())
-def morton_z(tx: pd.Series, ty: pd.Series) -> pd.Series:
-    """Vectorized Morton interleave (numpy int64 bit ops, no per-row Python)."""
-    from ..grid.morton import to_z_np
-
-    return pd.Series(to_z_np(tx.to_numpy("int64"), ty.to_numpy("int64")))
-
-
-@pandas_udf(LongType())
-def morton_x(z: pd.Series) -> pd.Series:
-    from ..grid.morton import from_z_np
-
-    return pd.Series(from_z_np(z.to_numpy("int64"))[0])
-
-
-@pandas_udf(LongType())
-def morton_y(z: pd.Series) -> pd.Series:
-    from ..grid.morton import from_z_np
-
-    return pd.Series(from_z_np(z.to_numpy("int64"))[1])
-
-
 def hilbert_udf(zoom: int):
     """Hilbert d-index pandas UDF bound to a zoom (grid order 2^zoom)."""
 

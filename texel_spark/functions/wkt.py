@@ -33,10 +33,18 @@ def _split_groups(s: str):
     return groups
 
 
+_KINDS = ("multipoint", "multilinestring", "multipolygon", "polygon", "linestring", "point")
+
+
 def parse_wkt(wkt: str):
     """Returns (kind, coords): ('polygon', rings) | ('multipolygon',
-    polygons) | ('point', (x, y)) | ('linestring', ring)."""
+    polygons) | ('point', (x, y)) | ('linestring', ring).  ``<KIND> EMPTY``
+    returns the kind with empty coordinates."""
     s = wkt.strip()
+    if s[-5:].upper() == "EMPTY":
+        kind = s.split(None, 1)[0].lower()
+        if kind in _KINDS:
+            return kind, []
     upper = s[:20].upper()
     if upper.startswith("MULTIPOINT"):
         body = s[s.index("(") + 1 : s.rindex(")")]

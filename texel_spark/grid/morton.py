@@ -5,8 +5,9 @@ Same contract as the reference's morton package
 bits) and y (odd bits); inputs must fit in 32 bits.
 
 Scalar versions are used inside the snap kernel; ``to_z_np`` is the
-vectorized variant used for DataFrame tile-key assignment at scale
-(numpy int64 bit ops - no per-row Python).
+vectorized variant the batch snap kernel uses (numpy int64 bit ops - no
+per-row Python).  DataFrame tile keys use the JVM column expression
+``operators.snap_tiles.morton_z_expr``.
 """
 
 from __future__ import annotations

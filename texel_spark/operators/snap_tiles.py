@@ -68,10 +68,12 @@ SNAPPED_SCHEMA = StructType(
 
 def _emit_nonpolygon(emit, doc_id, span_idx, wkt, tm_ids_):
     """Non-polygon spans pass through unchanged to every zoom
-    (processing/processing.go:62-69)."""
+    (processing/processing.go:62-69); EMPTY geometries emit nothing."""
     from ..functions.wkt import geometry_to_wkt, parse_wkt
 
     kind, coords = parse_wkt(wkt)
+    if not coords:
+        return
     if kind == "point":
         bbox = (coords[0], coords[1], coords[0], coords[1])
     elif kind == "multilinestring":
@@ -99,7 +101,7 @@ def _legacy_batch(pdf, tms_, tm_ids_, cfg, emit):
     for row_i, wkt in enumerate(pdf["wkt"]):
         kind, coords = parse_wkt(wkt)
         parsed.append((kind, coords))
-        if kind == "polygon":
+        if kind == "polygon" and coords:
             members.append(coords)
             member_row.append(row_i)
         elif kind == "multipolygon":
@@ -376,13 +378,6 @@ def zoom_params_df(spark: SparkSession, tms: TileMatrixSet, tm_ids: list[int]) -
     return spark.createDataFrame(
         rows, "zoom int, ox double, oy double, tsx double, tsy double, mw int, mh int, top_left boolean"
     )
-
-
-def morton_udf():
-    """Vectorized Morton interleave (numpy bit ops, no per-row Python)."""
-    from ..functions.udfs import morton_z
-
-    return morton_z
 
 
 def morton_z_expr(tx, ty):

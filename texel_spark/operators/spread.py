@@ -30,33 +30,6 @@ import os
 from pyspark.sql import DataFrame
 
 
-def input_bytes(df: DataFrame) -> int | None:
-    """Total on-disk bytes of a frame's (local) input files, or None when
-    unknowable cheaply (no files / remote scheme).  Used for cost-based
-    plan choices (e.g. bounded-vs-bucketed vocabulary ranking) the same
-    way Spark's own size estimates gate broadcast joins - the choice
-    must never change results, only the plan."""
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return None
-    if not files:
-        return None
-    total = 0
-    for f in files:
-        if f.startswith("file:"):
-            path = f.split(":", 1)[1]
-        elif ":" in f.split("/", 1)[0]:
-            return None
-        else:
-            path = f
-        try:
-            total += os.path.getsize(path)
-        except OSError:
-            return None
-    return total
-
-
 def spread_input(df: DataFrame, multiplier: int = 2) -> DataFrame:
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism

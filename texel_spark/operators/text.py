@@ -10,28 +10,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
-from .spread import input_bytes, spread_input
+from .spread import spread_input
 
 STOPWORDS = ("the", "a", "of", "and", "in", "to", "is", "for", "on", "with")
-
-# Above this input size, the word-count family switches to its
-# scale shapes: bucketed two-level rank windows (per-bucket heads, then
-# a global window over the bounded survivor set) and tf-derived
-# dl/cnt/t_tot branches (one corpus explode feeds everything) instead
-# of independent single-task passes.  A cost-based plan choice with
-# IDENTICAL results either way, exactly like Spark's own size-gated
-# broadcast decision; 16 MiB is the measured crossover on this host
-# (small-mode's concurrent unspread branches win below it, the
-# one-explode serial chain wins above - A/B at 5.9 MB and 18 MB in
-# OPTIMIZATION_r06.md).
-_TWO_LEVEL_RANK_BYTES = 16 * 1024 * 1024
-
-
-def _use_two_level(documents, two_level: bool | None) -> bool:
-    if two_level is not None:
-        return two_level
-    b = input_bytes(documents)
-    return b is None or b > _TWO_LEVEL_RANK_BYTES
 
 
 def token_metric_cols(col: str = "text") -> dict:
@@ -420,7 +401,7 @@ FROM b
 """
 
 
-def tfidf_top_terms(documents: DataFrame, k: int = 5, two_level: bool | None = None) -> DataFrame:
+def tfidf_top_terms(documents: DataFrame, k: int = 5) -> DataFrame:
     """Top-k characteristic terms per document by an integer-exact
     tf-idf surrogate: score = tf * floor(1000 * N / df).
 
@@ -432,12 +413,12 @@ def tfidf_top_terms(documents: DataFrame, k: int = 5, two_level: bool | None = N
     scale cares about the ranking, not the absolute value.  Ties break
     (score desc, term asc), pinned in both engines.
 
-    Scale shape: the classic two-aggregate word-count plan - (doc,term)
-    tf with map-side combine, term df likewise, one equi-join on term
-    (AQE broadcasts it when the vocabulary is small), then a per-doc
-    window bounded by the doc's distinct-term count.  The corpus-size N
-    scalar joins as a broadcast single row, never a driver collect in
-    the plan.
+    Scale shape: one corpus explode feeds a (doc,term) tf aggregate with
+    map-side combine; term df is rows per term of tf, one equi-join on
+    term (AQE broadcasts it when the vocabulary is small), then a
+    per-doc window bounded by the doc's distinct-term count.  The
+    corpus-size N scalar joins as a broadcast single row, never a
+    driver collect in the plan.
     """
     toks = F.split(F.col("text"), " ")
     dt = spread_input(documents.select("doc_id", "text")).select(
@@ -445,22 +426,9 @@ def tfidf_top_terms(documents: DataFrame, k: int = 5, two_level: bool | None = N
     )
     tf = dt.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     # df = distinct docs per term = rows per term of tf (tf is already
-    # one row per (doc, term)).  Large corpora derive it from tf's
-    # exchange instead of a second full explode + CORPUS-sized distinct
-    # shuffle (guide 2.4 - AQE reuses the (doc_id, term) shuffle across
-    # both branches); small corpora keep the independent distinct branch,
-    # which materializes concurrently instead of serializing behind the
-    # tf exchange.  Identical results either way (size-gated plan choice,
-    # same helper as the vocabulary rank forms).
-    if _use_two_level(documents, two_level):
-        df_ = tf.groupBy("term").agg(F.count("*").alias("df"))
-    else:
-        df_ = (
-            documents.select("doc_id", F.explode(toks).alias("term"))
-            .distinct()
-            .groupBy("term")
-            .agg(F.count("*").alias("df"))
-        )
+    # one row per (doc, term)): no second corpus explode, no corpus-sized
+    # distinct shuffle
+    df_ = tf.groupBy("term").agg(F.count("*").alias("df"))
     n_docs = documents.agg(F.countDistinct("doc_id").alias("n_docs"))
     scored = (
         tf.join(df_, "term")
@@ -587,7 +555,6 @@ def bm25_topk(
     k: int = 10,
     n_q: int = 5,
     skip_top: int = 10,
-    two_level: bool | None = None,
 ) -> DataFrame:
     """BM25 retrieval: top-k documents per query term, integer-exact.
 
@@ -608,62 +575,36 @@ def bm25_topk(
     i.e. far beyond any single-query working set; shard scores per
     partition before that).
 
-    Scale shape: the classic inverted-index probe - (doc,term) tf and
-    per-doc length from one exploded pass (map-side combined), the tiny
-    query-term set broadcast into the tf table (equi-join on term cuts
-    the corpus to the terms' posting lists), one window per query term
-    bounded by that term's df.
+    Scale shape: the classic inverted-index probe - (doc,term) tf from
+    the spread explode (map-side combined), the tiny query-term set
+    broadcast into the tf table (equi-join on term cuts the corpus to
+    the terms' posting lists), one window per query term bounded by
+    that term's df.  Per-doc length, term counts and the token total
+    come from independent map-side-combined passes over an unspread
+    explode: their shuffles are doc-/vocab-sized, and the branches
+    materialize concurrently instead of serializing behind the tf
+    exchange.  The query-term rank is one global window; Spark plans
+    its ``r <= skip_top + n_q`` filter as a TakeOrderedAndProject, so
+    it never holds more than that many rows, whatever the vocabulary.
     """
     toks = F.split(F.col("text"), " ")
     dt = spread_input(documents.select("doc_id", "text")).select(
         "doc_id", F.explode(toks).alias("term")
     )
     tf = dt.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
-    # df always derives from tf (df = rows per term of the already-
-    # distinct (doc, term) table): this removes the CORPUS-sized
-    # dt.distinct() shuffle, the one derivation that matters at 100 TB.
+    # df = rows per term of the already-distinct (doc, term) table: no
+    # corpus-sized dt.distinct() shuffle
     df_ = tf.groupBy("term").agg(F.count("*").alias("df"))
-    if _use_two_level(documents, two_level):
-        # large corpus: dl / cnt / t_tot also derive from tf, so ONE
-        # corpus explode + one (doc, term) shuffle feeds every branch
-        # (AQE stage reuse) instead of four separate corpus passes
-        dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-        cnt = tf.groupBy("term").agg(F.sum("tf").alias("cnt"))
-        totals = tf.agg(F.sum("tf").alias("t_tot")).crossJoin(
-            documents.agg(F.countDistinct("doc_id").alias("n_docs"))
-        )
-    else:
-        # small corpus: the same values from independent map-side-
-        # combined passes over an unspread explode - their shuffles are
-        # doc-/vocab-sized and the branches materialize CONCURRENTLY
-        # instead of serializing behind the tf exchange (measured ~1 s
-        # of stage latency on the sandbox corpus); identical results
-        dt0 = documents.select("doc_id", F.explode(toks).alias("term"))
-        dl = dt0.groupBy("doc_id").agg(F.count("*").alias("dl"))
-        cnt = dt0.groupBy("term").agg(F.count("*").alias("cnt"))
-        totals = dt0.agg(F.count("*").alias("t_tot")).crossJoin(
-            documents.agg(F.countDistinct("doc_id").alias("n_docs"))
-        )
-    # two-level rank (scale-safe): per-bucket top-(skip_top + n_q) heads
-    # first, global window over the bounded 64 x 15 survivor set second.
-    # Identical selection: every term with global rank r <= skip_top+n_q
-    # is top-(skip_top+n_q) in its own bucket, and all terms above it are
-    # too, so its survivor rank EQUALS its global rank - no partition-
-    # less window ever sees the unbounded vocabulary (VERDICT r5 item 3).
-    # Size-gated (_use_two_level): on small corpora the single window
-    # over a small vocabulary is measurably cheaper than the extra
-    # bucket exchange; the result is identical either way (pinned by
-    # test_vocab_rank_two_level_parity).
+    dt0 = documents.select("doc_id", F.explode(toks).alias("term"))
+    dl = dt0.groupBy("doc_id").agg(F.count("*").alias("dl"))
+    cnt = dt0.groupBy("term").agg(F.count("*").alias("cnt"))
+    totals = dt0.agg(F.count("*").alias("t_tot")).crossJoin(
+        documents.agg(F.countDistinct("doc_id").alias("n_docs"))
+    )
     head = skip_top + n_q
-    src = cnt
-    if _use_two_level(documents, two_level):
-        wb = Window.partitionBy(F.pmod(F.xxhash64("term"), F.lit(64))).orderBy(
-            F.col("cnt").desc(), F.col("term").asc()
-        )
-        src = cnt.withColumn("rb", F.row_number().over(wb)).where(F.col("rb") <= head).drop("rb")
     wq = Window.orderBy(F.col("cnt").desc(), F.col("term").asc())
     qterms = (
-        src.withColumn("r", F.row_number().over(wq))
+        cnt.withColumn("r", F.row_number().over(wq))
         .where((F.col("r") > skip_top) & (F.col("r") <= head))
         .select("term")
     )
@@ -732,7 +673,6 @@ QUALIFY rnk <= {k}
 def vocab_coverage(
     documents: DataFrame,
     sizes: tuple[int, ...] = (5, 10, 20, 50),
-    two_level: bool | None = None,
 ) -> DataFrame:
     """Tokenizer-vocabulary sizing report: for each candidate vocab size
     V, how many token occurrences the top-V types cover and the implied
@@ -746,42 +686,32 @@ def vocab_coverage(
 
     Scale shape: one word-count aggregate collapses the corpus to its
     vocabulary (map-side combine; the shuffle carries one row per TYPE,
-    not per token), and only that vocabulary - millions of rows at web
-    scale, not billions - enters the global rank window.  Candidate
-    sizes explode from a literal array: no per-V rescan of anything.
+    not per token), and one global rank window orders that vocabulary.
+    The literal ``rnk <= max(sizes)`` filter sits right after the
+    window, so Spark plans it as a TakeOrderedAndProject that keeps
+    only the top max(sizes) types, whatever the vocabulary size.
+    Candidate sizes explode from a literal array over those few rows:
+    no per-V rescan of anything.
     """
-    from pyspark.sql import Window
-
     # no spread_input: same low-cardinality-aggregate reasoning as
     # unigram_quality - the word count collapses map-side, spreading the
     # scan only multiplies partial-agg shuffle rows
     toks = F.explode(F.split(F.col("text"), " ")).alias("token")
     wc = documents.select(toks).groupBy("token").agg(F.count("*").alias("c"))
-    # two-level rank (scale-safe): per-bucket top-max(sizes) heads first,
-    # then a global window over the BOUNDED 64 x max(sizes) survivor set.
-    # Membership and rank values for rnk <= max(sizes) are identical to a
-    # global rank over the full vocabulary (every globally-top token is
-    # top-of-bucket, and everything ranked above a kept token survives
-    # too), so no partition-less window ever sees the unbounded
-    # vocabulary (VERDICT r5 item 3).  Totals come from a scalar
-    # aggregate over the same word-count frame (AQE reuses wc's shuffle
-    # across the two branches) and broadcast-join onto the ranked heads.
-    # Size-gated like bm25_topk's query-term rank: identical results,
-    # cheapest plan for the input size.
-    maxv = max(sizes)
-    heads = wc
-    if _use_two_level(documents, two_level):
-        wb = Window.partitionBy(F.pmod(F.xxhash64("token"), F.lit(64))).orderBy(
-            F.col("c").desc(), F.col("token").asc()
-        )
-        heads = wc.withColumn("rb", F.row_number().over(wb)).where(F.col("rb") <= maxv).drop("rb")
+    # totals come from a scalar aggregate over the same word-count frame
+    # (AQE reuses wc's shuffle across the two branches) and
+    # broadcast-join onto the ranked heads
     totals = wc.agg(F.sum("c").alias("total_tokens"))
-    ranked = heads.select(
-        "c",
-        F.row_number()
-        .over(Window.orderBy(F.col("c").desc(), F.col("token").asc()))
-        .alias("rnk"),
-    ).crossJoin(F.broadcast(totals))
+    ranked = (
+        wc.select(
+            "c",
+            F.row_number()
+            .over(Window.orderBy(F.col("c").desc(), F.col("token").asc()))
+            .alias("rnk"),
+        )
+        .where(F.col("rnk") <= max(sizes))
+        .crossJoin(F.broadcast(totals))
+    )
     return (
         ranked.select(
             F.explode(F.array(*[F.lit(v) for v in sizes])).alias("vocab_size"),
