@@ -9,9 +9,8 @@ spatial-join output rows per second of end-to-end wall time for the
 spatial core (snap pipeline + PIP join + kNN).  Per-query wall times for
 the full operator sweep are reported under "queries".
 
-Scaling evidence (north rule): run twice with SPARK_GRAFT_CPUS=8 and =32
-on the same input; efficiency = (v32 / v8) / 4.  tools/bench_scaling.py
-automates that and writes BENCH/BASELINE.md.
+Repeated, per-layer measurements (workloads, seeds, spread, traced
+runs) live in perfbench/: `python3 perfbench/run.py --workload snap_tiles`.
 """
 
 from __future__ import annotations
@@ -161,8 +160,8 @@ def main() -> None:
     exact_big = {(r["query_id"], r["neighbor_id"]) for r in similarity.cosine_topk(big).collect()}
     # first run pays JIT + codegen compile + Arrow worker spin-up (~4x the
     # steady-state cost); report both so the amortized per-query cost a
-    # long-lived service sees is tracked, same convention as the scaling
-    # harness's untimed plan warm-up (tools/bench_scaling.py)
+    # long-lived service sees is tracked, same convention as perfbench's
+    # untimed warm-up passes (perfbench/run.py)
     t0 = time.perf_counter()
     km_df = similarity.ivf_kmeans_topk(big, centroids=cents, nprobe=16)
     km_big = {(r["query_id"], r["neighbor_id"]) for r in km_df.collect()}

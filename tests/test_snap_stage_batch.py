@@ -203,3 +203,96 @@ def test_stage_empty_geometries_emit_nothing():
     assert set(mixed["doc_id"]) == {"d-clean"}
     assert mixed.to_dict("records") == alone.to_dict("records")
     assert len(alone) == len(tm_ids)
+
+
+_CLEAN_SPAN = ("d-clean", 0, "POLYGON ((155000 463000, 156000 463000, 156000 464000, 155000 464000))")
+
+
+def _assert_malformed_span_raises(wkt, match):
+    """A malformed span fails the batch with one ValueError naming its
+    doc_id/span_idx: the array codec routes it to the scalar lane, whose
+    parser rejects it before the kernel sees it (no numpy warning, no
+    silently dropped span)."""
+    import warnings
+
+    from texel_spark.functions.wkt_batch import parse_polygons_batch_resilient
+    from texel_spark.operators.snap_tiles import _process_batch
+
+    with pytest.raises(ValueError, match=match):
+        parse_wkt(wkt)
+    assert parse_polygons_batch_resilient([_CLEAN_SPAN[2], wkt])[1] == [1]
+    rows = [_CLEAN_SPAN, ("d-bad", 7, wkt)]
+    pdf = pd.DataFrame({"doc_id": [r[0] for r in rows], "span_idx": [r[1] for r in rows], "wkt": [r[2] for r in rows]})
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        with pytest.raises(ValueError, match=r"doc_id='d-bad' span_idx=7: malformed WKT: .*" + match):
+            _process_batch(pdf, load_embedded("NetherlandsRDNewQuad"), [5, 9], SnapConfig(ignore_outside_grid=True))
+
+
+def test_malformed_wkt_point_with_one_ordinate_raises():
+    _assert_malformed_span_raises("POLYGON ((1 2, 3))", "fewer than 2 ordinates")
+
+
+@pytest.mark.parametrize(
+    "wkt",
+    [
+        "POLYGON ((1 2, 3 4, 5 6, 1 2)",
+        "POLYGON ((155000 463000, 156000 463000, 156000 464000)), ((155000 463000, 155500 463000, 155500 463500))",
+    ],
+)
+def test_malformed_wkt_unbalanced_parens_raises(wkt):
+    _assert_malformed_span_raises(wkt, "unbalanced parens")
+
+
+@pytest.mark.parametrize("wkt", ["POLYGON (1 2, 3 4, 5 6)", "MULTIPOLYGON ((1 2, 3 4, 5 6))"])
+def test_malformed_wkt_polygon_without_rings_raises(wkt):
+    _assert_malformed_span_raises(wkt, "polygon without rings")
+
+
+@pytest.mark.parametrize("bad", ["nan", "inf", "-inf"])
+def test_malformed_wkt_non_finite_ordinate_raises(bad):
+    _assert_malformed_span_raises(
+        f"POLYGON ((155000 463000, {bad} 463000, 156000 464000, 155000 464000))", "non-finite ordinate"
+    )
+
+
+def test_pipeline_output_independent_of_partitioning(spark, tmp_path):
+    """The flagship's tile rows and snapped geometries are the same rows
+    whatever the scan split count or Arrow batch size: 1 vs 16 minimum
+    file partitions, 2000 vs 97 records per Arrow batch."""
+    from texel_spark.operators.snap_tiles import snap_documents, snap_pipeline_df, snapped_geometries
+    from texel_spark.sources.documents import geometry_spans, materialize_documents
+
+    tms = load_embedded("NetherlandsRDNewQuad")
+    tm_ids = [5, 9, 12]
+    path = str(tmp_path / "docs")
+    materialize_documents(spark, 300, path, partitions=6)
+
+    def outputs(conf):
+        saved = {k: spark.conf.get(k, None) for k in conf}
+        try:
+            for k, v in conf.items():
+                spark.conf.set(k, v)
+            docs = spark.read.parquet(path)
+            tiles = sorted(tuple(r) for r in snap_pipeline_df(docs, tms, tm_ids).collect())
+            geoms = sorted(
+                tuple(r) for r in snapped_geometries(snap_documents(geometry_spans(docs), tms, tm_ids)).collect()
+            )
+            return docs.rdd.getNumPartitions(), tiles, geoms
+        finally:
+            for k, v in saved.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
+
+    split = "spark.sql.files.minPartitionNum"
+    batch = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    n_few, tiles, geoms = outputs({split: "1", batch: "2000"})
+    assert tiles and geoms
+    for conf in ({split: "16", batch: "2000"}, {split: "1", batch: "97"}, {split: "16", batch: "97"}):
+        n, tiles_c, geoms_c = outputs(conf)
+        assert tiles_c == tiles, conf
+        assert geoms_c == geoms, conf
+        if conf[split] == "16":
+            assert n > n_few, (n, n_few)

@@ -11,9 +11,21 @@ list[polygon].
 
 from __future__ import annotations
 
+import math
+
+
+def _parse_point(text: str):
+    """One WKT point: 2+ finite ordinates (ValueError otherwise)."""
+    pt = tuple(float(o) for o in text.split())
+    if len(pt) < 2:
+        raise ValueError(f"malformed WKT: point {text.strip()!r} has fewer than 2 ordinates")
+    if not all(map(math.isfinite, pt)):
+        raise ValueError(f"malformed WKT: non-finite ordinate in point {text.strip()!r}")
+    return pt
+
 
 def _parse_ring(body: str):
-    return [tuple(float(o) for o in pt.split()) for pt in body.split(",")]
+    return [_parse_point(pt) for pt in body.split(",")]
 
 
 def _split_groups(s: str):
@@ -28,6 +40,8 @@ def _split_groups(s: str):
             depth += 1
         elif ch == ")":
             depth -= 1
+            if depth < 0:
+                raise ValueError("malformed WKT: unbalanced parens")
             if depth == 0:
                 groups.append(s[start:i])
     return groups
@@ -39,37 +53,42 @@ _KINDS = ("multipoint", "multilinestring", "multipolygon", "polygon", "linestrin
 def parse_wkt(wkt: str):
     """Returns (kind, coords): ('polygon', rings) | ('multipolygon',
     polygons) | ('point', (x, y)) | ('linestring', ring).  ``<KIND> EMPTY``
-    returns the kind with empty coordinates."""
+    returns the kind with empty coordinates.  Malformed text - unbalanced
+    parens, a polygon without rings, a point with fewer than 2 ordinates,
+    a NaN/inf ordinate - raises ValueError."""
     s = wkt.strip()
     if s[-5:].upper() == "EMPTY":
         kind = s.split(None, 1)[0].lower()
         if kind in _KINDS:
             return kind, []
+    if s.count("(") != s.count(")"):
+        raise ValueError(f"malformed WKT: unbalanced parens in {s[:40]!r}")
     upper = s[:20].upper()
     if upper.startswith("MULTIPOINT"):
         body = s[s.index("(") + 1 : s.rindex(")")]
         groups = _split_groups(body)
-        if groups:
-            pts = [tuple(float(o) for o in g.split()) for g in groups]
-        else:
-            pts = [tuple(float(o) for o in p.split()) for p in body.split(",")]
-        return "multipoint", pts
+        return "multipoint", [_parse_point(p) for p in (groups or body.split(","))]
     if upper.startswith("MULTILINESTRING"):
         body = s[s.index("(") + 1 : s.rindex(")")]
         return "multilinestring", [_parse_ring(g) for g in _split_groups(body)]
     if upper.startswith("MULTIPOLYGON"):
         body = s[s.index("(") + 1 : s.rindex(")")]
         polys = [[_parse_ring(r) for r in _split_groups(g)] for g in _split_groups(body)]
+        if not polys or not all(polys):
+            raise ValueError(f"malformed WKT: polygon without rings in {s[:40]!r}")
         return "multipolygon", polys
     if upper.startswith("POLYGON"):
         body = s[s.index("(") + 1 : s.rindex(")")]
-        return "polygon", [_parse_ring(r) for r in _split_groups(body)]
+        rings = [_parse_ring(r) for r in _split_groups(body)]
+        if not rings:
+            raise ValueError(f"malformed WKT: polygon without rings in {s[:40]!r}")
+        return "polygon", rings
     if upper.startswith("LINESTRING"):
         body = s[s.index("(") + 1 : s.rindex(")")]
         return "linestring", _parse_ring(body)
     if upper.startswith("POINT"):
         body = s[s.index("(") + 1 : s.rindex(")")]
-        return "point", tuple(float(o) for o in body.split())
+        return "point", _parse_point(body)
     raise ValueError(f"unsupported WKT: {s[:40]}")
 
 

@@ -18,9 +18,10 @@ programs:
   round-trips are identical to the scalar ``repr``-based formatter.
 
 Anything surprising (non-ASCII, non-2D coordinates, unbalanced parens,
-EMPTY geometries) raises WktBatchFallback and the caller routes the
-row/batch through the scalar codec, so behavior on odd input is
-unchanged.
+NaN/inf ordinates, EMPTY geometries) raises WktBatchFallback and the
+caller routes the row/batch through the scalar codec, so behavior on odd
+input is the scalar codec's: 3D and EMPTY parse, malformed text raises
+ValueError.
 
 Reference parity: the WKT surface itself has no reference analog (the
 reference reads geopackage WKB, processing/gpkg/gpkg.go:76-155); this
@@ -143,6 +144,8 @@ def parse_polygons_batch(texts) -> ParsedPolygonBatch:
     # every fast row must contribute >= 1 member and every member >= 1 ring
     if member_fastrow[0] != 0 or np.count_nonzero(np.diff(member_fastrow)) != len(fast_rows) - 1:
         raise WktBatchFallback("row without polygon body")
+    if (np.bincount(member_fastrow, minlength=len(fast_rows))[~is_multi] != 1).any():
+        raise WktBatchFallback("POLYGON row with more than one body")
     if ring_member[0] != 0 or np.count_nonzero(np.diff(ring_member)) != member_pos.size - 1:
         raise WktBatchFallback("member without rings")
 
@@ -186,6 +189,8 @@ def parse_polygons_batch(texts) -> ParsedPolygonBatch:
         raise WktBatchFallback(str(e)) from e
     if vals.size != 2 * int(ring_len.sum()):
         raise WktBatchFallback("token count mismatch")
+    if not np.isfinite(vals).all():
+        raise WktBatchFallback("non-finite ordinate")
     xy = vals.reshape(-1, 2)
 
     return ParsedPolygonBatch(

@@ -66,12 +66,21 @@ SNAPPED_SCHEMA = StructType(
 )
 
 
-def _emit_nonpolygon(emit, doc_id, span_idx, wkt, tm_ids_):
+def _parse_span(wkt, doc_id, span_idx):
+    """parse_wkt; malformed WKT raises ValueError naming the span."""
+    from ..functions.wkt import parse_wkt
+
+    try:
+        return parse_wkt(wkt)
+    except ValueError as e:
+        raise ValueError(f"doc_id={doc_id!r} span_idx={span_idx}: {e}") from e
+
+
+def _emit_nonpolygon(emit, doc_id, span_idx, kind, coords, tm_ids_):
     """Non-polygon spans pass through unchanged to every zoom
     (processing/processing.go:62-69); EMPTY geometries emit nothing."""
-    from ..functions.wkt import geometry_to_wkt, parse_wkt
+    from ..functions.wkt import geometry_to_wkt
 
-    kind, coords = parse_wkt(wkt)
     if not coords:
         return
     if kind == "point":
@@ -92,14 +101,14 @@ def _emit_nonpolygon(emit, doc_id, span_idx, wkt, tm_ids_):
 def _legacy_batch(pdf, tms_, tm_ids_, cfg, emit):
     """Scalar-codec fallback for batches the array codec can't parse
     (3D/odd WKT); same per-row flow the r2 operator used."""
-    from ..functions.wkt import multipolygon_to_wkt, parse_wkt, polygon_bbox, polygon_to_wkt
+    from ..functions.wkt import multipolygon_to_wkt, polygon_bbox, polygon_to_wkt
     from ..kernel.snap_batch import snap_polygons_batch
 
     parsed = []
     members: list = []
     member_row: list[int] = []
-    for row_i, wkt in enumerate(pdf["wkt"]):
-        kind, coords = parse_wkt(wkt)
+    for row_i, (wkt, doc_id, span_idx) in enumerate(zip(pdf["wkt"], pdf["doc_id"], pdf["span_idx"])):
+        kind, coords = _parse_span(wkt, doc_id, span_idx)
         parsed.append((kind, coords))
         if kind == "polygon" and coords:
             members.append(coords)
@@ -114,7 +123,7 @@ def _legacy_batch(pdf, tms_, tm_ids_, cfg, emit):
         for zoom, polys in res.items():
             rg.setdefault(zoom, []).extend(polys)
     for row_i, (doc_id, span_idx) in enumerate(zip(pdf["doc_id"], pdf["span_idx"])):
-        kind, _ = parsed[row_i]
+        kind, coords = parsed[row_i]
         if kind in ("polygon", "multipolygon"):
             src_multi = kind == "multipolygon"
             for zoom, polys in regrouped.get(row_i, {}).items():
@@ -125,7 +134,7 @@ def _legacy_batch(pdf, tms_, tm_ids_, cfg, emit):
                 bbox = polygon_bbox([r for p in polys for r in p])
                 emit(doc_id, int(span_idx), zoom, "multipolygon" if multi else "polygon", w, bbox, len(polys))
         else:
-            _emit_nonpolygon(emit, doc_id, int(span_idx), pdf["wkt"].iloc[row_i], tm_ids_)
+            _emit_nonpolygon(emit, doc_id, int(span_idx), kind, coords, tm_ids_)
 
 
 def _process_batch(pdf, tms_, tm_ids_, cfg):
@@ -229,7 +238,8 @@ def _process_batch(pdf, tms_, tm_ids_, cfg):
                 emit(doc_id, span_idx, zoom, kind, w, bbox, len(polys))
 
     for row_i in parsed.other_rows:
-        _emit_nonpolygon(emit, doc_ids[row_i], int(span_idxs[row_i]), texts[row_i], tm_ids_)
+        doc_id, span_idx = doc_ids[row_i], int(span_idxs[row_i])
+        _emit_nonpolygon(emit, doc_id, span_idx, *_parse_span(texts[row_i], doc_id, span_idx), tm_ids_)
 
     # -- bulk lane: columnar members (one poly, one fast ring, per level) ----
     n_loop = len(out["wkt"])

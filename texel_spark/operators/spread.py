@@ -2,8 +2,8 @@
 
 Parquet scans cannot split a row group: a table written as one file with
 one row group (the driver's testdata layout) yields exactly ONE non-empty
-scan task no matter how many splits `spark.sql.files.maxPartitionBytes` /
-`minPartitionNum` plan - so every map-side stage fused into that scan
+scan task no matter how many splits the `spark.sql.files.*` split
+settings plan - so every map-side stage fused into that scan
 (shingling, hashing, partial aggregation) runs single-threaded on a
 32-core session.  The guide's fix for unsplittable input is to
 "repartition immediately after the read"; `spread_input` does that, but
@@ -15,8 +15,8 @@ ONLY after probing that the scan is actually starved:
   wrong repartition at 100 TB costs a full-corpus shuffle, a missed one
   costs nothing on well-laid-out data);
 * otherwise round-robin repartition, sized by the data (>= 64 KiB of
-  compressed input per partition) and capped at parallelism x
-  `multiplier` (2 waves for straggler smoothing).
+  compressed input per partition, at least 8) and capped at
+  parallelism x `multiplier` (2 waves for straggler smoothing).
 
 At production scale inputs arrive as thousands of multi-row-group files
 and the probe short-circuits on the file count without touching any
@@ -64,8 +64,12 @@ def spread_input(df: DataFrame, multiplier: int = 2) -> DataFrame:
                 return df
     except Exception:
         return df
-    # partition count scales with DATA (>=64 KiB of compressed input per
-    # partition), capped at 2 waves of the session's cores - a tiny table
-    # gets a few real partitions instead of cores x 2 near-empty ones
-    n = max(8, min(target * multiplier, (total_bytes >> 16) + 1))
-    return df.repartition(n)
+    return df.repartition(spread_partitions(total_bytes, target, multiplier))
+
+
+def spread_partitions(total_bytes: int, parallelism: int, multiplier: int = 2) -> int:
+    """Partition count scales with DATA (>=64 KiB of compressed input per
+    partition, at least 8) - a tiny table gets a few real partitions
+    instead of cores x 2 near-empty ones.  The cap of `multiplier` waves of
+    the session's cores applies last, so it holds below 4 slots too."""
+    return min(parallelism * multiplier, max(8, (total_bytes >> 16) + 1))

@@ -3,11 +3,14 @@ entry on Spark and its oracle_sql() on DuckDB at the same SF, compare
 row count + schema + order-insensitive value hash.
 
 Usage: python3 tools/check_oracles.py [sf_dir] [only_query ...]
+Runs on local[$SPARK_GRAFT_CPUS]; unset, one slot per core in the
+process's CPU affinity mask (what `nproc` prints).
 """
 
 from __future__ import annotations
 
 import hashlib
+import os
 import sys
 
 import duckdb
@@ -47,7 +50,8 @@ def main():
     import __spark_entry__ as e
     from texel_spark.session import get_spark
 
-    spark = get_spark(master="local[16]", shuffle_partitions=16)
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+    spark = get_spark(master=f"local[{cpus}]", shuffle_partitions=16)
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
