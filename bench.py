@@ -7,7 +7,8 @@ Prints ONE JSON line:
 The headline metric matches BASELINE.json: snapped-tile rows plus
 spatial-join output rows per second of end-to-end wall time for the
 spatial core (snap pipeline + PIP join + kNN).  Per-query wall times for
-the full operator sweep are reported under "queries".
+the operator sweep (the __spark_entry__.queries() builders named in
+SWEEP) are reported under "queries".
 
 Repeated, per-layer measurements (workloads, seeds, spread, traced
 runs) live in perfbench/: `python3 perfbench/run.py --workload snap_tiles`.
@@ -23,27 +24,70 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
+# timed after the headline snap pipeline, in this order; each name is a
+# __spark_entry__.queries() builder (pip_join and knn_join finish the headline)
+SWEEP = (
+    "pip_join",
+    "knn_join",
+    "tile_assign",
+    "tile_extent_agg",
+    "rasterize",
+    "dedup_exact",
+    "ngram_jaccard",
+    "minhash_lsh",
+    "near_dup_components",
+    "text_stats",
+    "hash_split",
+    "per_source_cap",
+    "curation_pipeline",
+    "token_counts",
+    "doc_fingerprints",
+    "cosine_topk",
+    "ivf_cosine_topk",
+    "hourly_rollup",
+    "sessionize",
+    "asof_join",
+    "range_pair_join",
+    "pii_scrub",
+    "length_quantiles",
+    "source_mixture",
+    "repetition_stats",
+    "tfidf_top_terms",
+    "unigram_quality",
+    "bm25_topk",
+    "minhash_verify",
+    "decontaminate",
+    "sequence_pack",
+    "deterministic_shuffle",
+    "chunk_dedup",
+    "snapshot_dedup",
+    "quality_funnel",
+    "tile_pyramid_rollup",
+    "tile_diff",
+    "vocab_coverage",
+    "sliding_chunks",
+    "langid_ngram",
+    "validate_documents",
+)
+
+
 def _materialize(df) -> int:
     """Force full computation; returns row count (noop sink semantics)."""
     return df.count()
 
 
-def main() -> None:
+def setup(app_name: str, extra_conf: dict[str, str] | None = None):
+    """Session and sizing from the SPARK_GRAFT_* environment; returns
+    (spark, sf_dir, sf, cpus, n_docs).  cpus defaults to the affinity mask."""
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else 0.1
     n_docs = int(os.environ.get("SPARK_GRAFT_DOCS", str(max(400, int(40000 * sf)))))
 
-    from texel_spark.grid.tms import load_embedded
-    from texel_spark.kernel.snap import SnapConfig
-    from texel_spark.operators import curation, dedup, events, similarity, temporal, text
-    from texel_spark.operators import spatial_queries as sq
-    from texel_spark.operators.snap_tiles import snap_pipeline_df
     from texel_spark.session import get_spark
-    from texel_spark.sources.documents import materialize_documents
 
     spark = get_spark(
-        app_name="texel-bench",
+        app_name=app_name,
         master=f"local[{cpus}]",
         shuffle_partitions=max(cpus, 16),
         # sandbox miniaturization: sf0.1 inputs are a few MB, so scale the
@@ -52,20 +96,36 @@ def main() -> None:
         extra_conf={
             "spark.sql.files.maxPartitionBytes": "8388608",
             "spark.sql.files.openCostInBytes": "1048576",
+            **(extra_conf or {}),
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
+    return spark, sf_dir, sf, cpus, n_docs
 
-    def t(name: str):
-        return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
-    rd = load_embedded("NetherlandsRDNewQuad")
-    # docs come from parquet like production input; generation is untimed
+def headline_snap_pipeline(spark, n_docs: int, cpus: int):
+    # unlike queries()["snap_pipeline"]: sf-scaled parquet docs, outside-grid spans skipped
     import tempfile
 
+    from texel_spark.grid.tms import load_embedded
+    from texel_spark.kernel.snap import SnapConfig
+    from texel_spark.operators.snap_tiles import snap_pipeline_df
+    from texel_spark.sources.documents import materialize_documents
+
+    # docs come from parquet like production input; generation is untimed
     docs_dir = os.path.join(tempfile.gettempdir(), f"texel_bench_docs_{n_docs}")
     docs = materialize_documents(spark, n_docs, docs_dir, partitions=cpus * 3)
+    rd = load_embedded("NetherlandsRDNewQuad")
+    return snap_pipeline_df(docs, rd, [5, 9, 12], SnapConfig(ignore_outside_grid=True))
 
+
+def main() -> None:
+    spark, sf_dir, sf, cpus, n_docs = setup("texel-bench")
+
+    from __spark_entry__ import queries
+    from texel_spark.operators import similarity
+
+    registry = queries()
     timings: dict[str, float] = {}
     rows: dict[str, int] = {}
 
@@ -75,55 +135,14 @@ def main() -> None:
         timings[name] = round(time.perf_counter() - t0, 3)
         rows[name] = n
 
-    # headline spatial core
-    run("snap_pipeline", snap_pipeline_df(docs, rd, [5, 9, 12], SnapConfig(ignore_outside_grid=True)))
-    run("pip_join", sq.pip_join(t("events"), t("nation")))
-    run("knn_join", sq.knn_join(t("events"), t("nation")))
-    # operator sweep
-    run("tile_assign", sq.tile_assign(t("events")))
-    run("tile_extent_agg", sq.tile_extent_agg(t("events")))
-    run("rasterize", sq.rasterize(t("nation")))
-    run("dedup_exact", dedup.exact_duplicates(t("documents")))
-    run("ngram_jaccard", dedup.ngram_jaccard_pairs(t("documents")))
-    run("minhash_lsh", dedup.minhash_lsh_candidates(t("documents")))
-    run("near_dup_components", dedup.near_dup_components(t("documents")))
-    run("text_stats", text.text_stats(t("documents")))
-    run("hash_split", curation.hash_split(t("documents")))
-    run("per_source_cap", curation.per_source_cap(t("documents")))
-    run("curation_pipeline", curation.curation_pipeline(t("documents")))
-    run("token_counts", text.token_counts(t("documents")))
-    run("doc_fingerprints", text.doc_fingerprints(t("documents")))
-    run("cosine_topk", similarity.cosine_topk(t("embeddings")))
-    run("ivf_cosine_topk", similarity.ivf_cosine_topk(t("embeddings")))
-    run("hourly_rollup", events.hourly_rollup(t("events")))
-    run("sessionize", events.sessionize(t("events")))
-    run("asof_join", temporal.asof_join(t("events")))
-    run("range_pair_join", temporal.range_pair_join(t("events"), window_s=14400))
-    run("pii_scrub", text.pii_scrub(t("documents")))
-    run("length_quantiles", text.length_quantiles(t("documents")))
-    run("source_mixture", curation.source_mixture(t("documents")))
-    run("repetition_stats", text.repetition_stats(t("documents")))
-    run("tfidf_top_terms", text.tfidf_top_terms(t("documents")))
-    run("unigram_quality", text.unigram_quality(t("documents")))
-    run("bm25_topk", text.bm25_topk(t("documents")))
-    run("minhash_verify", dedup.minhash_verify(t("documents")))
-    run("decontaminate", dedup.decontaminate(t("documents"), n=3))
-    run("sequence_pack", curation.sequence_pack(t("documents")))
-    run("deterministic_shuffle", curation.deterministic_shuffle(t("documents")))
-    run("chunk_dedup", dedup.chunk_dedup(t("documents")))
-    run("snapshot_dedup", dedup.snapshot_dedup(t("documents")))
-    run("quality_funnel", curation.quality_funnel(t("documents")))
-    run("tile_pyramid_rollup", sq.tile_pyramid_rollup(t("events")))
-    run("tile_diff", sq.tile_diff(t("events").where("event_id % 10 <> 0"), t("events")))
-    run("vocab_coverage", text.vocab_coverage(t("documents")))
-    run("sliding_chunks", text.sliding_chunks(t("documents")))
-    run("langid_ngram", text.langid_ngram(t("documents")))
-    run("validate_documents", curation.validate_documents(t("documents")))
+    run("snap_pipeline", headline_snap_pipeline(spark, n_docs, cpus))
+    for name in SWEEP:
+        run(name, registry[name](spark, sf_dir))
 
     # ANN quality: recall@k of the IVF path vs the exact scan (VERDICT r1
     # item 8) - a fast-but-blind ANN would otherwise look like a win
-    exact_nn = {(r["query_id"], r["neighbor_id"]) for r in similarity.cosine_topk(t("embeddings")).collect()}
-    ivf_nn = {(r["query_id"], r["neighbor_id"]) for r in similarity.ivf_cosine_topk(t("embeddings")).collect()}
+    exact_nn = {(r["query_id"], r["neighbor_id"]) for r in registry["cosine_topk"](spark, sf_dir).collect()}
+    ivf_nn = {(r["query_id"], r["neighbor_id"]) for r in registry["ivf_cosine_topk"](spark, sf_dir).collect()}
     ann_recall = round(len(exact_nn & ivf_nn) / max(1, len(exact_nn)), 3)
     # ... and on clustered data (the regime IVF targets; random uniform
     # embeddings are the worst case for ANY cell-bucketed ANN)

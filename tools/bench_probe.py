@@ -1,13 +1,15 @@
 """Per-query measurement probe for optimization work (guide section 1).
 
-Mirrors bench.py's frozen methodology (same get_spark config surface,
-same count() materialization) but runs a SELECTED subset of the sweep
-with repeats, optional noop-sink materialization, plan capture and
-config A/B — so a single query can be isolated and re-measured in
-seconds instead of re-running the whole 280 s sweep.
+Uses bench.py's session, sizing and count() materialization, but runs a
+SELECTED subset of queries with repeats, optional noop-sink
+materialization, plan capture and config A/B - so a single query can be
+isolated and re-measured in seconds instead of re-running the whole
+sweep.  Any __spark_entry__.queries() name can be probed; snap_pipeline
+is bench.py's headline form of it.  With no names, the probe runs
+bench.py's sweep.
 
 Usage:
-  SPARK_GRAFT_SF_DIR=/root/testdata/sf1.0 SPARK_GRAFT_CPUS=32 \
+  SPARK_GRAFT_SF_DIR=<testdata>/sf0.1 SPARK_GRAFT_CPUS=4 \
   python tools/bench_probe.py [--repeats 3] [--noop] [--plans DIR] q1 q2 ...
 
   TEXEL_PROBE_CONF="spark.sql.codegen.maxFields=256;spark.foo=bar" for A/B.
@@ -28,115 +30,45 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("queries", nargs="*", help="query names from the bench sweep")
+    ap.add_argument("queries", nargs="*", help="query names from __spark_entry__.queries()")
     ap.add_argument("--repeats", type=int, default=1)
     ap.add_argument("--noop", action="store_true", help="noop-sink write instead of count()")
     ap.add_argument("--plans", default=None, help="directory to write <query>.txt explain output")
     ap.add_argument("--list", action="store_true")
     args = ap.parse_args()
 
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else 0.1
-    n_docs = int(os.environ.get("SPARK_GRAFT_DOCS", str(max(400, int(40000 * sf)))))
+    from __spark_entry__ import queries
+    from bench import SWEEP, headline_snap_pipeline, setup
 
-    from texel_spark.grid.tms import load_embedded
-    from texel_spark.kernel.snap import SnapConfig
-    from texel_spark.operators import curation, dedup, events, similarity, temporal, text
-    from texel_spark.operators import spatial_queries as sq
-    from texel_spark.operators.snap_tiles import snap_pipeline_df
-    from texel_spark.session import get_spark
-    from texel_spark.sources.documents import materialize_documents
+    registry = queries()
+    if args.list:
+        print("\n".join(registry))
+        return
 
-    extra = {
-        "spark.sql.files.maxPartitionBytes": "8388608",
-        "spark.sql.files.openCostInBytes": "1048576",
-    }
+    extra = {}
     for kv in os.environ.get("TEXEL_PROBE_CONF", "").split(";"):
         if "=" in kv:
             k, v = kv.split("=", 1)
             extra[k.strip()] = v.strip()
+    spark, sf_dir, sf, cpus, n_docs = setup("texel-probe", extra)
 
-    spark = get_spark(
-        app_name="texel-probe",
-        master=f"local[{cpus}]",
-        shuffle_partitions=max(cpus, 16),
-        extra_conf=extra,
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    def build(name: str):
+        if name == "snap_pipeline":
+            return headline_snap_pipeline(spark, n_docs, cpus)
+        return registry[name](spark, sf_dir)
 
-    def t(name: str):
-        return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-    rd = load_embedded("NetherlandsRDNewQuad")
-    import tempfile
-
-    docs_dir = os.path.join(tempfile.gettempdir(), f"texel_bench_docs_{n_docs}")
-
-    builders = {
-        "snap_pipeline": lambda: snap_pipeline_df(
-            materialize_documents(spark, n_docs, docs_dir, partitions=cpus * 3),
-            rd, [5, 9, 12], SnapConfig(ignore_outside_grid=True),
-        ),
-        "pip_join": lambda: sq.pip_join(t("events"), t("nation")),
-        "knn_join": lambda: sq.knn_join(t("events"), t("nation")),
-        "tile_assign": lambda: sq.tile_assign(t("events")),
-        "tile_extent_agg": lambda: sq.tile_extent_agg(t("events")),
-        "rasterize": lambda: sq.rasterize(t("nation")),
-        "dedup_exact": lambda: dedup.exact_duplicates(t("documents")),
-        "ngram_jaccard": lambda: dedup.ngram_jaccard_pairs(t("documents")),
-        "minhash_lsh": lambda: dedup.minhash_lsh_candidates(t("documents")),
-        "near_dup_components": lambda: dedup.near_dup_components(t("documents")),
-        "text_stats": lambda: text.text_stats(t("documents")),
-        "hash_split": lambda: curation.hash_split(t("documents")),
-        "per_source_cap": lambda: curation.per_source_cap(t("documents")),
-        "curation_pipeline": lambda: curation.curation_pipeline(t("documents")),
-        "token_counts": lambda: text.token_counts(t("documents")),
-        "doc_fingerprints": lambda: text.doc_fingerprints(t("documents")),
-        "cosine_topk": lambda: similarity.cosine_topk(t("embeddings")),
-        "ivf_cosine_topk": lambda: similarity.ivf_cosine_topk(t("embeddings")),
-        "hourly_rollup": lambda: events.hourly_rollup(t("events")),
-        "sessionize": lambda: events.sessionize(t("events")),
-        "asof_join": lambda: temporal.asof_join(t("events")),
-        "range_pair_join": lambda: temporal.range_pair_join(t("events"), window_s=14400),
-        "pii_scrub": lambda: text.pii_scrub(t("documents")),
-        "length_quantiles": lambda: text.length_quantiles(t("documents")),
-        "source_mixture": lambda: curation.source_mixture(t("documents")),
-        "repetition_stats": lambda: text.repetition_stats(t("documents")),
-        "tfidf_top_terms": lambda: text.tfidf_top_terms(t("documents")),
-        "unigram_quality": lambda: text.unigram_quality(t("documents")),
-        "bm25_topk": lambda: text.bm25_topk(t("documents")),
-        "minhash_verify": lambda: dedup.minhash_verify(t("documents")),
-        "decontaminate": lambda: dedup.decontaminate(t("documents"), n=3),
-        "sequence_pack": lambda: curation.sequence_pack(t("documents")),
-        "deterministic_shuffle": lambda: curation.deterministic_shuffle(t("documents")),
-        "chunk_dedup": lambda: dedup.chunk_dedup(t("documents")),
-        "snapshot_dedup": lambda: dedup.snapshot_dedup(t("documents")),
-        "quality_funnel": lambda: curation.quality_funnel(t("documents")),
-        "tile_pyramid_rollup": lambda: sq.tile_pyramid_rollup(t("events")),
-        "tile_diff": lambda: sq.tile_diff(t("events").where("event_id % 10 <> 0"), t("events")),
-        "vocab_coverage": lambda: text.vocab_coverage(t("documents")),
-        "sliding_chunks": lambda: text.sliding_chunks(t("documents")),
-        "langid_ngram": lambda: text.langid_ngram(t("documents")),
-        "validate_documents": lambda: curation.validate_documents(t("documents")),
-    }
-
-    if args.list:
-        print("\n".join(builders))
-        return
-
-    names = args.queries or list(builders)
+    names = args.queries or ["snap_pipeline", *SWEEP]
     timings: dict[str, list[float]] = {}
     rows: dict[str, int] = {}
     for name in names:
         if args.plans:
             os.makedirs(args.plans, exist_ok=True)
-            df = builders[name]()
+            df = build(name)
             with open(os.path.join(args.plans, f"{name}.txt"), "w") as f:
                 f.write(df._sc._jvm.PythonSQLUtils.explainString(
                     df._jdf.queryExecution(), "formatted"))
         for _ in range(args.repeats):
-            df = builders[name]()
+            df = build(name)
             spark.sparkContext.setJobDescription(f"probe:{name}")
             t0 = time.perf_counter()
             if args.noop:
