@@ -18,6 +18,7 @@ from texel_spark.plans.checks import (
     assert_pushed_read_schema,
     assert_whole_stage_codegen,
     count_exchanges,
+    formatted_plan,
 )
 
 
@@ -52,7 +53,9 @@ def test_pip_join_broadcasts_and_is_shuffle_free(spark):
 
 
 def test_snap_pipeline_is_narrow(spark):
-    """The flagship plan has NO shuffle before the sink repartition."""
+    """The flagship plan has NO shuffle before the sink repartition, and
+    no join: the per-zoom grid constants are literals, so one pass is
+    one Spark job."""
     from texel_spark.grid.tms import load_embedded
     from texel_spark.operators.snap_tiles import snap_pipeline_df
     from texel_spark.sources.documents import synth_documents
@@ -60,7 +63,16 @@ def test_snap_pipeline_is_narrow(spark):
     docs = synth_documents(spark, 50, partitions=2)
     df = snap_pipeline_df(docs, load_embedded("NetherlandsRDNewQuad"), [5, 9])
     assert count_exchanges(df) == 0
-    assert_broadcast_join(df)  # grid constants join is broadcast
+    plan = formatted_plan(df)
+    assert "BroadcastExchange" not in plan and "Join" not in plan, plan
+    sc = spark.sparkContext
+    group = "snap-pipeline-one-job"
+    sc.setJobGroup(group, "snap_pipeline_df noop write")
+    try:
+        df.write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setJobGroup(None, None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
 
 
 def test_tile_assign_pushes_column_pruning(spark):

@@ -473,8 +473,11 @@ def test_run_pipeline_mid_zoom_kill_resumes_per_bucket(spark, tmp_path):
         if len(done) == 2:
             raise Kill()
 
+    persisted = spark.sparkContext._jsc.getPersistentRDDs().size()
     with pytest.raises(Kill):
         run_pipeline(docs, rd, [9], out, tile_buckets=4, _after_bucket_hook=bomb)
+    # the killed run released its persisted snap frame
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == persisted
 
     with open(os.path.join(out, "manifest.json")) as f:
         m = json.load(f)
@@ -1553,4 +1556,21 @@ def test_word_count_operators_match_duckdb_oracles(spark):
         got = sorted(map(tuple, fn(docs).collect()))
         want = sorted(con.sql(sql()).fetchall())
         assert got == want, f"{fn.__name__} differs from its DuckDB oracle"
+        assert len(got) > 0
+
+
+def test_tile_fanout_matches_duckdb_oracles(spark, tmp_path):
+    """snap_tile_fanout on the RD, WebMercator and NZTM grids returns
+    exactly the rows of its DuckDB oracle: the fan-out's per-zoom literal
+    constants cover each corner-of-origin and axis-order case."""
+    duckdb = pytest.importorskip("duckdb")
+    import __spark_entry__ as e
+
+    sf = str(tmp_path)  # the fan-out builders snap synthetic documents and read no table
+    queries, oracles = e.queries(), e.oracle_sql()
+    con = duckdb.connect()
+    for name in ("snap_tile_fanout", "snap_tile_fanout_webmercator", "snap_tile_fanout_nztm"):
+        got = sorted(map(tuple, queries[name](spark, sf).collect()))
+        want = sorted(con.sql(oracles[name]).fetchall())
+        assert got == want, f"{name} differs from its DuckDB oracle"
         assert len(got) > 0

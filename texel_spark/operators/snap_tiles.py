@@ -18,7 +18,9 @@ Scale notes
 * The one shuffle is keyed by (zoom, tile_id) with an explicit salt -
   dense urban tiles are Zipfian hot keys, and AQE's skew splitting
   cannot split a skewed *write* partition, salting can.
-* Grid metadata (a few KB) is broadcast, never joined.
+* Grid metadata (a few KB) is never joined: the snap kernel gets the
+  grid through ``sc.broadcast``, and the tile fan-out's per-zoom
+  constants are plan literals, so a pass is one Spark job.
 * Resume: the sink records a manifest of completed (zoom, bucket)
   pairs (bucket = feature hash, filter prunes before the tile explode);
   re-running skips them and a mid-zoom kill re-does only unfinished
@@ -35,7 +37,7 @@ import shutil
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
@@ -367,29 +369,6 @@ def snap_documents(
     return docs.mapInPandas(kernel, schema=SNAPPED_SCHEMA)
 
 
-def zoom_params_df(spark: SparkSession, tms: TileMatrixSet, tm_ids: list[int]) -> DataFrame:
-    """Tiny per-zoom grid constants table, always broadcast."""
-    rows = []
-    for z in tm_ids:
-        tm = tms.tile_matrices[z]
-        ox, oy = tms.to_xy_point(tm.point_of_origin)
-        rows.append(
-            (
-                z,
-                float(ox),
-                float(oy),
-                float(tm.tile_width) * tm.cell_size,
-                float(tm.tile_height) * tm.cell_size,
-                tm.matrix_width,
-                tm.matrix_height,
-                tm.corner_of_origin == TOP_LEFT,
-            )
-        )
-    return spark.createDataFrame(
-        rows, "zoom int, ox double, oy double, tsx double, tsy double, mw int, mh int, top_left boolean"
-    )
-
-
 def morton_z_expr(tx, ty):
     """Morton interleave as pure JVM column expressions (whole-stage
     codegen; no Python worker in the loop).
@@ -420,23 +399,46 @@ def assign_tiles(snapped: DataFrame, tms: TileMatrixSet, tm_ids: list[int]) -> D
     """One output row per (feature, zoom, covering tile).
 
     Pure column math (tms20.FromNative semantics, tms20.go:664-712) over
-    the snapped bbox, broadcast-joined with the per-zoom constants; tile
-    range explode is bounded by each geometry's footprint.
+    the snapped bbox.  The per-zoom grid constants are plan literals (a
+    CASE on zoom where the zooms differ), so the fan-out fuses into the
+    stage that feeds it: no side table, no join, no extra Spark job.
+    Rows whose zoom is not in ``tm_ids`` are dropped.  The tile range
+    explode is bounded by each geometry's footprint.
     """
-    spark = snapped.sparkSession
-    params = F.broadcast(zoom_params_df(spark, tms, tm_ids))
-    df = snapped.join(params, "zoom")
+    consts = []
+    for z in tm_ids:
+        tm = tms.tile_matrices[z]
+        origin = tms.to_xy_point(tm.point_of_origin)
+        consts.append(
+            (
+                float(origin[0]),
+                float(origin[1]),
+                float(tm.tile_width) * tm.cell_size,
+                float(tm.tile_height) * tm.cell_size,
+                tm.matrix_width,
+                tm.matrix_height,
+                tm.corner_of_origin == TOP_LEFT,
+            )
+        )
 
-    tx0 = F.greatest(F.lit(0), F.floor((F.col("minx") - F.col("ox")) / F.col("tsx")).cast("int"))
-    tx1 = F.least(F.col("mw") - 1, F.floor((F.col("maxx") - F.col("ox")) / F.col("tsx")).cast("int"))
-    ty_top = F.when(F.col("top_left"), (F.col("oy") - F.col("maxy")) / F.col("tsy")).otherwise(
-        (F.col("miny") - F.col("oy")) / F.col("tsy")
-    )
-    ty_bot = F.when(F.col("top_left"), (F.col("oy") - F.col("miny")) / F.col("tsy")).otherwise(
-        (F.col("maxy") - F.col("oy")) / F.col("tsy")
-    )
+    def per_zoom(values):
+        """One literal when every zoom agrees, else a CASE on zoom."""
+        if len(set(values)) == 1:
+            return F.lit(values[0])
+        expr = F.when(F.col("zoom") == tm_ids[0], values[0])
+        for z, v in zip(tm_ids[1:], values[1:]):
+            expr = expr.when(F.col("zoom") == z, v)
+        return expr
+
+    ox, oy, tsx, tsy, mw, mh, top_left = (per_zoom(v) for v in zip(*consts))
+    df = snapped.where(F.col("zoom").isin(tm_ids))
+
+    tx0 = F.greatest(F.lit(0), F.floor((F.col("minx") - ox) / tsx).cast("int"))
+    tx1 = F.least(mw - 1, F.floor((F.col("maxx") - ox) / tsx).cast("int"))
+    ty_top = F.when(top_left, (oy - F.col("maxy")) / tsy).otherwise((F.col("miny") - oy) / tsy)
+    ty_bot = F.when(top_left, (oy - F.col("miny")) / tsy).otherwise((F.col("maxy") - oy) / tsy)
     ty0 = F.greatest(F.lit(0), F.floor(ty_top).cast("int"))
-    ty1 = F.least(F.col("mh") - 1, F.floor(ty_bot).cast("int"))
+    ty1 = F.least(mh - 1, F.floor(ty_bot).cast("int"))
 
     # geometry payload is NOT carried through the tile fan-out: a feature
     # can cover hundreds of deep-zoom tiles, and duplicating the geometry
@@ -547,42 +549,44 @@ def run_pipeline(
         .persist()
     )
 
-    for z in todo:
-        st = zoom_state(z)
-        for b in range(tile_buckets):
-            if b in st["buckets"]:
-                continue
-            # bucket filter applies BEFORE the tile explode (narrow), so
-            # finer resume granularity costs no duplicated fan-out work
-            part = assign_tiles(
-                snapped.where((F.col("zoom") == z) & (F.col("bucket") == b)).drop("bucket"),
-                tms,
-                [z],
-            )
-            salted = part.withColumn(
-                "salt", F.pmod(F.xxhash64("doc_id", "span_idx"), F.lit(salt_buckets))
-            )
-            (
-                salted.repartition(F.col("tile_id"), F.col("salt"))
-                .drop("salt", "zoom")
-                .write.mode("overwrite")
-                .parquet(os.path.join(output_dir, "tiles", f"zoom={z}", f"bucket={b}"))
-            )
-            st["buckets"] = sorted(set(st["buckets"]) | {b})
-            _save_manifest(manifest_path, manifest, tile_buckets)
-            if _after_bucket_hook is not None:
-                _after_bucket_hook(z, b)
-        if not st["geoms"]:
-            (
-                snapped_geometries(snapped.where(F.col("zoom") == z).drop("bucket"))
-                .drop("zoom")
-                .write.mode("overwrite")
-                .parquet(os.path.join(output_dir, "geoms", f"zoom={z}"))
-            )
-            st["geoms"] = True
-            _save_manifest(manifest_path, manifest, tile_buckets)
+    try:
+        for z in todo:
+            st = zoom_state(z)
+            for b in range(tile_buckets):
+                if b in st["buckets"]:
+                    continue
+                # bucket filter applies BEFORE the tile explode (narrow), so
+                # finer resume granularity costs no duplicated fan-out work
+                part = assign_tiles(
+                    snapped.where((F.col("zoom") == z) & (F.col("bucket") == b)).drop("bucket"),
+                    tms,
+                    [z],
+                )
+                salted = part.withColumn(
+                    "salt", F.pmod(F.xxhash64("doc_id", "span_idx"), F.lit(salt_buckets))
+                )
+                (
+                    salted.repartition(F.col("tile_id"), F.col("salt"))
+                    .drop("salt", "zoom")
+                    .write.mode("overwrite")
+                    .parquet(os.path.join(output_dir, "tiles", f"zoom={z}", f"bucket={b}"))
+                )
+                st["buckets"] = sorted(set(st["buckets"]) | {b})
+                _save_manifest(manifest_path, manifest, tile_buckets)
+                if _after_bucket_hook is not None:
+                    _after_bucket_hook(z, b)
+            if not st["geoms"]:
+                (
+                    snapped_geometries(snapped.where(F.col("zoom") == z).drop("bucket"))
+                    .drop("zoom")
+                    .write.mode("overwrite")
+                    .parquet(os.path.join(output_dir, "geoms", f"zoom={z}"))
+                )
+                st["geoms"] = True
+                _save_manifest(manifest_path, manifest, tile_buckets)
 
-    snapped.unpersist()
+    finally:
+        snapped.unpersist()
     out = spark.read.parquet(os.path.join(output_dir, "tiles"))
     # per-partition lineage + row-count metrics (north rule): replaces the
     # reference's log counters (processing.go:23,70-75) and running extent
@@ -656,8 +660,8 @@ def snap_tile_fanout_df(
     oracle can verify it hash-exactly: the kernel's snapped bboxes (the
     deterministic, golden-pinned half) are materialized to parquet, and
     the returned DataFrame re-reads that parquet and runs the pure-JVM
-    fan-out (zoom-params join, floor/clamp, covering-tile explode,
-    Morton).  tile_fanout_oracle_sql() performs the identical math in
+    fan-out (per-zoom literal constants, floor/clamp, covering-tile
+    explode, Morton).  tile_fanout_oracle_sql() performs the identical math in
     SQL over the same file, so CORRECTNESS gains a rows+schema+hash
     check on everything downstream of the kernel.
 

@@ -50,7 +50,6 @@ def main():
 
     spark = get_spark(
         app_name="texel-skew",
-        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]",
         shuffle_partitions=64,
         # the probe measures writer-task sizes: AQE's small-partition
         # coalescing would merge them and hide the per-key structure
