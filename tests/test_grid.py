@@ -186,6 +186,9 @@ def test_package_zip_loads_grids_and_epsg_table(tmp_path):
         "assert %r in m.__file__; "
         "assert len(embedded_tile_matrix_set_ids()) == 14; "
         "assert len(EPSG_AXES_ARE_LATLON) == 7070; "
+        # the daemon starts before --py-files are on its path: stock daemon
+        "from texel_spark.session import _worker_daemon_conf; "
+        "assert _worker_daemon_conf() == {}; "
         "print(load_embedded('WebMercatorQuad').id)"
     ) % (zip_path, "texel_spark.zip")
     out = subprocess.run(

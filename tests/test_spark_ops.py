@@ -1574,3 +1574,43 @@ def test_tile_fanout_matches_duckdb_oracles(spark, tmp_path):
         want = sorted(con.sql(oracles[name]).fetchall())
         assert got == want, f"{name} differs from its DuckDB oracle"
         assert len(got) > 0
+
+
+def test_python_workers_run_the_invalidate_caches_shim(spark):
+    """get_spark forks Python workers from texel_spark.worker_daemon, so
+    pyspark's per-task importlib.invalidate_caches() is its shim."""
+    import os
+
+    from texel_spark import worker_daemon
+
+    def shim_file(_):
+        from pyspark import worker_util
+
+        return worker_util.importlib.invalidate_caches.__code__.co_filename
+
+    got = spark.sparkContext.parallelize(range(4), 4).map(shim_file).collect()
+    assert all(os.path.samefile(f, worker_daemon.__file__) for f in got)
+
+
+def test_add_py_file_after_earlier_tasks_still_imports(spark, tmp_path):
+    """Workers that already ran tasks (and keep their import caches) see a
+    .py file and a .zip shipped later with addPyFile."""
+    import uuid
+    import zipfile
+
+    sc = spark.sparkContext
+    assert sc.parallelize(range(8), 4).map(lambda x: x + 1).sum() == 36
+    tag = uuid.uuid4().hex[:8]
+    py_mod, zip_mod = f"texel_addpy_{tag}", f"texel_addzip_{tag}"
+    (tmp_path / f"{py_mod}.py").write_text("VALUE = 'py'\n")
+    with zipfile.ZipFile(tmp_path / f"{zip_mod}.zip", "w") as zf:
+        zf.writestr(f"{zip_mod}.py", "VALUE = 'zip'\n")
+    sc.addPyFile(str(tmp_path / f"{py_mod}.py"))
+    sc.addPyFile(str(tmp_path / f"{zip_mod}.zip"))
+
+    def both(_):
+        import importlib
+
+        return importlib.import_module(py_mod).VALUE + importlib.import_module(zip_mod).VALUE
+
+    assert set(sc.parallelize(range(8), 4).map(both).collect()) == {"pyzip"}

@@ -603,9 +603,13 @@ def run_pipeline(
         )
         .withColumn("run_ts", F.lit(int(time.time())))
     )
-    metrics.write.mode("overwrite").parquet(os.path.join(output_dir, "metrics"))
+    metrics_dir = os.path.join(output_dir, "metrics")
+    metrics.write.mode("overwrite").parquet(metrics_dir)
 
-    per_zoom = {int(r["zoom"]): int(r["n"]) for r in out.groupBy("zoom").agg(F.count("*").alias("n")).collect()}
+    # per-zoom row counts from the small metrics table rather than the
+    # tiles; the known schema spares a schema-inference job
+    written = spark.read.schema(metrics.schema).parquet(metrics_dir)
+    per_zoom = {int(r["zoom"]): int(r["n"]) for r in written.groupBy("zoom").agg(F.sum("n_rows").alias("n")).collect()}
     summary = {
         "completed_zooms": sorted(int(z) for z in manifest["zooms"]),
         "metrics": {"rows_per_zoom": per_zoom},
