@@ -36,13 +36,6 @@ def test_gpkg_blob_roundtrip():
     assert kind == "polygon" and coords == rings
 
 
-@pytest.fixture(scope="module")
-def spark():
-    from texel_spark.session import get_spark
-
-    return get_spark(app_name="texel-gpkg-tests", master="local[4]", shuffle_partitions=4)
-
-
 def _make_source_gpkg(path: str, n: int = 30):
     """Build a small source GPKG the way any GIS tool would."""
     from texel_spark.functions.wkb import geometry_to_gpkg_blob

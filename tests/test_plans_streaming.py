@@ -22,13 +22,6 @@ from texel_spark.plans.checks import (
 )
 
 
-@pytest.fixture(scope="module")
-def spark():
-    from texel_spark.session import get_spark
-
-    return get_spark(app_name="texel-plan-tests", master="local[4]", shuffle_partitions=4)
-
-
 SF = "/root/testdata/sf0.001"
 
 

@@ -1,8 +1,11 @@
-"""Batch (numpy) snap kernel vs the scalar kernel and the reference goldens.
+"""The snap stage's batch entry vs the scalar kernel and the reference goldens.
 
 The scalar kernel (kernel/snap.py) is the oracle: it is pinned bit-for-bit
-to the reference's golden tables (tests/test_snap.py), so batch == scalar
-on every golden case transitively pins batch == reference.
+to the reference's golden tables (tests/test_snap.py), so stage == scalar
+on every golden case transitively pins the stage to the reference.  Every
+test here runs spans through operators.snap_tiles._process_batch - the
+code the Spark stage runs, columnar lane included - and compares its rows
+with tests.snap_rows.scalar_rows.
 """
 
 import random
@@ -10,10 +13,10 @@ import random
 import pytest
 
 from tests.golden_snap_cases import CASES
+from tests.snap_rows import scalar_rows, span_wkt, stage_rows
 from texel_spark.grid.tms import load_embedded, simple_tms
 from texel_spark.kernel.pointindex import OutsideGridError
-from texel_spark.kernel.snap import SnapConfig, snap_polygon
-from texel_spark.kernel.snap_batch import snap_polygons_batch
+from texel_spark.kernel.snap import SnapConfig
 
 
 def _tms_for(spec):
@@ -22,21 +25,30 @@ def _tms_for(spec):
     return load_embedded(spec)
 
 
+def _spans(polys):
+    return [(f"p{i}", 0, span_wkt([p])) for i, p in enumerate(polys)]
+
+
+def _assert_stage_matches_scalar(spans, tms, tm_ids, config):
+    want = scalar_rows(spans, tms, tm_ids, config)
+    assert want, "the reference emitted no rows"
+    assert stage_rows(spans, tms, tm_ids, config) == want
+
+
 @pytest.mark.parametrize("case", CASES, ids=[c["name"] for c in CASES])
 def test_batch_matches_scalar_on_goldens(case):
     tms = _tms_for(case["tms"])
     config = SnapConfig(**case["config"])
+    spans = [("golden", 0, span_wkt([case["polygon"]]))]
     if case.get("want_panic"):
         with pytest.raises(OutsideGridError):
-            snap_polygons_batch([case["polygon"]], tms, case["tm_ids"], config)
+            stage_rows(spans, tms, case["tm_ids"], config)
         return
-    want = snap_polygon(case["polygon"], tms, case["tm_ids"], config)
-    (got,) = snap_polygons_batch([case["polygon"]], tms, case["tm_ids"], config)
-    assert got == want, case["name"]
+    assert stage_rows(spans, tms, case["tm_ids"], config) == scalar_rows(spans, tms, case["tm_ids"], config)
 
 
 def test_batch_of_all_goldens_at_once():
-    """All same-grid goldens in ONE batch call: per-poly results must not
+    """All same-grid goldens in ONE batch: per-poly results must not
     cross-contaminate (occupancy is keyed per polygon)."""
     by_key = {}
     for case in CASES:
@@ -50,10 +62,8 @@ def test_batch_of_all_goldens_at_once():
             continue
         tms = _tms_for(cases[0]["tms"])
         config = SnapConfig(**dict(cfg_items))
-        polys = [c["polygon"] for c in cases]
-        want = [snap_polygon(p, tms, list(tm_ids), config) for p in polys]
-        got = snap_polygons_batch(polys, tms, list(tm_ids), config)
-        assert got == want
+        spans = [(c["name"], 0, span_wkt([c["polygon"]])) for c in cases]
+        _assert_stage_matches_scalar(spans, tms, list(tm_ids), config)
         ran += len(cases)
     assert ran >= 10  # the golden set has many same-grid groups
 
@@ -70,7 +80,7 @@ def _random_ring(rng, cx, cy, r, n):
 
 
 def test_batch_matches_scalar_random_rd():
-    """Random polygons (with holes) on the real RD grid, batch vs scalar."""
+    """Random polygons (with holes) on the real RD grid, stage vs scalar."""
     rng = random.Random(1234)
     tms = load_embedded("NetherlandsRDNewQuad")
     tm_ids = [5, 9, 12]
@@ -84,12 +94,9 @@ def test_batch_matches_scalar_random_rd():
         if rng.random() < 0.4:
             poly.append(_random_ring(rng, cx, cy, r * 0.3, rng.randint(3, 6)))
         polys.append(poly)
-    # a couple of deliberately outside-grid polygons (ignore -> {})
+    # a couple of deliberately outside-grid polygons (ignore -> no rows)
     polys.append([_random_ring(rng, 10_000_000, 10_000_000, 100, 4)])
-    want = [snap_polygon(p, tms, tm_ids, config) for p in polys]
-    got = snap_polygons_batch(polys, tms, tm_ids, config)
-    for i, (g, w) in enumerate(zip(got, want)):
-        assert g == w, f"poly {i}"
+    _assert_stage_matches_scalar(_spans(polys), tms, tm_ids, config)
 
 
 def test_batch_matches_scalar_random_simple_grid():
@@ -104,10 +111,7 @@ def test_batch_matches_scalar_random_simple_grid():
         n = rng.randint(3, 10)
         ring = [(rng.uniform(0, 8), rng.uniform(0, 8)) for _ in range(n)]
         polys.append([ring])
-    want = [snap_polygon(p, tms, tm_ids, config) for p in polys]
-    got = snap_polygons_batch(polys, tms, tm_ids, config)
-    for i, (g, w) in enumerate(zip(got, want)):
-        assert g == w, f"poly {i}"
+    _assert_stage_matches_scalar(_spans(polys), tms, tm_ids, config)
 
 
 def test_batch_outside_grid_raises_without_ignore():
@@ -115,7 +119,7 @@ def test_batch_outside_grid_raises_without_ignore():
     good = [[(100000.0, 400000.0), (101000.0, 400000.0), (100500.0, 401000.0)]]
     bad = [[(9e6, 9e6), (9.1e6, 9e6), (9e6, 9.1e6)]]
     with pytest.raises(OutsideGridError):
-        snap_polygons_batch([good, bad], tms, [5], SnapConfig())
+        stage_rows(_spans([good, bad]), tms, [5], SnapConfig())
 
 
 def test_batch_matches_scalar_degenerate_and_self_touching():
@@ -150,27 +154,24 @@ def test_batch_matches_scalar_degenerate_and_self_touching():
             [(2.0, 2.0), (2.0, 8.0), (8.0, 8.0), (8.0, 2.0)],
         ],
     ]
-    want = [snap_polygon(p, tms, tm_ids, config) for p in polys]
-    got = snap_polygons_batch(polys, tms, tm_ids, config)
-    for i, (g, w) in enumerate(zip(got, want)):
-        assert g == w, f"adversarial poly {i}"
+    _assert_stage_matches_scalar(_spans(polys), tms, tm_ids, config)
 
 
 def test_batch_matches_scalar_dense_random_lattice():
     """Dense random points ON lattice coordinates maximize self-tangency
-    and split activity; exact batch == scalar across two zoom sets."""
+    and split activity; exact stage == scalar across two zoom sets, with
+    keep_points_and_lines on and off (off lets single-ring members take
+    the columnar lane)."""
     rng = random.Random(31337)
     tms = simple_tms(4, 1.0)
-    config = SnapConfig(keep_points_and_lines=True, ignore_outside_grid=True)
-    for tm_ids in ([0, 2, 4], [4]):
-        polys = []
-        for _ in range(150):
-            n = rng.randint(3, 9)
-            polys.append([[(float(rng.randint(0, 15)), float(rng.randint(0, 15))) for _ in range(n)]])
-        want = [snap_polygon(p, tms, tm_ids, config) for p in polys]
-        got = snap_polygons_batch(polys, tms, tm_ids, config)
-        for i, (g, w) in enumerate(zip(got, want)):
-            assert g == w, f"lattice poly {i} tm_ids={tm_ids}"
+    for keep_points_and_lines in (True, False):
+        config = SnapConfig(keep_points_and_lines=keep_points_and_lines, ignore_outside_grid=True)
+        for tm_ids in ([0, 2, 4], [4]):
+            polys = []
+            for _ in range(150):
+                n = rng.randint(3, 9)
+                polys.append([[(float(rng.randint(0, 15)), float(rng.randint(0, 15))) for _ in range(n)]])
+            _assert_stage_matches_scalar(_spans(polys), tms, tm_ids, config)
 
 
 def test_batch_matches_scalar_at_deep_zoom_levels():
@@ -185,6 +186,50 @@ def test_batch_matches_scalar_at_deep_zoom_levels():
     # reference supports at all (morton.go caps each axis at 32 bits)
     for tm_id in (24, 25, 26, 27, 28):
         tms = simple_tms(tm_id, 16.0 / (1 << tm_id))
-        want = [snap_polygon(p, tms, [tm_id], config) for p in polys]
-        got = snap_polygons_batch(polys, tms, [tm_id], config)
-        assert got == want, tm_id
+        _assert_stage_matches_scalar(_spans(polys), tms, [tm_id], config)
+
+
+_OUTER = [(1.0, 1.0), (15.0, 1.0), (15.0, 15.0), (1.0, 15.0)]
+_SMALL_OUTER = [(1.0, 1.0), (7.0, 1.0), (7.0, 7.0), (1.0, 7.0)]
+_FAR_HOLE = [(9.0, 9.0), (9.0, 14.0), (14.0, 14.0), (14.0, 9.0)]
+_HOLED = {
+    "hole touching the outer's edge": [_OUTER, [(1.0, 8.0), (8.0, 12.0), (8.0, 4.0)]],
+    "hole touching the outer's vertex": [_OUTER, [(1.0, 1.0), (6.0, 9.0), (9.0, 6.0)]],
+    "hole outside the outer": [_SMALL_OUTER, _FAR_HOLE],
+    "holes inside and outside": [_SMALL_OUTER, [(2.0, 2.0), (2.0, 5.0), (5.0, 5.0), (5.0, 2.0)], _FAR_HOLE],
+    "hole collapsing at zoom 1": [_OUTER, [(5.0, 5.0), (5.0, 5.3), (5.3, 5.3), (5.3, 5.0)]],
+    "self-tangent hole": [_OUTER, [(4.0, 4.0), (4.0, 12.0), (8.0, 8.0), (12.0, 12.0), (12.0, 4.0), (8.0, 8.0)]],
+    "self-tangent outer": [
+        [(1.0, 1.0), (15.0, 1.0), (8.0, 8.0), (15.0, 15.0), (1.0, 15.0), (8.0, 8.0)],
+        [(2.0, 6.0), (3.0, 6.0), (3.0, 4.0)],
+    ],
+    "holes tangent to each other": [
+        _OUTER,
+        [(3.0, 3.0), (3.0, 7.0), (7.0, 7.0), (7.0, 3.0)],
+        [(7.0, 7.0), (7.0, 11.0), (11.0, 11.0), (11.0, 7.0)],
+    ],
+    "collinear hole": [_OUTER, [(3.0, 3.0), (6.0, 6.0), (9.0, 9.0)]],
+    "collinear outer": [[(1.0, 1.0), (5.0, 5.0), (9.0, 9.0), (5.0, 5.0)], [(2.0, 4.0), (3.0, 4.0), (3.0, 3.5)]],
+    "collinear runs on both rings": [
+        [(1.0, 1.0), (5.0, 1.0), (9.0, 1.0), (9.0, 9.0), (1.0, 9.0), (1.0, 5.0)],
+        [(3.0, 3.0), (3.0, 5.0), (3.0, 7.0), (7.0, 7.0), (7.0, 3.0), (5.0, 3.0)],
+    ],
+}
+
+
+@pytest.mark.parametrize("keep_points_and_lines", [True, False])
+def test_batch_matches_scalar_on_holed_polygons(keep_points_and_lines):
+    """Holed polygons through the per-member combine step (the
+    single-outer shortcut and _match_inners_to_polygons) vs scalar."""
+    tms = simple_tms(6, 0.5)
+    tm_ids = [1, 3, 6]
+    config = SnapConfig(keep_points_and_lines=keep_points_and_lines, ignore_outside_grid=True)
+    spans = [(name, 0, span_wkt([poly])) for name, poly in _HOLED.items()]
+    want = scalar_rows(spans, tms, tm_ids, config)
+    n_polys = {(r[0], r[2]): r[-1] for r in want}
+    # the shapes do what their names say: the outside hole turns into a
+    # second polygon, and the tiny hole is gone at zoom 1 (a point
+    # polygon of its own with keep_points_and_lines)
+    assert n_polys["hole outside the outer", 6] == 2
+    assert n_polys["hole collapsing at zoom 1", 1] == (2 if keep_points_and_lines else 1)
+    assert stage_rows(spans, tms, tm_ids, config) == want

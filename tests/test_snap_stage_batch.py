@@ -1,105 +1,53 @@
-"""The rewritten array-codec snap stage vs the r2 per-row flow.
+"""The snap stage end to end vs the scalar reference kernel.
 
-The legacy flow (scalar WKT codec around the batch kernel, kept as
-_legacy_batch for odd-WKT fallback) is the oracle: it is itself pinned to
-the scalar kernel and the reference goldens.  Rows must agree exactly -
-coordinates bit-for-bit after parse-back, bboxes and counts equal - on
-the synthetic document distribution plus adversarial geometry rows.
+tests.snap_rows.scalar_rows builds the rows the stage must emit from
+kernel.snap.snap_polygon, which is pinned to the reference goldens.  Rows
+must agree exactly - coordinates bit-for-bit after parse-back, bboxes and
+counts equal - on the synthetic document distribution, on adversarial
+geometry rows and on odd WKT (3D, POLYGON Z, non-ASCII, EMPTY), which the
+scalar codec parses and the stage folds into the same flat arrays as
+every other row.  Malformed WKT fails the batch with one ValueError
+naming its span.
 """
 
-import pandas as pd
 import pytest
 
 pyspark = pytest.importorskip("pyspark")
 
+from tests.snap_rows import canon_rows, scalar_rows, spans_pdf
 from texel_spark.functions.wkt import parse_wkt
-from texel_spark.grid.tms import load_embedded
+from texel_spark.grid.tms import load_embedded, simple_tms
 from texel_spark.kernel.snap import SnapConfig
 
 
-@pytest.fixture(scope="module")
-def spark():
-    from texel_spark.session import get_spark
-
-    return get_spark(app_name="texel-snapstage-tests", master="local[4]", shuffle_partitions=4)
-
-
-def _canon_rows(rows):
-    out = []
-    for r in rows:
-        kind, coords = parse_wkt(r["wkt"])
-        out.append(
-            (
-                r["doc_id"],
-                r["span_idx"],
-                r["zoom"],
-                r["geom_kind"],
-                kind,
-                repr(coords),
-                r["minx"],
-                r["miny"],
-                r["maxx"],
-                r["maxy"],
-                r["n_polys"],
-            )
-        )
-    return sorted(out)
-
-
-def _legacy_rows(pdf, tms, tm_ids, cfg):
-    from texel_spark.operators.snap_tiles import SNAPPED_SCHEMA, _legacy_batch
-
-    out = {name: [] for name in SNAPPED_SCHEMA.fieldNames()}
-
-    def emit(doc_id, span_idx, zoom, kind, wkt, bbox, n_polys):
-        out["doc_id"].append(doc_id)
-        out["span_idx"].append(span_idx)
-        out["zoom"].append(zoom)
-        out["geom_kind"].append(kind)
-        out["wkt"].append(wkt)
-        out["minx"].append(bbox[0])
-        out["miny"].append(bbox[1])
-        out["maxx"].append(bbox[2])
-        out["maxy"].append(bbox[3])
-        out["n_polys"].append(n_polys)
-
-    _legacy_batch(pdf, tms, tm_ids, cfg, emit)
-    return _canon_rows(pd.DataFrame(out).to_dict("records"))
-
-
-def _new_rows(spark, pdf, tms, tm_ids, cfg):
+def _spark_rows(spark, spans, tms, tm_ids, cfg):
     from texel_spark.operators.snap_tiles import snap_documents
 
-    df = spark.createDataFrame(pdf)
-    return _canon_rows([r.asDict() for r in snap_documents(df, tms, tm_ids, cfg).collect()])
+    df = spark.createDataFrame(spans_pdf(spans))
+    return canon_rows([r.asDict() for r in snap_documents(df, tms, tm_ids, cfg).collect()])
 
 
-def _spans_pdf(n_docs):
+def _doc_spans(n_docs):
     from texel_spark.sources.documents import build_document
 
-    rows = {"doc_id": [], "span_idx": [], "wkt": []}
-    for i in range(n_docs):
-        doc_id, spans = build_document(i)
-        for kind, text, media_ref, offset in spans:
-            if kind == "geom":
-                rows["doc_id"].append(doc_id)
-                rows["span_idx"].append(offset)
-                rows["wkt"].append(text)
-    return pd.DataFrame(rows)
+    return [
+        (doc_id, offset, text)
+        for doc_id, spans in map(build_document, range(n_docs))
+        for kind, text, media_ref, offset in spans
+        if kind == "geom"
+    ]
 
 
-def test_stage_matches_legacy_on_synthetic_distribution(spark):
+def test_stage_matches_scalar_on_synthetic_distribution(spark):
     tms = load_embedded("NetherlandsRDNewQuad")
     tm_ids = [5, 9, 12]
     cfg = SnapConfig(ignore_outside_grid=True)
-    pdf = _spans_pdf(400)
-    assert len(pdf) > 200
-    want = _legacy_rows(pdf, tms, tm_ids, cfg)
-    got = _new_rows(spark, pdf, tms, tm_ids, cfg)
-    assert got == want
+    spans = _doc_spans(400)
+    assert len(spans) > 200
+    assert _spark_rows(spark, spans, tms, tm_ids, cfg) == scalar_rows(spans, tms, tm_ids, cfg)
 
 
-def test_stage_matches_legacy_on_adversarial_rows(spark):
+def test_stage_matches_scalar_on_adversarial_rows(spark):
     tms = load_embedded("NetherlandsRDNewQuad")
     tm_ids = [5, 9, 12]
     cfg = SnapConfig(ignore_outside_grid=True)
@@ -118,40 +66,52 @@ def test_stage_matches_legacy_on_adversarial_rows(spark):
         ("d-sliver", 8, "POLYGON ((155000 463000, 155000.0001 463000, 155000.0001 463000.0001))"),
         ("d-bowtie", 9, "POLYGON ((0 0, 100000 100000, 100000 0, 0 100000))"),
     ]
-    pdf = pd.DataFrame({"doc_id": [r[0] for r in rows], "span_idx": [r[1] for r in rows], "wkt": [r[2] for r in rows]})
-    want = _legacy_rows(pdf, tms, tm_ids, cfg)
-    got = _new_rows(spark, pdf, tms, tm_ids, cfg)
-    assert got == want
+    got = _spark_rows(spark, rows, tms, tm_ids, cfg)
+    assert got == scalar_rows(rows, tms, tm_ids, cfg)
     assert any(r[0] == "d-multi" for r in got)
 
 
 def test_stage_falls_back_on_3d_wkt(spark):
+    """Rows the array parser rejects - 3D, POLYGON Z, non-ASCII, EMPTY -
+    are parsed by the scalar codec and snapped from their first two
+    ordinates."""
     tms = load_embedded("NetherlandsRDNewQuad")
     tm_ids = [9]
     cfg = SnapConfig(ignore_outside_grid=True)
-    pdf = pd.DataFrame(
-        {
-            "doc_id": ["a", "b"],
-            "span_idx": [0, 0],
-            "wkt": [
-                "POLYGON ((155000 463000 1, 155050 463000 1, 155050 463050 1))",  # 3D
-                "POLYGON ((155000 463000, 155050 463000, 155050 463050))",
-            ],
-        }
-    )
-    want = _legacy_rows(pdf, tms, tm_ids, cfg)
-    got = _new_rows(spark, pdf, tms, tm_ids, cfg)
-    assert got == want
+    spans = [
+        ("a", 0, "POLYGON ((155000 463000 1, 155050 463000 1, 155050 463050 1))"),
+        ("b", 0, "POLYGON ((155000 463000, 155050 463000, 155050 463050))"),
+        ("c", 0, "POLYGON Z ((155000 463000 1, 155050 463000 2, 155050 463050 3))"),
+        ("d", 0, "MULTIPOLYGON (((155000 463000,\u00a0155050 463000, 155050 463050)))"),
+        ("e", 0, "POLYGON EMPTY"),
+    ]
+    got = _spark_rows(spark, spans, tms, tm_ids, cfg)
+    assert got == scalar_rows(spans, tms, tm_ids, cfg)
+    assert [r[0] for r in got] == ["a", "b", "c", "d"]
 
 
 def test_stage_keep_points_and_lines_and_reverse(spark):
     tms = load_embedded("NetherlandsRDNewQuad")
     tm_ids = [5, 12]
     cfg = SnapConfig(ignore_outside_grid=True, keep_points_and_lines=True, reverse_winding_order=True)
-    pdf = _spans_pdf(120)
-    want = _legacy_rows(pdf, tms, tm_ids, cfg)
-    got = _new_rows(spark, pdf, tms, tm_ids, cfg)
-    assert got == want
+    spans = _doc_spans(120)
+    assert _spark_rows(spark, spans, tms, tm_ids, cfg) == scalar_rows(spans, tms, tm_ids, cfg)
+
+
+def test_stage_3d_row_emits_the_wkt_of_its_2d_twin():
+    """A polygon the array parser rejects (3D, POLYGON Z) is formatted
+    by the same digit-exact formatter as its 2D twin: byte-identical
+    wkt, not the scalar codec's repr() text."""
+    from texel_spark.operators.snap_tiles import _process_batch
+
+    spans = [
+        ("2d", 0, "POLYGON ((30 30, 500 30, 500 500, 30 500))"),
+        ("3d", 0, "POLYGON ((30 30 7, 500 30 7, 500 500 7, 30 500 7))"),
+        ("z", 0, "POLYGON Z ((30 30 7, 500 30 7, 500 500 7, 30 500 7))"),
+    ]
+    out = _process_batch(spans_pdf(spans), simple_tms(2, 256.0), [0], SnapConfig(ignore_outside_grid=True))
+    wkt = dict(zip(out["doc_id"], out["wkt"]))
+    assert wkt == dict.fromkeys(("2d", "3d", "z"), "POLYGON ((32 32, 480 32, 480 480, 32 480, 32 32))")
 
 
 def test_stage_wkt_text_stable_under_batch_composition(spark):
@@ -165,12 +125,9 @@ def test_stage_wkt_text_stable_under_batch_composition(spark):
     odd = ("d-odd", 1, "POLYGON ((155000 463000 1, 155050 463000 1, 155050 463050 1))")
 
     def wkt_of(rows, doc):
-        pdf = pd.DataFrame(
-            {"doc_id": [r[0] for r in rows], "span_idx": [r[1] for r in rows], "wkt": [r[2] for r in rows]}
-        )
         from texel_spark.operators.snap_tiles import snap_documents
 
-        df = spark.createDataFrame(pdf).coalesce(1)  # one Arrow batch
+        df = spark.createDataFrame(spans_pdf(rows)).coalesce(1)  # one Arrow batch
         return sorted(
             r["wkt"] for r in snap_documents(df, tms, tm_ids, cfg).collect() if r["doc_id"] == doc
         )
@@ -193,10 +150,7 @@ def test_stage_empty_geometries_emit_nothing():
     empties = [("d-poly", 1, "POLYGON EMPTY"), ("d-multi", 2, "MULTIPOLYGON EMPTY"), ("d-point", 3, "POINT EMPTY")]
 
     def run(rows):
-        pdf = pd.DataFrame(
-            {"doc_id": [r[0] for r in rows], "span_idx": [r[1] for r in rows], "wkt": [r[2] for r in rows]}
-        )
-        return _process_batch(pdf, tms, tm_ids, cfg)
+        return _process_batch(spans_pdf(rows), tms, tm_ids, cfg)
 
     alone = run([clean])
     mixed = run([clean, *empties])
@@ -210,8 +164,8 @@ _CLEAN_SPAN = ("d-clean", 0, "POLYGON ((155000 463000, 156000 463000, 156000 464
 
 def _assert_malformed_span_raises(wkt, match):
     """A malformed span fails the batch with one ValueError naming its
-    doc_id/span_idx: the array codec routes it to the scalar lane, whose
-    parser rejects it before the kernel sees it (no numpy warning, no
+    doc_id/span_idx: the array parser hands it to the scalar parser,
+    which rejects it before the kernel sees it (no numpy warning, no
     silently dropped span)."""
     import warnings
 
@@ -221,8 +175,7 @@ def _assert_malformed_span_raises(wkt, match):
     with pytest.raises(ValueError, match=match):
         parse_wkt(wkt)
     assert parse_polygons_batch_resilient([_CLEAN_SPAN[2], wkt])[1] == [1]
-    rows = [_CLEAN_SPAN, ("d-bad", 7, wkt)]
-    pdf = pd.DataFrame({"doc_id": [r[0] for r in rows], "span_idx": [r[1] for r in rows], "wkt": [r[2] for r in rows]})
+    pdf = spans_pdf([_CLEAN_SPAN, ("d-bad", 7, wkt)])
     with warnings.catch_warnings():
         warnings.simplefilter("error")
         with pytest.raises(ValueError, match=r"doc_id='d-bad' span_idx=7: malformed WKT: .*" + match):

@@ -1,7 +1,8 @@
 """Spark-level operator tests: documents invariant, pipeline goldens,
 dedup/similarity sanity against small Python oracles.
 
-One shared local session (module scope) keeps the suite fast.
+One shared local session (the `spark` fixture in conftest.py) keeps the
+suite fast.
 """
 
 import math
@@ -12,14 +13,6 @@ pyspark = pytest.importorskip("pyspark")
 
 from texel_spark.grid.tms import load_embedded
 from texel_spark.kernel.snap import SnapConfig
-
-
-@pytest.fixture(scope="module")
-def spark():
-    from texel_spark.session import get_spark
-
-    s = get_spark(app_name="texel-tests", master="local[4]", shuffle_partitions=4)
-    yield s
 
 
 @pytest.fixture(scope="module")
@@ -382,6 +375,25 @@ def test_run_pipeline_resume_skips_completed_zooms(spark, tmp_path):
     # the manifest is the on-disk source of truth
     with open(os.path.join(out, "manifest.json")) as f:
         assert sorted(json.load(f)["completed_zooms"]) == [5, 9]
+
+
+def test_run_pipeline_rejects_manifest_without_zooms(spark, tmp_path):
+    """A manifest with only "completed_zooms" (no per-(zoom, bucket)
+    "zooms" entry) fails by its path instead of being trusted."""
+    import json
+    import re
+
+    from texel_spark.operators.snap_tiles import run_pipeline
+    from texel_spark.sources.documents import synth_documents
+
+    out = tmp_path / "pipe"
+    out.mkdir()
+    manifest = out / "manifest.json"
+    manifest.write_text(json.dumps({"completed_zooms": [5]}))
+    docs = synth_documents(spark, 4, partitions=1)
+    with pytest.raises(ValueError, match=re.escape(str(manifest))):
+        run_pipeline(docs, load_embedded("NetherlandsRDNewQuad"), [5], str(out))
+    assert not (out / "tiles").exists()
 
 
 def test_frame_sampling_and_resize_stages(spark, docs):

@@ -11,13 +11,6 @@ import pytest
 pyspark = pytest.importorskip("pyspark")
 
 
-@pytest.fixture(scope="module")
-def spark():
-    from texel_spark.session import get_spark
-
-    return get_spark(app_name="texel-temporal-tests", master="local[4]", shuffle_partitions=4)
-
-
 def _ts(s, us=0):
     return dt.datetime(2024, 1, 1, 0, 0, s, us)
 

@@ -18,10 +18,12 @@ programs:
   round-trips are identical to the scalar ``repr``-based formatter.
 
 Anything surprising (non-ASCII, non-2D coordinates, unbalanced parens,
-NaN/inf ordinates, EMPTY geometries) raises WktBatchFallback and the
-caller routes the row/batch through the scalar codec, so behavior on odd
-input is the scalar codec's: 3D and EMPTY parse, malformed text raises
-ValueError.
+NaN/inf ordinates, EMPTY geometries) raises WktBatchFallback;
+parse_polygons_batch_resilient isolates those rows, the caller parses
+them with the scalar codec (malformed text raises ValueError there), and
+fold_scalar_rows appends their polygons to the same flat arrays - so a
+3D or non-ASCII polygon is snapped and formatted exactly like its 2D
+twin, and EMPTY geometries emit nothing.
 
 Reference parity: the WKT surface itself has no reference analog (the
 reference reads geopackage WKB, processing/gpkg/gpkg.go:76-155); this
@@ -55,7 +57,7 @@ class ParsedPolygonBatch:
     """
 
     __slots__ = (
-        "rows",  # original row index per fast row (int64, ascending)
+        "rows",  # original row index per fast row (int64; folded rows last)
         "is_multi",  # bool per fast row
         "member_fastrow",  # per member: fast-row position (0..len(rows)-1)
         "ring_member",  # per ring: member id
@@ -74,6 +76,13 @@ class ParsedPolygonBatch:
         self.ring_len = ring_len
         self.xy = xy
         self.other_rows = other_rows
+
+
+def _empty_batch(other_rows: list[int]) -> ParsedPolygonBatch:
+    i64 = np.empty(0, np.int64)
+    return ParsedPolygonBatch(
+        i64, np.empty(0, bool), i64, i64, i64, i64, np.empty((0, 2), np.float64), other_rows
+    )
 
 
 def parse_polygons_batch(texts) -> ParsedPolygonBatch:
@@ -101,18 +110,8 @@ def parse_polygons_batch(texts) -> ParsedPolygonBatch:
             parts.append(s)
         else:
             other_rows.append(i)
-    empty = ParsedPolygonBatch(
-        np.empty(0, np.int64),
-        np.empty(0, bool),
-        np.empty(0, np.int64),
-        np.empty(0, np.int64),
-        np.empty(0, np.int64),
-        np.empty(0, np.int64),
-        np.empty((0, 2), np.float64),
-        other_rows,
-    )
     if not fast_rows:
-        return empty
+        return _empty_batch(other_rows)
 
     joined = "\n".join(parts)
     try:
@@ -221,37 +220,63 @@ def _concat_parsed(a: ParsedPolygonBatch, b: ParsedPolygonBatch, row_base: int) 
 
 def parse_polygons_batch_resilient(texts) -> tuple[ParsedPolygonBatch, list[int]]:
     """Per-row-resilient batch parse (ADVICE r3): one odd row (3D WKT,
-    EMPTY, non-ascii) must not flip the WHOLE Arrow batch to the scalar
-    codec - that made the emitted wkt TEXT style sensitive to batch
-    composition (fixed-point vs repr() shortest-roundtrip; parsed floats
-    were identical but text hashes were not).
+    EMPTY, non-ascii, malformed) must not keep the rest of its Arrow
+    batch off the array parser.
 
     Tries the whole batch first (zero overhead on the clean path); on
     WktBatchFallback, bisects so only the offending rows are excluded.
     Returns (parsed, fallback_rows): rows in ``fallback_rows`` need the
-    full scalar codec; every other row keeps the digit-exact batch
-    formatter regardless of what else shares its batch.  A single bad
-    row costs O(log n) half-batch reparses - rare by construction.
+    scalar parser, whose results fold_scalar_rows appends to ``parsed``.
+    A single bad row costs O(log n) half-batch reparses - rare by
+    construction.
     """
     try:
         return parse_polygons_batch(texts), []
     except WktBatchFallback:
         if len(texts) <= 1:
-            empty = ParsedPolygonBatch(
-                np.empty(0, np.int64),
-                np.empty(0, bool),
-                np.empty(0, np.int64),
-                np.empty(0, np.int64),
-                np.empty(0, np.int64),
-                np.empty(0, np.int64),
-                np.empty((0, 2), np.float64),
-                [],
-            )
-            return empty, list(range(len(texts)))
+            return _empty_batch([]), list(range(len(texts)))
         mid = len(texts) // 2
         left, fb_l = parse_polygons_batch_resilient(texts[:mid])
         right, fb_r = parse_polygons_batch_resilient(texts[mid:])
         return _concat_parsed(left, right, mid), fb_l + [r + mid for r in fb_r]
+
+
+def fold_scalar_rows(parsed: ParsedPolygonBatch, scalar_rows) -> ParsedPolygonBatch:
+    """Append rows the scalar codec parsed, as (row, kind, coords), to
+    ``parsed``: (MULTI)POLYGONs with rings join the flat arrays with the
+    first two ordinates of each point; EMPTY geometries and other kinds
+    join ``other_rows``."""
+    rows: list[int] = []
+    is_multi: list[bool] = []
+    member_fastrow: list[int] = []
+    ring_member: list[int] = []
+    ring_len: list[int] = []
+    pts: list = []
+    other_rows: list[int] = []
+    for row, kind, coords in scalar_rows:
+        if kind not in ("polygon", "multipolygon") or not coords:
+            other_rows.append(row)
+            continue
+        for poly in coords if kind == "multipolygon" else [coords]:
+            for ring in poly:
+                ring_member.append(len(member_fastrow))
+                ring_len.append(len(ring))
+                pts.extend(p[:2] for p in ring)
+            member_fastrow.append(len(rows))
+        rows.append(row)
+        is_multi.append(kind == "multipolygon")
+    lens = np.asarray(ring_len, dtype=np.int64)
+    folded = ParsedPolygonBatch(
+        np.asarray(rows, dtype=np.int64),
+        np.asarray(is_multi, dtype=bool),
+        np.asarray(member_fastrow, dtype=np.int64),
+        np.asarray(ring_member, dtype=np.int64),
+        _exclusive_cumsum(lens)[:-1],
+        lens,
+        np.asarray(pts, dtype=np.float64).reshape(-1, 2),
+        other_rows,
+    )
+    return _concat_parsed(parsed, folded, 0)
 
 
 # -- fixed-point formatting --------------------------------------------------

@@ -31,8 +31,10 @@ Python (functions/wkt_batch.py); float views (int / 1e10, identical to
 intgeom.ToGeomOrd) are used wherever the scalar kernel compares floats,
 so equality/winding decisions are bit-for-bit the scalar kernel's.
 
-The scalar kernel stays as the oracle: tests/test_snap_batch.py pins
-batch == scalar on every reference golden case and on random polygons.
+The scalar kernel stays as the oracle: tests/test_snap_batch.py runs the
+snap stage's batch entry (operators.snap_tiles._process_batch, the only
+caller of snap_flat_batch) against it on every reference golden case and
+on random polygons.
 """
 
 from __future__ import annotations
@@ -41,11 +43,9 @@ import numpy as np
 
 from ..grid import morton
 from ..grid.fixedpoint import go_div
-from ..grid.tms import TileMatrixSet
 from .pointindex import VECTOR_TILE_INTERNAL_PIXEL_RESOLUTION, OutsideGridError
 from .geomfuncs import ring_contains
 from .snap import (
-    SnapConfig,
     _cleanup_new_ring,
     _dedupe_inners_outers,
     _match_inners_to_polygons,
@@ -194,57 +194,6 @@ def _iter_ring_floats(fx, fy, a: int, b: int, rev: bool):
     rng = range(b - 1, a - 1, -1) if rev else range(a, b)
     for i in rng:
         yield (fx[i], fy[i])
-
-
-def materialize_polygons(polys, store: BatchSnapStore):
-    """Ring handles -> plain list-of-list-of-(x, y) float tuples
-    (store must be finished)."""
-    out = []
-    for poly in polys:
-        rings = []
-        for ring in poly:
-            if isinstance(ring, tuple):
-                a, b, rev = ring
-                rings.append(_ring_floats(store.fx, store.fy, a, b, rev))
-            else:
-                rings.append(ring)
-        out.append(rings)
-    return out
-
-
-def snap_polygons_batch(polygons, tms: TileMatrixSet, tm_ids, config: SnapConfig | None = None):
-    """Snap a whole batch of polygons at once; returns one result dict per
-    input polygon ({tm_id: [polygons]}, same contract as snap_polygon).
-
-    Raises OutsideGridError (first offending vertex, like the scalar
-    kernel) unless config.ignore_outside_grid, in which case the affected
-    polygon's result is {}.
-    """
-    config = config or SnapConfig()
-    if not polygons:
-        return []
-    # flatten tuple-land input to the flat-array form
-    ring_member_l: list[int] = []
-    ring_len_l: list[int] = []
-    flat: list[float] = []
-    for mi, poly in enumerate(polygons):
-        for ring in poly:
-            ring_member_l.append(mi)
-            ring_len_l.append(len(ring))
-            for v in ring:
-                flat.append(float(v[0]))
-                flat.append(float(v[1]))
-    xy = np.asarray(flat, dtype=np.float64).reshape(-1, 2)
-    ring_member = np.asarray(ring_member_l, dtype=np.int64)
-    ring_len = np.asarray(ring_len_l, dtype=np.int64)
-    ring_start = _exclusive_cumsum(ring_len)[:-1]
-    results, store, _ = snap_flat_batch(
-        xy, ring_member, ring_start, ring_len, len(polygons), tms, tm_ids, config
-    )
-    out = []
-    for res in results:
-        out.append({tm: materialize_polygons(polys, store) for tm, polys in res.items()})
-    return out
 
 
 def snap_flat_batch(

@@ -100,50 +100,13 @@ def _emit_nonpolygon(emit, doc_id, span_idx, kind, coords, tm_ids_):
         emit(doc_id, span_idx, zoom, kind, w, bbox, 0)
 
 
-def _legacy_batch(pdf, tms_, tm_ids_, cfg, emit):
-    """Scalar-codec fallback for batches the array codec can't parse
-    (3D/odd WKT); same per-row flow the r2 operator used."""
-    from ..functions.wkt import multipolygon_to_wkt, polygon_bbox, polygon_to_wkt
-    from ..kernel.snap_batch import snap_polygons_batch
-
-    parsed = []
-    members: list = []
-    member_row: list[int] = []
-    for row_i, (wkt, doc_id, span_idx) in enumerate(zip(pdf["wkt"], pdf["doc_id"], pdf["span_idx"])):
-        kind, coords = _parse_span(wkt, doc_id, span_idx)
-        parsed.append((kind, coords))
-        if kind == "polygon" and coords:
-            members.append(coords)
-            member_row.append(row_i)
-        elif kind == "multipolygon":
-            members.extend(coords)
-            member_row.extend([row_i] * len(coords))
-    snapped = snap_polygons_batch(members, tms_, tm_ids_, cfg) if members else []
-    regrouped: dict[int, dict[int, list]] = {}
-    for res, row_i in zip(snapped, member_row):
-        rg = regrouped.setdefault(row_i, {})
-        for zoom, polys in res.items():
-            rg.setdefault(zoom, []).extend(polys)
-    for row_i, (doc_id, span_idx) in enumerate(zip(pdf["doc_id"], pdf["span_idx"])):
-        kind, coords = parsed[row_i]
-        if kind in ("polygon", "multipolygon"):
-            src_multi = kind == "multipolygon"
-            for zoom, polys in regrouped.get(row_i, {}).items():
-                if not polys:
-                    continue
-                multi = src_multi or len(polys) > 1
-                w = multipolygon_to_wkt(polys) if multi else polygon_to_wkt(polys[0])
-                bbox = polygon_bbox([r for p in polys for r in p])
-                emit(doc_id, int(span_idx), zoom, "multipolygon" if multi else "polygon", w, bbox, len(polys))
-        else:
-            _emit_nonpolygon(emit, doc_id, int(span_idx), kind, coords, tm_ids_)
-
-
 def _process_batch(pdf, tms_, tm_ids_, cfg):
     """One Arrow batch through the snap stage: batch WKT parse ->
     flat-array snap kernel -> vectorized assembly -> digit-exact batch
-    WKT emit.  Per-row Python only touches the rare scalar-path rows
-    (multipolygon merges, self-tangent rings, odd WKT kinds)."""
+    WKT emit.  Every polygon row takes this one path; per-row Python only
+    touches the rare rows the array parser rejects (3D, non-ASCII, EMPTY
+    or malformed WKT, parsed by the scalar codec), scalar-path rings
+    (multipolygon merges, self-tangent rings) and non-polygon kinds."""
     import numpy as np
     import pandas as pd
 
@@ -167,16 +130,17 @@ def _process_batch(pdf, tms_, tm_ids_, cfg):
         out["n_polys"].append(n_polys)
 
     texts = pdf["wkt"].tolist()
-    # per-row resilience (ADVICE r3): odd rows (3D/EMPTY WKT) route
-    # through the scalar codec INDIVIDUALLY, so the emitted wkt text of
-    # every clean row stays the digit-exact batch formatter no matter
-    # what else shares the Arrow batch
-    parsed, fb_rows = wb.parse_polygons_batch_resilient(texts)
-    if fb_rows:
-        _legacy_batch(pdf.iloc[fb_rows].reset_index(drop=True), tms_, tm_ids_, cfg, emit)
-
     doc_ids = pdf["doc_id"].tolist()
     span_idxs = pdf["span_idx"].tolist()
+    # rows the array parser rejects (3D/EMPTY/non-ASCII WKT) are parsed
+    # one by one by the scalar codec and folded into the same flat
+    # arrays, so they share the kernel entry and the digit-exact
+    # formatter with every other row of the batch
+    parsed, fb_rows = wb.parse_polygons_batch_resilient(texts)
+    if fb_rows:
+        parsed = wb.fold_scalar_rows(
+            parsed, [(i, *_parse_span(texts[i], doc_ids[i], span_idxs[i])) for i in fb_rows]
+        )
     n_members = parsed.member_fastrow.size
     n_fast_rows = parsed.rows.size
     row_members = np.searchsorted(parsed.member_fastrow, np.arange(n_fast_rows + 1))
@@ -464,16 +428,14 @@ def snapped_geometries(snapped: DataFrame) -> DataFrame:
 
 def _load_manifest(path: str) -> dict:
     """Manifest schema: {"zooms": {"<z>": {"buckets": [ints], "geoms": bool}},
-    "completed_zooms": [...] (derived, kept for compat)}.  Legacy
-    manifests (completed_zooms only) upgrade to fully-complete entries."""
+    "completed_zooms": [...] (derived from "zooms" on every save)}.  A
+    manifest without "zooms" raises ValueError."""
     if not os.path.exists(path):
         return {"zooms": {}}
     with open(path) as f:
         m = json.load(f)
     if "zooms" not in m:
-        m["zooms"] = {
-            str(z): {"buckets": None, "geoms": True} for z in m.get("completed_zooms", [])
-        }
+        raise ValueError(f"{path}: manifest has no per-(zoom, bucket) \"zooms\" entry")
     return m
 
 
@@ -481,12 +443,7 @@ def _save_manifest(path: str, manifest: dict, tile_buckets: int) -> None:
     """Atomic write (tmp + rename): a kill mid-update never corrupts the
     on-disk source of truth (reference analog: paged transactional
     writes, processing/gpkg/gpkg.go:205-272)."""
-    done = [
-        int(z)
-        for z, st in manifest["zooms"].items()
-        if st.get("geoms")
-        and (st.get("buckets") is None or len(st["buckets"]) >= tile_buckets)
-    ]
+    done = [int(z) for z, st in manifest["zooms"].items() if st["geoms"] and len(st["buckets"]) >= tile_buckets]
     manifest["completed_zooms"] = sorted(done)
     tmp = path + ".tmp"
     with open(tmp, "w") as f:
@@ -525,10 +482,7 @@ def run_pipeline(
     manifest = _load_manifest(manifest_path) if resume else {"zooms": {}}
 
     def zoom_state(z: int) -> dict:
-        st = manifest["zooms"].setdefault(str(z), {"buckets": [], "geoms": False})
-        if st.get("buckets") is None:  # legacy fully-complete zoom
-            st["buckets"] = list(range(tile_buckets))
-        return st
+        return manifest["zooms"].setdefault(str(z), {"buckets": [], "geoms": False})
 
     todo = [
         z
