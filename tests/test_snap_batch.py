@@ -233,3 +233,54 @@ def test_batch_matches_scalar_on_holed_polygons(keep_points_and_lines):
     assert n_polys["hole outside the outer", 6] == 2
     assert n_polys["hole collapsing at zoom 1", 1] == (2 if keep_points_and_lines else 1)
     assert stage_rows(spans, tms, tm_ids, config) == want
+
+
+def test_kernel_columnar_contract_as_perfbench_replays_it():
+    """perfbench's kernel replay calls snap_flat_batch as below and reads
+    ``results[m] is None`` as "member m took the columnar lane"
+    (kernel.columnar_share).  Pin that contract: every member in
+    ``columnar`` has a None result, holed and multipolygon members come
+    back as dicts, and the stage rows built from the columnar entries
+    equal the scalar kernel's rows."""
+    import numpy as np
+
+    from texel_spark.functions.wkt_batch import parse_polygons_batch_resilient
+    from texel_spark.kernel.snap_batch import snap_flat_batch
+
+    rng = random.Random(7)
+    tms = load_embedded("NetherlandsRDNewQuad")
+    tm_ids = [5, 9, 12]
+    config = SnapConfig(ignore_outside_grid=True)
+    spans = []
+    for i in range(12):
+        cx, cy = rng.uniform(100_000, 200_000), rng.uniform(400_000, 500_000)
+        spans.append((f"one-ring-{i}", 0, span_wkt([[_random_ring(rng, cx, cy, 3_000, 8)]])))
+    spans.append(("holed", 0, span_wkt([[_random_ring(rng, 150_000, 450_000, 4_000, 9),
+                                          _random_ring(rng, 150_000, 450_000, 1_000, 5)]])))
+    spans.append(("multi", 0, span_wkt([[_random_ring(rng, 120_000, 420_000, 2_000, 6)],
+                                        [_random_ring(rng, 180_000, 480_000, 2_000, 7)]], multi=True)))
+
+    parsed, fb_rows = parse_polygons_batch_resilient([s[2] for s in spans])
+    assert fb_rows == []
+    n_members = parsed.member_fastrow.size
+    row_members = np.searchsorted(parsed.member_fastrow, np.arange(parsed.rows.size + 1))
+    multi = (row_members[1:] - row_members[:-1]) > 1
+    results, _, columnar = snap_flat_batch(
+        parsed.xy, parsed.ring_member, parsed.ring_start, parsed.ring_len,
+        n_members, tms, tm_ids, config,
+        need_dicts=multi[parsed.member_fastrow] if n_members else None,
+        collect_columnar=True,
+    )
+
+    col_members = set(np.concatenate([mem for mem, _, _, _ in columnar.values()]).tolist())
+    assert col_members
+    assert all(results[m] is None for m in col_members)
+    doc_of_member = [spans[int(parsed.rows[fr])][0] for fr in parsed.member_fastrow]
+    dict_docs = {doc_of_member[m] for m in range(n_members) if results[m] is not None}
+    assert {"holed", "multi"} <= dict_docs
+    col_docs = {doc_of_member[m] for m in col_members}
+    assert not col_docs & dict_docs
+
+    col_spans = [s for s in spans if s[0] in col_docs]
+    got = [r for r in stage_rows(spans, tms, tm_ids, config) if r[0] in col_docs]
+    assert got == scalar_rows(col_spans, tms, tm_ids, config)

@@ -6,8 +6,9 @@ must agree exactly - coordinates bit-for-bit after parse-back, bboxes and
 counts equal - on the synthetic document distribution, on adversarial
 geometry rows and on odd WKT (3D, POLYGON Z, non-ASCII, EMPTY), which the
 scalar codec parses and the stage folds into the same flat arrays as
-every other row.  Malformed WKT fails the batch with one ValueError
-naming its span.
+every other row.  Malformed or null WKT fails the batch with one
+ValueError naming its span.  The stage's frame has the same dtypes
+whatever its batch holds.
 """
 
 import pytest
@@ -207,6 +208,44 @@ def test_malformed_wkt_non_finite_ordinate_raises(bad):
     _assert_malformed_span_raises(
         f"POLYGON ((155000 463000, {bad} 463000, 156000 464000, 155000 464000))", "non-finite ordinate"
     )
+
+
+def test_null_wkt_raises():
+    _assert_malformed_span_raises(None, "NoneType instead of text")
+
+
+_SNAPPED_DTYPES = {
+    "doc_id": "object",
+    "span_idx": "int32",
+    "zoom": "int32",
+    "geom_kind": "object",
+    "wkt": "object",
+    "minx": "float64",
+    "miny": "float64",
+    "maxx": "float64",
+    "maxy": "float64",
+    "n_polys": "int32",
+}
+
+
+@pytest.mark.parametrize(
+    "spans, keep_points_and_lines, n_rows",
+    [
+        ([_CLEAN_SPAN], False, 2),  # the kernel's columnar lane
+        ([_CLEAN_SPAN], True, 2),  # dict results only
+        ([("d-point", 0, "POINT (155000 463000)")], False, 2),
+        ([("d-poly", 0, "POLYGON EMPTY"), ("d-point", 1, "POINT EMPTY")], False, 0),
+    ],
+    ids=["columnar", "keep_points_and_lines", "point-only", "empty-only"],
+)
+def test_stage_frame_dtypes_do_not_depend_on_batch_contents(spans, keep_points_and_lines, n_rows):
+    from texel_spark.operators.snap_tiles import _process_batch
+
+    cfg = SnapConfig(ignore_outside_grid=True, keep_points_and_lines=keep_points_and_lines)
+    out = _process_batch(spans_pdf(spans), load_embedded("NetherlandsRDNewQuad"), [5, 9], cfg)
+    assert len(out) == n_rows
+    assert list(out.columns) == list(_SNAPPED_DTYPES)
+    assert {k: str(v) for k, v in out.dtypes.items()} == _SNAPPED_DTYPES
 
 
 def test_pipeline_output_independent_of_partitioning(spark, tmp_path):

@@ -55,7 +55,9 @@ def parse_wkt(wkt: str):
     polygons) | ('point', (x, y)) | ('linestring', ring).  ``<KIND> EMPTY``
     returns the kind with empty coordinates.  Malformed text - unbalanced
     parens, a polygon without rings, a point with fewer than 2 ordinates,
-    a NaN/inf ordinate - raises ValueError."""
+    a NaN/inf ordinate, null text - raises ValueError."""
+    if not isinstance(wkt, str):
+        raise ValueError(f"malformed WKT: {type(wkt).__name__} instead of text")
     s = wkt.strip()
     if s[-5:].upper() == "EMPTY":
         kind = s.split(None, 1)[0].lower()

@@ -17,11 +17,11 @@ programs:
   one correctly-rounded operation on the same exact value), so parse
   round-trips are identical to the scalar ``repr``-based formatter.
 
-Anything surprising (non-ASCII, non-2D coordinates, unbalanced parens,
-NaN/inf ordinates, EMPTY geometries) raises WktBatchFallback;
-parse_polygons_batch_resilient isolates those rows, the caller parses
-them with the scalar codec (malformed text raises ValueError there), and
-fold_scalar_rows appends their polygons to the same flat arrays - so a
+Anything surprising (null text, non-ASCII, non-2D coordinates,
+unbalanced parens, NaN/inf ordinates, EMPTY geometries) raises
+WktBatchFallback; parse_polygons_batch_resilient isolates those rows,
+the caller parses them with the scalar codec (null or malformed text
+raises ValueError there), and fold_scalar_rows appends their polygons to the same flat arrays - so a
 3D or non-ASCII polygon is snapped and formatted exactly like its 2D
 twin, and EMPTY geometries emit nothing.
 
@@ -99,6 +99,8 @@ def parse_polygons_batch(texts) -> ParsedPolygonBatch:
     other_rows: list[int] = []
     parts: list[str] = []
     for i, s in enumerate(texts):
+        if not isinstance(s, str):
+            raise WktBatchFallback("null WKT")
         u = s.lstrip()[:13].upper()
         if u.startswith("MULTIPOLYGON"):
             fast_rows.append(i)
@@ -220,7 +222,7 @@ def _concat_parsed(a: ParsedPolygonBatch, b: ParsedPolygonBatch, row_base: int) 
 
 def parse_polygons_batch_resilient(texts) -> tuple[ParsedPolygonBatch, list[int]]:
     """Per-row-resilient batch parse (ADVICE r3): one odd row (3D WKT,
-    EMPTY, non-ascii, malformed) must not keep the rest of its Arrow
+    EMPTY, non-ascii, null, malformed) must not keep the rest of its Arrow
     batch off the array parser.
 
     Tries the whole batch first (zero overhead on the clean path); on

@@ -33,8 +33,8 @@ so equality/winding decisions are bit-for-bit the scalar kernel's.
 
 The scalar kernel stays as the oracle: tests/test_snap_batch.py runs the
 snap stage's batch entry (operators.snap_tiles._process_batch, the only
-caller of snap_flat_batch) against it on every reference golden case and
-on random polygons.
+caller of snap_flat_batch in the package) against it on every reference
+golden case and on random polygons.
 """
 
 from __future__ import annotations
@@ -221,7 +221,11 @@ def snap_flat_batch(
     dict entirely: results[m] is None and their output lands in
     ``columnar`` as {tm_id: (member_ids, a, b, rev)} arrays - zero
     per-member Python.  ``need_dicts`` (bool per member) forces the dict
-    path for members the caller must merge (e.g. multipolygon parts)."""
+    path for members the caller must merge (e.g. multipolygon parts).
+    The snap stage (operators.snap_tiles._process_batch) appends the
+    ``columnar`` arrays to its geometry table as one-polygon, one-ring
+    geometries; perfbench's kernel replay counts the None entries of
+    ``results`` as the columnar share."""
     deepest_id = max(tm_ids)
     level_diff = tms.level_diff(VECTOR_TILE_INTERNAL_PIXEL_RESOLUTION)
     deepest_level = deepest_id + level_diff

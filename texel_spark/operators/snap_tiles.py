@@ -66,6 +66,11 @@ SNAPPED_SCHEMA = StructType(
         StructField("n_polys", IntegerType()),
     ]
 )
+# the pandas dtype of each SNAPPED_SCHEMA column in a snap-stage frame
+SNAPPED_DTYPES = {
+    f.name: {IntegerType(): "int32", DoubleType(): "float64"}.get(f.dataType, "object")
+    for f in SNAPPED_SCHEMA.fields
+}
 
 
 def _parse_span(wkt, doc_id, span_idx):
@@ -78,7 +83,7 @@ def _parse_span(wkt, doc_id, span_idx):
         raise ValueError(f"doc_id={doc_id!r} span_idx={span_idx}: {e}") from e
 
 
-def _emit_nonpolygon(emit, doc_id, span_idx, kind, coords, tm_ids_):
+def _emit_nonpolygon(rows, doc_id, span_idx, kind, coords, tm_ids_):
     """Non-polygon spans pass through unchanged to every zoom
     (processing/processing.go:62-69); EMPTY geometries emit nothing."""
     from ..functions.wkt import geometry_to_wkt
@@ -96,38 +101,32 @@ def _emit_nonpolygon(emit, doc_id, span_idx, kind, coords, tm_ids_):
         ys = [p[1] for p in coords]
         bbox = (min(xs), min(ys), max(xs), max(ys))
     w = geometry_to_wkt(kind, coords)
-    for zoom in tm_ids_:
-        emit(doc_id, span_idx, zoom, kind, w, bbox, 0)
+    rows.extend((doc_id, span_idx, zoom, kind, w, *bbox, 0) for zoom in tm_ids_)
 
 
 def _process_batch(pdf, tms_, tm_ids_, cfg):
     """One Arrow batch through the snap stage: batch WKT parse ->
-    flat-array snap kernel -> vectorized assembly -> digit-exact batch
-    WKT emit.  Every polygon row takes this one path; per-row Python only
-    touches the rare rows the array parser rejects (3D, non-ASCII, EMPTY
-    or malformed WKT, parsed by the scalar codec), scalar-path rings
-    (multipolygon merges, self-tangent rings) and non-polygon kinds."""
+    flat-array snap kernel -> one digit-exact batch WKT emit.
+
+    Every (row, zoom) geometry whose rings are all fast ring handles
+    lands in one geometry table: the kernel's columnar lane adds its
+    per-zoom arrays (one polygon with one ring each), and the rows with
+    a dict result (holed polygons, multipolygons) add theirs.  One
+    format_polygon_wkts call writes the table's WKT and one reduceat
+    pass its bboxes.  Per-row Python only touches rows with a dict
+    result, the rare rows the array parser rejects (3D, non-ASCII,
+    EMPTY, null or malformed WKT, parsed by the scalar codec),
+    geometries with scalar-path rings (multipolygon merges, self-tangent
+    rings), which are formatted one by one, and non-polygon kinds.
+
+    The frame has SNAPPED_DTYPES whatever the batch holds; the order of
+    its rows is unspecified."""
     import numpy as np
     import pandas as pd
 
     from ..functions import wkt_batch as wb
     from ..functions.wkt import multipolygon_to_wkt, polygon_bbox, polygon_to_wkt
     from ..kernel.snap_batch import _ring_floats, snap_flat_batch
-
-    names = SNAPPED_SCHEMA.fieldNames()
-    out = {name: [] for name in names}
-
-    def emit(doc_id, span_idx, zoom, kind, wkt, bbox, n_polys):
-        out["doc_id"].append(doc_id)
-        out["span_idx"].append(span_idx)
-        out["zoom"].append(zoom)
-        out["geom_kind"].append(kind)
-        out["wkt"].append(wkt)
-        out["minx"].append(bbox[0])
-        out["miny"].append(bbox[1])
-        out["maxx"].append(bbox[2])
-        out["maxy"].append(bbox[3])
-        out["n_polys"].append(n_polys)
 
     texts = pdf["wkt"].tolist()
     doc_ids = pdf["doc_id"].tolist()
@@ -142,8 +141,7 @@ def _process_batch(pdf, tms_, tm_ids_, cfg):
             parsed, [(i, *_parse_span(texts[i], doc_ids[i], span_idxs[i])) for i in fb_rows]
         )
     n_members = parsed.member_fastrow.size
-    n_fast_rows = parsed.rows.size
-    row_members = np.searchsorted(parsed.member_fastrow, np.arange(n_fast_rows + 1))
+    row_members = np.searchsorted(parsed.member_fastrow, np.arange(parsed.rows.size + 1))
     # members of multi-member rows must come back as dicts (merge step)
     multi_member_row = (row_members[1:] - row_members[:-1]) > 1
     need_dicts = multi_member_row[parsed.member_fastrow] if n_members else None
@@ -152,154 +150,80 @@ def _process_batch(pdf, tms_, tm_ids_, cfg):
         n_members, tms_, tm_ids_, cfg, need_dicts=need_dicts, collect_columnar=True,
     )
 
-    # fast-emit accumulators (vectorized WKT + bbox at the end)
-    f_out_idx: list = []  # output row (in the `out` lists) to patch
-    f_is_multi: list = []
-    f_poly_bounds: list = [0]
-    f_ring_bounds: list = [0]
-    f_ra: list = []
-    f_rb: list = []
-    f_rrev: list = []
-
-    for fr in range(n_fast_rows):
-        m0, m1 = int(row_members[fr]), int(row_members[fr + 1])
-        if m1 - m0 == 1 and results[m0] is None:
-            continue  # columnar lane (emitted in bulk below)
+    # dict results: handle-only geometries join the geometry table as
+    # (row, zoom, multi, n_polys), rings per polygon and (a, b, rev)
+    # handles; the rest are finished rows in ``other``
+    geoms, rings, handles = [], [], []
+    other = []
+    has_dict = np.fromiter((r is not None for r in results), dtype=bool, count=n_members)
+    for fr in np.unique(parsed.member_fastrow[has_dict]).tolist():
         row_i = int(parsed.rows[fr])
-        doc_id = doc_ids[row_i]
-        span_idx = int(span_idxs[row_i])
-        src_multi = bool(parsed.is_multi[fr])
         rg: dict[int, list] = {}
-        for m in range(m0, m1):
+        for m in range(row_members[fr], row_members[fr + 1]):
             for zoom, polys in results[m].items():
                 rg.setdefault(zoom, []).extend(polys)
         for zoom, polys in rg.items():
             if not polys:
                 continue
-            multi = src_multi or len(polys) > 1
-            kind = "multipolygon" if multi else "polygon"
+            multi = bool(parsed.is_multi[fr]) or len(polys) > 1
             if all(isinstance(r, tuple) for p in polys for r in p):
-                f_out_idx.append(len(out["wkt"]))
-                f_is_multi.append(multi)
-                f_poly_bounds.append(f_poly_bounds[-1] + len(polys))
+                geoms.append((row_i, zoom, multi, len(polys)))
                 for p in polys:
-                    f_ring_bounds.append(f_ring_bounds[-1] + len(p))
-                    for a, b, rev in p:
-                        f_ra.append(a)
-                        f_rb.append(b)
-                        f_rrev.append(rev)
-                emit(doc_id, span_idx, zoom, kind, None, (0.0, 0.0, 0.0, 0.0), len(polys))
-            else:
-                mat = [
-                    [
-                        _ring_floats(store.fx, store.fy, r[0], r[1], r[2])
-                        if isinstance(r, tuple)
-                        else r
-                        for r in p
-                    ]
-                    for p in polys
-                ]
-                w = multipolygon_to_wkt(mat) if multi else polygon_to_wkt(mat[0])
-                bbox = polygon_bbox([r for p in mat for r in p])
-                emit(doc_id, span_idx, zoom, kind, w, bbox, len(polys))
+                    rings.append(len(p))
+                    handles.extend(p)
+                continue
+            mat = [
+                [_ring_floats(store.fx, store.fy, *r) if isinstance(r, tuple) else r for r in p]
+                for p in polys
+            ]
+            w = multipolygon_to_wkt(mat) if multi else polygon_to_wkt(mat[0])
+            bbox = polygon_bbox([r for p in mat for r in p])
+            kind = "multipolygon" if multi else "polygon"
+            other.append((doc_ids[row_i], span_idxs[row_i], zoom, kind, w, *bbox, len(polys)))
 
     for row_i in parsed.other_rows:
-        doc_id, span_idx = doc_ids[row_i], int(span_idxs[row_i])
-        _emit_nonpolygon(emit, doc_id, span_idx, *_parse_span(texts[row_i], doc_id, span_idx), tm_ids_)
+        doc_id, span_idx = doc_ids[row_i], span_idxs[row_i]
+        _emit_nonpolygon(other, doc_id, span_idx, *_parse_span(texts[row_i], doc_id, span_idx), tm_ids_)
 
-    # -- bulk lane: columnar members (one poly, one fast ring, per level) ----
-    n_loop = len(out["wkt"])
-    n_loop_geo = len(f_is_multi)
-    c_doc = []
-    c_span = []
-    c_zoom = []
-    c_multi = []
-    c_ra = []
-    c_rb = []
-    c_rrev = []
-    if columnar:
-        doc_np = np.asarray(doc_ids, dtype=object)
-        span_np = np.asarray(span_idxs, dtype=np.int64)
-        for tm in sorted(columnar):
-            mem, a, b, rev = columnar[tm]
-            frows = parsed.member_fastrow[mem]
-            orig = parsed.rows[frows]
-            c_doc.append(doc_np[orig])
-            c_span.append(span_np[orig])
-            c_zoom.append(np.full(mem.size, tm, dtype=np.int64))
-            c_multi.append(parsed.is_multi[frows])
-            c_ra.append(a)
-            c_rb.append(b)
-            c_rrev.append(rev)
-    n_col = sum(arr.size for arr in c_zoom) if c_zoom else 0
+    dict_geoms = np.asarray(geoms, dtype=np.int64).reshape(-1, 4)
+    dict_handles = np.asarray(handles, dtype=np.int64).reshape(-1, 3)
+    parts = [(*dict_geoms.T, np.asarray(rings, dtype=np.int64), *dict_handles.T)]
+    for zoom, (mem, a, b, rev) in columnar.items():
+        frows = parsed.member_fastrow[mem]
+        ones = np.ones(mem.size, dtype=np.int64)
+        parts.append((parsed.rows[frows], np.full(mem.size, zoom), parsed.is_multi[frows], ones, ones, a, b, rev))
+    row, zoom, is_multi, n_polys, n_rings, ra, rb, rrev = map(np.concatenate, zip(*parts))
+    is_multi = is_multi.astype(bool)
+    rrev = rrev.astype(bool)
 
-    # -- one vectorized WKT + bbox pass over BOTH fast lanes -----------------
-    if n_loop_geo or n_col:
-        is_multi = np.concatenate(
-            [np.asarray(f_is_multi, dtype=bool)] + c_multi
-            if c_multi
-            else [np.asarray(f_is_multi, dtype=bool)]
-        )
-        n_geo = is_multi.size
-        poly_bounds = np.empty(n_geo + 1, dtype=np.int64)
-        poly_bounds[: n_loop_geo + 1] = f_poly_bounds
-        ring_bounds_l = np.asarray(f_ring_bounds, dtype=np.int64)
-        # columnar geoms are 1 poly / 1 ring each
-        if n_col:
-            poly_bounds[n_loop_geo + 1 :] = f_poly_bounds[-1] + np.arange(1, n_col + 1)
-        n_polys_total = int(poly_bounds[-1])
-        ring_bounds = np.empty(n_polys_total + 1, dtype=np.int64)
-        ring_bounds[: ring_bounds_l.size] = ring_bounds_l
-        if n_col:
-            ring_bounds[ring_bounds_l.size :] = ring_bounds_l[-1] + np.arange(1, n_col + 1)
-        ra = np.concatenate([np.asarray(f_ra, dtype=np.int64)] + c_ra) if c_ra else np.asarray(f_ra, dtype=np.int64)
-        rb = np.concatenate([np.asarray(f_rb, dtype=np.int64)] + c_rb) if c_rb else np.asarray(f_rb, dtype=np.int64)
-        rrev = np.concatenate([np.asarray(f_rrev, dtype=bool)] + c_rrev) if c_rrev else np.asarray(f_rrev, dtype=bool)
-        lens = rb - ra
-        pt_bounds = wb._exclusive_cumsum(lens)
-        total = int(pt_bounds[-1])
-        rep = np.repeat(np.arange(lens.size, dtype=np.int64), lens)
-        p = np.arange(total, dtype=np.int64) - pt_bounds[:-1][rep]
-        src = np.where(rrev[rep], rb[rep] - 1 - p, ra[rep] + p)
-        px = store.kx[src]
-        py = store.ky[src]
-        texts_fast = wb.format_polygon_wkts(
-            is_multi, poly_bounds, ring_bounds, pt_bounds, lens >= 2, px, py
-        )
-        # bbox per geometry: its points are one contiguous gathered span
-        geom_pt_start = pt_bounds[ring_bounds[poly_bounds[:-1]]]
-        fminx = np.minimum.reduceat(px, geom_pt_start) / 1e10
-        fminy = np.minimum.reduceat(py, geom_pt_start) / 1e10
-        fmaxx = np.maximum.reduceat(px, geom_pt_start) / 1e10
-        fmaxy = np.maximum.reduceat(py, geom_pt_start) / 1e10
-        for k, oi in enumerate(f_out_idx):
-            out["wkt"][oi] = texts_fast[k]
-            out["minx"][oi] = float(fminx[k])
-            out["miny"][oi] = float(fminy[k])
-            out["maxx"][oi] = float(fmaxx[k])
-            out["maxy"][oi] = float(fmaxy[k])
-
-    # -- final columns: loop lists + columnar arrays -------------------------
-    cols = {}
-    if n_col:
-        cols["doc_id"] = np.concatenate([np.asarray(out["doc_id"], dtype=object)] + c_doc)
-        cols["span_idx"] = np.concatenate([np.asarray(out["span_idx"], dtype=np.int64)] + c_span).astype(np.int32)
-        cols["zoom"] = np.concatenate([np.asarray(out["zoom"], dtype=np.int64)] + c_zoom).astype(np.int32)
-        kind_col = np.where(np.concatenate(c_multi), "multipolygon", "polygon").astype(object)
-        cols["geom_kind"] = np.concatenate([np.asarray(out["geom_kind"], dtype=object), kind_col])
-        cols["wkt"] = np.concatenate(
-            [np.asarray(out["wkt"], dtype=object), np.asarray(texts_fast[n_loop_geo:], dtype=object)]
-        )
-        cols["minx"] = np.concatenate([np.asarray(out["minx"], dtype=np.float64), fminx[n_loop_geo:]])
-        cols["miny"] = np.concatenate([np.asarray(out["miny"], dtype=np.float64), fminy[n_loop_geo:]])
-        cols["maxx"] = np.concatenate([np.asarray(out["maxx"], dtype=np.float64), fmaxx[n_loop_geo:]])
-        cols["maxy"] = np.concatenate([np.asarray(out["maxy"], dtype=np.float64), fmaxy[n_loop_geo:]])
-        cols["n_polys"] = np.concatenate(
-            [np.asarray(out["n_polys"], dtype=np.int64), np.ones(n_col, dtype=np.int64)]
-        ).astype(np.int32)
-    else:
-        cols = out
-    return pd.DataFrame(cols)
+    # gather every handle's points in emit order, then one WKT + bbox pass
+    lens = rb - ra
+    pt_bounds = wb._exclusive_cumsum(lens)
+    ring_bounds = wb._exclusive_cumsum(n_rings)
+    poly_bounds = wb._exclusive_cumsum(n_polys)
+    rep = np.repeat(np.arange(lens.size, dtype=np.int64), lens)
+    off = np.arange(int(pt_bounds[-1]), dtype=np.int64) - pt_bounds[:-1][rep]
+    src = np.where(rrev[rep], rb[rep] - 1 - off, ra[rep] + off)
+    px = store.kx[src]
+    py = store.ky[src]
+    # a geometry's points are one contiguous span of the gathered arrays
+    geom_pt_start = pt_bounds[ring_bounds[poly_bounds[:-1]]]
+    table = pd.DataFrame(
+        {
+            "doc_id": np.asarray(doc_ids, dtype=object)[row],
+            "span_idx": np.asarray(span_idxs, dtype=np.int64)[row],
+            "zoom": zoom,
+            "geom_kind": np.where(is_multi, "multipolygon", "polygon").astype(object),
+            "wkt": wb.format_polygon_wkts(is_multi, poly_bounds, ring_bounds, pt_bounds, lens >= 2, px, py),
+            "minx": np.minimum.reduceat(px, geom_pt_start) / 1e10,
+            "miny": np.minimum.reduceat(py, geom_pt_start) / 1e10,
+            "maxx": np.maximum.reduceat(px, geom_pt_start) / 1e10,
+            "maxy": np.maximum.reduceat(py, geom_pt_start) / 1e10,
+            "n_polys": n_polys,
+        }
+    )
+    frames = (table, pd.DataFrame(other, columns=table.columns))
+    return pd.concat([f.astype(SNAPPED_DTYPES) for f in frames], ignore_index=True)
 
 
 def snap_documents(
@@ -316,9 +240,10 @@ def snap_documents(
 
     Hot path is array programs end-to-end: batch WKT parse
     (functions/wkt_batch.py) -> flat-array snap kernel + vectorized
-    assembly (kernel/snap_batch.py) -> digit-exact batch WKT emit; the
-    dominant single-polygon shape flows through a fully columnar lane
-    with zero per-row Python.
+    assembly (kernel/snap_batch.py) -> one digit-exact batch WKT emit
+    per Arrow batch (_process_batch).  The dominant single-ring polygon
+    reaches the emit as kernel arrays with no per-row Python; holed
+    polygons and multipolygons cost one Python visit per row.
     """
     spark = docs.sparkSession
     config = config or SnapConfig(keep_points_and_lines=False, ignore_outside_grid=True)
