@@ -213,13 +213,13 @@ def test_minhash_shuffles_are_signature_sized(spark):
     from texel_spark.plans.checks import assert_max_shuffles, formatted_plan
 
     raw = spark.read.parquet(f"{SF}/documents.parquet")
-    docs = raw.repartition(8)  # pre-spread: the guard no-ops (idempotence)
+    docs = spark.createDataFrame(raw.collect(), raw.schema)  # no input files: no spread
     df = minhash_lsh_candidates(docs)
-    # 7 exchange nodes (count_exchanges sees each twice in the formatted
-    # plan): input repartition / signature groupBy(doc_id) / band-bucket
-    # shuffled-hash join side, each printed once per self-join side
-    # pre-AQE but computed ONCE at runtime (ReusedExchange), plus the
-    # final pair distinct - i.e. 4 runtime shuffles, none carrying text
+    # exchange nodes (count_exchanges sees each twice in the formatted
+    # plan): signature groupBy(doc_id) / band-bucket shuffled-hash join
+    # side, each printed once per self-join side pre-AQE but computed
+    # ONCE at runtime (ReusedExchange), plus the final pair distinct -
+    # i.e. 3 runtime shuffles, none carrying text
     assert_max_shuffles(df, 14)
     # the narrowness claim itself: no hash exchange ever carries shingles
     # or raw text - only doc ids, band keys and signature columns (the
@@ -234,34 +234,63 @@ def test_minhash_shuffles_are_signature_sized(spark):
 
 
 def test_spread_input_guard(spark):
-    """The unsplittable-input guard fires exactly once on a single-row-
-    group parquet scan (the testdata layout) and never on an input that
-    already repartitions or has no files."""
-    from pyspark.sql import functions as F
-
+    """The unsplittable-input guard fires on a single-row-group parquet
+    scan (the testdata layout) and never on an input with no files."""
     from texel_spark.operators.spread import spread_input
 
     raw = spark.read.parquet(f"{SF}/documents.parquet")
     plan = spread_input(raw)._jdf.queryExecution().analyzed().toString()
     assert "Repartition" in plan, f"guard did not fire on 1-row-group parquet:\n{plan}"
-    # idempotent: composing operators that each call spread_input must
-    # not stack round-robin exchanges
-    twice = spread_input(spread_input(raw).where(F.col("doc_id") >= 0))
-    plan2 = twice._jdf.queryExecution().analyzed().toString()
-    assert plan2.count("Repartition") == 1, plan2
     # in-memory input: nothing to spread
     mem = spark.createDataFrame(raw.limit(10).collect(), raw.schema)
     assert "Repartition" not in spread_input(mem)._jdf.queryExecution().analyzed().toString()
 
 
+def test_spread_input_never_sees_a_spread_frame(spark, monkeypatch):
+    """Every text, dedup, curation and similarity query spreads each scan
+    at most once: no operator hands spread_input a frame that already
+    repartitions (an operator composing another leaves the spread to the
+    inner one).  Checked at the call, not on the final plan - eager
+    stages such as connected_components run their inner spread before
+    the final plan exists, so an exchange count cannot see a nested
+    spread.  The RDDs the eager stages checkpoint are released at the
+    end, so later tests that count persisted RDDs see none of them."""
+    import __spark_entry__ as e
+    from texel_spark.operators import curation, dedup, spread, text
+
+    real = spread.spread_input
+    seen = []
+
+    def guarded(df):
+        plan = df._jdf.queryExecution().analyzed().toString()
+        assert "Repartition" not in plan, f"{seen[-1]}: spread_input got a spread frame:\n{plan}"
+        return real(df)
+
+    for mod in (dedup, text, curation, spread):
+        monkeypatch.setattr(mod, "spread_input", guarded)
+    families = {"curation", "dedup", "similarity", "text"}
+    jsc = spark.sparkContext._jsc
+    persisted = set(jsc.getPersistentRDDs().keySet().toArray())
+    try:
+        for name, build in e.queries().items():
+            if families & set(build.__code__.co_freevars):
+                seen.append(name)
+                build(spark, "/root/testdata/sf0.01")
+    finally:
+        for rid, rdd in jsc.getPersistentRDDs().items():
+            if rid not in persisted:
+                rdd.unpersist(True)
+    assert set(jsc.getPersistentRDDs().keySet().toArray()) <= persisted
+    assert len(seen) >= 30 and "curation_pipeline" in seen, seen
+
+
 def test_spread_partitions_cap_applies_last():
     """The 8-partition floor never lifts the count past parallelism x
-    multiplier: a 2-slot session gets at most 4 partitions."""
+    WAVES: a 2-slot session gets at most 4 partitions."""
     from texel_spark.operators.spread import spread_partitions
 
     assert spread_partitions(1, 2) == 4
     assert spread_partitions(10 << 20, 2) == 4
-    assert spread_partitions(1, 2, multiplier=1) == 2
     assert spread_partitions(1, 16) == 8  # floor below the cap
     assert spread_partitions(3 << 16, 16) == 8
     assert spread_partitions(20 << 16, 16) == 21  # data-sized
@@ -819,5 +848,33 @@ def test_streaming_tile_pyramid_parity(spark, tmp_path):
         q.processAllAvailable()
         got = {tuple(r) for r in spark.sql("SELECT * FROM pyr_stream").collect()}
         assert got == expected
+    finally:
+        q.stop()
+
+
+def test_streaming_hourly_rollup_parity(spark, tmp_path):
+    """The watermarked window rollup, in complete mode over events split
+    across three files, converges to the batch hourly_rollup: same
+    (hour, event_type) groups, counts and cents."""
+    from pyspark.sql import functions as F
+
+    from texel_spark.operators.events import hourly_rollup
+    from texel_spark.streaming.jobs import events_file_stream, streaming_hourly_rollup
+
+    batch = spark.read.parquet(f"{SF}/events.parquet")
+    expected = {tuple(r) for r in hourly_rollup(batch).collect()}
+
+    indir = tmp_path / "ev_in"
+    for i in range(3):
+        batch.where(f"event_id % 3 = {i}").coalesce(1).write.parquet(str(indir / f"p{i}"))
+    out = streaming_hourly_rollup(events_file_stream(spark, str(indir / "*"), max_files_per_trigger=1))
+    assert out.isStreaming
+    q = out.writeStream.format("memory").queryName("hourly_stream").outputMode("complete").start()
+    try:
+        q.processAllAvailable()
+        got = spark.sql("SELECT * FROM hourly_stream").select(
+            F.unix_timestamp("window_start").alias("window_epoch"), "event_type", "n_events", "total_cents"
+        )
+        assert {tuple(r) for r in got.collect()} == expected
     finally:
         q.stop()

@@ -377,6 +377,51 @@ def test_run_pipeline_resume_skips_completed_zooms(spark, tmp_path):
         assert sorted(json.load(f)["completed_zooms"]) == [5, 9]
 
 
+def test_run_pipeline_resume_rejects_other_tile_buckets(spark, tmp_path):
+    """A resume must use the bucket count its manifest was written with:
+    bucket ids index one feature hash split, so a run killed at
+    tile_buckets=4 and resumed at 8 would rewrite the same features under
+    new bucket ids (duplicate tile rows), and 8-then-4 would count a zoom
+    complete too early.  Both raise by the manifest's path, before any
+    write; the recorded count resumes."""
+    import json
+    import re
+
+    from texel_spark.operators.snap_tiles import run_pipeline
+    from texel_spark.sources.documents import synth_documents
+
+    rd = load_embedded("NetherlandsRDNewQuad")
+    docs = synth_documents(spark, 20, partitions=1)
+    out = tmp_path / "pipe"
+    manifest = out / "manifest.json"
+
+    class Kill(Exception):
+        pass
+
+    def bomb(z, b):
+        raise Kill()
+
+    with pytest.raises(Kill):
+        run_pipeline(docs, rd, [9], str(out), tile_buckets=4, _after_bucket_hook=bomb)
+    for other in (8, 2):
+        with pytest.raises(ValueError, match=re.escape(str(manifest))):
+            run_pipeline(docs, rd, [9], str(out), tile_buckets=other)
+    assert len(list((out / "tiles" / "zoom=9").iterdir())) == 1
+    assert json.loads(manifest.read_text())["tile_buckets"] == 4
+    # a manifest that predates the recorded count is not trusted either
+    legacy = json.loads(manifest.read_text())
+    del legacy["tile_buckets"]
+    manifest.write_text(json.dumps(legacy))
+    with pytest.raises(ValueError, match=re.escape(str(manifest))):
+        run_pipeline(docs, rd, [9], str(out), tile_buckets=4)
+    legacy["tile_buckets"] = 4
+    manifest.write_text(json.dumps(legacy))
+    s = run_pipeline(docs, rd, [9], str(out), tile_buckets=4)
+    assert s["completed_zooms"] == [9]
+    full = run_pipeline(docs, rd, [9], str(tmp_path / "full"), tile_buckets=4)
+    assert s["metrics"] == full["metrics"]
+
+
 def test_run_pipeline_rejects_manifest_without_zooms(spark, tmp_path):
     """A manifest with only "completed_zooms" (no per-(zoom, bucket)
     "zooms" entry) fails by its path instead of being trusted."""
@@ -1344,9 +1389,10 @@ def test_vocab_coverage_ranking_and_ties(spark):
     assert rows[10]["covered_tokens"] == rows[10]["total_tokens"] == 12
 
 
-def test_tile_pyramid_rollup_plan_single_extra_shuffle(spark):
-    """The pyramid adds exactly ONE aggregation shuffle on top of the
-    base tile_assign agg - not one per zoom level (9 levels here)."""
+def test_tile_pyramid_rollup_plan_single_shuffle(spark):
+    """The pyramid is ONE aggregation: a single hash exchange for all 9
+    zoom levels - no pre-aggregation at the base zoom and no shuffle per
+    level."""
     from texel_spark.operators import spatial_queries as sq
 
     events = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
@@ -1359,7 +1405,7 @@ def test_tile_pyramid_rollup_plan_single_extra_shuffle(spark):
     import re
 
     n_exchanges = len(re.findall(r"Exchange hashpartitioning", p))
-    assert n_exchanges == 2, f"expected 2 shuffles (base agg + pyramid agg), got {n_exchanges}"
+    assert n_exchanges == 1, f"expected 1 shuffle (the pyramid agg), got {n_exchanges}"
     assert "EvalPython" not in p
 
 

@@ -43,10 +43,6 @@ def from_point(pt) -> tuple[int, int]:
     return (from_ord(pt[0]), from_ord(pt[1]))
 
 
-def to_point(pt) -> tuple[float, float]:
-    return (to_ord(pt[0]), to_ord(pt[1]))
-
-
 def go_div(a: int, b: int) -> int:
     """Go int64 division: truncation toward zero."""
     q = abs(a) // abs(b)

@@ -263,18 +263,6 @@ def contains_point(int_pt, int_extent) -> bool:
     )
 
 
-def _infinite_quadrant(int_pt, int_centroid) -> int:
-    """Which (infinite) quadrant of the parent centroid (pointindex.go:374-378)."""
-    is_right = 1 if int_pt[0] >= int_centroid[0] else 0
-    is_top = 2 if int_pt[1] >= int_centroid[1] else 0
-    return is_right | is_top
-
-
-def _quadrants_adjacent(a: int, b: int) -> bool:
-    diff = a ^ b
-    return diff == 0b01 or diff == 0b10
-
-
 def _extent_edges(int_extent):
     """Clockwise edges: bottom, right, top, left (intgeom/extent.go:44-73);
     right (1) and top (2) are the exclusive ones."""

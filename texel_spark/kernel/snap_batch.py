@@ -625,9 +625,10 @@ def _assembly_arrays(lv_i, seg_s, ix, iy, starts, vring, ring_start, ring_len, a
     """Vectorized snap.go:366-403 pre-computation for one level.
 
     Produces, per ring: compact kept-point span [cs, ce2) (store-global
-    offsets), status (_FAST/_PL/_SCALAR), the winding determinant (for
-    the _classify_rings fast path) and a rotation/reversal-invariant
-    content hash for the dedupe prefilter."""
+    offsets), status (_FAST/_PL/_SCALAR) and the winding determinant (for
+    the _classify_rings fast path).  The dedupe prefilter's content hash
+    is computed later, only for members with more than one ring
+    (_combine_member_level)."""
     n_segs = vring.size
     n_rings = ring_start.size
     cnt = starts[1:] - starts[:-1]
@@ -710,12 +711,6 @@ def _assembly_arrays(lv_i, seg_s, ix, iy, starts, vring, ring_start, ring_len, a
             kfx[c_idx] - kfx[a_idx]
         ) * (kfy[rmli] - kfy[a_idx])
 
-    # content hash (rotation/reversal invariant) for the dedupe prefilter
-    hmix = kfx.view(np.uint64) * _HASH_C1 + kfy.view(np.uint64) * _HASH_C2
-    hcum = np.zeros(nk + 1, dtype=np.uint64)
-    np.cumsum(hmix, out=hcum[1:])
-    ring_hash = hcum[ce2] - hcum[cs]
-
     status = np.full(n_rings, _FAST, dtype=np.int8)
     status[kc2 < 3] = _PL
     hm_flag = np.zeros(n_rings, dtype=bool)
@@ -732,7 +727,6 @@ def _assembly_arrays(lv_i, seg_s, ix, iy, starts, vring, ring_start, ring_len, a
         "kc2": kc2,
         "status": status,
         "det": det,
-        "hash": ring_hash,
         "reroute": reroute,
         "fx": kfx,
         "fy": kfy,
@@ -741,7 +735,10 @@ def _assembly_arrays(lv_i, seg_s, ix, iy, starts, vring, ring_start, ring_len, a
 
 
 def _hash_tuple_ring(ring) -> int:
-    """Same mix as _assembly_arrays' ring_hash, for scalar-path rings."""
+    """Content hash of a scalar-path ring (a list of float tuples) for the
+    dedupe prefilter in _combine_member_level: the same mix of the float
+    bit patterns that it applies to store-handle spans, summed, so it is
+    rotation and reversal invariant."""
     if not ring:
         return 0
     arr = np.asarray(ring, dtype=np.float64)
@@ -797,12 +794,9 @@ def _combine_member_level(L, r0, r1, lv_i, hit_maps, keep_pl, rev_cfg):
     n_all = len(outers) + len(inners)
     if n_all > 1:
         sigs = []
-        h = L["hash"]
         for ring in outers + inners:
             if isinstance(ring, tuple):
                 a, b, _ = ring
-                # span hash: cumsum difference was precomputed per ring,
-                # but dedupe/scalar outputs may alias spans - recompute
                 hx = fx[a - base : b - base].view(np.uint64) * _HASH_C1
                 hy = fy[a - base : b - base].view(np.uint64) * _HASH_C2
                 sigs.append((b - a, int((hx + hy).sum(dtype=np.uint64))))

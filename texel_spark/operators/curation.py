@@ -179,6 +179,9 @@ def curation_pipeline(
     already-oracled operator (token_counts metrics, near_dup_components,
     per_source_cap, hash_split) composed declaratively - Catalyst fuses
     the filter into the scan and the whole composition stays one plan.
+    The pipeline does not spread its own input: the one spread
+    (operators.spread) is the MinHash stage's, over the filtered
+    (doc_id, text) rows.
     """
     from .dedup import near_dup_components
     from .text import BPE_TOKEN_RE
@@ -186,7 +189,7 @@ def curation_pipeline(
     ws = F.size(F.split(F.col("text"), " "))
     bpe = F.size(F.regexp_extract_all(F.col("text"), F.lit(BPE_TOKEN_RE), 0))
     bpt = F.floor(F.lit(100) * F.length("text") / F.greatest(bpe, F.lit(1)))
-    docs = spread_input(documents).where((ws >= min_ws_tokens) & (bpt >= bpt_lo) & (bpt <= bpt_hi))
+    docs = documents.where((ws >= min_ws_tokens) & (bpt >= bpt_lo) & (bpt <= bpt_hi))
     comp = near_dup_components(docs)
     canon = docs.join(comp.where(F.col("is_canonical") == 1).select("doc_id"), "doc_id")
     capped = per_source_cap(canon, cap)

@@ -351,24 +351,32 @@ def snapped_geometries(snapped: DataFrame) -> DataFrame:
     return snapped.select("doc_id", "span_idx", "zoom", "geom_kind", "wkt", "n_polys")
 
 
-def _load_manifest(path: str) -> dict:
+def _load_manifest(path: str, tile_buckets: int) -> dict:
     """Manifest schema: {"zooms": {"<z>": {"buckets": [ints], "geoms": bool}},
-    "completed_zooms": [...] (derived from "zooms" on every save)}.  A
-    manifest without "zooms" raises ValueError."""
-    if not os.path.exists(path):
-        return {"zooms": {}}
+    "tile_buckets": int, "completed_zooms": [...] (derived from "zooms" on
+    every save)}.  A manifest without "zooms", or written with another
+    (or no recorded) bucket count, raises ValueError: its bucket ids
+    index a different feature hash split, so resuming would duplicate or
+    drop tile rows."""
     with open(path) as f:
         m = json.load(f)
     if "zooms" not in m:
         raise ValueError(f"{path}: manifest has no per-(zoom, bucket) \"zooms\" entry")
+    if m.get("tile_buckets") != tile_buckets:
+        raise ValueError(
+            f"{path}: manifest was written with tile_buckets={m.get('tile_buckets')}; "
+            f"resuming with tile_buckets={tile_buckets} would mix incompatible bucket "
+            "splits (rerun with the recorded value, or resume=False)"
+        )
     return m
 
 
-def _save_manifest(path: str, manifest: dict, tile_buckets: int) -> None:
+def _save_manifest(path: str, manifest: dict) -> None:
     """Atomic write (tmp + rename): a kill mid-update never corrupts the
     on-disk source of truth (reference analog: paged transactional
     writes, processing/gpkg/gpkg.go:205-272)."""
-    done = [int(z) for z, st in manifest["zooms"].items() if st["geoms"] and len(st["buckets"]) >= tile_buckets]
+    n = manifest["tile_buckets"]
+    done = [int(z) for z, st in manifest["zooms"].items() if st["geoms"] and len(st["buckets"]) >= n]
     manifest["completed_zooms"] = sorted(done)
     tmp = path + ".tmp"
     with open(tmp, "w") as f:
@@ -396,15 +404,18 @@ def run_pipeline(
     so a mid-zoom kill re-does only the unfinished buckets - completed
     buckets' files are never touched again (VERDICT r2 item 3; reference
     analog: paged transactional writes, processing/gpkg/gpkg.go:205-272).
-    If an Iceberg jar ever lands, each bucket job becomes REPLACE
-    PARTITIONS with the same manifest layout.
+    The manifest records ``tile_buckets``; resuming with another value
+    raises ValueError.  If an Iceberg jar ever lands, each bucket job
+    becomes REPLACE PARTITIONS with the same manifest layout.
 
     Returns the run summary (also persisted to <output_dir>/manifest.json).
     """
     spark = docs.sparkSession
     os.makedirs(output_dir, exist_ok=True)
     manifest_path = os.path.join(output_dir, "manifest.json")
-    manifest = _load_manifest(manifest_path) if resume else {"zooms": {}}
+    manifest = {"zooms": {}, "tile_buckets": tile_buckets}
+    if resume and os.path.exists(manifest_path):
+        manifest = _load_manifest(manifest_path, tile_buckets)
 
     def zoom_state(z: int) -> dict:
         return manifest["zooms"].setdefault(str(z), {"buckets": [], "geoms": False})
@@ -451,7 +462,7 @@ def run_pipeline(
                     .parquet(os.path.join(output_dir, "tiles", f"zoom={z}", f"bucket={b}"))
                 )
                 st["buckets"] = sorted(set(st["buckets"]) | {b})
-                _save_manifest(manifest_path, manifest, tile_buckets)
+                _save_manifest(manifest_path, manifest)
                 if _after_bucket_hook is not None:
                     _after_bucket_hook(z, b)
             if not st["geoms"]:
@@ -462,7 +473,7 @@ def run_pipeline(
                     .parquet(os.path.join(output_dir, "geoms", f"zoom={z}"))
                 )
                 st["geoms"] = True
-                _save_manifest(manifest_path, manifest, tile_buckets)
+                _save_manifest(manifest_path, manifest)
 
     finally:
         snapped.unpersist()
@@ -494,7 +505,7 @@ def run_pipeline(
         "metrics": {"rows_per_zoom": per_zoom},
     }
     manifest["metrics"] = summary["metrics"]
-    _save_manifest(manifest_path, manifest, tile_buckets)
+    _save_manifest(manifest_path, manifest)
     return summary
 
 

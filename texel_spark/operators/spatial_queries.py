@@ -657,20 +657,22 @@ def knn_join_grid(
 
 
 def tile_pyramid_rollup(events: DataFrame, max_zoom: int = 8, min_zoom: int = 0) -> DataFrame:
-    """Overview-tile pyramid: per-tile point counts at ``max_zoom``
-    rolled up to every coarser zoom, in ONE aggregation.
+    """Overview-tile pyramid: per-tile point counts at every zoom from
+    ``min_zoom`` to ``max_zoom``, in ONE aggregation.
 
     The quad-tree grid halves tile counts per level (tms20.go quad-tree
     validation: each matrix exactly doubles the previous), so the parent
     of tile (tx, ty) at z is (tx >> 1, ty >> 1) at z-1.  Instead of
     (max_zoom - min_zoom) successive parent-groupBys - a shuffle per
-    level, the classic overview-building antipattern at 100 TB - the
-    base assignment pre-aggregates once at max_zoom (map-side combine
-    collapses events to distinct base tiles), each base tile explodes to
-    its (max_zoom - min_zoom + 1) ancestors with per-level literal bit
-    shifts, and ONE shuffle keyed by (zoom, tx, ty) sums the pyramid.
-    Arithmetic shiftright = floor division by 2^k, correct for negative
-    (outside-grid-west/north) tile coords too.
+    level, the classic overview-building antipattern at 100 TB - each
+    point is assigned its max_zoom tile, explodes to its
+    (max_zoom - min_zoom + 1) ancestors with per-level literal bit
+    shifts, and ONE shuffle keyed by (zoom, tx, ty) counts the pyramid
+    (map-side partial counts keep the shuffle tile-sized).  Arithmetic
+    shiftright = floor division by 2^k, correct for negative
+    (outside-grid-west/north) tile coords too.  Having exactly one
+    stateful operator is also what lets the streaming twin
+    (streaming.jobs.streaming_tile_pyramid) run this same function.
 
     The DuckDB oracle is deliberately STRONGER than a rollup mirror: it
     assigns points directly at every zoom from the raw coordinates,
@@ -680,32 +682,7 @@ def tile_pyramid_rollup(events: DataFrame, max_zoom: int = 8, min_zoom: int = 0)
     """
     if not 0 <= min_zoom <= max_zoom:
         raise ValueError(f"need 0 <= min_zoom <= max_zoom, got {min_zoom}..{max_zoom}")
-    return _pyramid_from_base(tile_assign(events, zoom=max_zoom), max_zoom, min_zoom)
-
-
-def tile_pyramid_rollup_single_agg(
-    events: DataFrame, max_zoom: int = 8, min_zoom: int = 0
-) -> DataFrame:
-    """Single-aggregation form of tile_pyramid_rollup: each POINT (not
-    each pre-aggregated base tile) explodes to its ancestors, then one
-    groupBy sums the pyramid.  Identical output; trades the batch form's
-    map-side pre-aggregation for having exactly ONE stateful operator -
-    the form a streaming query needs (chained streaming aggregations are
-    a watermark-correctness hazard Spark rejects) and the twin's state
-    stays bounded by the tile universe either way.
-    """
-    if not 0 <= min_zoom <= max_zoom:
-        raise ValueError(f"need 0 <= min_zoom <= max_zoom, got {min_zoom}..{max_zoom}")
     ts = tile_size(max_zoom)
-    pts = points_from_events(events).select(
-        F.floor((F.col("px") - F.lit(RD_ORIGIN_X)) / F.lit(ts)).alias("tx"),
-        F.floor((F.lit(RD_ORIGIN_Y) - F.col("py")) / F.lit(ts)).alias("ty"),
-        F.lit(1).cast("long").alias("n_points"),
-    )
-    return _pyramid_from_base(pts, max_zoom, min_zoom)
-
-
-def _pyramid_from_base(base: DataFrame, max_zoom: int, min_zoom: int) -> DataFrame:
     ancestors = F.array(
         *[
             F.struct(
@@ -717,10 +694,14 @@ def _pyramid_from_base(base: DataFrame, max_zoom: int, min_zoom: int) -> DataFra
         ]
     )
     return (
-        base.select(F.explode(ancestors).alias("a"), "n_points")
-        .select("a.zoom", "a.tx", "a.ty", "n_points")
+        points_from_events(events)
+        .select(
+            F.floor((F.col("px") - F.lit(RD_ORIGIN_X)) / F.lit(ts)).alias("tx"),
+            F.floor((F.lit(RD_ORIGIN_Y) - F.col("py")) / F.lit(ts)).alias("ty"),
+        )
+        .select(F.inline(ancestors))
         .groupBy("zoom", "tx", "ty")
-        .agg(F.sum("n_points").alias("n_points"))
+        .agg(F.count("*").alias("n_points"))
     )
 
 

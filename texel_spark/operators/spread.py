@@ -15,8 +15,12 @@ ONLY after probing that the scan is actually starved:
   wrong repartition at 100 TB costs a full-corpus shuffle, a missed one
   costs nothing on well-laid-out data);
 * otherwise round-robin repartition, sized by the data (>= 64 KiB of
-  compressed input per partition, at least 8) and capped at
-  parallelism x `multiplier` (2 waves for straggler smoothing).
+  compressed input per partition, at least 8) and capped at `WAVES`
+  waves of the session's parallelism (straggler smoothing).
+
+Each operator spreads its scan once; an operator that composes another
+(curation_pipeline over near_dup_components) leaves the spread to the
+inner one, so no frame reaching `spread_input` has been spread already.
 
 At production scale inputs arrive as thousands of multi-row-group files
 and the probe short-circuits on the file count without touching any
@@ -29,16 +33,13 @@ import os
 
 from pyspark.sql import DataFrame
 
+WAVES = 2
 
-def spread_input(df: DataFrame, multiplier: int = 2) -> DataFrame:
+
+def spread_input(df: DataFrame) -> DataFrame:
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
     try:
-        # idempotence: a frame that already repartitions (e.g. an operator
-        # composing another operator that spread its own input) must not
-        # pay a second round-robin exchange
-        if "Repartition" in df._jdf.queryExecution().analyzed().toString():
-            return df
         files = df.inputFiles()
     except Exception:
         return df
@@ -64,12 +65,12 @@ def spread_input(df: DataFrame, multiplier: int = 2) -> DataFrame:
                 return df
     except Exception:
         return df
-    return df.repartition(spread_partitions(total_bytes, target, multiplier))
+    return df.repartition(spread_partitions(total_bytes, target))
 
 
-def spread_partitions(total_bytes: int, parallelism: int, multiplier: int = 2) -> int:
+def spread_partitions(total_bytes: int, parallelism: int) -> int:
     """Partition count scales with DATA (>=64 KiB of compressed input per
     partition, at least 8) - a tiny table gets a few real partitions
-    instead of cores x 2 near-empty ones.  The cap of `multiplier` waves of
+    instead of cores x 2 near-empty ones.  The cap of `WAVES` waves of
     the session's cores applies last, so it holds below 4 slots too."""
-    return min(parallelism * multiplier, max(8, (total_bytes >> 16) + 1))
+    return min(parallelism * WAVES, max(8, (total_bytes >> 16) + 1))

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from ..grid.tms import TileMatrixSet
 from ..kernel.snap import SnapConfig
-from ..operators.snap_tiles import assign_tiles, snap_documents
+from ..operators.snap_tiles import snap_pipeline_df
 
 
 def document_rate_stream(spark: SparkSession, rows_per_second: int = 100) -> DataFrame:
@@ -53,16 +53,11 @@ def streaming_snap_tiles(
 ) -> DataFrame:
     """Incremental snap->tile assignment over a document stream.
 
-    The kernel stage is stateless per document, so it runs unchanged
-    under Structured Streaming; the result is append-mode tile rows.
+    The kernel stage is stateless per document, so the batch pipeline
+    (operators.snap_tiles.snap_pipeline_df) runs unchanged under
+    Structured Streaming; the result is append-mode tile rows.
     """
-    geoms = (
-        docs_stream.select("doc_id", F.posexplode("spans").alias("span_idx", "span"))
-        .where(F.col("span.kind") == "geom")
-        .select("doc_id", "span_idx", F.col("span.text").alias("wkt"))
-    )
-    snapped = snap_documents(geoms, tms, tm_ids, config)
-    return assign_tiles(snapped, tms, tm_ids)
+    return snap_pipeline_df(docs_stream, tms, tm_ids, config)
 
 
 def streaming_hourly_rollup(events_stream: DataFrame, watermark: str = "2 hours") -> DataFrame:
@@ -77,21 +72,6 @@ def streaming_hourly_rollup(events_stream: DataFrame, watermark: str = "2 hours"
         )
         .select(F.col("w.start").alias("window_start"), "event_type", "n_events", "total_cents")
     )
-
-
-def run_stream_to_memory(
-    stream_df: DataFrame, name: str, timeout_s: float = 30.0, output_mode: str = "append"
-):
-    """Drive a stream into an in-memory sink until timeout; returns query."""
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(processingTime="1 second")
-        .start()
-    )
-    q.awaitTermination(timeout_s)
-    return q
 
 
 def events_file_stream(spark: SparkSession, path: str, max_files_per_trigger: int | None = None) -> DataFrame:
@@ -459,18 +439,14 @@ def streaming_validate_documents(docs_stream: DataFrame) -> DataFrame:
 
 
 def streaming_tile_pyramid(events_stream: DataFrame, max_zoom: int = 8, min_zoom: int = 0) -> DataFrame:
-    """Streaming twin of operators.spatial_queries.tile_pyramid_rollup:
-    incremental overview-tile counts at EVERY zoom level from one
-    update-mode aggregation (state bounded by the tile universe,
-    sum of 4^z over the pyramid, not by event count) - the live form of
-    overview building, where each micro-batch of points bumps its
-    ancestors at all levels in the same shuffle.  Uses the single-
-    aggregation form (per-point ancestor explode): the batch rollup's
-    base pre-aggregation would be a SECOND stateful operator, which
-    streaming rejects as a watermark-correctness hazard.
+    """Streaming twin of operators.spatial_queries.tile_pyramid_rollup,
+    which it calls unchanged: incremental overview-tile counts at EVERY
+    zoom level from one update-mode aggregation (state bounded by the
+    tile universe, sum of 4^z over the pyramid, not by event count) -
+    the live form of overview building, where each micro-batch of points
+    bumps its ancestors at all levels in the same shuffle.  The batch
+    operator has exactly one aggregation, so streaming accepts it as is.
     """
     from ..operators import spatial_queries as sq
 
-    return sq.tile_pyramid_rollup_single_agg(
-        events_stream, max_zoom=max_zoom, min_zoom=min_zoom
-    )
+    return sq.tile_pyramid_rollup(events_stream, max_zoom=max_zoom, min_zoom=min_zoom)
