@@ -2,7 +2,8 @@
 
 ``stage_rows`` runs (doc_id, span_idx, wkt) spans through the stage's
 batch entry (operators.snap_tiles._process_batch, the only caller of the
-flat-array kernel).  ``scalar_rows`` builds the rows the stage should
+flat-array kernel) and checks that the kernel returned ring handles
+only.  ``scalar_rows`` builds the rows the stage should
 emit from kernel.snap.snap_polygon, one polygon member at a time, the
 way perfbench's ``scalar_snap`` does.  Both return canonical rows: the
 wkt is parsed back with the scalar codec, so coordinates compare bit for
@@ -50,10 +51,36 @@ def canon_rows(records) -> list[tuple]:
     return sorted(out)
 
 
+def _is_handle(ring) -> bool:
+    return (
+        isinstance(ring, tuple)
+        and len(ring) == 3
+        and all(isinstance(v, int) and not isinstance(v, bool) for v in ring[:2])
+        and isinstance(ring[2], bool)
+    )
+
+
 def stage_rows(spans, tms, tm_ids, cfg) -> list[tuple]:
+    """The stage's rows for ``spans``; also asserts that every ring of
+    the kernel's dict results is an (a, b, rev) store handle."""
+    from unittest import mock
+
+    from texel_spark.kernel import snap_batch
     from texel_spark.operators.snap_tiles import _process_batch
 
-    return canon_rows(_process_batch(spans_pdf(spans), tms, list(tm_ids), cfg).to_dict("records"))
+    kernel_results = []
+
+    def spy(*args, **kwargs):
+        out = snap_flat_batch(*args, **kwargs)
+        kernel_results.extend(r for r in out[0] if r is not None)
+        return out
+
+    snap_flat_batch = snap_batch.snap_flat_batch
+    with mock.patch.object(snap_batch, "snap_flat_batch", spy):
+        pdf = _process_batch(spans_pdf(spans), tms, list(tm_ids), cfg)
+    rings = [r for res in kernel_results for polys in res.values() for p in polys for r in p]
+    assert all(map(_is_handle, rings)), [r for r in rings if not _is_handle(r)][:3]
+    return canon_rows(pdf.to_dict("records"))
 
 
 def _points(kind, coords):

@@ -134,6 +134,37 @@ def test_cli_end_to_end(spark, tmp_path):
         assert names <= {f"b{i}" for i in range(12)}
 
 
+def test_cli_snaps_each_row_once(spark, tmp_path, monkeypatch):
+    """The CLI persists each table's snapped frame, so writing two tile
+    matrices runs the Python kernel once: a row-counting accumulator
+    around snap_documents counts every snapped row exactly once."""
+    from texel_spark.cli import main, target_path_for
+    from texel_spark.operators import snap_tiles
+    from texel_spark.sources.gpkg import read_features
+
+    rows_out = spark.sparkContext.accumulator(0)
+    snap_documents = snap_tiles.snap_documents
+
+    def counted(*args, **kwargs):
+        df = snap_documents(*args, **kwargs)
+
+        def count(batches):
+            for pdf in batches:
+                rows_out.add(len(pdf))
+                yield pdf
+
+        return df.mapInPandas(count, schema=df.schema)
+
+    monkeypatch.setattr(snap_tiles, "snap_documents", counted)
+    src = str(tmp_path / "src.gpkg")
+    _make_source_gpkg(src, n=12)
+    tgt = str(tmp_path / "out.gpkg")
+    assert main(["-s", src, "-t", tgt, "-z", "[9, 11]", "--master", "local[4]"]) == 0
+    written = sum(read_features(spark, target_path_for(tgt, z), "buildings").count() for z in (9, 11))
+    assert written > 0
+    assert rows_out.value == written
+
+
 REFERENCE_EXAMPLE = "/root/reference/example/example.gpkg"
 
 

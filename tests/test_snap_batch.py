@@ -235,6 +235,77 @@ def test_batch_matches_scalar_on_holed_polygons(keep_points_and_lines):
     assert stage_rows(spans, tms, tm_ids, config) == want
 
 
+def _corpus_spans(first_doc, n_docs):
+    """The geometry spans of documents first_doc .. first_doc + n_docs - 1."""
+    from texel_spark.sources.documents import build_document
+
+    return [
+        (doc_id, offset, text)
+        for doc_id, doc_spans in map(build_document, range(first_doc, first_doc + n_docs))
+        for kind, text, _, offset in doc_spans
+        if kind == "geom"
+    ]
+
+
+def test_batch_matches_scalar_keep_points_and_lines_and_reverse():
+    """keep_points_and_lines + reverse_winding_order flips every ring
+    handle, scalar-helper rings included (stage_rows checks that the
+    kernel returned handles only)."""
+    config = SnapConfig(keep_points_and_lines=True, ignore_outside_grid=True, reverse_winding_order=True)
+    holed = [(name, 0, span_wkt([poly])) for name, poly in _HOLED.items()]
+    _assert_stage_matches_scalar(holed, simple_tms(6, 0.5), [1, 3, 6], config)
+    spans = _corpus_spans(0, 300)
+    assert any(w.count("(") > 2 for _, _, w in spans)  # holed polygons
+    _assert_stage_matches_scalar(spans, load_embedded("NetherlandsRDNewQuad"), [5, 9, 12], config)
+
+
+def test_stage_prints_each_snapped_value_one_way():
+    """perfbench's seed-7 corpus (4,000 documents, zooms 5/9/12, in
+    2,000-row batches): every snapped polygon goes through the one
+    digit-exact formatter, so no value has two WKT texts (a repr()
+    formatter for some rings printed 553791.19 as 553791.1899999999)."""
+    import re
+
+    from tests.snap_rows import spans_pdf
+    from texel_spark.operators.snap_tiles import _process_batch
+
+    spans = _corpus_spans(7 * 4000, 4000)
+    tms = load_embedded("NetherlandsRDNewQuad")
+    config = SnapConfig(ignore_outside_grid=True)
+    texts = {}
+    for c0 in range(0, len(spans), 2000):
+        out = _process_batch(spans_pdf(spans[c0 : c0 + 2000]), tms, [5, 9, 12], config)
+        for w in out["wkt"]:
+            for tok in re.findall(r"-?[0-9][0-9.e+-]*", w):
+                texts.setdefault(float(tok), set()).add(tok)
+    assert len(texts) > 10_000
+    assert {v: t for v, t in texts.items() if len(t) > 1} == {}
+
+
+def test_ring_handle_maps_centroids_exactly_and_rejects_other_points():
+    """BatchSnapStore.ring_handle puts a scalar helper's float ring back
+    on its level's centroid ints, also where RD y-ordinates exceed 2^51
+    fixed-point units (there rint(f * 1e10) is not exact), and raises on
+    a point that is no centroid of the level."""
+    from texel_spark.grid.fixedpoint import to_ord
+    from texel_spark.kernel.pointindex import VECTOR_TILE_INTERNAL_PIXEL_RESOLUTION, PointIndex
+    from texel_spark.kernel.snap_batch import BatchSnapStore
+
+    tms = load_embedded("NetherlandsRDNewQuad")
+    level = 12 + tms.level_diff(VECTOR_TILE_INTERNAL_PIXEL_RESOLUTION)
+    ix = PointIndex.from_tile_matrix_set(tms, 12)
+    centroids = [ix.quadrant_at(level, z).centroid for z in (0, 12_345_678, 4**level - 1)]
+    assert max(c[1] for c in centroids) > 2**51
+    store = BatchSnapStore(tms, level)
+    ring = [(to_ord(cx), to_ord(cy)) for cx, cy in centroids]
+    a, b, rev = store.ring_handle(ring, level)
+    with pytest.raises(RuntimeError, match="centroid"):
+        store.ring_handle([(ring[0][0] + 0.01, ring[0][1])], level)
+    store.finish()
+    assert (a, b, rev) == (0, 3, False)
+    assert list(zip(store.kx.tolist(), store.ky.tolist())) == centroids
+
+
 def test_kernel_columnar_contract_as_perfbench_replays_it():
     """perfbench's kernel replay calls snap_flat_batch as below and reads
     ``results[m] is None`` as "member m took the columnar lane"

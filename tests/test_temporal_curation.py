@@ -322,6 +322,10 @@ def test_validate_documents_null_semantics(spark):
 
 
 def test_run_curation_pipeline_bucket_mismatch_raises(spark, tmp_path):
+    import json
+    import os
+    import re
+
     from texel_spark.operators.curation import run_curation_pipeline
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -329,3 +333,12 @@ def test_run_curation_pipeline_bucket_mismatch_raises(spark, tmp_path):
     run_curation_pipeline(docs, out, shard_buckets=4, cap=10)
     with pytest.raises(ValueError, match="shard_buckets=4"):
         run_curation_pipeline(docs, out, shard_buckets=8, cap=10)
+    # a manifest that does not record its count cannot be resumed either
+    manifest_path = os.path.join(out, "manifest.json")
+    with open(manifest_path) as f:
+        manifest = json.load(f)
+    del manifest["shard_buckets"]
+    with open(manifest_path, "w") as f:
+        json.dump(manifest, f)
+    with pytest.raises(ValueError, match=re.escape(manifest_path)):
+        run_curation_pipeline(docs, out, shard_buckets=4, cap=10)

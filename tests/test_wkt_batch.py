@@ -9,7 +9,7 @@ from texel_spark.functions.wkt import parse_wkt, polygon_to_wkt, multipolygon_to
 from texel_spark.functions.wkt_batch import (
     ParsedPolygonBatch,
     WktBatchFallback,
-    fixedpoint_text_lengths,
+    fixedpoint_digits,
     format_polygon_wkts,
     parse_polygons_batch,
     write_fixedpoint,
@@ -119,10 +119,11 @@ def test_fixedpoint_format_roundtrip_exhaustive_edges():
         10**15 + 7,
     ]
     arr = np.asarray(vals, dtype=np.int64)
-    lens = fixedpoint_text_lengths(arr)
+    digits = fixedpoint_digits(arr)
+    lens = digits.length
     pos = np.concatenate(([0], np.cumsum(lens)[:-1]))
     buf = np.full(int(lens.sum()), 32, dtype=np.uint8)
-    write_fixedpoint(buf, pos, arr)
+    write_fixedpoint(buf, pos, digits)
     s = buf.tobytes().decode()
     for i, v in enumerate(vals):
         text = s[pos[i] : pos[i] + lens[i]]
@@ -135,10 +136,11 @@ def test_fixedpoint_format_roundtrip_exhaustive_edges():
 def test_fixedpoint_format_random_roundtrip():
     rng = np.random.default_rng(42)
     arr = rng.integers(-(9 * 10**15), 9 * 10**15, size=20000, dtype=np.int64)
-    lens = fixedpoint_text_lengths(arr)
+    digits = fixedpoint_digits(arr)
+    lens = digits.length
     pos = np.concatenate(([0], np.cumsum(lens)[:-1]))
     buf = np.full(int(lens.sum()), 32, dtype=np.uint8)
-    write_fixedpoint(buf, pos, arr)
+    write_fixedpoint(buf, pos, digits)
     s = buf.tobytes().decode()
     offs = pos.tolist()
     lns = lens.tolist()

@@ -97,25 +97,30 @@ def main(argv=None) -> int:
         geoms = keyed.where(F.col("wkt").isNotNull()).select(
             F.col("__fk").cast("string").alias("doc_id"), F.lit(0).alias("span_idx"), "wkt"
         )
-        snapped = snap_documents(geoms, tms, tm_ids, config)
-        for tm_id in tm_ids:
-            out = (
-                snapped.where(F.col("zoom") == tm_id)
-                .select(
-                    "doc_id",
-                    F.col("geom_kind").alias("snapped_kind"),
-                    F.col("wkt").alias("snapped_wkt"),
+        # persisted so the Python kernel runs once per table, not once
+        # per tile matrix's write
+        snapped = snap_documents(geoms, tms, tm_ids, config).persist()
+        try:
+            for tm_id in tm_ids:
+                out = (
+                    snapped.where(F.col("zoom") == tm_id)
+                    .select(
+                        "doc_id",
+                        F.col("geom_kind").alias("snapped_kind"),
+                        F.col("wkt").alias("snapped_wkt"),
+                    )
+                    .join(keyed.withColumn("doc_id", F.col("__fk").cast("string")), "doc_id")
+                    .select(*attr_cols, F.col("snapped_kind").alias("geom_kind"), F.col("snapped_wkt").alias("wkt"))
                 )
-                .join(keyed.withColumn("doc_id", F.col("__fk").cast("string")), "doc_id")
-                .select(*attr_cols, F.col("snapped_kind").alias("geom_kind"), F.col("snapped_wkt").alias("wkt"))
-            )
-            path = target_path_for(args.target, tm_id)
-            stats = write_features(
-                out, path, tinfo.name, srs_id=tinfo.srs_id,
-                geometry_type=tinfo.geometry_type, page_size=args.pagesize,
-            )
-            print(f"{tinfo.name} -> {path}: {stats['rows']} features, extent {stats['extent']}")
-        keyed.unpersist()
+                path = target_path_for(args.target, tm_id)
+                stats = write_features(
+                    out, path, tinfo.name, srs_id=tinfo.srs_id,
+                    geometry_type=tinfo.geometry_type, page_size=args.pagesize,
+                )
+                print(f"{tinfo.name} -> {path}: {stats['rows']} features, extent {stats['extent']}")
+        finally:
+            snapped.unpersist()
+            keyed.unpersist()
     if not pre_existing:
         spark.stop()
     return 0

@@ -12,10 +12,13 @@ programs:
 * format: snapped coordinates are exact int64 fixed-point grid values
   (``i / 10^10``), so WKT text is generated digit-by-digit from the
   integers into one shared byte buffer (vectorized over all points of
-  all output geometries), then sliced per geometry.  ``float(text)``
-  of the exact-decimal form equals ``i / 1e10`` bit-for-bit (both are
-  one correctly-rounded operation on the same exact value), so parse
-  round-trips are identical to the scalar ``repr``-based formatter.
+  all output geometries), then sliced per geometry.  Each coordinate
+  array's digit layout is computed once (fixedpoint_digits) and then
+  written.  ``float(text)`` of the exact-decimal form equals
+  ``i / 1e10`` bit-for-bit (both are one correctly-rounded operation on
+  the same exact value), so parse round-trips are identical to the
+  scalar ``repr``-based formatter.  Every snapped polygon of the snap
+  stage is formatted here, so a snapped value has one text.
 
 Anything surprising (null text, non-ASCII, non-2D coordinates,
 unbalanced parens, NaN/inf ordinates, EMPTY geometries) raises
@@ -32,6 +35,8 @@ snap/snap_test.go goldens.
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple
 
 import numpy as np
 
@@ -309,64 +314,57 @@ def _float_representable(vals: np.ndarray) -> np.ndarray:
     return out
 
 
-def fixedpoint_text_lengths(vals: np.ndarray) -> np.ndarray:
-    """Char count of the exact-decimal form of ``vals / 10^10``."""
+class FixedpointDigits(NamedTuple):
+    """Digit layout of the exact-decimal text of ``vals / 10^10``."""
+
+    neg: np.ndarray  # leading '-'
+    q: np.ndarray  # integer part of |vals| / 10^10
+    f: np.ndarray  # fractional part, as an int below 10^10
+    dq: np.ndarray  # integer digit count
+    frac_len: np.ndarray  # fraction digits after the trailing-zero trim (0: no '.')
+    length: np.ndarray  # char count of the text
+
+
+def fixedpoint_digits(vals: np.ndarray) -> FixedpointDigits:
+    """The digit layout of every value of ``vals`` (int64 fixed-point)."""
     vals = _float_representable(vals)
     neg = vals < 0
     a = np.abs(vals)
     q = a // POW10
     f = a % POW10
     dq = np.ones(vals.shape, dtype=np.int64)
-    for k in range(1, 9):
+    max_k = 18 if (q >= _POW10_TABLE[8]).any() else 8  # rare: beyond 8 digits
+    for k in range(1, max_k + 1):
         dq += q >= _POW10_TABLE[k]
-    big = q >= _POW10_TABLE[8]
-    if big.any():  # rare: integer part beyond 8 digits
-        for k in range(9, 19):
-            dq += q >= _POW10_TABLE[k]
-    tz = np.zeros(vals.shape, dtype=np.int64)
     nzf = f > 0
+    tz = np.zeros(vals.shape, dtype=np.int64)
     for k in range(1, 10):
         tz += nzf & (f % _POW10_TABLE[k] == 0)
     frac_len = np.where(nzf, 10 - tz, 0)
-    return neg + dq + np.where(nzf, 1 + frac_len, 0)
+    return FixedpointDigits(neg, q, f, dq, frac_len, neg + dq + np.where(nzf, 1 + frac_len, 0))
 
 
-def write_fixedpoint(buf: np.ndarray, pos: np.ndarray, vals: np.ndarray) -> None:
-    """Write the exact-decimal text of ``vals / 10^10`` into ``buf`` at
-    byte offsets ``pos`` (lengths must match fixedpoint_text_lengths)."""
-    vals = _float_representable(vals)
-    neg = vals < 0
-    a = np.abs(vals)
-    q = a // POW10
-    f = a % POW10
-    dq = np.ones(vals.shape, dtype=np.int64)
-    max_k = 8 if not (q >= _POW10_TABLE[8]).any() else 18
-    for k in range(1, max_k + 1):
-        dq += q >= _POW10_TABLE[k]
-    if neg.any():
-        buf[pos[neg]] = ord("-")
-    start = pos + neg  # first digit of the integer part
+def write_fixedpoint(buf: np.ndarray, pos: np.ndarray, d: FixedpointDigits) -> None:
+    """Write the texts laid out by ``d`` (fixedpoint_digits) into ``buf``
+    at byte offsets ``pos``."""
+    if d.neg.any():
+        buf[pos[d.neg]] = ord("-")
+    start = pos + d.neg  # first digit of the integer part
     # integer digits, written right-to-left
-    for j in range(max_k + 1):
-        m = dq > j
+    for j in range(19):
+        m = d.dq > j
         if not m.any():
             break
-        digits = (q[m] // _POW10_TABLE[j]) % 10
-        buf[start[m] + dq[m] - 1 - j] = (48 + digits).astype(np.uint8)
-    nzf = f > 0
-    if nzf.any():
-        dot = start + dq
-        buf[dot[nzf]] = ord(".")
-        tz = np.zeros(vals.shape, dtype=np.int64)
-        for k in range(1, 10):
-            tz += nzf & (f % _POW10_TABLE[k] == 0)
-        frac_len = 10 - tz
-        for j in range(10):
-            m = nzf & (frac_len > j)
-            if not m.any():
-                break
-            digits = (f[m] // _POW10_TABLE[9 - j]) % 10
-            buf[dot[m] + 1 + j] = (48 + digits).astype(np.uint8)
+        digits = (d.q[m] // _POW10_TABLE[j]) % 10
+        buf[start[m] + d.dq[m] - 1 - j] = (48 + digits).astype(np.uint8)
+    dot = start + d.dq
+    buf[dot[d.frac_len > 0]] = ord(".")
+    for j in range(10):
+        m = d.frac_len > j
+        if not m.any():
+            break
+        digits = (d.f[m] // _POW10_TABLE[9 - j]) % 10
+        buf[dot[m] + 1 + j] = (48 + digits).astype(np.uint8)
 
 
 def _exclusive_cumsum(a: np.ndarray) -> np.ndarray:
@@ -422,8 +420,10 @@ def format_polygon_wkts(
     ex = pt_x[src]
     ey = pt_y[src]
 
-    lx = fixedpoint_text_lengths(ex)
-    ly = fixedpoint_text_lengths(ey)
+    dx = fixedpoint_digits(ex)
+    dy = fixedpoint_digits(ey)
+    lx = dx.length
+    ly = dy.length
     last_in_ring = p_in_ring == (n_emit[ring_of_emit] - 1)
     pt_block = lx + 1 + ly + np.where(last_in_ring, 0, 2)  # "x y" + ", "
 
@@ -495,8 +495,8 @@ def format_polygon_wkts(
         + 1
         + (pt_block_off[:-1] - pt_block_off[emit_bounds[ring_of_emit]])
     )
-    write_fixedpoint(buf, pt_pos, ex)
-    write_fixedpoint(buf, pt_pos + lx + 1, ey)
+    write_fixedpoint(buf, pt_pos, dx)
+    write_fixedpoint(buf, pt_pos + lx + 1, dy)
     sep_p = np.flatnonzero(~last_in_ring)
     if sep_p.size:
         buf[pt_pos[sep_p] + lx[sep_p] + 1 + ly[sep_p]] = _COMMA

@@ -23,11 +23,13 @@ array programs over ALL polygons of an Arrow batch at once:
   winding classification (snap.go:494-526 incl. the colinear quirk) are
   all computed as per-level array passes; only rings that actually have
   snapping-created zigzags or self-tangency points (rare) drop to the
-  scalar helpers, which stay the oracle for those behaviors.
+  scalar helpers, which stay the oracle for those behaviors; the rings
+  they return are mapped back onto the level's centroid ints.
 
-Snapped coordinates are carried as int64 fixed-point arrays end-to-end so
-the Spark operator can emit WKT text digit-exactly without per-point
-Python (functions/wkt_batch.py); float views (int / 1e10, identical to
+Snapped coordinates are carried as int64 fixed-point arrays end-to-end,
+and every ring leaves the kernel as a handle into them, so the Spark
+operator emits WKT text digit-exactly without per-point Python
+(functions/wkt_batch.py); float views (int / 1e10, identical to
 intgeom.ToGeomOrd) are used wherever the scalar kernel compares floats,
 so equality/winding decisions are bit-for-bit the scalar kernel's.
 
@@ -41,6 +43,7 @@ from __future__ import annotations
 
 import numpy as np
 
+from ..functions.wkt_batch import _exclusive_cumsum
 from ..grid import morton
 from ..grid.fixedpoint import go_div
 from .pointindex import VECTOR_TILE_INTERNAL_PIXEL_RESOLUTION, OutsideGridError
@@ -65,13 +68,6 @@ _SCALAR = 2  # backtracks or self-tangency: scalar helpers decide
 def _go_div_np(a: np.ndarray, b: int) -> np.ndarray:
     """Vectorized Go int64 division (truncate toward zero), b > 0."""
     return np.where(a >= 0, a // b, -((-a) // b))
-
-
-def _exclusive_cumsum(a: np.ndarray) -> np.ndarray:
-    out = np.empty(a.size + 1, dtype=np.int64)
-    out[0] = 0
-    np.cumsum(a, out=out[1:])
-    return out
 
 
 def line_intersects_np(p1x, p1y, p2x, p2y, minx, miny, maxx, maxy):
@@ -153,47 +149,54 @@ def line_intersects_np(p1x, p1y, p2x, p2y, minx, miny, maxx, maxy):
 
 
 class BatchSnapStore:
-    """Compact snapped-point arrays shared by all fast ring handles of a
-    batch.  A fast ring handle is ``(a, b, rev)``: points ``kx/ky[a:b]``
-    (int64 fixed-point), emitted in reverse order when ``rev``.  ``fx/fy``
-    are the float views the scalar kernel would have produced (int/1e10,
-    identical to intgeom.ToGeomOrd for nonzero, and 0/1e10 == 0.0)."""
+    """Compact snapped-point arrays shared by every ring of a batch.  A
+    ring handle is ``(a, b, rev)``: points ``kx/ky[a:b]`` (int64
+    fixed-point), emitted in reverse order when ``rev``.  ``origin`` and
+    ``spans`` are the grid's int root-extent corner and per-level cell
+    span (pointindex.go:183-198)."""
 
-    __slots__ = ("kx", "ky", "fx", "fy", "total")
+    __slots__ = ("kx", "ky", "total", "origin", "spans")
 
-    def __init__(self):
+    def __init__(self, tms, deepest_level: int):
+        int_extent = tms.int_root_extent(0)
+        deepest_res = go_div(int_extent[2] - int_extent[0], 1 << deepest_level)
+        self.origin = np.asarray(int_extent[:2], dtype=np.int64)
+        self.spans = [(1 << (deepest_level - lv)) * deepest_res for lv in range(deepest_level + 1)]
         self.kx = []
         self.ky = []
-        self.fx = []
-        self.fy = []
         self.total = 0
 
-    def append(self, kx, ky, fx, fy) -> int:
+    def append(self, kx, ky) -> int:
         """Append one compact block; returns its global base offset."""
         base = self.total
         self.kx.append(kx)
         self.ky.append(ky)
-        self.fx.append(fx)
-        self.fy.append(fy)
         self.total += kx.size
         return base
+
+    def ring_handle(self, ring, level: int) -> tuple:
+        """Append a ring of float points (a scalar helper's output, every
+        point a snapped centroid of ``level``) and return its handle.
+        Each point maps to the nearest centroid int of the level,
+        ``origin + span//2 + i*span``, whose float view ``int / 1e10``
+        must be the point itself."""
+        span = self.spans[level]
+        pts = np.asarray(ring, dtype=np.float64).reshape(-1, 2)
+        c0 = self.origin + (span >> 1)
+        k = c0 + np.rint((pts * _POW10F - c0) / span).astype(np.int64) * span
+        if not (k / _POW10F == pts).all():
+            raise RuntimeError(f"ring point is not a level-{level} cell centroid: {ring}")
+        base = self.append(k[:, 0].copy(), k[:, 1].copy())
+        return (base, base + k.shape[0], False)
 
     def finish(self):
         self.kx = np.concatenate(self.kx) if self.kx else np.empty(0, np.int64)
         self.ky = np.concatenate(self.ky) if self.ky else np.empty(0, np.int64)
-        self.fx = np.concatenate(self.fx) if self.fx else np.empty(0, np.float64)
-        self.fy = np.concatenate(self.fy) if self.fy else np.empty(0, np.float64)
 
 
 def _ring_floats(fx, fy, a: int, b: int, rev: bool):
     pts = list(zip(fx[a:b].tolist(), fy[a:b].tolist()))
     return pts[::-1] if rev else pts
-
-
-def _iter_ring_floats(fx, fy, a: int, b: int, rev: bool):
-    rng = range(b - 1, a - 1, -1) if rev else range(a, b)
-    for i in rng:
-        yield (fx[i], fy[i])
 
 
 def snap_flat_batch(
@@ -212,9 +215,10 @@ def snap_flat_batch(
 
     xy: (n_v, 2) float64; rings are contiguous vertex spans, members
     contiguous ring spans.  Returns (results, store, columnar):
-    results[m] = {tm_id: [poly]} where each poly is a list of rings -
-    either a fast handle (a, b, rev) into ``store`` or a materialized
-    list of float tuples (scalar-path rings).
+    results[m] = {tm_id: [poly]} where each poly is a list of ring
+    handles (a, b, rev) into ``store``; rings the scalar helpers build
+    are appended to ``store`` too (BatchSnapStore.ring_handle), so a
+    result never holds float points.
 
     With ``collect_columnar``, members that are single-ring and fully on
     the fast path (the overwhelmingly common case) skip the per-member
@@ -233,23 +237,23 @@ def snap_flat_batch(
     levels = sorted(tm_ids_by_level)
 
     results: list = [None] * n_members
-    store = BatchSnapStore()
+    store = BatchSnapStore(tms, deepest_level)
     col_parts: dict[int, list] = {}
     mr_bounds = np.searchsorted(ring_member, np.arange(n_members + 1))
-
-    def scalar_member(m: int):
-        rings = []
-        for r in range(int(mr_bounds[m]), int(mr_bounds[m + 1])):
-            s, l = int(ring_start[r]), int(ring_len[r])
-            rings.append([tuple(p) for p in xy[s : s + l]])
-        results[m] = snap_polygon(rings, tms, list(tm_ids), config)
 
     if 2 * deepest_level > 60:
         # composite occupancy keys (member << 2*level) | z would overflow
         # int64 (ADVICE r2): the scalar kernel (arbitrary-precision
         # Python ints) handles any depth - route every member through it
         for m in range(n_members):
-            scalar_member(m)
+            rings = [
+                [tuple(p) for p in xy[ring_start[r] : ring_start[r] + ring_len[r]]]
+                for r in range(int(mr_bounds[m]), int(mr_bounds[m + 1]))
+            ]
+            results[m] = {
+                tm: [[store.ring_handle(r, tm + level_diff) for r in poly] for poly in polys]
+                for tm, polys in snap_polygon(rings, tms, list(tm_ids), config).items()
+            }
         store.finish()
         return results, store, {}
 
@@ -272,7 +276,6 @@ def snap_flat_batch(
             m1 - m0,
             results,
             m0,
-            scalar_member,
             store,
             tms,
             deepest_level,
@@ -290,32 +293,37 @@ def snap_flat_batch(
     return results, store, columnar
 
 
+def _rightmost_lowest_det(x, y, start, end):
+    """Winding determinant of each point span [start, end) of ``x``/``y``
+    at its rightmost-lowest vertex (min y, then max x, then first index)
+    and that vertex's two ring neighbours (snap.go:406-417, 494-526):
+    > 0 counter-clockwise, < 0 clockwise.  Spans of fewer than 3 points
+    read 0.0, the colinear value (winding_of)."""
+    det = np.zeros(start.size, dtype=np.float64)
+    w = np.flatnonzero(end - start >= 3)
+    if w.size == 0:
+        return det
+    s, e = start[w], end[w]
+    lens = e - s
+    span_off = _exclusive_cumsum(lens)
+    sid = np.repeat(np.arange(w.size, dtype=np.int64), lens)
+    idx = s[sid] + np.arange(int(span_off[-1]), dtype=np.int64) - span_off[:-1][sid]
+    order = np.lexsort((idx, -x[idx], y[idx], sid))
+    rmli = idx[order[span_off[:-1]]]
+    a_idx = np.where(rmli > s, rmli - 1, e - 1)
+    c_idx = np.where(rmli < e - 1, rmli + 1, s)
+    det[w] = (x[rmli] - x[a_idx]) * (y[c_idx] - y[a_idx]) - (x[c_idx] - x[a_idx]) * (y[rmli] - y[a_idx])
+    return det
+
+
 def _correct_input_winding(xy, ring_start, ring_len, ring_local):
     """Vectorized snap.go:406-417 over the input rings: reverse any ring
     whose winding is wrong for its position (outer=CCW, inner=CW;
     colinear counts as correct), exactly like _ensure_correct_winding_order."""
-    n_rings = ring_start.size
-    if n_rings == 0:
-        return xy
-    x = xy[:, 0]
-    y = xy[:, 1]
-    vring = np.repeat(np.arange(n_rings, dtype=np.int64), ring_len)
-    pos = np.arange(x.size, dtype=np.int64)
-    # rightmost-lowest vertex per ring: min y, then max x, then first index
-    order = np.lexsort((pos, -x, y, vring))
-    grp_first = np.searchsorted(vring[order], np.arange(n_rings))
-    rmli = order[grp_first]
-    ends = ring_start + ring_len
-    a_idx = np.where(rmli > ring_start, rmli - 1, ends - 1)
-    c_idx = np.where(rmli < ends - 1, rmli + 1, ring_start)
-    ax, ay = x[a_idx], y[a_idx]
-    bx, by = x[rmli], y[rmli]
-    cx, cy = x[c_idx], y[c_idx]
-    det = (bx - ax) * (cy - ay) - (cx - ax) * (by - ay)
+    det = _rightmost_lowest_det(xy[:, 0], xy[:, 1], ring_start, ring_start + ring_len)
     # outer (ring_local == 0) should be CCW (det > 0), inners CW (det < 0);
     # det == 0 (colinear) always counts as correct (snap.go:406-417 quirk)
     wrong = np.where(ring_local == 0, det < 0, det > 0)
-    wrong &= ring_len >= 3  # winding_of returns COLINEAR for < 3 points
     if not wrong.any():
         return xy
     w = np.flatnonzero(wrong)
@@ -337,7 +345,6 @@ def _snap_chunk(
     n_members,
     results,
     res_offset,
-    scalar_member,
     store: BatchSnapStore,
     tms,
     deepest_level,
@@ -350,8 +357,8 @@ def _snap_chunk(
     int_extent = tms.int_root_extent(0)
     ext0, ext1 = int_extent[0], int_extent[1]
     deepest_size = 1 << deepest_level
-    deepest_res = go_div(int_extent[2] - int_extent[0], deepest_size)
-    spans = [(1 << (deepest_level - lv)) * deepest_res for lv in range(deepest_level + 1)]
+    spans = store.spans
+    deepest_res = spans[deepest_level]
     halves = [s >> 1 for s in spans]
     root_cx = ext0 + halves[0]
     root_cy = ext1 + halves[0]
@@ -565,7 +572,7 @@ def _snap_chunk(
     #    level need no per-member Python at all - their (a, b, rev) spans
     #    go straight into per-level arrays ---------------------------------
     keep_pl = config.keep_points_and_lines
-    rev_cfg = config.reverse_winding_order
+    rev_cfg = bool(config.reverse_winding_order)
     columnar_sel = None
     if col_parts is not None and not keep_pl:
         ring_count = mr_bounds[1:] - mr_bounds[:-1]
@@ -578,8 +585,6 @@ def _snap_chunk(
             for lv_i in levels:
                 L = lvl[lv_i]
                 ok &= L["status"][fr_all] != _SCALAR
-                if L["reroute"] is not None:
-                    ok &= ~L["reroute"][fr_all]
             if ok.any():
                 midx = np.flatnonzero(ok)
                 fok = fr_all[midx]
@@ -605,20 +610,10 @@ def _snap_chunk(
         r1 = int(mr_bounds[pi + 1])
         res: dict[int, list] = {}
         for lv_i in levels:
-            L = lvl[lv_i]
-            rr = L["reroute"]
-            if rr is not None and rr[r0:r1].any():
-                # a live segment produced no snapped points: the scalar
-                # kernel decides (it raises mid-walk; provably unreachable
-                # because endpoint cells are always occupied, kept exact)
-                scalar_member(res_offset + pi)
-                res = None
-                break
-            out = _combine_member_level(L, r0, r1, lv_i, hit_maps, keep_pl, rev_cfg)
+            out = _combine_member_level(lvl[lv_i], r0, r1, lv_i, hit_maps, keep_pl, rev_cfg, store)
             if out is not None:
                 res[tm_ids_by_level[lv_i]] = out
-        if res is not None:
-            results[res_offset + pi] = res
+        results[res_offset + pi] = res
 
 
 def _assembly_arrays(lv_i, seg_s, ix, iy, starts, vring, ring_start, ring_len, alive_seg, hit_maps, store):
@@ -635,9 +630,7 @@ def _assembly_arrays(lv_i, seg_s, ix, iy, starts, vring, ring_start, ring_len, a
     fx = ix / _POW10F
     fy = iy / _POW10F
 
-    seg_ids = np.arange(n_segs, dtype=np.int64)
-    ring_of_seg = vring
-    notfirst = seg_ids != ring_start[ring_of_seg]
+    notfirst = np.arange(n_segs, dtype=np.int64) != ring_start[vring]
     # cleanupNewVertices (snap.go:366-380): drop each segment's last point
     # when it has > 1, drop its first when it equals the running tail
     # (= the tail-adjusted last point of the previous segment: even when
@@ -653,13 +646,15 @@ def _assembly_arrays(lv_i, seg_s, ix, iy, starts, vring, ring_start, ring_len, a
         prev_last = starts[cand] - 1 - (cnt[cand - 1] > 1)
         eq = (fx[first_pos] == fx[prev_last]) & (fy[first_pos] == fy[prev_last])
         keep[first_pos[eq]] = False
-    # a live segment with zero points would make the scalar kernel raise
-    # mid-walk; mark its ring for scalar rerouting (kept exact)
-    reroute = None
-    zero_live = (cnt == 0) & alive_seg
-    if zero_live.any():
-        reroute = np.zeros(n_rings, dtype=bool)
-        reroute[np.unique(ring_of_seg[zero_live])] = True
+    # a live segment's first endpoint is a vertex of its own member, so
+    # that endpoint's cell is occupied at every level and, containing the
+    # endpoint, is kept by every descent step: the segment snaps to at
+    # least one point (the scalar kernel raises in _cleanup_new_vertices)
+    if ((cnt == 0) & alive_seg).any():
+        raise RuntimeError(
+            f"level {lv_i}: a live segment snapped to no point, but its first "
+            "endpoint's cell is occupied and kept at every level"
+        )
 
     kcum = _exclusive_cumsum(keep.astype(np.int64))
     kidx = np.flatnonzero(keep)
@@ -693,23 +688,7 @@ def _assembly_arrays(lv_i, seg_s, ix, iy, starts, vring, ring_start, ring_len, a
             bt_ring[np.unique(rk[ok])] = True
 
     # winding (_classify_rings fast path, snap.go:494-526) on [cs, ce2)
-    det = np.zeros(n_rings, dtype=np.float64)
-    rings_w = np.flatnonzero(kc2 >= 3)
-    if rings_w.size:
-        sel = np.flatnonzero(np.arange(nk, dtype=np.int64) < ce2[ring_of_kept])
-        rsel = ring_of_kept[sel]
-        # rightmost-lowest per ring: min y, then max x, then first index
-        order2 = np.lexsort((sel, -kfx[sel], kfy[sel], rsel))
-        rs_sorted = rsel[order2]
-        grp_first = np.searchsorted(rs_sorted, rings_w)
-        rmli = sel[order2[grp_first]]
-        csw = cs[rings_w]
-        cew = ce2[rings_w]
-        a_idx = np.where(rmli > csw, rmli - 1, cew - 1)
-        c_idx = np.where(rmli < cew - 1, rmli + 1, csw)
-        det[rings_w] = (kfx[rmli] - kfx[a_idx]) * (kfy[c_idx] - kfy[a_idx]) - (
-            kfx[c_idx] - kfx[a_idx]
-        ) * (kfy[rmli] - kfy[a_idx])
+    det = _rightmost_lowest_det(kfx, kfy, cs, ce2)
 
     status = np.full(n_rings, _FAST, dtype=np.int8)
     status[kc2 < 3] = _PL
@@ -719,15 +698,13 @@ def _assembly_arrays(lv_i, seg_s, ix, iy, starts, vring, ring_start, ring_len, a
             hm_flag[gid] = True
     status[bt_ring | hm_flag] = _SCALAR
 
-    base = store.append(kx, ky, kfx, kfy)
+    base = store.append(kx, ky)
     return {
         "cs": cs + base,
         "ce": ce + base,
         "ce2": ce2 + base,
-        "kc2": kc2,
         "status": status,
         "det": det,
-        "reroute": reroute,
         "fx": kfx,
         "fy": kfy,
         "base": base,
@@ -746,12 +723,15 @@ def _hash_tuple_ring(ring) -> int:
     return int(h.sum(dtype=np.uint64))
 
 
-def _combine_member_level(L, r0, r1, lv_i, hit_maps, keep_pl, rev_cfg):
+def _combine_member_level(L, r0, r1, lv_i, hit_maps, keep_pl, rev_cfg, store):
     """snap.addPointsAndSnap's per-ring tail (snap.go:93-155) for one
     (member, level) over the precomputed ring descriptors.
 
     Returns the polygons list for the level, or None when the level is
-    dead for this member (outer ring collapsed, snap.go:97-99)."""
+    dead for this member (outer ring collapsed, snap.go:97-99).  Rings
+    the scalar helpers build (lists of float tuples) are appended to
+    ``store`` at the end, so every returned ring is an (a, b, rev)
+    handle."""
     status = L["status"]
     cs = L["cs"]
     ce = L["ce"]
@@ -814,13 +794,12 @@ def _combine_member_level(L, r0, r1, lv_i, hit_maps, keep_pl, rev_cfg):
             # single-outer shortcut for _match_inners_to_polygons
             # (snap.go:277-324): with one candidate polygon the first
             # inner vertex contained in the outer decides the match, and
-            # an uncontained inner becomes a reversed standalone outer -
-            # ring handles survive, so the batch formatter still applies
+            # an uncontained inner becomes a reversed standalone outer
             outer_pts = floats(outers[0])
             poly = [outers[0]]
             turned = []
             for ih in inners:
-                for v in _iter_ring_floats(fx, fy, ih[0] - base, ih[1] - base, ih[2]):
+                for v in floats(ih):
                     c, _ = ring_contains(outer_pts, v)
                     if c:
                         poly.append(ih)
@@ -835,17 +814,13 @@ def _combine_member_level(L, r0, r1, lv_i, hit_maps, keep_pl, rev_cfg):
     else:
         polygons = [[o] for o in outers]
 
-    if rev_cfg:
-        for poly in polygons:
-            for k in range(len(poly)):
-                rg = poly[k]
-                poly[k] = (rg[0], rg[1], not rg[2]) if isinstance(rg, tuple) else list(reversed(rg))
+    def handle(r):
+        return r if isinstance(r, tuple) else store.ring_handle(r, lv_i)
 
-    out = polygons if polygons else []
+    out = [[(a, b, rev != rev_cfg) for a, b, rev in map(handle, poly)] for poly in polygons]
     if keep_pl:
-        for pl in pls:
-            out = out + [[pl]]
-    return out if out else None
+        out += [[handle(pl)] for pl in pls]
+    return out or None
 
 
 _EMPTY_HITS: dict = {}

@@ -485,10 +485,10 @@ def run_curation_pipeline(
         with open(manifest_path) as f:
             manifest = _json.load(f)
         # a resumed run MUST shard identically: completed shards hold
-        # pmod(old_buckets) data, so a different count would silently
-        # duplicate or drop documents across the shard boundary
-        prev = manifest.get("shard_buckets", shard_buckets)  # legacy manifests predate the key
-        manifest["shard_buckets"] = prev
+        # pmod(old_buckets) data, so a different (or unrecorded) count
+        # would silently duplicate or drop documents across the shard
+        # boundary
+        prev = manifest.get("shard_buckets")
         if prev != shard_buckets:
             raise ValueError(
                 f"manifest at {manifest_path} was written with shard_buckets={prev}; "

@@ -108,16 +108,15 @@ def _process_batch(pdf, tms_, tm_ids_, cfg):
     """One Arrow batch through the snap stage: batch WKT parse ->
     flat-array snap kernel -> one digit-exact batch WKT emit.
 
-    Every (row, zoom) geometry whose rings are all fast ring handles
-    lands in one geometry table: the kernel's columnar lane adds its
-    per-zoom arrays (one polygon with one ring each), and the rows with
-    a dict result (holed polygons, multipolygons) add theirs.  One
+    Every snapped (row, zoom) polygon geometry lands in one geometry
+    table of (a, b, rev) ring handles: the kernel's columnar lane adds
+    its per-zoom arrays (one polygon with one ring each), and the rows
+    with a dict result (holed polygons, multipolygons) add theirs.  One
     format_polygon_wkts call writes the table's WKT and one reduceat
     pass its bboxes.  Per-row Python only touches rows with a dict
     result, the rare rows the array parser rejects (3D, non-ASCII,
-    EMPTY, null or malformed WKT, parsed by the scalar codec),
-    geometries with scalar-path rings (multipolygon merges, self-tangent
-    rings), which are formatted one by one, and non-polygon kinds.
+    EMPTY, null or malformed WKT, parsed by the scalar codec) and
+    non-polygon kinds, which pass through in ``other``.
 
     The frame has SNAPPED_DTYPES whatever the batch holds; the order of
     its rows is unspecified."""
@@ -125,8 +124,7 @@ def _process_batch(pdf, tms_, tm_ids_, cfg):
     import pandas as pd
 
     from ..functions import wkt_batch as wb
-    from ..functions.wkt import multipolygon_to_wkt, polygon_bbox, polygon_to_wkt
-    from ..kernel.snap_batch import _ring_floats, snap_flat_batch
+    from ..kernel.snap_batch import snap_flat_batch
 
     texts = pdf["wkt"].tolist()
     doc_ids = pdf["doc_id"].tolist()
@@ -150,11 +148,9 @@ def _process_batch(pdf, tms_, tm_ids_, cfg):
         n_members, tms_, tm_ids_, cfg, need_dicts=need_dicts, collect_columnar=True,
     )
 
-    # dict results: handle-only geometries join the geometry table as
-    # (row, zoom, multi, n_polys), rings per polygon and (a, b, rev)
-    # handles; the rest are finished rows in ``other``
+    # dict results join the geometry table as (row, zoom, multi,
+    # n_polys), rings per polygon and (a, b, rev) handles
     geoms, rings, handles = [], [], []
-    other = []
     has_dict = np.fromiter((r is not None for r in results), dtype=bool, count=n_members)
     for fr in np.unique(parsed.member_fastrow[has_dict]).tolist():
         row_i = int(parsed.rows[fr])
@@ -165,22 +161,12 @@ def _process_batch(pdf, tms_, tm_ids_, cfg):
         for zoom, polys in rg.items():
             if not polys:
                 continue
-            multi = bool(parsed.is_multi[fr]) or len(polys) > 1
-            if all(isinstance(r, tuple) for p in polys for r in p):
-                geoms.append((row_i, zoom, multi, len(polys)))
-                for p in polys:
-                    rings.append(len(p))
-                    handles.extend(p)
-                continue
-            mat = [
-                [_ring_floats(store.fx, store.fy, *r) if isinstance(r, tuple) else r for r in p]
-                for p in polys
-            ]
-            w = multipolygon_to_wkt(mat) if multi else polygon_to_wkt(mat[0])
-            bbox = polygon_bbox([r for p in mat for r in p])
-            kind = "multipolygon" if multi else "polygon"
-            other.append((doc_ids[row_i], span_idxs[row_i], zoom, kind, w, *bbox, len(polys)))
+            geoms.append((row_i, zoom, bool(parsed.is_multi[fr]) or len(polys) > 1, len(polys)))
+            for p in polys:
+                rings.append(len(p))
+                handles.extend(p)
 
+    other = []
     for row_i in parsed.other_rows:
         doc_id, span_idx = doc_ids[row_i], span_idxs[row_i]
         _emit_nonpolygon(other, doc_id, span_idx, *_parse_span(texts[row_i], doc_id, span_idx), tm_ids_)
@@ -241,9 +227,11 @@ def snap_documents(
     Hot path is array programs end-to-end: batch WKT parse
     (functions/wkt_batch.py) -> flat-array snap kernel + vectorized
     assembly (kernel/snap_batch.py) -> one digit-exact batch WKT emit
-    per Arrow batch (_process_batch).  The dominant single-ring polygon
-    reaches the emit as kernel arrays with no per-row Python; holed
-    polygons and multipolygons cost one Python visit per row.
+    per Arrow batch (_process_batch).  Every snapped polygon reaches
+    that emit as int64 ring handles, so a snapped value has one WKT
+    text wherever it appears.  The dominant single-ring polygon gets
+    there as kernel arrays with no per-row Python; holed polygons and
+    multipolygons cost one Python visit per row.
     """
     spark = docs.sparkSession
     config = config or SnapConfig(keep_points_and_lines=False, ignore_outside_grid=True)

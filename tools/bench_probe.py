@@ -61,13 +61,7 @@ def main() -> None:
     timings: dict[str, list[float]] = {}
     rows: dict[str, int] = {}
     for name in names:
-        if args.plans:
-            os.makedirs(args.plans, exist_ok=True)
-            df = build(name)
-            with open(os.path.join(args.plans, f"{name}.txt"), "w") as f:
-                f.write(df._sc._jvm.PythonSQLUtils.explainString(
-                    df._jdf.queryExecution(), "formatted"))
-        for _ in range(args.repeats):
+        for i in range(args.repeats):
             df = build(name)
             spark.sparkContext.setJobDescription(f"probe:{name}")
             t0 = time.perf_counter()
@@ -79,6 +73,13 @@ def main() -> None:
             timings.setdefault(name, []).append(round(time.perf_counter() - t0, 3))
             rows[name] = n
             spark.sparkContext.setJobDescription(None)
+            if args.plans and i == 0:
+                # the plan of the frame just timed, written after the run
+                # so explaining it adds nothing to the timing
+                os.makedirs(args.plans, exist_ok=True)
+                with open(os.path.join(args.plans, f"{name}.txt"), "w") as f:
+                    f.write(df._sc._jvm.PythonSQLUtils.explainString(
+                        df._jdf.queryExecution(), "formatted"))
 
     print(json.dumps({"sf": sf, "cpus": cpus, "queries": timings, "rows": rows}))
     spark.stop()
