@@ -105,19 +105,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         docs = synth_documents(spark, 200, partitions=8, extent=(bl[0], bl[1], tr[0], tr[1]))
         return snap_pipeline_df(docs, nz, [4, 8])
 
-    def _hilbert_tile_assign(spark, sf_dir):
-        # pluggable cell keyer: same tile grid, Hilbert key instead of
-        # Morton (better range locality); oracled by the unrolled
-        # bit-loop SQL (sq.hilbert_tile_assign_sql) + published-value
-        # goldens in tests/test_cellkeys.py
-        import pyspark.sql.functions as F
-
-        from texel_spark.functions.udfs import hilbert_udf
-
-        zoom = 8
-        base = sq.tile_assign(_t(spark, sf_dir, "events"), zoom=zoom)
-        return base.withColumn("cell_id", hilbert_udf(zoom)(F.col("tx"), F.col("ty")))
-
     def span_roundtrip(spark, sf_dir):
         docs = _synth_docs(spark, 400)
         rt = reassemble_spans(explode_spans(docs))
@@ -149,7 +136,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "tile_diff": lambda s, d: sq.tile_diff(
             _t(s, d, "events").where("event_id % 10 <> 0"), _t(s, d, "events")
         ),
-        "hilbert_tile_assign": _hilbert_tile_assign,
+        # oracled by the unrolled bit-loop SQL (sq.hilbert_tile_assign_sql)
+        # + published-value goldens in tests/test_cellkeys.py
+        "hilbert_tile_assign": lambda s, d: sq.hilbert_tile_assign(_t(s, d, "events")),
         # oracled JVM fan-out halves of the kernel pipelines
         "snap_tile_fanout": snap_tile_fanout,
         "snap_tile_fanout_webmercator": snap_tile_fanout_webmercator,
@@ -307,7 +296,7 @@ def oracle_sql() -> dict[str, str]:
         "topk_per_tile": sq.topk_per_tile_sql(),
         "tile_pyramid_rollup": sq.tile_pyramid_rollup_sql(),
         # the same operator as tile_pyramid_rollup (one aggregation, the
-        # form its streaming twin also runs), so it shares that oracle
+        # form an event stream also runs), so it shares that oracle
         "tile_pyramid_single_agg": sq.tile_pyramid_rollup_sql(),
         "tile_diff": sq.tile_diff_sql(),
         "dedup_exact": dedup.EXACT_DUPLICATES_SQL,

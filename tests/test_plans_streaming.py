@@ -20,9 +20,14 @@ from texel_spark.plans.checks import (
     count_exchanges,
     formatted_plan,
 )
+from texel_spark.operators import curation, dedup, text
+from texel_spark.operators import spatial_queries as sq
 
 
 SF = "/root/testdata/sf0.001"
+# events streams read ts as TIMESTAMP: the table stores TIMESTAMP_NTZ,
+# and a watermark needs TIMESTAMP
+EVENTS_SCHEMA = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
 
 
 def test_text_stats_prunes_scan(spark):
@@ -78,10 +83,11 @@ def test_tile_assign_pushes_column_pruning(spark):
 def test_streaming_snap_tiles(spark):
     from texel_spark.grid.tms import load_embedded
     from texel_spark.kernel.snap import SnapConfig
-    from texel_spark.streaming.jobs import document_rate_stream, streaming_snap_tiles
+    from texel_spark.operators.snap_tiles import snap_pipeline_df
+    from texel_spark.streaming.jobs import document_rate_stream
 
     stream = document_rate_stream(spark, rows_per_second=200)
-    tiles = streaming_snap_tiles(
+    tiles = snap_pipeline_df(
         stream, load_embedded("NetherlandsRDNewQuad"), [5, 9], SnapConfig(ignore_outside_grid=True)
     )
     assert tiles.isStreaming
@@ -149,8 +155,8 @@ def test_file_stream_checkpoint_recovery(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from texel_spark.grid.tms import load_embedded
+    from texel_spark.operators.snap_tiles import snap_pipeline_df
     from texel_spark.sources.documents import DOCUMENTS_SCHEMA, build_document
-    from texel_spark.streaming.jobs import document_file_stream, streaming_snap_tiles
 
     indir, outdir, ckpt = str(tmp_path / "in"), str(tmp_path / "out"), str(tmp_path / "ckpt")
 
@@ -161,7 +167,7 @@ def test_file_stream_checkpoint_recovery(spark, tmp_path):
     rd = load_embedded("NetherlandsRDNewQuad")
 
     def run_once():
-        stream = streaming_snap_tiles(document_file_stream(spark, indir), rd, [5, 9])
+        stream = snap_pipeline_df(spark.readStream.schema(DOCUMENTS_SCHEMA).parquet(indir), rd, [5, 9])
         q = (
             stream.writeStream.format("parquet")
             .option("path", outdir)
@@ -363,78 +369,6 @@ def test_streaming_view_click_join_drops_late_clicks(spark, tmp_path):
         q.stop()
 
 
-def test_streaming_token_counts_parity(spark, tmp_path):
-    """Batch/streaming twin parity: the stateless token_counts projection
-    produces the IDENTICAL row set when the same documents arrive as
-    micro-batched files instead of one batch scan."""
-    import shutil
-
-    from texel_spark.operators.text import token_counts
-    from texel_spark.streaming.jobs import streaming_token_counts
-
-    indir = tmp_path / "docs_in"
-    indir.mkdir()
-    shutil.copy(f"{SF}/documents.parquet", str(indir / "part-0.parquet"))
-
-    batch = spark.read.parquet(f"{SF}/documents.parquet")
-    expected = {tuple(r) for r in token_counts(batch).collect()}
-
-    stream = spark.readStream.schema(batch.schema).parquet(str(indir))
-    out = streaming_token_counts(stream)
-    assert out.isStreaming
-    q = (
-        out.writeStream.format("memory")
-        .queryName("tok_stream")
-        .outputMode("append")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = {tuple(r) for r in spark.sql("SELECT * FROM tok_stream").collect()}
-        assert got == expected
-    finally:
-        q.stop()
-
-
-def test_streaming_hilbert_tiles_parity(spark, tmp_path):
-    """Batch/streaming twin parity for the Hilbert-keyed tile counts:
-    streaming aggregation in complete mode converges to exactly the
-    batch result once all files are consumed; state is one row per live
-    tile (bounded by 4^zoom, not event count)."""
-    import shutil
-
-    import pyspark.sql.functions as F
-
-    from texel_spark.functions.udfs import hilbert_udf
-    from texel_spark.operators import spatial_queries as sq
-    from texel_spark.streaming.jobs import events_file_stream, streaming_hilbert_tiles
-
-    indir = tmp_path / "events_in"
-    indir.mkdir()
-    shutil.copy(f"{SF}/events.parquet", str(indir / "part-0.parquet"))
-
-    zoom = 8
-    batch = sq.tile_assign(spark.read.parquet(f"{SF}/events.parquet"), zoom=zoom).withColumn(
-        "cell_id", hilbert_udf(zoom)(F.col("tx"), F.col("ty"))
-    )
-    expected = {tuple(r) for r in batch.collect()}
-
-    out = streaming_hilbert_tiles(events_file_stream(spark, str(indir)), zoom=zoom)
-    assert out.isStreaming
-    q = (
-        out.writeStream.format("memory")
-        .queryName("hilbert_stream")
-        .outputMode("complete")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = {tuple(r) for r in spark.sql("SELECT * FROM hilbert_stream").collect()}
-        assert got == expected
-    finally:
-        q.stop()
-
-
 def test_per_source_cap_broadcasts_and_prunes(spark):
     """The oversized-source membership join is a BROADCAST (the heavy-
     source list is tiny by construction), and only (doc_id, source)
@@ -453,7 +387,7 @@ def test_streaming_asof_join_parity(spark, tmp_path):
     batch asof_join rows - including matches that span a batch boundary
     (the O(1) per-user state carries the latest click across files)."""
     from texel_spark.operators.temporal import asof_join
-    from texel_spark.streaming.jobs import events_file_stream, streaming_asof_join
+    from texel_spark.streaming.jobs import streaming_asof_join
 
     batch = spark.read.parquet(f"{SF}/events.parquet")
     expected = {tuple(r) for r in asof_join(batch).collect()}
@@ -480,7 +414,9 @@ def test_streaming_asof_join_parity(spark, tmp_path):
         shutil.rmtree(str(indir / f"chunk{i}"))
         time.sleep(0.05)  # distinct mtimes: file source replays in order
 
-    out = streaming_asof_join(events_file_stream(spark, str(indir), max_files_per_trigger=1))
+    out = streaming_asof_join(
+        spark.readStream.schema(EVENTS_SCHEMA).option("maxFilesPerTrigger", 1).parquet(str(indir))
+    )
     assert out.isStreaming
     q = out.writeStream.format("memory").queryName("asof_stream").outputMode("append").start()
     try:
@@ -591,48 +527,19 @@ def test_global_rank_windows_are_bounded(spark):
         assert "TakeOrderedAndProject" in plan, plan
 
 
-def test_streaming_repetition_stats_parity(spark, tmp_path):
-    """Stateless repetition filter emits the identical row set when the
-    corpus arrives as micro-batched files."""
-    import shutil
-
-    from texel_spark.operators.text import repetition_stats
-    from texel_spark.streaming.jobs import streaming_repetition_stats
-
-    indir = tmp_path / "docs_in"
-    indir.mkdir()
-    shutil.copy(f"{SF}/documents.parquet", str(indir / "part-0.parquet"))
-
-    batch = spark.read.parquet(f"{SF}/documents.parquet")
-    expected = {tuple(r) for r in repetition_stats(batch).collect()}
-
-    stream = spark.readStream.schema(batch.schema).parquet(str(indir))
-    out = streaming_repetition_stats(stream)
-    assert out.isStreaming
-    q = out.writeStream.format("memory").queryName("rep_stream").outputMode("append").start()
-    try:
-        q.processAllAvailable()
-        got = {tuple(r) for r in spark.sql("SELECT * FROM rep_stream").collect()}
-        assert got == expected
-    finally:
-        q.stop()
-
-
 def test_streaming_decontaminate_parity(spark, tmp_path):
     """Stream-static contamination check: train-band docs replayed as TWO
     micro-batch files against the static broadcast eval n-gram set match
     the batch decontaminate operator row-for-row."""
     from pyspark.sql import functions as F
 
-    from texel_spark.operators.dedup import decontaminate
     from texel_spark.streaming.jobs import eval_ngram_set, streaming_decontaminate
 
     batch = spark.read.parquet(f"{SF}/documents.parquet")
-    expected = {tuple(r) for r in decontaminate(batch, n=3).collect()}
+    expected = {tuple(r) for r in dedup.decontaminate(batch, n=3).collect()}
     assert any(r[2] > 0 for r in expected)  # fixture carries signal
 
-    hv = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10).cast("long")
-    train = batch.where(hv % 50 != 0)
+    train = batch.where(dedup._id_hash() % 50 != 0)
     indir = tmp_path / "docs_in"
     train.where(F.col("doc_id") % 2 == 0).coalesce(1).write.parquet(str(indir / "a"))
     train.where(F.col("doc_id") % 2 == 1).coalesce(1).write.parquet(str(indir / "b"))
@@ -699,159 +606,6 @@ def test_streaming_unigram_quality_parity(spark, tmp_path):
         q.stop()
 
 
-def test_streaming_quality_funnel_parity(spark, tmp_path):
-    """Batch/streaming twin parity for the retention funnel: the corpus
-    arrives as TWO micro-batch files, so the single global state row
-    must merge partial conditional sums across batches; the converged
-    complete-mode output equals the batch funnel exactly."""
-    from texel_spark.operators.curation import quality_funnel
-    from texel_spark.streaming.jobs import streaming_quality_funnel
-
-    batch = spark.read.parquet(f"{SF}/documents.parquet")
-    half_a = batch.where("doc_id % 2 = 0")
-    half_b = batch.where("doc_id % 2 = 1")
-    indir = tmp_path / "docs_in"
-    half_a.coalesce(1).write.parquet(str(indir / "a"))
-    half_b.coalesce(1).write.parquet(str(indir / "b"))
-
-    expected = {tuple(r) for r in quality_funnel(batch).collect()}
-
-    stream = spark.readStream.schema(batch.schema).option(
-        "maxFilesPerTrigger", "1"
-    ).parquet(str(indir / "*"))
-    out = streaming_quality_funnel(stream)
-    assert out.isStreaming
-    q = (
-        out.writeStream.format("memory")
-        .queryName("funnel_stream")
-        .outputMode("complete")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        got = {tuple(r) for r in spark.sql("SELECT * FROM funnel_stream").collect()}
-        assert got == expected
-    finally:
-        q.stop()
-
-
-def test_streaming_sliding_chunks_parity(spark, tmp_path):
-    """Batch/streaming twin parity for the RAG chunker: identical row
-    set when the same documents arrive as micro-batched files."""
-    import shutil
-
-    from texel_spark.operators.text import sliding_chunks
-    from texel_spark.streaming.jobs import streaming_sliding_chunks
-
-    indir = tmp_path / "docs_in"
-    indir.mkdir()
-    shutil.copy(f"{SF}/documents.parquet", str(indir / "part-0.parquet"))
-
-    batch = spark.read.parquet(f"{SF}/documents.parquet")
-    expected = {tuple(r) for r in sliding_chunks(batch).collect()}
-
-    stream = spark.readStream.schema(batch.schema).parquet(str(indir))
-    out = streaming_sliding_chunks(stream)
-    assert out.isStreaming
-    q = out.writeStream.format("memory").queryName("chunk_stream").outputMode("append").start()
-    try:
-        q.processAllAvailable()
-        got = {tuple(r) for r in spark.sql("SELECT * FROM chunk_stream").collect()}
-        assert got == expected
-    finally:
-        q.stop()
-
-
-def test_streaming_snapshot_dedup_parity(spark, tmp_path):
-    """Batch/streaming twin parity for cross-snapshot dedup: the new
-    crawl arrives as TWO micro-batch files and is anti-joined per batch
-    against the static previous snapshot; the union of appended batches
-    equals the batch operator exactly."""
-    from texel_spark.operators.dedup import snapshot_dedup
-    from texel_spark.streaming.jobs import streaming_snapshot_dedup
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    expected = {tuple(r) for r in snapshot_dedup(docs, old_mod=3).collect()}
-    assert expected
-
-    old = docs.where("doc_id % 3 = 0")
-    new = docs.where("doc_id % 3 <> 0")
-    indir = tmp_path / "new_in"
-    new.where("doc_id % 2 = 0").coalesce(1).write.parquet(str(indir / "a"))
-    new.where("doc_id % 2 = 1").coalesce(1).write.parquet(str(indir / "b"))
-
-    stream = spark.readStream.schema(docs.schema).option(
-        "maxFilesPerTrigger", "1"
-    ).parquet(str(indir / "*"))
-    out = streaming_snapshot_dedup(stream, old)
-    assert out.isStreaming
-    q = out.writeStream.format("memory").queryName("snapdedup_stream").outputMode("append").start()
-    try:
-        q.processAllAvailable()
-        got = {tuple(r) for r in spark.sql("SELECT * FROM snapdedup_stream").collect()}
-        assert got == expected
-    finally:
-        q.stop()
-
-
-def test_streaming_validate_documents_parity(spark, tmp_path):
-    """The validation gate converges to the batch report with the
-    corpus split across two micro-batch files (single state row must
-    merge partial conditional sums)."""
-    from texel_spark.operators.curation import validate_documents
-    from texel_spark.streaming.jobs import streaming_validate_documents
-
-    batch = spark.read.parquet(f"{SF}/documents.parquet")
-    # the streaming gate covers the six O(1)-state checks; the global
-    # DISTINCT duplicate check is batch-only by design
-    expected = {
-        tuple(r)
-        for r in validate_documents(batch, include_duplicates=False).collect()
-    }
-
-    indir = tmp_path / "docs_in"
-    batch.where("doc_id % 2 = 0").coalesce(1).write.parquet(str(indir / "a"))
-    batch.where("doc_id % 2 = 1").coalesce(1).write.parquet(str(indir / "b"))
-    stream = spark.readStream.schema(batch.schema).option(
-        "maxFilesPerTrigger", "1"
-    ).parquet(str(indir / "*"))
-    out = streaming_validate_documents(stream)
-    assert out.isStreaming
-    q = out.writeStream.format("memory").queryName("vdoc_stream").outputMode("complete").start()
-    try:
-        q.processAllAvailable()
-        got = {tuple(r) for r in spark.sql("SELECT * FROM vdoc_stream").collect()}
-        assert got == expected
-    finally:
-        q.stop()
-
-
-def test_streaming_tile_pyramid_parity(spark, tmp_path):
-    """Incremental pyramid counts converge to the batch rollup at every
-    zoom level, with events split across two micro-batch files."""
-    from texel_spark.operators import spatial_queries as sq
-    from texel_spark.streaming.jobs import streaming_tile_pyramid
-
-    batch = spark.read.parquet(f"{SF}/events.parquet")
-    expected = {tuple(r) for r in sq.tile_pyramid_rollup(batch, max_zoom=6).collect()}
-
-    indir = tmp_path / "ev_in"
-    batch.where("event_id % 2 = 0").coalesce(1).write.parquet(str(indir / "a"))
-    batch.where("event_id % 2 = 1").coalesce(1).write.parquet(str(indir / "b"))
-    stream = spark.readStream.schema(batch.schema).option(
-        "maxFilesPerTrigger", "1"
-    ).parquet(str(indir / "*"))
-    out = streaming_tile_pyramid(stream, max_zoom=6)
-    assert out.isStreaming
-    q = out.writeStream.format("memory").queryName("pyr_stream").outputMode("complete").start()
-    try:
-        q.processAllAvailable()
-        got = {tuple(r) for r in spark.sql("SELECT * FROM pyr_stream").collect()}
-        assert got == expected
-    finally:
-        q.stop()
-
-
 def test_streaming_hourly_rollup_parity(spark, tmp_path):
     """The watermarked window rollup, in complete mode over events split
     across three files, converges to the batch hourly_rollup: same
@@ -859,7 +613,7 @@ def test_streaming_hourly_rollup_parity(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from texel_spark.operators.events import hourly_rollup
-    from texel_spark.streaming.jobs import events_file_stream, streaming_hourly_rollup
+    from texel_spark.streaming.jobs import streaming_hourly_rollup
 
     batch = spark.read.parquet(f"{SF}/events.parquet")
     expected = {tuple(r) for r in hourly_rollup(batch).collect()}
@@ -867,7 +621,9 @@ def test_streaming_hourly_rollup_parity(spark, tmp_path):
     indir = tmp_path / "ev_in"
     for i in range(3):
         batch.where(f"event_id % 3 = {i}").coalesce(1).write.parquet(str(indir / f"p{i}"))
-    out = streaming_hourly_rollup(events_file_stream(spark, str(indir / "*"), max_files_per_trigger=1))
+    out = streaming_hourly_rollup(
+        spark.readStream.schema(EVENTS_SCHEMA).option("maxFilesPerTrigger", 1).parquet(str(indir / "*"))
+    )
     assert out.isStreaming
     q = out.writeStream.format("memory").queryName("hourly_stream").outputMode("complete").start()
     try:
@@ -876,5 +632,65 @@ def test_streaming_hourly_rollup_parity(spark, tmp_path):
             F.unix_timestamp("window_start").alias("window_epoch"), "event_type", "n_events", "total_cents"
         )
         assert {tuple(r) for r in got.collect()} == expected
+    finally:
+        q.stop()
+
+
+def _unseen_in_old_snapshot(new):
+    old = new.sparkSession.read.parquet(f"{SF}/documents.parquet").where("doc_id % 3 = 0")
+    return dedup.unseen_content(new, old)
+
+
+# batch operators that run on a stream frame unchanged:
+# name -> (table, rows of it that land as the stream, output mode, operator)
+STREAM_CASES = {
+    "token_counts": ("documents", None, "append", text.token_counts),
+    "repetition_stats": ("documents", None, "append", text.repetition_stats),
+    "sliding_chunks": ("documents", None, "append", text.sliding_chunks),
+    "snapshot_dedup": ("documents", "doc_id % 3 <> 0", "append", _unseen_in_old_snapshot),
+    "quality_funnel": ("documents", None, "complete", curation.quality_funnel),
+    "validate_documents": ("documents", None, "complete", curation.validate_documents),
+    "hilbert_tile_assign": ("events", None, "complete", sq.hilbert_tile_assign),
+    "tile_pyramid_rollup": ("events", None, "complete", lambda ev: sq.tile_pyramid_rollup(ev, max_zoom=6)),
+}
+
+
+@pytest.mark.parametrize("name", list(STREAM_CASES))
+def test_batch_operator_runs_on_stream(spark, tmp_path, name):
+    """The batch operator, run on its table landed as two files and read
+    one file per micro-batch, emits exactly the rows it emits on the
+    batch table: stateless operators per micro-batch in append mode,
+    single-aggregation ones by merging partial state across batches in
+    complete mode.  On a stream validate_documents has no
+    duplicate_doc_id row (a global DISTINCT has no bounded state).  The
+    stream's columns are those of the query's DuckDB oracle, whose rows
+    tests/test_spark_ops.py checks against the batch operator."""
+    duckdb = pytest.importorskip("duckdb")
+    import __spark_entry__ as e
+
+    table, rows, mode, op = STREAM_CASES[name]
+    batch = spark.read.parquet(f"{SF}/{table}.parquet")
+    if rows:
+        batch = batch.where(rows)
+    expected = {tuple(r) for r in op(batch).collect()}
+    if name == "validate_documents":
+        expected = {r for r in expected if r[0] != "duplicate_doc_id"}
+    assert expected
+
+    key = "doc_id" if table == "documents" else "event_id"
+    indir = tmp_path / "in"
+    for i in range(2):
+        batch.where(f"{key} % 2 = {i}").coalesce(1).write.parquet(str(indir / f"p{i}"))
+    stream = spark.readStream.schema(batch.schema).option("maxFilesPerTrigger", 1).parquet(str(indir / "*"))
+    out = op(stream)
+    assert out.isStreaming
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW {table} AS SELECT * FROM read_parquet('{SF}/{table}.parquet')")
+    assert out.columns == con.sql(e.oracle_sql()[name]).columns
+    q = out.writeStream.format("memory").queryName(f"stream_{name}").outputMode(mode).start()
+    try:
+        q.processAllAvailable()
+        got = {tuple(r) for r in spark.sql(f"SELECT * FROM stream_{name}").collect()}
+        assert got == expected
     finally:
         q.stop()

@@ -1642,6 +1642,37 @@ def test_tile_fanout_matches_duckdb_oracles(spark, tmp_path):
         assert len(got) > 0
 
 
+@pytest.mark.parametrize(
+    "name",
+    [
+        "token_counts",
+        "repetition_stats",
+        "sliding_chunks",
+        "quality_funnel",
+        "validate_documents",
+        "tile_pyramid_rollup",
+        "hilbert_tile_assign",
+        "snapshot_dedup",
+        "decontaminate",
+    ],
+)
+def test_stream_covered_operators_match_duckdb_oracles(spark, name):
+    """Every batch operator that tests/test_plans_streaming.py also runs
+    on a stream returns exactly the rows of its DuckDB oracle at sf0.01,
+    so stream == batch == oracle holds in each tier-1 run."""
+    duckdb = pytest.importorskip("duckdb")
+    import __spark_entry__ as e
+
+    sf = "/root/testdata/sf0.01"
+    con = duckdb.connect()
+    for table in ("documents", "events"):
+        con.sql(f"CREATE VIEW {table} AS SELECT * FROM read_parquet('{sf}/{table}.parquet')")
+    got = sorted(map(tuple, e.queries()[name](spark, sf).collect()))
+    want = sorted(con.sql(e.oracle_sql()[name]).fetchall())
+    assert got == want, f"{name} differs from its DuckDB oracle"
+    assert len(got) > 0
+
+
 def test_python_workers_run_the_invalidate_caches_shim(spark):
     """get_spark forks Python workers from texel_spark.worker_daemon, so
     pyspark's per-task importlib.invalidate_caches() is its shim."""

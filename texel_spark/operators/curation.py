@@ -12,15 +12,10 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .dedup import _id_hash
 from .spread import spread_input
 
 _DEFAULT_WEIGHTS: list[tuple[str, int]] = [("train", 90), ("val", 5), ("test", 5)]
-
-
-def _id_hash(col: str = "doc_id"):
-    """Stable non-negative 32-bit hash of the id's string form (first 8
-    md5 hex chars) - identical in Spark and DuckDB."""
-    return F.conv(F.substring(F.md5(F.col(col).cast("string")), 1, 8), 16, 10).cast("long")
 
 
 def _split_exprs(weights: list[tuple[str, int]]):
@@ -543,7 +538,7 @@ def run_curation_pipeline(
     return {"shards_done": sorted(manifest["shards"]), "resumed_noop": False}
 
 
-def validate_documents(documents: DataFrame, include_duplicates: bool = True) -> DataFrame:
+def validate_documents(documents: DataFrame) -> DataFrame:
     """Ingest validation gate: one row per check with its violation
     count - the report a 100 TB ingest runs BEFORE any curation stage,
     so a malformed crawl drop fails loudly instead of silently skewing
@@ -556,11 +551,11 @@ def validate_documents(documents: DataFrame, include_duplicates: bool = True) ->
     check is the only distinct and rides the same pass as
     count(distinct)).  Integer outputs; DuckDB oracle is bit-exact.
 
-    ``include_duplicates=False`` drops the duplicate_doc_id row: the
-    duplicate check is a global DISTINCT (state linear in ids), which
-    streaming aggregation rightly refuses - the streaming twin runs
-    the six O(1)-state per-row checks and leaves duplicate detection
-    to the batch gate (or the dedup operators themselves).
+    On a stream (``documents.isStreaming``) the report has no
+    duplicate_doc_id row: that check is a global DISTINCT (state linear
+    in ids), which streaming aggregation refuses, so a stream runs the
+    six per-row checks with O(1) state and leaves duplicate detection to
+    the batch gate (or the dedup operators themselves).
     """
     known_langs = ("en", "de", "fr", "es", "zh")
     # NULL handling is explicit everywhere: three-valued logic would
@@ -568,33 +563,31 @@ def validate_documents(documents: DataFrame, include_duplicates: bool = True) ->
     # sail through the gate uncounted, and NULL ids would inflate the
     # duplicate count (count(*) includes them, countDistinct doesn't)
     checks = [
-        F.count("*").alias("n_rows"),
-        F.sum(F.col("doc_id").isNull().cast("long")).alias("null_id"),
-        F.sum(F.col("text").isNull().cast("long")).alias("null_text"),
-        F.sum(F.coalesce((F.col("text") == "").cast("long"), F.lit(0))).alias("empty_text"),
-        F.sum(
-            F.coalesce((~F.col("lang").isin(*known_langs)).cast("long"), F.lit(1))
-        ).alias("bad_lang"),
-        F.sum(
-            F.when(F.col("text").isNull(), 0)  # already counted as null_text
-            .when(F.col("n_chars").isNull(), 1)
-            .otherwise((F.length("text") != F.col("n_chars")).cast("long"))
-        ).alias("bad_n_chars"),
+        ("rows", "n_rows", F.count("*")),
+        ("null_doc_id", "null_id", F.sum(F.col("doc_id").isNull().cast("long"))),
+        ("duplicate_doc_id", "dup_id", F.count("doc_id") - F.countDistinct("doc_id")),
+        ("null_text", "null_text", F.sum(F.col("text").isNull().cast("long"))),
+        ("empty_text", "empty_text", F.sum(F.coalesce((F.col("text") == "").cast("long"), F.lit(0)))),
+        (
+            "unknown_lang",
+            "bad_lang",
+            F.sum(F.coalesce((~F.col("lang").isin(*known_langs)).cast("long"), F.lit(1))),
+        ),
+        (
+            "n_chars_mismatch",
+            "bad_n_chars",
+            F.sum(
+                F.when(F.col("text").isNull(), 0)  # already counted as null_text
+                .when(F.col("n_chars").isNull(), 1)
+                .otherwise((F.length("text") != F.col("n_chars")).cast("long"))
+            ),
+        ),
     ]
-    if include_duplicates:
-        checks.insert(2, (F.count("doc_id") - F.countDistinct("doc_id")).alias("dup_id"))
-        agg = documents.agg(*checks)
-        return agg.selectExpr(
-            "stack(7, 'rows', n_rows, 'null_doc_id', null_id, 'duplicate_doc_id', dup_id,"
-            " 'null_text', null_text, 'empty_text', empty_text, 'unknown_lang', bad_lang,"
-            " 'n_chars_mismatch', bad_n_chars) AS (check, n)"
-        )
-    agg = documents.agg(*checks)
-    return agg.selectExpr(
-        "stack(6, 'rows', n_rows, 'null_doc_id', null_id,"
-        " 'null_text', null_text, 'empty_text', empty_text, 'unknown_lang', bad_lang,"
-        " 'n_chars_mismatch', bad_n_chars) AS (check, n)"
-    )
+    if documents.isStreaming:
+        checks = [c for c in checks if c[0] != "duplicate_doc_id"]
+    agg = documents.agg(*(expr.alias(col) for _, col, expr in checks))
+    pairs = ", ".join(f"'{name}', {col}" for name, col, _ in checks)
+    return agg.selectExpr(f"stack({len(checks)}, {pairs}) AS (check, n)")
 
 
 def validate_documents_sql() -> str:

@@ -16,6 +16,13 @@ from pyspark.sql import DataFrame, functions as F
 from .spread import spread_input
 
 
+def _id_hash(col: str = "doc_id"):
+    """Stable non-negative 32-bit hash of the id's string form (first 8
+    md5 hex chars) - identical in Spark and DuckDB.  The id bands of the
+    curation splits and of decontaminate's eval set key on it."""
+    return F.conv(F.substring(F.md5(F.col(col).cast("string")), 1, 8), 16, 10).cast("long")
+
+
 def exact_duplicates(documents: DataFrame) -> DataFrame:
     """Exact dedup survivor table: one row per content hash with the kept
     doc and the multiplicity (n_dups > 1 = the duplicate groups)."""
@@ -529,18 +536,27 @@ def decontaminate(documents: DataFrame, n: int = 5, eval_mod: int = 50) -> DataF
     >= n tokens; ``contam_x1000`` is the integer-scaled fraction
     pipelines threshold on.
     """
-    hv = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10).cast("long")
     sh = _shingles(spread_input(documents.select("doc_id", "text")), n).withColumn(
-        "__eval", (hv % eval_mod) == 0
+        "__eval", (_id_hash() % eval_mod) == 0
     )
     eval_ng = sh.where(F.col("__eval")).select("shingle").distinct()
     train = sh.where(~F.col("__eval")).select("doc_id", "shingle")
-    # ONE aggregate over ONE pass of the train shingles: the broadcast
-    # LEFT join marks eval hits in-line and count("__hit") (nulls
-    # skipped) replaces the former second scan + sizes-x-matched join -
-    # the train corpus is shingled once instead of twice (guide 2.4)
-    flagged = train.join(
-        F.broadcast(eval_ng.withColumn("__hit", F.lit(1))), "shingle", "left"
+    return contamination(train, eval_ng)
+
+
+def contamination(shingles: DataFrame, eval_ngrams: DataFrame) -> DataFrame:
+    """Per-doc overlap of ``(doc_id, shingle)`` rows with a distinct
+    ``shingle`` set: the core of decontaminate, and of
+    streaming.jobs.streaming_decontaminate, where the shingles come from
+    a document stream and the eval set is a static side input.
+
+    ONE aggregate over ONE pass of the shingles: the broadcast LEFT join
+    marks eval hits in-line and count("__hit") (nulls skipped) counts
+    them beside the total - one stateful operator, so a stream can run
+    it in update mode (joining two streaming aggregates is unsupported).
+    """
+    flagged = shingles.join(
+        F.broadcast(eval_ngrams.withColumn("__hit", F.lit(1))), "shingle", "left"
     )
     n_shared = F.count("__hit")
     return flagged.groupBy("doc_id").agg(
@@ -660,11 +676,24 @@ def snapshot_dedup(documents: DataFrame, old_mod: int = 3) -> DataFrame:
     sides shuffle only (hash) / (hash, doc_id), text never crosses the
     wire, and hash keys are uniform so no skew.
     """
+    return unseen_content(
+        documents.where(F.col("doc_id") % old_mod != 0),
+        documents.where(F.col("doc_id") % old_mod == 0),
+    )
+
+
+def unseen_content(new_docs: DataFrame, old_docs: DataFrame) -> DataFrame:
+    """``(doc_id, text_hash)`` of the new documents whose content hash is
+    absent from the old ones: the LEFT ANTI join on md5(text) that
+    snapshot_dedup runs on its two halves.  With a document stream as
+    ``new_docs`` and a static snapshot as ``old_docs`` it is a
+    stream-static join that emits each micro-batch's unseen content in
+    append mode; the old side carries hashes only, so text never enters
+    the join."""
     h = F.md5("text").alias("h")
-    old = documents.where(F.col("doc_id") % old_mod == 0).select(h)
-    new = documents.where(F.col("doc_id") % old_mod != 0).select("doc_id", h)
     return (
-        new.join(old, "h", "left_anti")
+        new_docs.select("doc_id", h)
+        .join(old_docs.select(h), "h", "left_anti")
         .select("doc_id", F.col("h").alias("text_hash"))
     )
 

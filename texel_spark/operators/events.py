@@ -1,8 +1,9 @@
 """Event-stream operators (batch forms): tumbling-window aggregation and
 gap-based sessionization.
 
-The same logic runs under Structured Streaming (see
-texel_spark.streaming.jobs) with a watermark; these batch forms are the
+A stream needs other plans for both: a watermarked window
+(streaming.jobs.streaming_hourly_rollup) and per-user state
+(streaming.jobs.streaming_sessionize); these batch forms are the
 oracle-checkable versions.  Monetary-style doubles are aggregated as
 exact integer cents so Spark's partial-aggregation order cannot change
 the result vs the oracle.

@@ -169,6 +169,20 @@ def hilbert_sql_expr_ctes(zoom: int, base_cte: str, carry_cols: str) -> str:
     return ",\n".join(ctes)
 
 
+def hilbert_tile_assign(events: DataFrame, zoom: int = 8) -> DataFrame:
+    """Pluggable cell keyer: tile_assign's per-tile counts keyed by the
+    Hilbert d-index instead of Morton (better range locality).  The key
+    is an Arrow-batched UDF on the aggregated rows, so on an event
+    stream the groupBy is the one stateful operator (complete or update
+    mode, one state row per live tile, bounded by 4^zoom)."""
+    # imported here: the UDF module imports pandas, which no other
+    # operator in this module needs
+    from ..functions.udfs import hilbert_udf
+
+    base = tile_assign(events, zoom=zoom)
+    return base.withColumn("cell_id", hilbert_udf(zoom)(F.col("tx"), F.col("ty")))
+
+
 def hilbert_tile_assign_sql(zoom: int = 8) -> str:
     """Oracle for the Hilbert-keyed tile assignment: tile_assign_sql's
     math, then the unrolled Hilbert chain on (tx, ty)."""
@@ -671,8 +685,8 @@ def tile_pyramid_rollup(events: DataFrame, max_zoom: int = 8, min_zoom: int = 0)
     (map-side partial counts keep the shuffle tile-sized).  Arithmetic
     shiftright = floor division by 2^k, correct for negative
     (outside-grid-west/north) tile coords too.  Having exactly one
-    stateful operator is also what lets the streaming twin
-    (streaming.jobs.streaming_tile_pyramid) run this same function.
+    stateful operator is also what lets this same function run on an
+    event stream in complete or update mode.
 
     The DuckDB oracle is deliberately STRONGER than a rollup mirror: it
     assigns points directly at every zoom from the raw coordinates,

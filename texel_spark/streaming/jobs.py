@@ -1,11 +1,24 @@
-"""Structured Streaming forms of the engine's operators.
+"""Structured Streaming jobs: the operators a stream needs beyond the
+batch ones.
 
 The reference's "streaming" is Go channels (bounded pipeline,
-processing/processing.go:136-154) - no event time, no late data.  These
-jobs are the engine's extension to real streams: a document stream is
-snapped incrementally with exactly-once sinks, and event streams get
-watermarked windowed aggregation.  The batch and streaming paths share
-the same operators (the kernel stage is a narrow map either way).
+processing/processing.go:136-154) - no event time, no late data.  In
+Spark a streaming query runs the same DataFrame plan as a batch one, so
+every batch operator with at most one stateful operator runs on a
+stream frame unchanged: ``snap_pipeline_df`` (append mode, exactly-once
+file sinks), ``text.token_counts``, ``text.repetition_stats`` and
+``text.sliding_chunks`` (append), ``curation.quality_funnel``,
+``curation.validate_documents`` (which drops its duplicate-id check on
+a stream), ``spatial_queries.hilbert_tile_assign`` and
+``spatial_queries.tile_pyramid_rollup`` (complete or update), and
+``dedup.unseen_content`` against a static old snapshot (append).
+tests/test_plans_streaming.py::test_batch_operator_runs_on_stream pins
+each against the same operator on the batch table.
+
+This module holds only what differs on a stream: rate sources,
+watermarked windows, per-key state (applyInPandasWithState), a
+stream-stream interval join, and stream-static jobs whose side input
+the batch operator derives from the corpus itself.
 """
 
 from __future__ import annotations
@@ -13,9 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..grid.tms import TileMatrixSet
-from ..kernel.snap import SnapConfig
-from ..operators.snap_tiles import snap_pipeline_df
+from ..operators.dedup import _id_hash, _shingles, contamination
 
 
 def document_rate_stream(spark: SparkSession, rows_per_second: int = 100) -> DataFrame:
@@ -35,31 +46,6 @@ def document_rate_stream(spark: SparkSession, rows_per_second: int = 100) -> Dat
     return rate.select("value").mapInPandas(gen, schema=DOCUMENTS_SCHEMA)
 
 
-def document_file_stream(spark: SparkSession, path: str, max_files_per_trigger: int | None = None) -> DataFrame:
-    """Micro-batch ingest of the interleaved-document table from a
-    parquet directory (the production shape: landed files become
-    micro-batches; the checkpoint tracks consumed files for exactly-once
-    across restarts)."""
-    from ..sources.documents import DOCUMENTS_SCHEMA
-
-    reader = spark.readStream.schema(DOCUMENTS_SCHEMA)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(path)
-
-
-def streaming_snap_tiles(
-    docs_stream: DataFrame, tms: TileMatrixSet, tm_ids: list[int], config: SnapConfig | None = None
-) -> DataFrame:
-    """Incremental snap->tile assignment over a document stream.
-
-    The kernel stage is stateless per document, so the batch pipeline
-    (operators.snap_tiles.snap_pipeline_df) runs unchanged under
-    Structured Streaming; the result is append-mode tile rows.
-    """
-    return snap_pipeline_df(docs_stream, tms, tm_ids, config)
-
-
 def streaming_hourly_rollup(events_stream: DataFrame, watermark: str = "2 hours") -> DataFrame:
     """Watermarked tumbling-window rollup (late data beyond the watermark
     dropped); the batch twin is operators.events.hourly_rollup."""
@@ -72,50 +58,6 @@ def streaming_hourly_rollup(events_stream: DataFrame, watermark: str = "2 hours"
         )
         .select(F.col("w.start").alias("window_start"), "event_type", "n_events", "total_cents")
     )
-
-
-def events_file_stream(spark: SparkSession, path: str, max_files_per_trigger: int | None = None) -> DataFrame:
-    """Micro-batch ingest of the events table from a parquet directory
-    (same file-source semantics as :func:`document_file_stream`)."""
-    schema = (
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    )
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(path)
-
-
-def streaming_token_counts(docs_stream: DataFrame) -> DataFrame:
-    """Streaming twin of operators.text.token_counts.
-
-    The batch operator is a stateless whole-stage-codegen projection
-    (no aggregation, no state), so it applies to a micro-batched stream
-    UNCHANGED - each landed file of documents emits its token counts in
-    append mode.  Parity with the batch path is asserted set-exactly in
-    tests/test_plans_streaming.py.
-    """
-    from ..operators.text import token_counts
-
-    return token_counts(docs_stream)
-
-
-def streaming_hilbert_tiles(events_stream: DataFrame, zoom: int = 8) -> DataFrame:
-    """Streaming twin of the `hilbert_tile_assign` query: incremental
-    point->tile counts keyed by Hilbert d-index.
-
-    tile_assign's groupBy becomes a streaming aggregation (complete /
-    update mode); the Hilbert key is a stateless post-agg column, so the
-    Arrow-batched kernel runs unchanged per micro-batch.  At scale the
-    update-mode stream maintains one state row per live tile - bounded
-    by the tile universe (4^zoom), not the event count.
-    """
-    from ..functions.udfs import hilbert_udf
-    from ..operators import spatial_queries as sq
-
-    base = sq.tile_assign(events_stream, zoom=zoom)
-    return base.withColumn("cell_id", hilbert_udf(zoom)(F.col("tx"), F.col("ty")))
 
 
 def rate_events_stream(spark: SparkSession, rows_per_second: int = 200, n_users: int = 20) -> DataFrame:
@@ -171,19 +113,6 @@ def streaming_sessionize(events_stream: DataFrame, gap_seconds: int = 30) -> Dat
     )
 
 
-def streaming_repetition_stats(docs_stream: DataFrame) -> DataFrame:
-    """Streaming twin of operators.text.repetition_stats.
-
-    The batch operator is per-row JVM array math with zero shuffle, so
-    it applies to a micro-batched document stream UNCHANGED in append
-    mode - the quality-filter front of an ingest pipeline.  Parity with
-    the batch path is set-exact (tests/test_plans_streaming.py).
-    """
-    from ..operators.text import repetition_stats
-
-    return repetition_stats(docs_stream)
-
-
 def streaming_decontaminate(
     docs_stream: DataFrame, eval_ngrams: DataFrame, n: int = 3
 ) -> DataFrame:
@@ -194,37 +123,17 @@ def streaming_decontaminate(
     Differs from the batch `dedup.decontaminate` only in where the eval
     set comes from: batch derives it from a hash band of the same
     corpus; here it is a parameter (build it once with
-    `eval_ngram_set`).  ONE streaming aggregation (joining two
-    streaming aggregates is unsupported): each exploded n-gram is
-    tagged by a broadcast left join against the eval set, then a single
-    per-doc groupBy counts total and tagged together.  Run in update
-    mode; each doc arrives in exactly one file, so every doc's row
-    finalizes in its own micro-batch.
+    `eval_ngram_set`).  Both run `dedup.contamination`, one per-doc
+    aggregate.  Run in update mode; each doc arrives in exactly one
+    file, so every doc's row finalizes in its own micro-batch.
     """
-    from pyspark.sql import functions as F
-
-    from ..operators.dedup import _shingles
-
-    tagged = _shingles(docs_stream, n).join(
-        F.broadcast(eval_ngrams.withColumn("__hit", F.lit(1))), "shingle", "left"
-    )
-    n_shared = F.sum(F.coalesce(F.col("__hit"), F.lit(0)))
-    return tagged.groupBy("doc_id").agg(
-        F.count("*").alias("n_shingles"),
-        n_shared.cast("long").alias("n_shared"),
-        F.floor(F.lit(1000) * n_shared / F.count("*")).cast("long").alias("contam_x1000"),
-    )
+    return contamination(_shingles(docs_stream, n), eval_ngrams)
 
 
 def eval_ngram_set(documents: DataFrame, n: int = 3, eval_mod: int = 50) -> DataFrame:
     """The static eval-band n-gram set used by streaming_decontaminate:
     identical band rule to the batch operator (id-hash % eval_mod == 0)."""
-    from pyspark.sql import functions as F
-
-    from ..operators.dedup import _shingles
-
-    hv = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10).cast("long")
-    return _shingles(documents, n).where(hv % eval_mod == 0).select("shingle").distinct()
+    return _shingles(documents, n).where(_id_hash() % eval_mod == 0).select("shingle").distinct()
 
 
 def streaming_asof_join(
@@ -335,8 +244,6 @@ def streaming_unigram_quality(docs_stream: DataFrame, unigram_counts: DataFrame)
     never-seen tokens scores 0 ppm, same as batch gives cnt-1 gibberish
     ~0.
     """
-    from pyspark.sql import functions as F
-
     toks = F.split(F.col("text"), " ")
     dt = docs_stream.select("doc_id", F.explode(toks).alias("term"))
     tagged = dt.join(F.broadcast(unigram_counts), "term", "left")
@@ -361,92 +268,7 @@ def unigram_count_table(documents: DataFrame) -> DataFrame:
     scores against: identical counts to the batch operator's corpus pass,
     with the corpus total denormalized onto every row (a scalar join now
     so the stream side never needs one)."""
-    from pyspark.sql import functions as F
-
     dt = documents.select(F.explode(F.split(F.col("text"), " ")).alias("term"))
     cnt = dt.groupBy("term").agg(F.count("*").alias("cnt"))
     tot = dt.agg(F.count("*").alias("total_tokens"))
     return cnt.join(F.broadcast(tot))
-
-
-def streaming_quality_funnel(docs_stream: DataFrame) -> DataFrame:
-    """Streaming twin of operators.curation.quality_funnel: the running
-    retention funnel over a document stream.
-
-    The batch operator is one global aggregate of five cumulative
-    conditional sums plus a stateless stack() to stage rows, so it runs
-    on a micro-batched stream UNCHANGED in complete mode: Spark keeps a
-    single 6-value state row (O(1) state regardless of stream length)
-    and the funnel re-emits after every landed file - the live
-    monitoring view of a filter chain during a multi-day 100 TB ingest.
-    Parity with the batch operator is asserted in
-    tests/test_plans_streaming.py with the corpus split across
-    micro-batch files, so partial sums MUST merge across batches.
-    """
-    from ..operators.curation import quality_funnel
-
-    return quality_funnel(docs_stream)
-
-
-def streaming_sliding_chunks(docs_stream: DataFrame) -> DataFrame:
-    """Streaming twin of operators.text.sliding_chunks: stateless
-    per-row chunk fan-out (transform + slice + posexplode, no state, no
-    shuffle), so it applies to a micro-batched document stream UNCHANGED
-    in append mode - the shape of a live RAG-ingest chunker.  Parity
-    with the batch operator is asserted set-exactly in
-    tests/test_plans_streaming.py.
-    """
-    from ..operators.text import sliding_chunks
-
-    return sliding_chunks(docs_stream)
-
-
-def streaming_snapshot_dedup(docs_stream: DataFrame, old_docs: DataFrame) -> DataFrame:
-    """Streaming twin of operators.dedup.snapshot_dedup: a LIVE crawl
-    deduplicates against the previous snapshot as documents land.
-
-    Stream-static LEFT ANTI join on the content hash (append mode, no
-    state beyond the static side): each micro-batch of new documents is
-    probed against the static old-snapshot hash table and only unseen
-    content is emitted - the continuously-ingesting form of the batch
-    anti-join, with the same output schema.  The static side carries
-    hashes only (text never enters the join), so at 10^12 docs the probe
-    side is a hash-keyed lookup, not a corpus scan per batch.  Parity
-    with the batch operator is asserted in tests/test_plans_streaming.py
-    with the new crawl split across micro-batch files.
-    """
-    old = old_docs.select(F.md5("text").alias("h"))
-    new = docs_stream.select("doc_id", F.md5("text").alias("h"))
-    return new.join(old, "h", "left_anti").select("doc_id", F.col("h").alias("text_hash"))
-
-
-def streaming_validate_documents(docs_stream: DataFrame) -> DataFrame:
-    """Streaming twin of operators.curation.validate_documents: the
-    ingest validation gate as a LIVE health monitor - one global
-    conditional-sum aggregate (complete mode, a single 6-value state
-    row) re-emitting the violation report after every landed file, so a
-    malformed crawl drop is visible the micro-batch it arrives instead
-    of after a 100 TB batch pass.  The duplicate_doc_id check is
-    batch-only by design: it is a global DISTINCT (state linear in
-    ids), which streaming aggregation rightly refuses - the six
-    remaining checks are per-row conditional sums with O(1) state.
-    Parity asserted with the corpus split across micro-batch files
-    (partial sums must merge).
-    """
-    from ..operators.curation import validate_documents
-
-    return validate_documents(docs_stream, include_duplicates=False)
-
-
-def streaming_tile_pyramid(events_stream: DataFrame, max_zoom: int = 8, min_zoom: int = 0) -> DataFrame:
-    """Streaming twin of operators.spatial_queries.tile_pyramid_rollup,
-    which it calls unchanged: incremental overview-tile counts at EVERY
-    zoom level from one update-mode aggregation (state bounded by the
-    tile universe, sum of 4^z over the pyramid, not by event count) -
-    the live form of overview building, where each micro-batch of points
-    bumps its ancestors at all levels in the same shuffle.  The batch
-    operator has exactly one aggregation, so streaming accepts it as is.
-    """
-    from ..operators import spatial_queries as sq
-
-    return sq.tile_pyramid_rollup(events_stream, max_zoom=max_zoom, min_zoom=min_zoom)

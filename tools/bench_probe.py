@@ -74,12 +74,14 @@ def main() -> None:
             rows[name] = n
             spark.sparkContext.setJobDescription(None)
             if args.plans and i == 0:
-                # the plan of the frame just timed, written after the run
-                # so explaining it adds nothing to the timing
+                # count()/noop run a new QueryExecution, so the frame's own
+                # one is executed here, untimed: AQE then finalizes it and
+                # the file shows the plan that ran (isFinalPlan=true)
+                qe = df._jdf.queryExecution()
+                qe.toRdd().count()
                 os.makedirs(args.plans, exist_ok=True)
                 with open(os.path.join(args.plans, f"{name}.txt"), "w") as f:
-                    f.write(df._sc._jvm.PythonSQLUtils.explainString(
-                        df._jdf.queryExecution(), "formatted"))
+                    f.write(df._sc._jvm.PythonSQLUtils.explainString(qe, "formatted"))
 
     print(json.dumps({"sf": sf, "cpus": cpus, "queries": timings, "rows": rows}))
     spark.stop()
