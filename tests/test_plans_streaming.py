@@ -25,8 +25,8 @@ from texel_spark.operators import spatial_queries as sq
 
 
 SF = "/root/testdata/sf0.001"
-# events streams read ts as TIMESTAMP: the table stores TIMESTAMP_NTZ,
-# and a watermark needs TIMESTAMP
+# the events table read with ts as TIMESTAMP (the table stores
+# TIMESTAMP_NTZ), for the as-of join's stream
 EVENTS_SCHEMA = "event_id long, ts timestamp, user_id long, event_type string, value double, props string"
 
 
@@ -71,6 +71,52 @@ def test_snap_pipeline_is_narrow(spark):
     finally:
         sc.setJobGroup(None, None)
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
+# py4j commands a pass's operator may send to build its DataFrame; the
+# Column-call forms of these builds sent 942-1,778
+PLAN_BUILD_COMMANDS = 300
+
+
+def test_pass_plans_build_in_few_jvm_calls(spark, monkeypatch):
+    """The snap pipeline and the four perfbench spatial operators build
+    their plans in at most PLAN_BUILD_COMMANDS py4j commands each: their
+    expressions are SQL text (operators/sqltext.py), where each Column
+    call would cost several round trips.  Object-release commands are
+    not counted: the collector sends them in bursts, for frames built
+    earlier."""
+    import py4j.clientserver as cs
+    from py4j.protocol import MEMORY_COMMAND_NAME
+
+    from texel_spark.grid.tms import load_embedded
+    from texel_spark.operators.snap_tiles import snap_pipeline_df
+    from texel_spark.sources.documents import synth_documents
+
+    docs = synth_documents(spark, 40)
+    events = spark.read.parquet(f"{SF}/events.parquet")
+    nation = spark.read.parquet(f"{SF}/nation.parquet")
+    rd = load_embedded("NetherlandsRDNewQuad")
+    builds = {
+        "snap_pipeline": lambda: snap_pipeline_df(docs, rd, [5, 9, 12]),
+        "pip_join": lambda: sq.pip_join(events, nation),
+        "knn_join": lambda: sq.knn_join(events, nation, n_queries=50_000),
+        "rasterize": lambda: sq.rasterize(nation, zoom=9),
+        "tile_pyramid_rollup": lambda: sq.tile_pyramid_rollup(events),
+    }
+    sent = []
+    send = cs.ClientServerConnection.send_command
+
+    def counting(self, command):
+        if not command.startswith(MEMORY_COMMAND_NAME):
+            sent.append(command)
+        return send(self, command)
+
+    monkeypatch.setattr(cs.ClientServerConnection, "send_command", counting)
+    for name, build in builds.items():
+        build()  # the first build of a session does one-off lookups
+        sent.clear()
+        build()
+        assert len(sent) <= PLAN_BUILD_COMMANDS, f"{name}: {len(sent)} py4j commands"
 
 
 def test_tile_assign_pushes_column_pruning(spark):
@@ -608,7 +654,8 @@ def test_streaming_unigram_quality_parity(spark, tmp_path):
 
 def test_streaming_hourly_rollup_parity(spark, tmp_path):
     """The watermarked window rollup, in complete mode over events split
-    across three files, converges to the batch hourly_rollup: same
+    across three files read with the table's own schema (``ts`` is
+    TIMESTAMP_NTZ), converges to the batch hourly_rollup: same
     (hour, event_type) groups, counts and cents."""
     from pyspark.sql import functions as F
 
@@ -622,7 +669,7 @@ def test_streaming_hourly_rollup_parity(spark, tmp_path):
     for i in range(3):
         batch.where(f"event_id % 3 = {i}").coalesce(1).write.parquet(str(indir / f"p{i}"))
     out = streaming_hourly_rollup(
-        spark.readStream.schema(EVENTS_SCHEMA).option("maxFilesPerTrigger", 1).parquet(str(indir / "*"))
+        spark.readStream.schema(batch.schema).option("maxFilesPerTrigger", 1).parquet(str(indir / "*"))
     )
     assert out.isStreaming
     q = out.writeStream.format("memory").queryName("hourly_stream").outputMode("complete").start()

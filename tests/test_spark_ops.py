@@ -1642,6 +1642,22 @@ def test_tile_fanout_matches_duckdb_oracles(spark, tmp_path):
         assert len(got) > 0
 
 
+def _assert_matches_duckdb_oracle(spark, name, tables):
+    """queries()[name] at sf0.01 returns exactly the rows (sorted) of
+    oracle_sql()[name] over DuckDB views of ``tables``, and some rows."""
+    duckdb = pytest.importorskip("duckdb")
+    import __spark_entry__ as e
+
+    sf = "/root/testdata/sf0.01"
+    con = duckdb.connect()
+    for table in tables:
+        con.sql(f"CREATE VIEW {table} AS SELECT * FROM read_parquet('{sf}/{table}.parquet')")
+    got = sorted(map(tuple, e.queries()[name](spark, sf).collect()))
+    want = sorted(con.sql(e.oracle_sql()[name]).fetchall())
+    assert got == want, f"{name} differs from its DuckDB oracle"
+    assert len(got) > 0
+
+
 @pytest.mark.parametrize(
     "name",
     [
@@ -1660,17 +1676,28 @@ def test_stream_covered_operators_match_duckdb_oracles(spark, name):
     """Every batch operator that tests/test_plans_streaming.py also runs
     on a stream returns exactly the rows of its DuckDB oracle at sf0.01,
     so stream == batch == oracle holds in each tier-1 run."""
-    duckdb = pytest.importorskip("duckdb")
-    import __spark_entry__ as e
+    _assert_matches_duckdb_oracle(spark, name, ("documents", "events"))
 
-    sf = "/root/testdata/sf0.01"
-    con = duckdb.connect()
-    for table in ("documents", "events"):
-        con.sql(f"CREATE VIEW {table} AS SELECT * FROM read_parquet('{sf}/{table}.parquet')")
-    got = sorted(map(tuple, e.queries()[name](spark, sf).collect()))
-    want = sorted(con.sql(e.oracle_sql()[name]).fetchall())
-    assert got == want, f"{name} differs from its DuckDB oracle"
-    assert len(got) > 0
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "tile_assign",
+        "tile_extent_agg",
+        "pip_join",
+        "knn_join",
+        "rasterize",
+        "vectorize_raster",
+        "topk_per_tile",
+        "tile_diff",
+    ],
+)
+def test_spatial_operators_match_duckdb_oracles(spark, name):
+    """Every oracled operator built on the SQL-text spatial helpers
+    (points from events, triangles from nation, tile ranges, packed
+    keys, the sign test) returns exactly the rows of its DuckDB oracle
+    at sf0.01."""
+    _assert_matches_duckdb_oracle(spark, name, ("events", "nation"))
 
 
 def test_python_workers_run_the_invalidate_caches_shim(spark):

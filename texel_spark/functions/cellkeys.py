@@ -2,8 +2,8 @@
 
 The engine's partition key is (zoom, cell_id).  Morton (Z-order) is the
 default - it is what the reference's own quadtree uses
-(/root/reference/morton/morton.go) and it is computable as pure JVM
-column expressions (operators.snap_tiles.morton_z_expr).  Alternatives
+(the reference's morton/morton.go) and it is computable as a pure JVM
+SQL expression (operators.snap_tiles.morton_z_text).  Alternatives
 slot in behind the same (tx, ty) -> int64 contract:
 
 * ``hilbert``: better locality than Morton (neighbouring cells stay

@@ -6,8 +6,8 @@ bits) and y (odd bits); inputs must fit in 32 bits.
 
 Scalar versions are used inside the snap kernel; ``to_z_np`` is the
 vectorized variant the batch snap kernel uses (numpy int64 bit ops - no
-per-row Python).  DataFrame tile keys use the JVM column expression
-``operators.snap_tiles.morton_z_expr``.
+per-row Python).  DataFrame tile keys use the same ladder as Spark SQL
+text, ``operators.snap_tiles.morton_z_text`` (JVM, whole-stage codegen).
 """
 
 from __future__ import annotations

@@ -51,6 +51,7 @@ from pyspark.sql.types import (
 from ..grid.tms import TileMatrixSet, TOP_LEFT
 from ..kernel.snap import SnapConfig
 from ..sources.documents import geometry_spans
+from .sqltext import lit
 
 SNAPPED_SCHEMA = StructType(
     [
@@ -246,14 +247,16 @@ def snap_documents(
     return docs.mapInPandas(kernel, schema=SNAPPED_SCHEMA)
 
 
-def morton_z_expr(tx, ty):
-    """Morton interleave as pure JVM column expressions (whole-stage
-    codegen; no Python worker in the loop).
+def morton_z_text(tx: str, ty: str) -> str:
+    """Morton interleave of the integer columns ``tx``/``ty`` as Spark
+    SQL text: pure JVM expressions (whole-stage codegen; no Python
+    worker in the loop).
 
-    Same bit-spread as morton.to_z (morton/morton.go:22-48) - adding a
-    Python stage just for bit twiddling would chain a second Python
-    runner per task slot and oversubscribe the host (observed 2x
-    slowdown at local[32]); Catalyst does this for free.
+    Same bit-spread as morton.to_z (morton/morton.go:22-48): each step
+    is ``(shiftleft(x, s) | x) & mask``.  Adding a Python stage just for
+    bit twiddling would chain a second Python runner per task slot and
+    oversubscribe the host (observed 2x slowdown at local[32]); Catalyst
+    does this for free.
     """
     steps = (
         (16, 0x0000FFFF0000FFFF),
@@ -264,23 +267,24 @@ def morton_z_expr(tx, ty):
     )
 
     def spread(col):
-        x = col.cast("long")
+        x = f"CAST({col} AS BIGINT)"
         for shift, mask in steps:
-            x = F.shiftleft(x, shift).bitwiseOR(x).bitwiseAND(F.lit(mask))
+            x = f"((shiftleft({x}, {shift}) | {x}) & {lit(mask)})"
         return x
 
-    return spread(tx).bitwiseOR(F.shiftleft(spread(ty), 1))
+    return f"({spread(tx)} | shiftleft({spread(ty)}, 1))"
 
 
 def assign_tiles(snapped: DataFrame, tms: TileMatrixSet, tm_ids: list[int]) -> DataFrame:
     """One output row per (feature, zoom, covering tile).
 
     Pure column math (tms20.FromNative semantics, tms20.go:664-712) over
-    the snapped bbox.  The per-zoom grid constants are plan literals (a
-    CASE on zoom where the zooms differ), so the fan-out fuses into the
-    stage that feeds it: no side table, no join, no extra Spark job.
-    Rows whose zoom is not in ``tm_ids`` are dropped.  The tile range
-    explode is bounded by each geometry's footprint.
+    the snapped bbox, written as SQL text (operators/sqltext.py).  The
+    per-zoom grid constants are plan literals (a CASE on zoom where the
+    zooms differ), so the fan-out fuses into the stage that feeds it: no
+    side table, no join, no extra Spark job.  Rows whose zoom is not in
+    ``tm_ids`` are dropped.  The tile range explode is bounded by each
+    geometry's footprint.
     """
     consts = []
     for z in tm_ids:
@@ -301,35 +305,36 @@ def assign_tiles(snapped: DataFrame, tms: TileMatrixSet, tm_ids: list[int]) -> D
     def per_zoom(values):
         """One literal when every zoom agrees, else a CASE on zoom."""
         if len(set(values)) == 1:
-            return F.lit(values[0])
-        expr = F.when(F.col("zoom") == tm_ids[0], values[0])
-        for z, v in zip(tm_ids[1:], values[1:]):
-            expr = expr.when(F.col("zoom") == z, v)
-        return expr
+            return lit(values[0])
+        arms = " ".join(f"WHEN zoom = {z} THEN {lit(v)}" for z, v in zip(tm_ids, values))
+        return f"(CASE {arms} END)"
 
     ox, oy, tsx, tsy, mw, mh, top_left = (per_zoom(v) for v in zip(*consts))
-    df = snapped.where(F.col("zoom").isin(tm_ids))
+    df = snapped.where(f"zoom IN ({', '.join(map(str, tm_ids))})")
 
-    tx0 = F.greatest(F.lit(0), F.floor((F.col("minx") - ox) / tsx).cast("int"))
-    tx1 = F.least(mw - 1, F.floor((F.col("maxx") - ox) / tsx).cast("int"))
-    ty_top = F.when(top_left, (oy - F.col("maxy")) / tsy).otherwise((F.col("miny") - oy) / tsy)
-    ty_bot = F.when(top_left, (oy - F.col("miny")) / tsy).otherwise((F.col("maxy") - oy) / tsy)
-    ty0 = F.greatest(F.lit(0), F.floor(ty_top).cast("int"))
-    ty1 = F.least(mh - 1, F.floor(ty_bot).cast("int"))
+    tx0 = f"greatest(0, CAST(floor((minx - {ox}) / {tsx}) AS INT))"
+    tx1 = f"least({mw} - 1, CAST(floor((maxx - {ox}) / {tsx}) AS INT))"
+    ty_top = f"CASE WHEN {top_left} THEN ({oy} - maxy) / {tsy} ELSE (miny - {oy}) / {tsy} END"
+    ty_bot = f"CASE WHEN {top_left} THEN ({oy} - miny) / {tsy} ELSE (maxy - {oy}) / {tsy} END"
+    ty0 = f"greatest(0, CAST(floor({ty_top}) AS INT))"
+    ty1 = f"least({mh} - 1, CAST(floor({ty_bot}) AS INT))"
 
     # geometry payload is NOT carried through the tile fan-out: a feature
     # can cover hundreds of deep-zoom tiles, and duplicating the geometry
     # per covering tile multiplies the byte volume by that factor.  The
     # tile index stays narrow (ids only); geometry lives once per
     # (feature, zoom) in snapped_geometries() and joins back on demand.
-    df = (
-        df.select("doc_id", "span_idx", "zoom", "geom_kind", "n_polys", tx0.alias("tx0"), tx1.alias("tx1"), ty0.alias("ty0"), ty1.alias("ty1"))
-        .withColumn("tx", F.explode(F.sequence("tx0", "tx1")))
-        .withColumn("ty", F.explode(F.sequence("ty0", "ty1")))
-        .withColumn("tile_id", morton_z_expr(F.col("tx"), F.col("ty")))
-    )
-    return df.select(
-        "doc_id", "span_idx", "zoom", "tx", "ty", "tile_id", "geom_kind", "n_polys"
+    return (
+        df.selectExpr(
+            "doc_id", "span_idx", "zoom", "geom_kind", "n_polys",
+            f"{tx0} AS tx0", f"{tx1} AS tx1", f"{ty0} AS ty0", f"{ty1} AS ty1",
+        )
+        .selectExpr("*", "explode(sequence(tx0, tx1)) AS tx")
+        .selectExpr("*", "explode(sequence(ty0, ty1)) AS ty")
+        .selectExpr(
+            "doc_id", "span_idx", "zoom", "tx", "ty",
+            f"{morton_z_text('tx', 'ty')} AS tile_id", "geom_kind", "n_polys",
+        )
     )
 
 
@@ -423,7 +428,7 @@ def run_pipeline(
     # persisted so the CPU-heavy kernel runs once for every bucket job
     snapped = (
         snap_documents(geometry_spans(docs), tms, todo, config)
-        .withColumn("bucket", F.pmod(F.xxhash64("doc_id", "span_idx"), F.lit(tile_buckets)))
+        .selectExpr("*", f"pmod(xxhash64(doc_id, span_idx), {tile_buckets}) AS bucket")
         .persist()
     )
 
@@ -436,15 +441,13 @@ def run_pipeline(
                 # bucket filter applies BEFORE the tile explode (narrow), so
                 # finer resume granularity costs no duplicated fan-out work
                 part = assign_tiles(
-                    snapped.where((F.col("zoom") == z) & (F.col("bucket") == b)).drop("bucket"),
+                    snapped.where(f"zoom = {z} AND bucket = {b}").drop("bucket"),
                     tms,
                     [z],
                 )
-                salted = part.withColumn(
-                    "salt", F.pmod(F.xxhash64("doc_id", "span_idx"), F.lit(salt_buckets))
-                )
+                salted = part.selectExpr("*", f"pmod(xxhash64(doc_id, span_idx), {salt_buckets}) AS salt")
                 (
-                    salted.repartition(F.col("tile_id"), F.col("salt"))
+                    salted.repartition("tile_id", "salt")
                     .drop("salt", "zoom")
                     .write.mode("overwrite")
                     .parquet(os.path.join(output_dir, "tiles", f"zoom={z}", f"bucket={b}"))
@@ -455,7 +458,7 @@ def run_pipeline(
                     _after_bucket_hook(z, b)
             if not st["geoms"]:
                 (
-                    snapped_geometries(snapped.where(F.col("zoom") == z).drop("bucket"))
+                    snapped_geometries(snapped.where(f"zoom = {z}").drop("bucket"))
                     .drop("zoom")
                     .write.mode("overwrite")
                     .parquet(os.path.join(output_dir, "geoms", f"zoom={z}"))
@@ -561,13 +564,13 @@ def snap_tile_fanout_df(
         .write.mode("overwrite")
         .parquet(scratch)
     )
-    bbox = spark.read.parquet(scratch).withColumn("geom_kind", F.lit("g")).withColumn("n_polys", F.lit(1))
+    bbox = spark.read.parquet(scratch).selectExpr("*", "'g' AS geom_kind", "1 AS n_polys")
     return assign_tiles(bbox, tms, tm_ids).select("doc_id", "span_idx", "zoom", "tx", "ty", "tile_id")
 
 
 def _spread_sql(col: str) -> str:
     """Morton bit-spread as DuckDB SQL, same shift/mask ladder as
-    morton_z_expr (morton/morton.go:22-48)."""
+    morton_z_text (morton/morton.go:22-48)."""
     expr = f"CAST({col} AS BIGINT)"
     for shift, mask in (
         (16, 0x0000FFFF0000FFFF),

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..grid.tms import TileMatrixSet, load_embedded
+from .sqltext import lit
 
 # NetherlandsRDNewQuad constants used by the oracle SQL too
 RD_ORIGIN_X = -285401.92
@@ -50,12 +51,42 @@ def _assert_pack_budget(max_abs_index: int, context: str) -> None:
         )
 
 
+def _pack(tx: str, ty: str) -> str:
+    """Packed-long tile key of two integer ordinates, as SQL text:
+    injective for |t| < 2^21 (see _assert_pack_budget).  Build-side
+    tiles can go negative (a triangle bbox dips below the grid origin),
+    probe side cannot - the offset keeps the packing collision-free."""
+    return f"(({tx}) + {1 << 21}) * {1 << 22} + (({ty}) + {1 << 21})"
+
+
+def _tile_x(x: str, ts: float) -> str:
+    """Tile column of native x on the RD grid (topLeft), as SQL text."""
+    return f"floor(({x} - {lit(RD_ORIGIN_X)}) / {lit(ts)})"
+
+
+def _tile_y(y: str, ts: float) -> str:
+    """Tile row of native y on the RD grid (topLeft), as SQL text."""
+    return f"floor(({lit(RD_ORIGIN_Y)} - {y}) / {lit(ts)})"
+
+
+# the strict sign test of point (px, py) against triangle (a, b, c2):
+# inside when all three edge determinants share a sign
+_EDGE_DETS = (
+    "(px - bx) * (ay - `by`) - (ax - bx) * (py - `by`)",
+    "(px - cx2) * (`by` - cy2) - (bx - cx2) * (py - cy2)",
+    "(px - ax) * (cy2 - ay) - (cx2 - ax) * (py - ay)",
+)
+_INSIDE_TRIANGLE = " OR ".join(
+    "(" + " AND ".join(f"({d}) {op} 0" for d in _EDGE_DETS) + ")" for op in ("<", ">")
+)
+
+
 def points_from_events(events: DataFrame) -> DataFrame:
     """Deterministic RD-extent points derived from the events table."""
-    return events.select(
+    return events.selectExpr(
         "event_id",
-        (F.lit(RD_ORIGIN_X + 0.33) + ((F.col("event_id") * F.lit(2654435761)) % F.lit(880000)).cast("double")).alias("px"),
-        (F.lit(RD_MIN_Y + 0.25) + ((F.col("event_id") * F.lit(7919)) % F.lit(880000)).cast("double")).alias("py"),
+        f"{lit(RD_ORIGIN_X + 0.33)} + CAST((event_id * 2654435761) % 880000 AS DOUBLE) AS px",
+        f"{lit(RD_MIN_Y + 0.25)} + CAST((event_id * 7919) % 880000 AS DOUBLE) AS py",
     )
 
 
@@ -69,17 +100,17 @@ FROM events
 
 def triangles_from_nation(nation: DataFrame) -> DataFrame:
     """25 deterministic triangles in the RD extent, one per nation."""
-    cx = F.lit(RD_ORIGIN_X + 0.08) + (((F.col("n_nationkey") * 37 + 11) % 800) * F.lit(1000)).cast("double")
-    cy = F.lit(RD_MIN_Y + 0.08) + (((F.col("n_nationkey") * 53 + 7) % 800) * F.lit(1000)).cast("double")
-    r = (F.lit(5000) + (F.col("n_nationkey") % 7) * F.lit(3000)).cast("double")
-    return nation.select(
-        F.col("n_nationkey").alias("nationkey"),
-        cx.alias("cx"),
-        cy.alias("cy"),
-        r.alias("r"),
-        cx.alias("ax"), (cy + r).alias("ay"),
-        (cx - r).alias("bx"), (cy - r).alias("by"),
-        (cx + r).alias("cx2"), (cy - r).alias("cy2"),
+    cx = f"({lit(RD_ORIGIN_X + 0.08)} + CAST(((n_nationkey * 37 + 11) % 800) * 1000 AS DOUBLE))"
+    cy = f"({lit(RD_MIN_Y + 0.08)} + CAST(((n_nationkey * 53 + 7) % 800) * 1000 AS DOUBLE))"
+    r = "CAST(5000 + (n_nationkey % 7) * 3000 AS DOUBLE)"
+    return nation.selectExpr(
+        "n_nationkey AS nationkey",
+        f"{cx} AS cx",
+        f"{cy} AS cy",
+        f"{r} AS r",
+        f"{cx} AS ax", f"{cy} + {r} AS ay",
+        f"{cx} - {r} AS bx", f"{cy} - {r} AS `by`",
+        f"{cx} + {r} AS cx2", f"{cy} - {r} AS cy2",
     )
 
 
@@ -117,11 +148,7 @@ def tile_assign(events: DataFrame, zoom: int = 8) -> DataFrame:
     ts = tile_size(zoom)
     pts = points_from_events(events)
     return (
-        pts.select(
-            F.lit(zoom).alias("zoom"),
-            F.floor((F.col("px") - F.lit(RD_ORIGIN_X)) / F.lit(ts)).alias("tx"),
-            F.floor((F.lit(RD_ORIGIN_Y) - F.col("py")) / F.lit(ts)).alias("ty"),
-        )
+        pts.selectExpr(f"{zoom} AS zoom", f"{_tile_x('px', ts)} AS tx", f"{_tile_y('py', ts)} AS ty")
         .groupBy("zoom", "tx", "ty")
         .agg(F.count("*").alias("n_points"))
     )
@@ -208,12 +235,8 @@ def tile_extent_agg(events: DataFrame, zoom: int = 5) -> DataFrame:
     ts = tile_size(zoom)
     pts = points_from_events(events)
     return (
-        pts.select(
-            F.lit(zoom).alias("zoom"),
-            F.floor((F.col("px") - F.lit(RD_ORIGIN_X)) / F.lit(ts)).alias("tx"),
-            F.floor((F.lit(RD_ORIGIN_Y) - F.col("py")) / F.lit(ts)).alias("ty"),
-            "px",
-            "py",
+        pts.selectExpr(
+            f"{zoom} AS zoom", f"{_tile_x('px', ts)} AS tx", f"{_tile_y('py', ts)} AS ty", "px", "py"
         )
         .groupBy("zoom", "tx", "ty")
         .agg(
@@ -239,6 +262,22 @@ FROM pts GROUP BY 1, 2, 3
 """
 
 
+def _triangle_tiles(tris: DataFrame, ts: float) -> DataFrame:
+    """Each triangle once per tile (tx, ty) of its bbox's covering range
+    (a bounded explode), as SQL text."""
+    return (
+        tris.selectExpr(
+            "*",
+            f"{_tile_x('bx', ts)} AS tx0",
+            f"{_tile_x('cx2', ts)} AS tx1",
+            f"{_tile_y('ay', ts)} AS ty0",
+            f"{_tile_y('`by`', ts)} AS ty1",
+        )
+        .selectExpr("*", "explode(sequence(tx0, tx1)) AS tx")
+        .selectExpr("*", "explode(sequence(ty0, ty1)) AS ty")
+    )
+
+
 def pip_join(events: DataFrame, nation: DataFrame, zoom: int = 7) -> DataFrame:
     """Point-in-polygon join: cell-key equi-join + refine.
 
@@ -259,39 +298,14 @@ def pip_join(events: DataFrame, nation: DataFrame, zoom: int = 7) -> DataFrame:
     """
     ts = tile_size(zoom)
     _assert_pack_budget(int(math.ceil(RD_SPAN / ts)), f"pip_join(zoom={zoom})")
-    tris = triangles_from_nation(nation)
-
-    def pack(tx, ty):
-        # injective for |t| < 2^21 (guarded above); build-side tiles can
-        # go negative (triangle bbox dips below the grid origin), probe
-        # side cannot - the offset keeps the packing collision-free
-        return (tx + F.lit(1 << 21)) * F.lit(1 << 22) + (ty + F.lit(1 << 21))
-
-    # polygon -> covering tile range (bbox of the triangle)
-    tri_tiles = (
-        tris.withColumn("tx0", F.floor((F.col("bx") - F.lit(RD_ORIGIN_X)) / F.lit(ts)))
-        .withColumn("tx1", F.floor((F.col("cx2") - F.lit(RD_ORIGIN_X)) / F.lit(ts)))
-        .withColumn("ty0", F.floor((F.lit(RD_ORIGIN_Y) - F.col("ay")) / F.lit(ts)))
-        .withColumn("ty1", F.floor((F.lit(RD_ORIGIN_Y) - F.col("by")) / F.lit(ts)))
-        .withColumn("tx", F.explode(F.sequence("tx0", "tx1")))
-        .withColumn("ty", F.explode(F.sequence("ty0", "ty1")))
-        .select("nationkey", "ax", "ay", "bx", "by", "cx2", "cy2", pack(F.col("tx"), F.col("ty")).alias("tk"))
+    tri_tiles = _triangle_tiles(triangles_from_nation(nation), ts).selectExpr(
+        "nationkey", "ax", "ay", "bx", "`by`", "cx2", "cy2", f"{_pack('tx', 'ty')} AS tk"
     )
-    pts = points_from_events(events).select(
-        "event_id",
-        "px",
-        "py",
-        pack(
-            F.floor((F.col("px") - F.lit(RD_ORIGIN_X)) / F.lit(ts)),
-            F.floor((F.lit(RD_ORIGIN_Y) - F.col("py")) / F.lit(ts)),
-        ).alias("tk"),
+    pts = points_from_events(events).selectExpr(
+        "event_id", "px", "py", f"{_pack(_tile_x('px', ts), _tile_y('py', ts))} AS tk"
     )
     cand = pts.join(F.broadcast(tri_tiles), ["tk"])
-    d1 = (F.col("px") - F.col("bx")) * (F.col("ay") - F.col("by")) - (F.col("ax") - F.col("bx")) * (F.col("py") - F.col("by"))
-    d2 = (F.col("px") - F.col("cx2")) * (F.col("by") - F.col("cy2")) - (F.col("bx") - F.col("cx2")) * (F.col("py") - F.col("cy2"))
-    d3 = (F.col("px") - F.col("ax")) * (F.col("cy2") - F.col("ay")) - (F.col("cx2") - F.col("ax")) * (F.col("py") - F.col("ay"))
-    inside = ((d1 < 0) & (d2 < 0) & (d3 < 0)) | ((d1 > 0) & (d2 > 0) & (d3 > 0))
-    return cand.where(inside).select("event_id", "nationkey")
+    return cand.where(_INSIDE_TRIANGLE).select("event_id", "nationkey")
 
 
 def pip_join_sql() -> str:
@@ -324,15 +338,13 @@ def knn_join(events: DataFrame, nation: DataFrame, k: int = 3, n_queries: int = 
     the cell-neighborhood candidate join (knn_join_grid) is the scale
     path.
     """
-    pts = points_from_events(events).where(F.col("event_id") < n_queries)
+    pts = points_from_events(events).where(f"event_id < {n_queries}")
     cents = triangles_from_nation(nation).select("nationkey", "cx", "cy")
-    d = (F.col("px") - F.col("cx")) * (F.col("px") - F.col("cx")) + (F.col("py") - F.col("cy")) * (F.col("py") - F.col("cy"))
-    w = Window.partitionBy("event_id").orderBy(F.col("dist").asc(), F.col("nationkey").asc())
     return (
         pts.crossJoin(F.broadcast(cents))
-        .withColumn("dist", d)
-        .withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
+        .selectExpr("*", "(px - cx) * (px - cx) + (py - cy) * (py - cy) AS dist")
+        .selectExpr("*", "row_number() OVER (PARTITION BY event_id ORDER BY dist ASC, nationkey ASC) AS rnk")
+        .where(f"rnk <= {k}")
         .select("event_id", "nationkey", "rnk")
     )
 
@@ -364,28 +376,18 @@ def rasterize(nation: DataFrame, zoom: int = 5, pixels: int = 8) -> DataFrame:
     """
     ts = tile_size(zoom)
     cell = ts / pixels
-    tris = triangles_from_nation(nation)
-    tri_tiles = (
-        tris.withColumn("tx0", F.floor((F.col("bx") - F.lit(RD_ORIGIN_X)) / F.lit(ts)))
-        .withColumn("tx1", F.floor((F.col("cx2") - F.lit(RD_ORIGIN_X)) / F.lit(ts)))
-        .withColumn("ty0", F.floor((F.lit(RD_ORIGIN_Y) - F.col("ay")) / F.lit(ts)))
-        .withColumn("ty1", F.floor((F.lit(RD_ORIGIN_Y) - F.col("by")) / F.lit(ts)))
-        .withColumn("tx", F.explode(F.sequence("tx0", "tx1")))
-        .withColumn("ty", F.explode(F.sequence("ty0", "ty1")))
-        .withColumn("ix", F.explode(F.sequence(F.lit(0), F.lit(pixels - 1))))
-        .withColumn("iy", F.explode(F.sequence(F.lit(0), F.lit(pixels - 1))))
+    g = (
+        _triangle_tiles(triangles_from_nation(nation), ts)
+        .selectExpr("*", f"explode(sequence(0, {pixels - 1})) AS ix")
+        .selectExpr("*", f"explode(sequence(0, {pixels - 1})) AS iy")
+        # pixel centre in native CRS (topLeft grid: y decreases with iy)
+        .selectExpr(
+            "*",
+            f"{lit(RD_ORIGIN_X)} + tx * {lit(ts)} + (ix + 0.5D) * {lit(cell)} AS px",
+            f"{lit(RD_ORIGIN_Y)} - ty * {lit(ts)} - (iy + 0.5D) * {lit(cell)} AS py",
+        )
     )
-    # pixel centre in native CRS (topLeft grid: y decreases with iy)
-    px = F.lit(RD_ORIGIN_X) + F.col("tx") * F.lit(ts) + (F.col("ix") + F.lit(0.5)) * F.lit(cell)
-    py = F.lit(RD_ORIGIN_Y) - F.col("ty") * F.lit(ts) - (F.col("iy") + F.lit(0.5)) * F.lit(cell)
-    g = tri_tiles.withColumn("px", px).withColumn("py", py)
-    d1 = (F.col("px") - F.col("bx")) * (F.col("ay") - F.col("by")) - (F.col("ax") - F.col("bx")) * (F.col("py") - F.col("by"))
-    d2 = (F.col("px") - F.col("cx2")) * (F.col("by") - F.col("cy2")) - (F.col("bx") - F.col("cx2")) * (F.col("py") - F.col("cy2"))
-    d3 = (F.col("px") - F.col("ax")) * (F.col("cy2") - F.col("ay")) - (F.col("cx2") - F.col("ax")) * (F.col("py") - F.col("ay"))
-    inside = ((d1 < 0) & (d2 < 0) & (d3 < 0)) | ((d1 > 0) & (d2 > 0) & (d3 > 0))
-    return g.where(inside).select(
-        "nationkey", F.lit(zoom).alias("zoom"), "tx", "ty", "ix", "iy"
-    )
+    return g.where(_INSIDE_TRIANGLE).selectExpr("nationkey", f"{zoom} AS zoom", "tx", "ty", "ix", "iy")
 
 
 def rasterize_sql(zoom: int = 5, pixels: int = 8) -> str:
@@ -433,19 +435,17 @@ def vectorize_raster(nation: DataFrame, zoom: int = 5, pixels: int = 8) -> DataF
     ts = tile_size(zoom)
     cell = ts / pixels
     r = rasterize(nation, zoom, pixels)
-    run_id = F.col("ix") - F.row_number().over(
-        Window.partitionBy("nationkey", "zoom", "tx", "ty", "iy").orderBy("ix")
-    )
-    runs = r.withColumn("run", run_id).groupBy("nationkey", "zoom", "tx", "ty", "iy", "run").agg(
+    run_id = "ix - row_number() OVER (PARTITION BY nationkey, zoom, tx, ty, iy ORDER BY ix)"
+    runs = r.selectExpr("*", f"{run_id} AS run").groupBy("nationkey", "zoom", "tx", "ty", "iy", "run").agg(
         F.min("ix").alias("ix0"), F.max("ix").alias("ix1"), F.count("*").alias("n_px")
     )
-    min_x = F.lit(RD_ORIGIN_X) + F.col("tx") * F.lit(ts) + F.col("ix0") * F.lit(cell)
-    max_x = F.lit(RD_ORIGIN_X) + F.col("tx") * F.lit(ts) + (F.col("ix1") + 1) * F.lit(cell)
-    max_y = F.lit(RD_ORIGIN_Y) - F.col("ty") * F.lit(ts) - F.col("iy") * F.lit(cell)
-    min_y = F.lit(RD_ORIGIN_Y) - F.col("ty") * F.lit(ts) - (F.col("iy") + 1) * F.lit(cell)
-    return runs.select(
+    x0, y0, ts_, cell_ = lit(RD_ORIGIN_X), lit(RD_ORIGIN_Y), lit(ts), lit(cell)
+    return runs.selectExpr(
         "nationkey", "zoom", "tx", "ty", "iy", "n_px",
-        min_x.alias("min_x"), min_y.alias("min_y"), max_x.alias("max_x"), max_y.alias("max_y"),
+        f"{x0} + tx * {ts_} + ix0 * {cell_} AS min_x",
+        f"{y0} - ty * {ts_} - (iy + 1) * {cell_} AS min_y",
+        f"{x0} + tx * {ts_} + (ix1 + 1) * {cell_} AS max_x",
+        f"{y0} - ty * {ts_} - iy * {cell_} AS max_y",
     )
 
 
@@ -475,22 +475,14 @@ def topk_per_tile(events: DataFrame, zoom: int = 8, k: int = 3) -> DataFrame:
     area-sort as an engine-level window: partitionBy(tile).orderBy)."""
     ts = tile_size(zoom)
     pts = points_from_events(events)
-    df = pts.select(
-        "event_id",
-        "px",
-        "py",
-        F.floor((F.col("px") - F.lit(RD_ORIGIN_X)) / F.lit(ts)).alias("tx"),
-        F.floor((F.lit(RD_ORIGIN_Y) - F.col("py")) / F.lit(ts)).alias("ty"),
-    )
-    cx = F.lit(RD_ORIGIN_X) + (F.col("tx") + F.lit(0.5)) * F.lit(ts)
-    cy = F.lit(RD_ORIGIN_Y) - (F.col("ty") + F.lit(0.5)) * F.lit(ts)
-    dist = (F.col("px") - cx) * (F.col("px") - cx) + (F.col("py") - cy) * (F.col("py") - cy)
-    w = Window.partitionBy("tx", "ty").orderBy(F.col("dist").asc(), F.col("event_id").asc())
+    df = pts.selectExpr("event_id", "px", "py", f"{_tile_x('px', ts)} AS tx", f"{_tile_y('py', ts)} AS ty")
+    cx = f"({lit(RD_ORIGIN_X)} + (tx + 0.5D) * {lit(ts)})"
+    cy = f"({lit(RD_ORIGIN_Y)} - (ty + 0.5D) * {lit(ts)})"
     return (
-        df.withColumn("dist", dist)
-        .withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select(F.lit(zoom).alias("zoom"), "tx", "ty", "event_id", F.col("rnk").cast("int").alias("rnk"))
+        df.selectExpr("*", f"(px - {cx}) * (px - {cx}) + (py - {cy}) * (py - {cy}) AS dist")
+        .selectExpr("*", "row_number() OVER (PARTITION BY tx, ty ORDER BY dist ASC, event_id ASC) AS rnk")
+        .where(f"rnk <= {k}")
+        .selectExpr(f"{zoom} AS zoom", "tx", "ty", "event_id", "CAST(rnk AS INT) AS rnk")
     )
 
 
@@ -697,23 +689,14 @@ def tile_pyramid_rollup(events: DataFrame, max_zoom: int = 8, min_zoom: int = 0)
     if not 0 <= min_zoom <= max_zoom:
         raise ValueError(f"need 0 <= min_zoom <= max_zoom, got {min_zoom}..{max_zoom}")
     ts = tile_size(max_zoom)
-    ancestors = F.array(
-        *[
-            F.struct(
-                F.lit(z).alias("zoom"),
-                F.shiftright(F.col("tx"), max_zoom - z).alias("tx"),
-                F.shiftright(F.col("ty"), max_zoom - z).alias("ty"),
-            )
-            for z in range(min_zoom, max_zoom + 1)
-        ]
+    ancestors = ", ".join(
+        f"struct({z} AS zoom, shiftright(tx, {max_zoom - z}) AS tx, shiftright(ty, {max_zoom - z}) AS ty)"
+        for z in range(min_zoom, max_zoom + 1)
     )
     return (
         points_from_events(events)
-        .select(
-            F.floor((F.col("px") - F.lit(RD_ORIGIN_X)) / F.lit(ts)).alias("tx"),
-            F.floor((F.lit(RD_ORIGIN_Y) - F.col("py")) / F.lit(ts)).alias("ty"),
-        )
-        .select(F.inline(ancestors))
+        .selectExpr(f"{_tile_x('px', ts)} AS tx", f"{_tile_y('py', ts)} AS ty")
+        .selectExpr(f"inline(array({ancestors}))")
         .groupBy("zoom", "tx", "ty")
         .agg(F.count("*").alias("n_points"))
     )
@@ -756,21 +739,13 @@ def tile_diff(old_events: DataFrame, new_events: DataFrame, zoom: int = 8) -> Da
     new_t = tile_assign(new_events, zoom=zoom).withColumnRenamed("n_points", "n_new")
     j = old_t.join(new_t, ["zoom", "tx", "ty"], "full_outer")
     status = (
-        F.when(F.col("n_old").isNull(), "added")
-        .when(F.col("n_new").isNull(), "removed")
-        .when(F.col("n_old") != F.col("n_new"), "changed")
+        "CASE WHEN n_old IS NULL THEN 'added' WHEN n_new IS NULL THEN 'removed' "
+        "WHEN n_old != n_new THEN 'changed' END"
     )
     return (
-        j.withColumn("status", status)
-        .where(F.col("status").isNotNull())
-        .select(
-            "zoom",
-            "tx",
-            "ty",
-            "status",
-            F.coalesce("n_old", F.lit(0)).alias("n_old"),
-            F.coalesce("n_new", F.lit(0)).alias("n_new"),
-        )
+        j.selectExpr("*", f"{status} AS status")
+        .where("status IS NOT NULL")
+        .selectExpr("zoom", "tx", "ty", "status", "coalesce(n_old, 0) AS n_old", "coalesce(n_new, 0) AS n_new")
     )
 
 

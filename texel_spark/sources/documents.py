@@ -180,25 +180,22 @@ def materialize_documents(spark: SparkSession, n_docs: int, path: str, partition
 
 
 def explode_spans(docs: DataFrame) -> DataFrame:
-    """documents -> one row per span, order column retained (narrow op)."""
-    return docs.select(
-        "doc_id",
-        F.posexplode("spans").alias("span_idx", "span"),
-    ).select(
+    """documents -> one row per span, order column retained (narrow op).
+    SQL text: a pass builds this once per scan, and each Column call is
+    several py4j round trips (operators/sqltext.py)."""
+    return docs.selectExpr("doc_id", "posexplode(spans) AS (span_idx, span)").selectExpr(
         "doc_id",
         "span_idx",
-        F.col("span.kind").alias("kind"),
-        F.col("span.text").alias("text"),
-        F.col("span.media_ref").alias("media_ref"),
-        F.col("span.offset").alias("offset"),
+        "span.kind AS kind",
+        "span.text AS text",
+        "span.media_ref AS media_ref",
+        "span.offset AS offset",
     )
 
 
 def geometry_spans(docs: DataFrame) -> DataFrame:
     """Only the geometry-carrying spans (predicate pushes into the scan)."""
-    return explode_spans(docs).where(F.col("kind") == "geom").select(
-        "doc_id", "span_idx", F.col("text").alias("wkt")
-    )
+    return explode_spans(docs).where("kind = 'geom'").selectExpr("doc_id", "span_idx", "text AS wkt")
 
 
 def reassemble_spans(exploded: DataFrame) -> DataFrame:

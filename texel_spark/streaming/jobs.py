@@ -48,9 +48,16 @@ def document_rate_stream(spark: SparkSession, rows_per_second: int = 100) -> Dat
 
 def streaming_hourly_rollup(events_stream: DataFrame, watermark: str = "2 hours") -> DataFrame:
     """Watermarked tumbling-window rollup (late data beyond the watermark
-    dropped); the batch twin is operators.events.hourly_rollup."""
+    dropped); the batch twin is operators.events.hourly_rollup.
+
+    The events table stores ``ts`` as TIMESTAMP_NTZ and a watermark needs
+    a TIMESTAMP, so ``ts`` is cast here: a stream reads the table with
+    its own schema.  Sessions run in UTC (session.get_spark), so each
+    stored wall time becomes the same instant in UTC; a TIMESTAMP ``ts``
+    passes through unchanged."""
     return (
-        events_stream.withWatermark("ts", watermark)
+        events_stream.withColumn("ts", F.col("ts").cast("timestamp"))
+        .withWatermark("ts", watermark)
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(
             F.count("*").alias("n_events"),

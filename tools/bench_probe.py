@@ -14,7 +14,14 @@ Usage:
 
   TEXEL_PROBE_CONF="spark.sql.codegen.maxFields=256;spark.foo=bar" for A/B.
 
-Prints one JSON line: {"queries": {name: [s1, s2, ...]}, "rows": {...}}.
+Before the timed repeats, the first query named runs once, untimed:
+a session's first query pays its one-off class-loading and JIT cost.
+
+Prints one JSON line: {"queries": {name: [s1, s2, ...]}, "build":
+{name: [b1, b2, ...]}, "rows": {...}} - per repeat, the seconds to run
+the query and, under "build", the seconds to get its DataFrame: reading
+the input tables (for snap_pipeline, writing the synthetic corpus) and
+the Python -> JVM calls that construct the plan.
 """
 
 from __future__ import annotations
@@ -58,11 +65,15 @@ def main() -> None:
         return registry[name](spark, sf_dir)
 
     names = args.queries or ["snap_pipeline", *SWEEP]
+    build(names[0]).count()  # warm-up, untimed
     timings: dict[str, list[float]] = {}
+    builds: dict[str, list[float]] = {}
     rows: dict[str, int] = {}
     for name in names:
         for i in range(args.repeats):
+            t0 = time.perf_counter()
             df = build(name)
+            builds.setdefault(name, []).append(round(time.perf_counter() - t0, 3))
             spark.sparkContext.setJobDescription(f"probe:{name}")
             t0 = time.perf_counter()
             if args.noop:
@@ -83,7 +94,7 @@ def main() -> None:
                 with open(os.path.join(args.plans, f"{name}.txt"), "w") as f:
                     f.write(df._sc._jvm.PythonSQLUtils.explainString(qe, "formatted"))
 
-    print(json.dumps({"sf": sf, "cpus": cpus, "queries": timings, "rows": rows}))
+    print(json.dumps({"sf": sf, "cpus": cpus, "queries": timings, "build": builds, "rows": rows}))
     spark.stop()
 
 
