@@ -78,16 +78,30 @@ def test_snap_pipeline_is_narrow(spark):
 PLAN_BUILD_COMMANDS = 300
 
 
+def count_py4j_commands(monkeypatch) -> list:
+    """Record every py4j command the driver sends from now on, in the
+    returned list.  Object-release commands are not recorded: the
+    collector sends them in bursts, for frames built earlier."""
+    import py4j.clientserver as cs
+    from py4j.protocol import MEMORY_COMMAND_NAME
+
+    sent = []
+    send = cs.ClientServerConnection.send_command
+
+    def counting(self, command):
+        if not command.startswith(MEMORY_COMMAND_NAME):
+            sent.append(command)
+        return send(self, command)
+
+    monkeypatch.setattr(cs.ClientServerConnection, "send_command", counting)
+    return sent
+
+
 def test_pass_plans_build_in_few_jvm_calls(spark, monkeypatch):
     """The snap pipeline and the four perfbench spatial operators build
     their plans in at most PLAN_BUILD_COMMANDS py4j commands each: their
     expressions are SQL text (operators/sqltext.py), where each Column
-    call would cost several round trips.  Object-release commands are
-    not counted: the collector sends them in bursts, for frames built
-    earlier."""
-    import py4j.clientserver as cs
-    from py4j.protocol import MEMORY_COMMAND_NAME
-
+    call would cost several round trips."""
     from texel_spark.grid.tms import load_embedded
     from texel_spark.operators.snap_tiles import snap_pipeline_df
     from texel_spark.sources.documents import synth_documents
@@ -103,20 +117,33 @@ def test_pass_plans_build_in_few_jvm_calls(spark, monkeypatch):
         "rasterize": lambda: sq.rasterize(nation, zoom=9),
         "tile_pyramid_rollup": lambda: sq.tile_pyramid_rollup(events),
     }
-    sent = []
-    send = cs.ClientServerConnection.send_command
-
-    def counting(self, command):
-        if not command.startswith(MEMORY_COMMAND_NAME):
-            sent.append(command)
-        return send(self, command)
-
-    monkeypatch.setattr(cs.ClientServerConnection, "send_command", counting)
+    sent = count_py4j_commands(monkeypatch)
     for name, build in builds.items():
         build()  # the first build of a session does one-off lookups
         sent.clear()
         build()
         assert len(sent) <= PLAN_BUILD_COMMANDS, f"{name}: {len(sent)} py4j commands"
+
+
+def test_ivf_plan_build_does_not_grow_with_centroids(spark, monkeypatch):
+    """The IVF centroids reach executors as one broadcast matrix, not as
+    k x dim plan literals, so building ivf_kmeans_topk sends as many
+    py4j commands at k=64 as at k=8 (dim 32)."""
+    import numpy as np
+
+    from texel_spark.operators.similarity import ivf_kmeans_topk, synth_clustered_embeddings
+
+    emb = synth_clustered_embeddings(spark, n_vectors=200, n_clusters=8)
+    rng = np.random.default_rng(3)
+    centroids = {k: [list(map(float, row)) for row in rng.normal(size=(k, 32))] for k in (8, 64)}
+    sent = count_py4j_commands(monkeypatch)
+    counts = {}
+    for k, cents in centroids.items():
+        ivf_kmeans_topk(emb, centroids=cents)  # the first build of a session does one-off lookups
+        sent.clear()
+        ivf_kmeans_topk(emb, centroids=cents)
+        counts[k] = len(sent)
+    assert counts[8] == counts[64], counts
 
 
 def test_tile_assign_pushes_column_pruning(spark):

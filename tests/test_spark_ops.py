@@ -726,10 +726,10 @@ def test_kmeans_centroids_deterministic_across_partitionings(spark):
         assert ca == pytest.approx(cb, abs=1e-9)
 
 
-def test_kmeans_broadcast_assignment_matches_literal_path(spark):
-    """The large-k broadcast-matmul assignment must agree cell-for-cell
-    (including tie direction: first max / lowest index) with the literal
-    JVM-expression path on the same centroids."""
+def test_kmeans_assignment_matches_driver_reference(spark):
+    """Cell assignment and nprobe probing agree row for row with an
+    exact driver-side reference: squared-L2 distances to every centroid,
+    sorted as (dist, idx), so ties break toward the lower index."""
     import numpy as np
 
     from pyspark.sql import functions as F
@@ -737,10 +737,8 @@ def test_kmeans_broadcast_assignment_matches_literal_path(spark):
     from texel_spark.operators.similarity import (
         _as_double,
         _centroid_broadcast,
-        _nearest_cell,
-        _nearest_cell_bc,
-        _nearest_cells,
-        _nearest_cells_bc,
+        _nearest_centroid,
+        _nearest_centroids,
         synth_clustered_embeddings,
     )
 
@@ -749,26 +747,67 @@ def test_kmeans_broadcast_assignment_matches_literal_path(spark):
     )
     rng = np.random.default_rng(9)
     centroids = [list(map(float, row)) for row in rng.normal(size=(24, 32))]
-    # exact-tie coverage: duplicate centroid -> both paths must pick the
-    # LOWER index
+    # exact-tie coverage: a duplicate centroid must never win over the
+    # lower index it copies
     centroids[13] = list(centroids[4])
     bc = _centroid_broadcast(emb, centroids)
-    both = emb.select(
-        _nearest_cell(F.col("v"), centroids).alias("lit"),
-        _nearest_cell_bc(F.col("v"), bc).alias("mat"),
-        _nearest_cells(F.col("v"), centroids, 3).alias("lit3"),
-        _nearest_cells_bc(F.col("v"), bc, 3).alias("mat3"),
+    rows = emb.select(
+        "v",
+        _nearest_centroid(F.col("v"), bc).alias("cell"),
+        _nearest_centroids(F.col("v"), bc, 3).alias("probes"),
     ).collect()
-    for r in both:
-        assert r["lit"] == r["mat"]
-        assert r["lit3"] == r["mat3"]
-        assert r["lit"] != 13  # the duplicate never wins a tie
+    assert len(rows) == 300
+    for r in rows:
+        ref = sorted(
+            (sum((x - c) ** 2 for x, c in zip(r["v"], cent)), i) for i, cent in enumerate(centroids)
+        )
+        assert r["cell"] == ref[0][1]
+        assert r["probes"] == [i for _, i in ref[:3]]
+        assert r["cell"] != 13  # the duplicate never wins a tie
+
+
+def test_ivf_assignment_invariant_to_batch_size_and_layout(spark):
+    """Every centroid assignment runs as numpy over Arrow batches, so the
+    IVF results must not move with the Arrow batch size or the corpus
+    partitioning."""
+    from texel_spark.operators.similarity import (
+        ivf_kmeans_topk,
+        ivf_pq_topk,
+        synth_clustered_embeddings,
+        train_kmeans_centroids,
+        train_pq_codebooks,
+    )
+
+    emb = synth_clustered_embeddings(spark, n_vectors=600, n_clusters=8).cache()
+    cents = train_kmeans_centroids(emb, n_cells=8, n_iters=3)
+    books = train_pq_codebooks(emb, n_codes=64)
+    builds = {
+        "ivf_kmeans_topk": lambda df: ivf_kmeans_topk(df, centroids=cents),
+        "ivf_pq_topk": lambda df: ivf_pq_topk(df, centroids=cents, codebooks=books, nprobe=4),
+    }
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    default = spark.conf.get(key)
+    for name, build in builds.items():
+        base = rows(build(emb))
+        assert len(base) > 0, name
+        spark.conf.set(key, "7")
+        try:
+            assert rows(build(emb)) == base, f"{name}: batch size 7"
+        finally:
+            spark.conf.set(key, default)
+        assert rows(build(emb.repartition(1))) == base, f"{name}: 1 partition"
+        assert rows(build(emb.repartition(7))) == base, f"{name}: 7 partitions"
+    emb.unpersist()
 
 
 def test_kmeans_large_k_plans_fast_and_runs(spark):
     """VERDICT r4 item 3: k=1024, dim=64 must not blow up plan/codegen.
-    With the broadcast-matrix path the centroids stay out of the plan,
-    so analysis is sub-second and the query runs end to end."""
+    The broadcast centroid matrix stays out of the plan, so analysis is
+    sub-second and the query runs end to end."""
     import time
 
     import numpy as np
@@ -783,9 +822,8 @@ def test_kmeans_large_k_plans_fast_and_runs(spark):
     df = ivf_kmeans_topk(emb, centroids=centroids, nprobe=8)
     df._jdf.queryExecution().analyzed()  # force analysis
     t_plan = time.time() - t0
-    assert t_plan < 5.0, f"k=1024 analysis took {t_plan:.1f}s (literal-path blowup?)"
-    # the broadcast path must actually be in use (Arrow python eval, not
-    # 1024*64 literals), and each side's UDF must appear exactly ONCE:
+    assert t_plan < 5.0, f"k=1024 analysis took {t_plan:.1f}s (centroids in the plan?)"
+    # each side's assignment UDF must appear exactly ONCE:
     # Catalyst's inferred isnotnull/size filters would otherwise push
     # below the projection and run the matmul twice per row (guarded by
     # asNondeterministic on the UDFs).  Captured pre-execution: the
@@ -1272,9 +1310,9 @@ def test_pq_plan_shape(spark):
     assert "CartesianProduct" not in p
     cents = train_kmeans_centroids(emb, n_cells=8, n_iters=2)
     p2 = ivf_pq_topk(emb, centroids=cents, codebooks=books)._jdf.queryExecution().executedPlan().toString()
-    # encode + ADC score = 2 Arrow stages (coarse assignment is literal
-    # JVM expressions at n_cells=8); duplication would read 3+
-    assert p2.count("ArrowEvalPython") == 2
+    # encode + corpus cell + query probes + ADC score = 4 Arrow stages;
+    # duplication would read 5+
+    assert p2.count("ArrowEvalPython") == 4
     assert "CartesianProduct" not in p2
 
 

@@ -3,7 +3,9 @@
 Brute-force cosine top-k is the exact baseline (JVM-side fold, no Python
 in the hot path); the IVF-style coarse-quantizer variant is the scale
 path: cluster-assign once, then search only the probed cells - the
-standard recipe for ANN over billions of vectors.
+standard recipe for ANN over billions of vectors.  Trained centroids
+reach executors as one broadcast matrix, and every nearest-centroid
+assignment is an Arrow-batched numpy matmul against it.
 """
 
 from __future__ import annotations
@@ -18,6 +20,23 @@ def _as_double(col):
 
 def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
+
+
+def _cosine(a: str, b: str):
+    """Cosine of two double-array columns, as a JVM-side fold."""
+    x, y = F.col(a), F.col(b)
+    return _dot(x, y) / (F.sqrt(_dot(x, x)) * F.sqrt(_dot(y, y)))
+
+
+def _top_k(pairs: DataFrame, score: str, k: int, rank: str = "rnk") -> DataFrame:
+    """The k highest-`score` rows per query_id, ranked 1..k in `rank`;
+    ties break toward the lower neighbor_id."""
+    w = Window.partitionBy("query_id").orderBy(F.col(score).desc(), F.col("neighbor_id").asc())
+    return (
+        pairs.withColumn(rank, F.row_number().over(w))
+        .where(F.col(rank) <= k)
+        .select("query_id", "neighbor_id", rank)
+    )
 
 
 def cosine_topk(embeddings: DataFrame, k: int = 5, n_queries: int = 20) -> DataFrame:
@@ -35,17 +54,13 @@ def cosine_topk(embeddings: DataFrame, k: int = 5, n_queries: int = 20) -> DataF
     # cluster's parallelism even when the scan produced one split
     par = embeddings.sparkSession.sparkContext.defaultParallelism
     corpus = emb.repartition(par).select(F.col("vec_id").alias("neighbor_id"), F.col("v").alias("c"))
-    sim = _dot(F.col("q"), F.col("c")) / (F.sqrt(_dot(F.col("q"), F.col("q"))) * F.sqrt(_dot(F.col("c"), F.col("c"))))
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return (
+    pairs = (
         F.broadcast(queries)
         .crossJoin(corpus)
         .where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("sim", sim)
-        .withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "rnk")
+        .withColumn("sim", _cosine("q", "c"))
     )
+    return _top_k(pairs, "sim", k)
 
 
 def cosine_topk_sql(k: int = 5, n_queries: int = 20) -> str:
@@ -139,16 +154,21 @@ def ivf_cosine_topk(
         probes = F.array(F.col("cell"), *[F.col("cell").bitwiseXOR(F.lit(1 << i)) for i in range(n_bits)])
         queries = queries.withColumn("cell", F.explode(probes))
     corpus = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("v").alias("c"), "cell")
-    sim = _dot(F.col("q"), F.col("c")) / (F.sqrt(_dot(F.col("q"), F.col("q"))) * F.sqrt(_dot(F.col("c"), F.col("c"))))
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return (
-        queries.join(corpus, "cell")
+    return _cell_topk(queries, corpus, k)
+
+
+def _cell_topk(queries: DataFrame, corpus: DataFrame, k: int) -> DataFrame:
+    """Exact cosine top-k of each query (query_id, q, cell) over the
+    corpus rows (neighbor_id, c, cell) of the cells it probes.  The
+    query side (n_queries x probes rows) is the broadcast build side,
+    so the plan does not depend on which side AQE measures smaller."""
+    pairs = (
+        F.broadcast(queries)
+        .join(corpus, "cell")
         .where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("sim", sim)
-        .withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "rnk")
+        .withColumn("sim", _cosine("q", "c"))
     )
+    return _top_k(pairs, "sim", k)
 
 
 def train_kmeans_centroids(
@@ -162,10 +182,11 @@ def train_kmeans_centroids(
     trained replacement for the data-independent sign-bit cells.
 
     Scale shape: centroids live on the driver (k x dim floats - tiny);
-    each iteration is ONE narrow pass over the corpus (assign = JVM
-    column math at coarse k, a broadcast-matrix Arrow matmul above
-    _LITERAL_K_MAX) plus a map-side-combined aggregate whose shuffle
-    carries at most k x dim x partitions partial rows.  For billion-vector corpora
+    each iteration broadcasts them and makes ONE narrow pass over the
+    corpus (assign = an Arrow-batched matmul against the broadcast
+    matrix, so the plan does not grow with k x dim) plus a
+    map-side-combined aggregate whose shuffle carries at most
+    k x dim x partitions partial rows.  For billion-vector corpora
     pass sample_fraction to train on a deterministic hash-sample - the
     standard IVF recipe (quantizer quality needs only a sample).
 
@@ -202,7 +223,8 @@ def train_kmeans_centroids(
         raise ValueError(f"corpus smaller than n_cells={n_cells}")
 
     for _ in range(n_iters):
-        assigned = emb.withColumn("cell", _assign_cell(emb, F.col("v"), centroids))
+        bc = _centroid_broadcast(emb, centroids)
+        assigned = emb.withColumn("cell", _nearest_centroid(F.col("v"), bc))
         # per-(cell, dim) sums: posexplode -> partial-agg map-side, the
         # shuffle carries pre-combined k*dim rows per partition
         sums = (
@@ -225,57 +247,20 @@ def train_kmeans_centroids(
     return centroids
 
 
-# Above this k, centroid-assignment switches from literal column
-# expressions to a broadcast numpy matrix + Arrow-batched matmul: k*dim
-# literals are fine at IVF-coarse k (16-64) but blow up plan size /
-# codegen (Catalyst 64KB method limits, minutes of analysis) at the
-# k~1000s a realistic 100 TB IVF needs (VERDICT r4 item 3).
-_LITERAL_K_MAX = 64
-
-
-def _nearest_cell(v, centroids: list[list[float]]):
-    """argmin_i ||v - c_i||^2 as a pure JVM expression: maximize
-    2*v.c_i - |c_i|^2 (|v|^2 is constant per row).  A flat scores array
-    + array_position(array_max) keeps the expression tree LINEAR in k -
-    a chained when() running max would duplicate the tree per step
-    (2^k).  array_position returns the FIRST occurrence, so ties break
-    toward the lower cell index."""
-    scores = F.array(
-        *[
-            F.lit(2.0) * _dot(v, F.array(*[F.lit(float(x)) for x in c]))
-            - F.lit(sum(x * x for x in c))
-            for c in centroids
-        ]
-    )
-    return (F.array_position(scores, F.array_max(scores)) - 1).cast("long")
-
-
-def _nearest_cells(v, centroids: list[list[float]], nprobe: int):
-    """The nprobe nearest cells, as an array<long> JVM expression
-    (array_sort over (dist, idx) structs - k is small)."""
-    entries = []
-    for i, c in enumerate(centroids):
-        lit = F.array(*[F.lit(float(x)) for x in c])
-        d = F.lit(sum(x * x for x in c)) - F.lit(2.0) * _dot(v, lit)
-        entries.append(F.struct(d.alias("d"), F.lit(i).cast("long").alias("i")))
-    ordered = F.array_sort(F.array(*entries))
-    return F.transform(F.slice(ordered, 1, nprobe), lambda s: s["i"])
-
-
 def _centroid_broadcast(df: DataFrame, centroids: list[list[float]]):
     """Broadcast the (k, dim) float64 centroid matrix to executors once;
-    the literal-expression path ships the same floats inside the PLAN,
-    which Catalyst re-analyzes per query - fatal at k in the thousands."""
+    the plan carries only the UDFs that read it, so its size and
+    analysis time do not grow with k x dim."""
     import numpy as np
 
     return df.sparkSession.sparkContext.broadcast(np.asarray(centroids, dtype=np.float64))
 
 
-def _nearest_cell_bc(v, bc):
-    """Large-k assignment: one Arrow batch -> one (n, dim) @ (dim, k)
-    matmul against the broadcast centroid matrix.  np.argmax returns the
-    FIRST max, so ties break toward the lower cell index - same contract
-    as the literal path's array_position."""
+def _nearest_centroid(v, bc):
+    """argmin_i ||v - c_i||^2 per row: one Arrow batch -> one
+    (n, dim) @ (dim, k) matmul against the broadcast centroid matrix,
+    maximizing 2*v.c_i - |c_i|^2 (|v|^2 is constant per row).  np.argmax
+    returns the FIRST max, so ties break toward the lower cell index."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
@@ -295,10 +280,10 @@ def _nearest_cell_bc(v, bc):
     return assign.asNondeterministic()(v)
 
 
-def _nearest_cells_bc(v, bc, nprobe: int):
-    """Large-k nprobe probing: stable argsort of the distance matrix
-    rows (ties toward the lower cell index, matching the literal path's
-    array_sort over (d, i) structs); returns array<long>."""
+def _nearest_centroids(v, bc, nprobe: int):
+    """The nprobe nearest cells per row, as array<long>: a stable
+    argsort of the distance matrix rows, so ties break toward the lower
+    cell index as in _nearest_centroid."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
@@ -312,23 +297,9 @@ def _nearest_cells_bc(v, bc, nprobe: int):
         idx = np.argsort(d, axis=1, kind="stable")[:, :nprobe]
         return pd.Series(list(idx.astype(np.int64)))
 
-    # same duplication guard as _nearest_cell_bc: the explode's inferred
+    # same duplication guard as _nearest_centroid: the explode's inferred
     # size(cells)>0 filter would otherwise re-evaluate the UDF
     return probes.asNondeterministic()(v)
-
-
-def _assign_cell(df: DataFrame, v, centroids: list[list[float]]):
-    """Dispatch: literal JVM expressions for IVF-coarse k, broadcast
-    matrix + Arrow matmul above _LITERAL_K_MAX."""
-    if len(centroids) <= _LITERAL_K_MAX:
-        return _nearest_cell(v, centroids)
-    return _nearest_cell_bc(v, _centroid_broadcast(df, centroids))
-
-
-def _assign_cells(df: DataFrame, v, centroids: list[list[float]], nprobe: int):
-    if len(centroids) <= _LITERAL_K_MAX:
-        return _nearest_cells(v, centroids, nprobe)
-    return _nearest_cells_bc(v, _centroid_broadcast(df, centroids), nprobe)
 
 
 def ivf_kmeans_topk(
@@ -346,43 +317,33 @@ def ivf_kmeans_topk(
     `nprobe` nearest cells, and the equi-join on cell bounds the scanned
     fraction to ~nprobe/n_cells of the corpus.
 
-    At IVF-coarse k (<= _LITERAL_K_MAX) everything stays JVM-side:
-    centroids are literal arrays shipped with the plan, assignment and
-    probing are pure column math.  Above that, assignment switches to a
-    broadcast (k, dim) numpy matrix + one Arrow-batch matmul per batch -
+    The centroids are broadcast once, as a (k, dim) numpy matrix, and
+    both sides assign against it with one Arrow-batch matmul per batch -
     plan size stays O(1) in k, so k in the thousands plans in
-    milliseconds (pinned by the k=1024 pytest).  Either way the search
-    is the same cell equi-join + window top-k as the sign-bit variant.
-    Recall is measured (bench.py / pytest floor), not assumed.
+    milliseconds (pinned by the k=1024 pytest).  The search is the same
+    cell equi-join + window top-k as the sign-bit variant.  Recall is
+    measured (bench.py / pytest floor), not assumed.
     """
     if centroids is None:
         centroids = train_kmeans_centroids(embeddings, n_cells=n_cells, n_iters=n_iters)
     emb = embeddings.select("vec_id", _as_double("embedding").alias("v"))
+    bc = _centroid_broadcast(emb, centroids)
     corpus = emb.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("v").alias("c"),
-        _assign_cell(emb, F.col("v"), centroids).alias("cell"),
+        _nearest_centroid(F.col("v"), bc).alias("cell"),
     )
     queries = (
         emb.where(F.col("vec_id") < n_queries)
         .select(
             F.col("vec_id").alias("query_id"),
             F.col("v").alias("q"),
-            _assign_cells(emb, F.col("v"), centroids, nprobe).alias("cells"),
+            _nearest_centroids(F.col("v"), bc, nprobe).alias("cells"),
         )
         .withColumn("cell", F.explode("cells"))
         .drop("cells")
     )
-    sim = _dot(F.col("q"), F.col("c")) / (F.sqrt(_dot(F.col("q"), F.col("q"))) * F.sqrt(_dot(F.col("c"), F.col("c"))))
-    w = Window.partitionBy("query_id").orderBy(F.col("sim").desc(), F.col("neighbor_id").asc())
-    return (
-        queries.join(corpus, "cell")
-        .where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("sim", sim)
-        .withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "rnk")
-    )
+    return _cell_topk(queries, corpus, k)
 
 
 def embedding_near_dup(embeddings: DataFrame, threshold: float = 0.95) -> DataFrame:
@@ -400,13 +361,10 @@ def embedding_near_dup(embeddings: DataFrame, threshold: float = 0.95) -> DataFr
     )
     a = emb.select(F.col("vec_id").alias("id_a"), F.col("v").alias("va"), "cell")
     b = emb.select(F.col("vec_id").alias("id_b"), F.col("v").alias("vb"), "cell")
-    sim = _dot(F.col("va"), F.col("vb")) / (
-        F.sqrt(_dot(F.col("va"), F.col("va"))) * F.sqrt(_dot(F.col("vb"), F.col("vb")))
-    )
     return (
         a.join(b, "cell")
         .where(F.col("id_a") < F.col("id_b"))
-        .withColumn("sim", sim)
+        .withColumn("sim", _cosine("va", "vb"))
         .where(F.col("sim") >= threshold)
         .select("id_a", "id_b")
     )
@@ -581,7 +539,7 @@ def pq_encode(embeddings: DataFrame, codebooks) -> DataFrame:
             codes[:, j] = d.argmin(axis=1).astype(np.int32)
         return pd.Series(list(codes))
 
-    # same inferred-filter duplication guard as _nearest_cell_bc
+    # same inferred-filter duplication guard as _nearest_centroid
     return embeddings.select(
         "vec_id", enc.asNondeterministic()(_as_double("embedding")).alias("codes")
     )
@@ -698,13 +656,7 @@ def _adc_rerank(partial: DataFrame, emb: DataFrame, n_queries: int, k: int, refi
     if refine > 0:
         # global ADC shortlist: the per-partition candidate union cut to
         # the exact global top-`refine` (ties by id) - layout-invariant
-        w_adc = Window.partitionBy("query_id").orderBy(
-            F.col("score").desc(), F.col("neighbor_id").asc()
-        )
-        shortlist = (
-            partial.withColumn("r", F.row_number().over(w_adc))
-            .where(F.col("r") <= refine)
-        )
+        shortlist = _top_k(partial, "score", refine, rank="r")
         # exact re-rank: fetch raw vectors for the (tiny) shortlist via
         # a broadcast join, rescore with true cosine
         queries = emb.where(F.col("vec_id") < n_queries).select(
@@ -716,16 +668,8 @@ def _adc_rerank(partial: DataFrame, emb: DataFrame, n_queries: int, k: int, refi
             .join(emb.withColumnRenamed("vec_id", "neighbor_id"), "neighbor_id")
             .join(F.broadcast(queries), "query_id")
         )
-        sim = _dot(F.col("q"), F.col("v")) / (
-            F.sqrt(_dot(F.col("q"), F.col("q"))) * F.sqrt(_dot(F.col("v"), F.col("v")))
-        )
-        partial = scored.withColumn("score", sim)
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("neighbor_id").asc())
-    return (
-        partial.withColumn("rnk", F.row_number().over(w))
-        .where(F.col("rnk") <= k)
-        .select("query_id", "neighbor_id", "rnk")
-    )
+        partial = scored.withColumn("score", _cosine("q", "v"))
+    return _top_k(partial, "score", k)
 
 
 def ivf_pq_topk(
@@ -767,14 +711,15 @@ def ivf_pq_topk(
     books = np.asarray(codebooks, dtype=np.float64)
 
     emb = embeddings.select("vec_id", _as_double("embedding").alias("v"))
+    bc_cells = _centroid_broadcast(emb, centroids)
     corpus = pq_encode(embeddings, books).join(
-        emb.select("vec_id", _assign_cell(emb, F.col("v"), centroids).alias("cell")), "vec_id"
+        emb.select("vec_id", _nearest_centroid(F.col("v"), bc_cells).alias("cell")), "vec_id"
     ).select(F.col("vec_id").alias("neighbor_id"), "codes", "cell")
     queries = (
         emb.where(F.col("vec_id") < n_queries)
         .select(
             F.col("vec_id").alias("query_id"),
-            _assign_cells(emb, F.col("v"), centroids, nprobe).alias("cells"),
+            _nearest_centroids(F.col("v"), bc_cells, nprobe).alias("cells"),
         )
         .withColumn("cell", F.explode("cells"))
         .drop("cells")
