@@ -235,6 +235,128 @@ def test_batch_matches_scalar_on_holed_polygons(keep_points_and_lines):
     assert stage_rows(spans, tms, tm_ids, config) == want
 
 
+def _fixed(v: int) -> float:
+    """A float whose fixed-point value int(f * 1e10) is exactly ``v``."""
+    import math
+
+    f = v / 1e10
+    while int(f * 1e10) < v:
+        f = math.nextafter(f, math.inf)
+    while int(f * 1e10) > v:
+        f = math.nextafter(f, -math.inf)
+    assert int(f * 1e10) == v
+    return f
+
+
+# shapes in units of deepest-level cells: integer coordinates lie exactly
+# on cell edges (the left/bottom edge of a cell is inclusive, the
+# right/top edge of its neighbour exclusive)
+_BIG = [(0, 0), (2000, 0), (2000, 2000), (0, 2000)]
+_CELL_SHAPES = {
+    "two vertices in one deepest cell": [[(0.2, 0.3), (0.7, 0.6), (40.5, 0.5), (40.5, 40.5), (0.5, 40.5)]],
+    "vertices sharing cells down to deepest-1": [[(0.5, 0.5), (1.5, 0.5), (1.5, 1.5), (60.5, 30.5), (20.5, 50.5)]],
+    "vertices on cell edges": [[(2, 2), (34, 2), (34, 18), (18, 18), (18, 34), (2, 34)]],
+    "long segment skimming vertices": [
+        [(0.5, 0.5), (300.5, 0.7), (300.5, 40.5), (200.7, 0.95), (150.3, 1.2), (100.2, 1.1), (0.5, 20.5)]
+    ],
+    "three holes": [
+        _BIG,
+        [(100, 100), (100, 300), (300, 300), (300, 100)],
+        [(500.5, 500.5), (500.5, 900.5), (900.5, 900.5), (900.5, 500.5)],
+        [(1200, 200), (1200, 400), (1500, 400)],
+    ],
+    "hole with a vertex on the outer's edge": [_BIG, [(0, 800), (400, 1000), (400, 600)]],
+    "hole touching the outer's vertex": [_BIG, [(0, 0), (300, 600), (600, 300)]],
+    "hole outside the outer": [
+        [(0, 0), (500, 0), (500, 500), (0, 500)],
+        [(800, 800), (800, 1200), (1200, 1200), (1200, 800)],
+    ],
+    "hole collapsing at the coarsest zoom": [_BIG, [(900.2, 900.2), (900.2, 902.7), (902.7, 902.7), (902.7, 900.2)]],
+    "hole equal to the outer": [_BIG, _BIG[::-1]],
+    "two holes equal to the outer": [_BIG, _BIG[::-1], _BIG[2::-1] + _BIG[:2:-1]],
+}
+
+
+@pytest.mark.parametrize(
+    "grid, tm_ids",
+    [("NetherlandsRDNewQuad", [5, 9, 12]), ((26, 16.0 / (1 << 26)), [18, 22, 26])],
+    ids=["rd-5-9-12", "deepest-int64-level-30"],
+)
+@pytest.mark.parametrize("keep_points_and_lines", [False, True])
+def test_batch_matches_scalar_on_cell_edge_cases(grid, tm_ids, keep_points_and_lines):
+    """The descent's settled rows (segments whose endpoints share cells,
+    cells holding one occupied deepest cell) and the columnar lane's
+    holed polygons, on shapes placed on the deepest level's cell lattice:
+    on the RD grid at the snap stage's zooms, and on a grid whose deepest
+    level is 30, the deepest the int64 occupancy keys allow."""
+    from texel_spark.grid.fixedpoint import go_div
+    from texel_spark.kernel.pointindex import VECTOR_TILE_INTERNAL_PIXEL_RESOLUTION
+
+    tms = simple_tms(*grid) if isinstance(grid, tuple) else load_embedded(grid)
+    deepest = max(tm_ids) + tms.level_diff(VECTOR_TILE_INTERNAL_PIXEL_RESOLUTION)
+    assert deepest in (24, 30)
+    ext = tms.int_root_extent(0)
+    res = go_div(ext[2] - ext[0], 1 << deepest)
+    # RD: x 150 km, y 450 km; the level-30 grid: 1000 cells from its origin
+    bx, by = ((15 * 10**14 - ext[0]) // res, (45 * 10**14 - ext[1]) // res) if deepest == 24 else (1000, 1000)
+
+    def pt(u, v):
+        return (_fixed(ext[0] + round((bx + u) * res)), _fixed(ext[1] + round((by + v) * res)))
+
+    spans = [(name, 0, span_wkt([[[pt(u, v) for u, v in ring] for ring in poly]])) for name, poly in _CELL_SHAPES.items()]
+    config = SnapConfig(
+        keep_points_and_lines=keep_points_and_lines,
+        reverse_winding_order=keep_points_and_lines,
+        ignore_outside_grid=True,
+    )
+    want = scalar_rows(spans, tms, tm_ids, config)
+    # the holed shapes do what their names say at every zoom: (polygons,
+    # rings); the tiny hole is gone at the coarsest (a point polygon of its
+    # own with keep_points_and_lines), the outer and one of two equal
+    # inners are deduped away, leaving the other inner as a polygon
+    shape = {(r[0], r[2]): (r[-1], r[5].count("[(")) for r in want}
+    for zoom in tm_ids:
+        assert shape["three holes", zoom] == (1, 4)
+        assert shape["hole outside the outer", zoom] == (2, 2)
+        assert shape["hole equal to the outer", zoom] == (1, 2)
+        assert shape["two holes equal to the outer", zoom] == (1, 1)
+    assert shape["hole collapsing at the coarsest zoom", max(tm_ids)] == (1, 2)
+    assert shape["hole collapsing at the coarsest zoom", min(tm_ids)] == ((2, 2) if keep_points_and_lines else (1, 1))
+    assert stage_rows(spans, tms, tm_ids, config) == want
+
+
+def test_ray_cast_matches_ring_contains():
+    """The columnar lane's vectorized ray cast against the scalar oracle
+    (geomfuncs.ray_intersect / ring_contains): every (point, edge) pair of
+    a small lattice, with points on vertices, on edges, one ulp off them,
+    and vertical, horizontal and zero-length edges; then whole rings."""
+    import math
+
+    import numpy as np
+
+    from texel_spark.kernel.geomfuncs import ray_intersect, ring_contains
+    from texel_spark.kernel.snap_batch import _inners_matched, _ray_intersect_np
+
+    grid = [0.0, 1.0, 1.5, 3.0]
+    verts = [(x, y) for x in grid for y in grid]
+    pts = verts + [(math.nextafter(x, -math.inf), y) for x, y in verts] + [(x + 0.25, y + 0.5) for x, y in verts]
+    pairs = [(p, a, b) for p in pts for a in verts for b in verts]
+    px, py, sx, sy, ex, ey = (np.array(c) for c in zip(*((*p, *a, *b) for p, a, b in pairs)))
+    hits, on = _ray_intersect_np(px, py, sx, sy, ex, ey)
+    assert list(zip(hits.tolist(), on.tolist())) == [ray_intersect(p, a, b) for p, a, b in pairs]
+
+    rng = random.Random(5)
+    outer = [(0.0, 0.0), (3.0, 0.0), (3.0, 1.5), (1.5, 1.5), (1.5, 3.0), (0.0, 3.0)]
+    inners = [[rng.choice(pts) for _ in range(rng.randint(1, 4))] for _ in range(300)]
+    fx = np.array([p[0] for p in outer] + [p[0] for r in inners for p in r])
+    fy = np.array([p[1] for p in outer] + [p[1] for r in inners for p in r])
+    ends = np.cumsum([len(outer)] + [len(r) for r in inners])
+    n = len(inners)
+    got = _inners_matched(fx, fy, np.zeros(n, np.int64), np.full(n, len(outer)), ends[:-1], ends[1:])
+    want = [any(ring_contains(outer, v)[0] for v in r) for r in inners]
+    assert got.tolist() == want and 0 < sum(want) < n
+
+
 def _corpus_spans(first_doc, n_docs):
     """The geometry spans of documents first_doc .. first_doc + n_docs - 1."""
     from texel_spark.sources.documents import build_document
@@ -282,6 +404,44 @@ def test_stage_prints_each_snapped_value_one_way():
     assert {v: t for v, t in texts.items() if len(t) > 1} == {}
 
 
+def test_descent_walks_only_undecided_rows():
+    """The quadtree descent settles the (segment, cell) rows that have one
+    possible outcome from the endpoints' deepest cells and walks only the
+    rest.  On perfbench's seed-7 corpus (its first 1,400 documents, 1,985
+    spans, zooms 5/9/12, one batch) the walk over every row fed 248,371
+    rows to line_intersects_np and 450,970 frontier rows to the per-level
+    step; both must stay at a fifth of that or less."""
+    from unittest import mock
+
+    from tests.snap_rows import spans_pdf
+    from texel_spark.kernel import snap_batch
+    from texel_spark.operators.snap_tiles import _process_batch
+
+    spans = _corpus_spans(7 * 4000, 1400)
+    assert len(spans) == 1985
+    tested, walked = [], []
+    line_intersects_np = snap_batch.line_intersects_np
+    descend_level = snap_batch._descend_level
+
+    def count_tested(p1x, *args):
+        tested.append(len(p1x))
+        return line_intersects_np(p1x, *args)
+
+    def count_walked(seg, *args):
+        walked.append(seg.size)
+        return descend_level(seg, *args)
+
+    with mock.patch.object(snap_batch, "line_intersects_np", count_tested), mock.patch.object(
+        snap_batch, "_descend_level", count_walked
+    ):
+        out = _process_batch(spans_pdf(spans), load_embedded("NetherlandsRDNewQuad"), [5, 9, 12],
+                             SnapConfig(ignore_outside_grid=True))
+    assert len(out) == 3 * len(spans)
+    assert 0 < sum(tested) <= 248_371 // 5
+    assert 0 < sum(walked) <= 450_970 // 5
+    assert len(walked) <= 24  # one step per level below the root
+
+
 def test_ring_handle_maps_centroids_exactly_and_rejects_other_points():
     """BatchSnapStore.ring_handle puts a scalar helper's float ring back
     on its level's centroid ints, also where RD y-ordinates exceed 2^51
@@ -310,9 +470,10 @@ def test_kernel_columnar_contract_as_perfbench_replays_it():
     """perfbench's kernel replay calls snap_flat_batch as below and reads
     ``results[m] is None`` as "member m took the columnar lane"
     (kernel.columnar_share).  Pin that contract: every member in
-    ``columnar`` has a None result, holed and multipolygon members come
-    back as dicts, and the stage rows built from the columnar entries
-    equal the scalar kernel's rows."""
+    ``columnar`` has a None result, one-ring and holed one-outer members
+    take the lane, the parts of a multipolygon come back as dicts (the
+    stage merges them), and the stage rows built from the columnar
+    entries equal the scalar kernel's rows."""
     import numpy as np
 
     from texel_spark.functions.wkt_batch import parse_polygons_batch_resilient
@@ -328,6 +489,9 @@ def test_kernel_columnar_contract_as_perfbench_replays_it():
         spans.append((f"one-ring-{i}", 0, span_wkt([[_random_ring(rng, cx, cy, 3_000, 8)]])))
     spans.append(("holed", 0, span_wkt([[_random_ring(rng, 150_000, 450_000, 4_000, 9),
                                           _random_ring(rng, 150_000, 450_000, 1_000, 5)]])))
+    spans.append(("two-holes", 0, span_wkt([[_random_ring(rng, 130_000, 430_000, 9_000, 12),
+                                             _random_ring(rng, 127_000, 430_000, 1_500, 5),
+                                             _random_ring(rng, 133_000, 430_000, 1_500, 6)]])))
     spans.append(("multi", 0, span_wkt([[_random_ring(rng, 120_000, 420_000, 2_000, 6)],
                                         [_random_ring(rng, 180_000, 480_000, 2_000, 7)]], multi=True)))
 
@@ -343,15 +507,15 @@ def test_kernel_columnar_contract_as_perfbench_replays_it():
         collect_columnar=True,
     )
 
-    col_members = set(np.concatenate([mem for mem, _, _, _ in columnar.values()]).tolist())
-    assert col_members
+    col_members = set(columnar[0].tolist())
     assert all(results[m] is None for m in col_members)
     doc_of_member = [spans[int(parsed.rows[fr])][0] for fr in parsed.member_fastrow]
     dict_docs = {doc_of_member[m] for m in range(n_members) if results[m] is not None}
-    assert {"holed", "multi"} <= dict_docs
+    assert dict_docs == {"multi"}
     col_docs = {doc_of_member[m] for m in col_members}
-    assert not col_docs & dict_docs
+    assert col_docs == {s[0] for s in spans} - {"multi"}
 
     col_spans = [s for s in spans if s[0] in col_docs]
     got = [r for r in stage_rows(spans, tms, tm_ids, config) if r[0] in col_docs]
     assert got == scalar_rows(col_spans, tms, tm_ids, config)
+    assert {r[5].count("[(") for r in got if r[0] == "two-holes"} == {3}

@@ -6,6 +6,7 @@ suite fast.
 """
 
 import math
+import re
 
 import pytest
 
@@ -1310,9 +1311,11 @@ def test_pq_plan_shape(spark):
     assert "CartesianProduct" not in p
     cents = train_kmeans_centroids(emb, n_cells=8, n_iters=2)
     p2 = ivf_pq_topk(emb, centroids=cents, codebooks=books)._jdf.queryExecution().executedPlan().toString()
-    # encode + corpus cell + query probes + ADC score = 4 Arrow stages;
-    # duplication would read 5+
-    assert p2.count("ArrowEvalPython") == 4
+    # corpus encode + cell in one projection, query probes, ADC score =
+    # 3 Arrow stages (duplication would read 4+); the corpus is read once,
+    # so no join pairs two reads of it on vec_id
+    assert p2.count("ArrowEvalPython") == 3
+    assert not re.search(r"Join \[vec_id#", p2)
     assert "CartesianProduct" not in p2
 
 

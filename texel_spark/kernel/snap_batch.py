@@ -10,13 +10,18 @@ array programs over ALL polygons of an Arrow batch at once:
   fixed-point pass, Morton-encode, and build per-level sorted occupancy
   arrays keyed by ``(poly_id << 2*level) | z`` (the batched equivalent of
   pointindex's per-level cell sets);
-* descent: one frontier of (segment, cell) rows per level; candidate
-  children are generated with the reference's quadrant case analysis
-  (pointindex.go:264-321) as masked (n, 4) matrices, occupancy is a
-  searchsorted membership test, and the segment x half-open-cell
-  intersection predicate (pointindex.go:393-427, including the
-  exclusive-edge/tip-touch exceptions and the intgeom.SegmentIntersect
-  (x, x) quirk) is evaluated on whole arrays;
+* descent: the (segment, cell) rows with one possible outcome are
+  settled from the endpoints' deepest cells - a segment whose endpoints
+  share a cell has that cell as its whole frontier, and a cell holding
+  an endpoint and no other occupied deepest cell of its member has the
+  endpoint's cell as its only child at every deeper level - so only the
+  rest walk the levels (_descend_level, a few percent of the rows).  A
+  step generates candidate children with the reference's quadrant case
+  analysis (pointindex.go:264-321) as masked (n, 4) matrices, tests
+  occupancy with searchsorted, and evaluates the segment x
+  half-open-cell intersection predicate (pointindex.go:393-427,
+  including the exclusive-edge/tip-touch exceptions and the
+  intgeom.SegmentIntersect (x, x) quirk) on whole arrays;
 * assembly (snap.addPointsAndSnap, snap.go:89-155): the per-segment
   point concatenation/dedup rules (snap.go:366-380), ring closure,
   backtrack detection (the _kmp_deduplicate fast-path test) and the
@@ -24,7 +29,13 @@ array programs over ALL polygons of an Arrow batch at once:
   all computed as per-level array passes; only rings that actually have
   snapping-created zigzags or self-tangency points (rare) drop to the
   scalar helpers, which stay the oracle for those behaviors; the rings
-  they return are mapped back onto the level's centroid ints.
+  they return are mapped back onto the level's centroid ints;
+* combine (snap.go:93-155, 177-324): members with one outer ring and
+  any number of inners take the columnar lane, which matches every
+  inner to the outer with one even-odd ray cast over all (inner vertex,
+  outer edge) pairs and emits geometry-table arrays; only multipolygon
+  parts, rings left to the scalar helpers and outers equal to two or
+  more inners go through the per-member dict lane.
 
 Snapped coordinates are carried as int64 fixed-point arrays end-to-end,
 and every ring leaves the kernel as a handle into them, so the Spark
@@ -47,7 +58,6 @@ from ..functions.wkt_batch import _exclusive_cumsum
 from ..grid import morton
 from ..grid.fixedpoint import go_div
 from .pointindex import VECTOR_TILE_INTERNAL_PIXEL_RESOLUTION, OutsideGridError
-from .geomfuncs import ring_contains
 from .snap import (
     _cleanup_new_ring,
     _dedupe_inners_outers,
@@ -220,16 +230,17 @@ def snap_flat_batch(
     are appended to ``store`` too (BatchSnapStore.ring_handle), so a
     result never holds float points.
 
-    With ``collect_columnar``, members that are single-ring and fully on
-    the fast path (the overwhelmingly common case) skip the per-member
-    dict entirely: results[m] is None and their output lands in
-    ``columnar`` as {tm_id: (member_ids, a, b, rev)} arrays - zero
-    per-member Python.  ``need_dicts`` (bool per member) forces the dict
-    path for members the caller must merge (e.g. multipolygon parts).
-    The snap stage (operators.snap_tiles._process_batch) appends the
-    ``columnar`` arrays to its geometry table as one-polygon, one-ring
-    geometries; perfbench's kernel replay counts the None entries of
-    ``results`` as the columnar share."""
+    With ``collect_columnar``, members with one outer ring whose rings
+    all take the fast path (_columnar_level; the overwhelmingly common
+    case, holed or not) skip the per-member dict entirely: results[m] is
+    None and their output lands in ``columnar``, a geometry table of
+    arrays - (member, tm_id, n_polys) per geometry, rings per polygon,
+    (a, b, rev) per ring - with zero per-member Python.  ``need_dicts``
+    (bool per member) forces the dict path for members the caller must
+    merge (multipolygon parts).  The snap stage
+    (operators.snap_tiles._process_batch) appends ``columnar`` to its
+    own geometry table; perfbench's kernel replay counts the None
+    entries of ``results`` as the columnar share."""
     deepest_id = max(tm_ids)
     level_diff = tms.level_diff(VECTOR_TILE_INTERNAL_PIXEL_RESOLUTION)
     deepest_level = deepest_id + level_diff
@@ -238,7 +249,7 @@ def snap_flat_batch(
 
     results: list = [None] * n_members
     store = BatchSnapStore(tms, deepest_level)
-    col_parts: dict[int, list] = {}
+    col_parts: list = []
     mr_bounds = np.searchsorted(ring_member, np.arange(n_members + 1))
 
     if 2 * deepest_level > 60:
@@ -255,7 +266,7 @@ def snap_flat_batch(
                 for tm, polys in snap_polygon(rings, tms, list(tm_ids), config).items()
             }
         store.finish()
-        return results, store, {}
+        return results, store, _NO_GEOMETRIES
 
     # members per chunk so (member << 2*deepest_level) | z fits in int64
     max_chunk = max(1, 1 << max(0, 60 - 2 * deepest_level))
@@ -286,10 +297,7 @@ def snap_flat_batch(
             col_parts if collect_columnar else None,
         )
     store.finish()
-    columnar = {
-        tm: tuple(np.concatenate([p[k] for p in parts]) for k in range(4))
-        for tm, parts in col_parts.items()
-    }
+    columnar = tuple(map(np.concatenate, zip(*col_parts))) if col_parts else _NO_GEOMETRIES
     return results, store, columnar
 
 
@@ -335,6 +343,100 @@ def _correct_input_winding(xy, ring_start, ring_len, ring_local):
     out = xy.copy()
     out[starts_w + p] = xy[starts_w + lens_w[rep] - 1 - p]
     return out
+
+
+def _bit_length(a: np.ndarray) -> np.ndarray:
+    """int.bit_length of each non-negative int64 of ``a``."""
+    a = a.copy()
+    n = np.zeros(a.shape, dtype=np.int64)
+    for s in (32, 16, 8, 4, 2, 1):
+        big = a >= (1 << s)
+        n[big] += s
+        a[big] >>= s
+    return n + (a > 0)
+
+
+def _descend_level(seg, x, y, z, bounds, ends, seg_poly, keys, lv, e0, e1, span):
+    """One level of the per-segment quadtree descent (pointindex.go:264-321).
+
+    Frontier row i is segment ``seg[i]`` (endpoints from ``ends``, the
+    int64 arrays p1x, p1y, p2x, p2y) x the level-``lv - 1`` cell with
+    index ``x[i], y[i]``, Morton code ``z[i]`` and extent ``bounds``.
+    Returns the (seg, x, y, z) rows of the accepted level-``lv`` children
+    (cells of ``span``), row by row in the reference's order: candidate
+    children come from the quadrant case analysis as masked (n, 4)
+    matrices, occupancy is a searchsorted membership test in ``keys``
+    (the level's sorted ``(member << 2*lv) | z`` keys) and the rest go
+    through line_intersects_np."""
+    minx, miny, maxx, maxy = bounds
+    cx = minx + span  # the parent's centroid: its children are half its span
+    cy = miny + span
+    p1x, p1y, p2x, p2y = (e[seg] for e in ends)
+    # infinite quadrant of each endpoint wrt the parent centroid
+    # + half-open containment in the parent (pointindex.go:264-268)
+    q1 = (p1x >= cx).astype(np.int64) | ((p1y >= cy).astype(np.int64) << 1)
+    q2 = (p2x >= cx).astype(np.int64) | ((p2y >= cy).astype(np.int64) << 1)
+    in1 = (minx <= p1x) & (p1x < maxx) & (miny <= p1y) & (p1y < maxy)
+    in2 = (minx <= p2x) & (p2x < maxx) & (miny <= p2y) & (p2y < maxy)
+    diff = q1 ^ q2
+    same = diff == 0
+    adj = (diff == 1) | (diff == 2)
+    diag = diff == 3
+    both = in1 & in2
+    n = seg.size
+    # candidate quadrants in the scalar to_check order
+    qc = np.empty((n, 4), dtype=np.int64)
+    qc[:, 0] = q1
+    qc[:, 1] = np.where(adj, q2, q1 ^ 1)
+    qc[:, 2] = q1 ^ 2
+    qc[:, 3] = q2
+    valid = np.empty((n, 4), dtype=bool)
+    valid[:, 0] = True
+    valid[:, 1] = ~same
+    valid[:, 2] = diag
+    valid[:, 3] = diag
+    certain = np.zeros((n, 4), dtype=bool)
+    certain[:, 0] = np.where(diag, in1, both)
+    certain[:, 1] = np.where(adj, both, False)
+    certain[:, 3] = in2
+    # work compressed: only valid candidates are occupancy-checked, only
+    # occupied non-certain ones are intersection-tested, and the child
+    # cells are materialized for accepted rows alone (candidate order =
+    # row-major ravel order, preserved throughout)
+    val_idx = np.flatnonzero(valid.ravel())
+    rows = val_idx >> 2
+    qcv = qc.ravel()[val_idx]
+    pkeys = (seg_poly[seg[rows]] << np.int64(2 * lv)) | (z[rows] << 2) | qcv
+    idx = np.searchsorted(keys, pkeys)
+    np.clip(idx, 0, max(keys.size - 1, 0), out=idx)
+    occ = (keys[idx] == pkeys) if keys.size else np.zeros(pkeys.size, dtype=bool)
+    live_pos = val_idx[occ]
+    rows_l = rows[occ]
+    cert_l = certain.ravel()[live_pos]
+    acc = cert_l.copy()
+    need = ~cert_l
+    if need.any():
+        qcl = qcv[occ][need]
+        rl = rows_l[need]
+        minxn = e0 + ((x[rl] << 1) | (qcl & 1)) * span
+        minyn = e1 + ((y[rl] << 1) | (qcl >> 1)) * span
+        acc[need] = line_intersects_np(
+            p1x[rl], p1y[rl], p2x[rl], p2y[rl], minxn, minyn, minxn + span, minyn + span
+        )
+    acc_full = np.zeros(n * 4, dtype=bool)
+    acc_full[live_pos[acc]] = True
+    # mutex pair: the second of (q1^01, q1^10) is skipped when the first
+    # was appended (pointindex.go:300-321)
+    acc_full[2::4] &= ~(diag & acc_full[1::4])
+    keep_idx = np.flatnonzero(acc_full)
+    rows_k = keep_idx >> 2
+    qck = qc.ravel()[keep_idx]
+    return (
+        seg[rows_k],
+        (x[rows_k] << 1) | (qck & 1),
+        (y[rows_k] << 1) | (qck >> 1),
+        (z[rows_k] << 2) | qck,
+    )
 
 
 def _snap_chunk(
@@ -394,8 +496,10 @@ def _snap_chunk(
                 results[res_offset + pi] = {}
         return
 
-    z_deep = morton.to_z_np(dxs[alive_v], dys[alive_v])
-    key_deep = np.sort((vpoly[alive_v] << (2 * deepest_level)) | z_deep)
+    zv = np.zeros(n_v, dtype=np.int64)
+    zv[alive_v] = morton.to_z_np(dxs[alive_v], dys[alive_v])
+    vkey = (vpoly << (2 * deepest_level)) | zv
+    key_deep = np.sort(vkey[alive_v])
     level_keys: dict[int, np.ndarray] = {}
     for lv in range(deepest_level, -1, -1):
         arr = key_deep >> (2 * (deepest_level - lv))
@@ -408,123 +512,92 @@ def _snap_chunk(
     ring_end = ring_start + ring_len - 1
     next_idx[ring_end] = ring_start
     n_segs = n_v
-    seg_poly = vpoly
-    P1X, P1Y = ivx, ivy
-    P2X, P2Y = ivx[next_idx], ivy[next_idx]
+    ends = (ivx, ivy, ivx[next_idx], ivy[next_idx])
+    dx2, dy2 = dxs[next_idx], dys[next_idx]
 
-    # -- descent (pointindex.go:200-345), one frontier per level -------------
+    # -- descent (pointindex.go:200-345) -------------------------------------
+    # Most (segment, cell) rows of the reference's frontier have one
+    # possible outcome, so they are settled from the endpoints' deepest
+    # cells and only the rest walk the levels (_descend_level).  Both
+    # rules need an endpoint inside its own deepest cell ("exact": go_div
+    # truncates a point just below the grid origin into cell 0); segments
+    # with an inexact endpoint walk from the root.
+    # * Before divergence: while both endpoints share their cell, that cell
+    #   is the whole frontier (q1 == q2, certain, occupied by p1), so a
+    #   segment joins the walk below ``shared``, the deepest shared level.
+    # * After isolation: a cell that holds an endpoint and no other
+    #   occupied deepest cell of its member has one child per level, the
+    #   endpoint's (slot 0 for p1, the last valid slot for p2, never the
+    #   mutex slot), accepted since it contains the endpoint.
+    # p1's cell is always first in a segment's frontier and p2's last, so a
+    # level is recorded as [shared] + [settled p1] + [walked] + [settled p2]
+    # and the stable argsort by segment below yields the reference order.
+    exact = alive_v & (ivx >= ext0) & (ivy >= ext1)
+    seg_exact = exact & exact[next_idx]
+    live = seg_exact.copy()
+    loose = np.flatnonzero(alive_v & ~seg_exact)
+    if loose.size:
+        live[loose] = line_intersects_np(*(e[loose] for e in ends), *map(np.int64, int_extent))
+    shared = np.where(
+        seg_exact, deepest_level - _bit_length((dxs ^ dx2) | (dys ^ dy2)), np.where(live, 0, -1)
+    )
+    # isolation level of each occupied deepest cell: 1 + the deepest level
+    # it shares with another cell of its member (Morton order puts that
+    # cell next to it); -1 when it shares no level
+    occ = level_keys[deepest_level]
+    near = np.full(occ.size, -1, dtype=np.int64)
+    if occ.size > 1:
+        s = np.maximum(deepest_level - (_bit_length(occ[1:] ^ occ[:-1]) + 1) // 2, -1)
+        near[1:] = s
+        near[:-1] = np.maximum(near[:-1], s)
+    iso_v = np.full(n_v, deepest_level + 1, dtype=np.int64)
+    iso_v[exact] = near[np.searchsorted(occ, vkey[exact])] + 1
+    iso1 = np.where(seg_exact, iso_v, deepest_level + 1)
+    iso2 = np.where(seg_exact, iso_v[next_idx], deepest_level + 1)
+
     level_set = set(levels)
     e0 = np.int64(ext0)
     e1 = np.int64(ext1)
-    root_ok = line_intersects_np(
-        P1X, P1Y, P2X, P2Y,
-        np.int64(int_extent[0]), np.int64(int_extent[1]),
-        np.int64(int_extent[2]), np.int64(int_extent[3]),
-    )
-    f_seg = np.flatnonzero(root_ok & alive_v).astype(np.int64)
-    nf = f_seg.size
-    f_z = np.zeros(nf, dtype=np.int64)
-    f_x = np.zeros(nf, dtype=np.int64)
-    f_y = np.zeros(nf, dtype=np.int64)
-    f_minx = np.full(nf, int_extent[0], dtype=np.int64)
-    f_miny = np.full(nf, int_extent[1], dtype=np.int64)
-    f_maxx = np.full(nf, int_extent[2], dtype=np.int64)
-    f_maxy = np.full(nf, int_extent[3], dtype=np.int64)
-    f_cx = np.full(nf, root_cx, dtype=np.int64)
-    f_cy = np.full(nf, root_cy, dtype=np.int64)
-
     recorded: dict[int, tuple] = {}
     if 0 in level_set:
-        recorded[0] = (f_seg.copy(), f_cx.copy(), f_cy.copy())
-
+        whole = np.flatnonzero(shared >= 0)
+        recorded[0] = (whole, np.full(whole.size, root_cx), np.full(whole.size, root_cy))
+    f_seg = f_x = f_y = f_z = np.empty(0, dtype=np.int64)
     for lv in range(1, deepest_level + 1):
-        if f_seg.size == 0:
-            if lv in level_set:
-                recorded[lv] = (f_seg, f_cx, f_cy)
-            continue
-        span = spans[lv]
-        half = halves[lv]
-        p1x = P1X[f_seg]
-        p1y = P1Y[f_seg]
-        p2x = P2X[f_seg]
-        p2y = P2Y[f_seg]
-        # infinite quadrant of each endpoint wrt the parent centroid
-        # + half-open containment in the parent (pointindex.go:264-268)
-        q1 = (p1x >= f_cx).astype(np.int64) | ((p1y >= f_cy).astype(np.int64) << 1)
-        q2 = (p2x >= f_cx).astype(np.int64) | ((p2y >= f_cy).astype(np.int64) << 1)
-        in1 = (f_minx <= p1x) & (p1x < f_maxx) & (f_miny <= p1y) & (p1y < f_maxy)
-        in2 = (f_minx <= p2x) & (p2x < f_maxx) & (f_miny <= p2y) & (p2y < f_maxy)
-        diff = q1 ^ q2
-        same = diff == 0
-        adj = (diff == 1) | (diff == 2)
-        diag = diff == 3
-        both = in1 & in2
-        n = f_seg.size
-        # candidate quadrants in the scalar to_check order
-        qc = np.empty((n, 4), dtype=np.int64)
-        qc[:, 0] = q1
-        qc[:, 1] = np.where(adj, q2, q1 ^ 1)
-        qc[:, 2] = q1 ^ 2
-        qc[:, 3] = q2
-        valid = np.empty((n, 4), dtype=bool)
-        valid[:, 0] = True
-        valid[:, 1] = ~same
-        valid[:, 2] = diag
-        valid[:, 3] = diag
-        certain = np.zeros((n, 4), dtype=bool)
-        certain[:, 0] = np.where(diag, in1, both)
-        certain[:, 1] = np.where(adj, both, False)
-        certain[:, 3] = in2
-        # work compressed: only valid candidates are occupancy-checked,
-        # only occupied non-certain ones are intersection-tested, and the
-        # child cell arrays are materialized for accepted rows alone
-        # (candidate order = row-major ravel order, preserved throughout)
-        val_idx = np.flatnonzero(valid.ravel())
-        rows = val_idx >> 2
-        qcv = qc.ravel()[val_idx]
-        czv = (f_z[rows] << 2) | qcv
-        poly_f = seg_poly[f_seg]
-        pkeys = (poly_f[rows] << np.int64(2 * lv)) | czv
-        keys = level_keys[lv]
-        idx = np.searchsorted(keys, pkeys)
-        np.clip(idx, 0, max(keys.size - 1, 0), out=idx)
-        occ = (keys[idx] == pkeys) if keys.size else np.zeros(pkeys.size, dtype=bool)
-        live_pos = val_idx[occ]
-        rows_l = rows[occ]
-        cert_l = certain.ravel()[live_pos]
-        acc = cert_l.copy()
-        need = ~cert_l
-        if need.any():
-            qcl = qcv[occ][need]
-            rl = rows_l[need]
-            cxn = (f_x[rl] << 1) | (qcl & 1)
-            cyn = (f_y[rl] << 1) | (qcl >> 1)
-            minxn = e0 + cxn * span
-            minyn = e1 + cyn * span
-            acc[need] = line_intersects_np(
-                p1x[rl], p1y[rl], p2x[rl], p2y[rl],
-                minxn, minyn, minxn + span, minyn + span,
+        sh = deepest_level - lv
+        join = np.flatnonzero(shared == lv - 1)
+        if join.size:
+            f_seg = np.concatenate((f_seg, join))
+            f_x = np.concatenate((f_x, dxs[join] >> (sh + 1)))
+            f_y = np.concatenate((f_y, dys[join] >> (sh + 1)))
+            f_z = np.concatenate((f_z, zv[join] >> (2 * sh + 2)))
+        if f_seg.size:
+            if lv == 1:  # the root keeps its int extent
+                bounds = tuple(map(np.int64, int_extent))
+            else:
+                minx = e0 + f_x * spans[lv - 1]
+                miny = e1 + f_y * spans[lv - 1]
+                bounds = (minx, miny, minx + spans[lv - 1], miny + spans[lv - 1])
+            f_seg, f_x, f_y, f_z = _descend_level(
+                f_seg, f_x, f_y, f_z, bounds, ends, vpoly, level_keys[lv], lv, e0, e1, spans[lv]
             )
-        acc_full = np.zeros(n * 4, dtype=bool)
-        acc_full[live_pos[acc]] = True
-        # mutex pair: the second of (q1^01, q1^10) is skipped when the
-        # first was appended (pointindex.go:300-321)
-        acc_full[2::4] &= ~(diag & acc_full[1::4])
-        keep_idx = np.flatnonzero(acc_full)
-        rows_k = keep_idx >> 2
-        qck = qc.ravel()[keep_idx]
-        f_seg = f_seg[rows_k]
-        f_x = (f_x[rows_k] << 1) | (qck & 1)
-        f_y = (f_y[rows_k] << 1) | (qck >> 1)
-        f_z = (f_z[rows_k] << 2) | qck
-        f_minx = e0 + f_x * span
-        f_miny = e1 + f_y * span
-        f_maxx = f_minx + span
-        f_maxy = f_miny + span
-        f_cx = f_minx + half
-        f_cy = f_miny + half
+            settled = ((iso1[f_seg] <= lv) & (f_x == dxs[f_seg] >> sh) & (f_y == dys[f_seg] >> sh)) | (
+                (iso2[f_seg] <= lv) & (f_x == dx2[f_seg] >> sh) & (f_y == dy2[f_seg] >> sh)
+            )
+            if settled.any():
+                walk = ~settled
+                f_seg, f_x, f_y, f_z = f_seg[walk], f_x[walk], f_y[walk], f_z[walk]
         if lv in level_set:
-            recorded[lv] = (f_seg, f_cx, f_cy)
+            whole = np.flatnonzero(shared >= lv)
+            first = np.flatnonzero((shared >= 0) & (shared < lv) & (iso1 <= lv))
+            last = np.flatnonzero((shared >= 0) & (shared < lv) & (iso2 <= lv))
+            x = np.concatenate((dxs[whole] >> sh, dxs[first] >> sh, f_x, dx2[last] >> sh))
+            y = np.concatenate((dys[whole] >> sh, dys[first] >> sh, f_y, dy2[last] >> sh))
+            recorded[lv] = (
+                np.concatenate((whole, first, f_seg, last)),
+                e0 + x * spans[lv] + halves[lv],
+                e1 + y * spans[lv] + halves[lv],
+            )
 
     # -- per-level assembly arrays + hit-multiple maps ------------------------
     hit_maps: dict[tuple[int, int], dict] = {}  # (level, ring gid) -> {int vertex: (ring_local,)}
@@ -568,43 +641,31 @@ def _snap_chunk(
             lv_i, seg_s, ix, iy, starts, vring, ring_start, ring_len, alive_seg, hit_maps, store
         )
 
-    # -- columnar fast lane: single-ring members that are FAST/PL at every
-    #    level need no per-member Python at all - their (a, b, rev) spans
-    #    go straight into per-level arrays ---------------------------------
+    # -- columnar lane: members with one outer ring and k >= 0 inners need
+    #    no per-member Python unless a ring is left to the scalar helpers or
+    #    the scalar dedupe could delete rings (_dict_members) --------------
     keep_pl = config.keep_points_and_lines
     rev_cfg = bool(config.reverse_winding_order)
-    columnar_sel = None
-    if col_parts is not None and not keep_pl:
-        ring_count = mr_bounds[1:] - mr_bounds[:-1]
-        elig = (ring_count == 1) & ~dead
+    columnar_sel = np.zeros(n_members, dtype=bool)
+    if col_parts is not None:
+        elig = ~dead & (mr_bounds[1:] > mr_bounds[:-1])
         if need_dicts is not None:
             elig &= ~need_dicts
+        for lv_i in levels:
+            elig &= ~_dict_members(lvl[lv_i], ring_member, mr_bounds, n_members)
         if elig.any():
-            fr_all = mr_bounds[:-1]  # first (only) ring per member
-            ok = elig.copy()
             for lv_i in levels:
-                L = lvl[lv_i]
-                ok &= L["status"][fr_all] != _SCALAR
-            if ok.any():
-                midx = np.flatnonzero(ok)
-                fok = fr_all[midx]
-                for lv_i in levels:
-                    L = lvl[lv_i]
-                    sub = L["status"][fok] == _FAST
-                    if sub.any():
-                        mm = midx[sub] + res_offset
-                        fs = fok[sub]
-                        rev = L["det"][fs] < 0
-                        if rev_cfg:
-                            rev = ~rev
-                        col_parts.setdefault(tm_ids_by_level[lv_i], []).append(
-                            (mm, L["cs"][fs], L["ce2"][fs], rev)
-                        )
-                columnar_sel = ok
+                col_parts.append(
+                    _columnar_level(
+                        lvl[lv_i], elig, ring_member, ring_local, mr_bounds, keep_pl, rev_cfg,
+                        res_offset, tm_ids_by_level[lv_i],
+                    )
+                )
+            columnar_sel = elig
 
     # -- per-member combine (light Python over ring descriptors) --------------
     for pi in range(n_members):
-        if dead[pi] or (columnar_sel is not None and columnar_sel[pi]):
+        if dead[pi] or columnar_sel[pi]:
             continue
         r0 = int(mr_bounds[pi])
         r1 = int(mr_bounds[pi + 1])
@@ -711,16 +772,151 @@ def _assembly_arrays(lv_i, seg_s, ix, iy, starts, vring, ring_start, ring_len, a
     }
 
 
+def _point_hashes(fx, fy):
+    """Per-point mix of the float bit patterns; a ring's content hash for
+    the dedupe prefilter is its sum over the ring (uint64, wrapping), so
+    it is rotation and reversal invariant."""
+    return fx.view(np.uint64) * _HASH_C1 + fy.view(np.uint64) * _HASH_C2
+
+
+def _ring_hashes(L, rings):
+    """Content hash of each fast-path ring's span [cs, ce2)."""
+    base = L["base"]
+    cum = np.concatenate((np.zeros(1, dtype=np.uint64), np.cumsum(_point_hashes(L["fx"], L["fy"]), dtype=np.uint64)))
+    return cum[L["ce2"][rings] - base] - cum[L["cs"][rings] - base]
+
+
+def _dict_members(L, ring_member, mr_bounds, n_members):
+    """Members the columnar lane cannot take at this level: those with a
+    ring left to the scalar helpers (_SCALAR), and those whose fast-path
+    outer has the (length, hash) signature of two or more fast-path
+    inners.  Only such a member can lose rings to the scalar dedupe
+    (snap.go:177-249): a group of equal rings deletes some only when it
+    holds an outer and more inners than outers, and rings of unequal
+    signature are unequal."""
+    status = L["status"]
+    out = np.bincount(ring_member[status == _SCALAR], minlength=n_members) > 0
+    fast = status == _FAST
+    outer = mr_bounds[:-1][ring_member]
+    r = np.flatnonzero(fast & fast[outer] & (np.arange(ring_member.size) != outer))
+    if r.size > 1:
+        o = outer[r]
+        ln = L["ce2"] - L["cs"]
+        same = (ln[r] == ln[o]) & (_ring_hashes(L, r) == _ring_hashes(L, o))
+        out |= np.bincount(ring_member[r[same]], minlength=n_members) >= 2
+    return out
+
+
+def _columnar_level(L, elig, ring_member, ring_local, mr_bounds, keep_pl, rev_cfg, res_offset, tm_id):
+    """One level of the columnar lane: snap.addPointsAndSnap's tail
+    (snap.go:93-155, 277-324) for one-outer members, over all ``elig``
+    members at once.  An inner with a vertex in the fast-path outer (or
+    on it) joins the outer's polygon; every other fast-path inner becomes
+    a reversed polygon of its own.  A collapsed (_PL) ring is dropped, and
+    a collapsed outer kills the level, unless ``keep_pl``: then each
+    collapsed ring follows as a polygon of its own, unreversed.  Returns
+    the level's geometries as (member, tm_id, n_polys) per geometry,
+    rings per polygon and (a, b, rev) per ring."""
+    fast = L["status"] == _FAST
+    outer = mr_bounds[:-1][ring_member]
+    take = elig[ring_member]
+    if not keep_pl:
+        take &= fast & fast[outer]
+    r = np.flatnonzero(take)
+    if r.size == 0:
+        return _NO_GEOMETRIES
+    m = ring_member[r]
+    local = ring_local[r]
+    collapsed = ~fast[r]
+    inner = (local > 0) & ~collapsed
+    cs, ce2, det = L["cs"][r], L["ce2"][r], L["det"][r]
+    rev = np.where(inner, det > 0, det < 0)
+    # polygon 0 is the outer and its matched inners, in ring order; then
+    # each turned inner, then each collapsed ring
+    poly_key = np.where(collapsed, local + ring_member.size, 0)
+    if inner.any():
+        o = outer[r[inner]]
+        matched = fast[o]
+        if matched.any():
+            base = L["base"]
+            sub = np.flatnonzero(matched)
+            matched[sub] = _inners_matched(
+                L["fx"], L["fy"], L["cs"][o[sub]] - base, L["ce2"][o[sub]] - base,
+                cs[inner][sub] - base, ce2[inner][sub] - base,
+            )
+        poly_key[inner] = np.where(matched, 0, local[inner])
+        rev[inner] ^= ~matched
+    rev = ~collapsed & (rev != rev_cfg)
+    order = np.lexsort((poly_key, m))
+    m, poly_key, cs, ce2, rev = m[order], poly_key[order], cs[order], ce2[order], rev[order]
+    poly_start = np.flatnonzero(np.concatenate(([True], (m[1:] != m[:-1]) | (poly_key[1:] != poly_key[:-1]))))
+    poly_m = m[poly_start]
+    geom_start = np.flatnonzero(np.concatenate(([True], poly_m[1:] != poly_m[:-1])))
+    return (
+        poly_m[geom_start] + res_offset,
+        np.full(geom_start.size, tm_id, dtype=np.int64),
+        np.diff(np.append(geom_start, poly_m.size)),
+        np.diff(np.append(poly_start, m.size)),
+        cs,
+        ce2,
+        rev,
+    )
+
+
+def _inners_matched(fx, fy, o_start, o_end, i_start, i_end):
+    """Whether inner ring i (points [i_start[i], i_end[i]) of ``fx``/``fy``)
+    has a vertex inside its outer ring [o_start[i], o_end[i]) or on its
+    boundary: geomfuncs.ring_contains (snap.go:343-363) for every (inner
+    vertex, outer edge) pair at once, with _ray_intersect_np's float
+    steps.  The even-odd parity and the boundary test read neither the
+    outer's orientation nor its edge order."""
+    n_in = i_end - i_start
+    vid = np.repeat(np.arange(n_in.size, dtype=np.int64), n_in)
+    v = i_start[vid] + np.arange(vid.size, dtype=np.int64) - _exclusive_cumsum(n_in)[:-1][vid]
+    n_edges = (o_end - o_start)[vid]
+    pid = np.repeat(np.arange(vid.size, dtype=np.int64), n_edges)
+    k = np.arange(pid.size, dtype=np.int64) - _exclusive_cumsum(n_edges)[:-1][pid]
+    o0 = o_start[vid][pid]
+    s = o0 + k
+    e = o0 + (k + 1) % n_edges[pid]
+    hits, on = _ray_intersect_np(fx[v][pid], fy[v][pid], fx[s], fy[s], fx[e], fy[e])
+    inside = (np.bincount(pid, on, vid.size) > 0) | (np.bincount(pid, hits, vid.size) % 2 == 1)
+    return np.bincount(vid, inside, n_in.size) > 0
+
+
+def _ray_intersect_np(px, py, sx, sy, ex, ey):
+    """Vectorized geomfuncs.ray_intersect (geomhelp.go:30-88): the ray from
+    each point (px, py) towards +x against the edge (sx, sy)-(ex, ey) ->
+    (intersects, on_boundary), with the same float comparisons and
+    nextafter nudges."""
+    swap = sx > ex
+    sx, ex = np.where(swap, ex, sx), np.where(swap, sx, ex)
+    sy, ey = np.where(swap, ey, sy), np.where(swap, sy, ey)
+    at_s = px == sx
+    at_e = ~at_s & (px == ex)
+    on = at_s & (py == sy)
+    on |= at_s & (sx == ex) & (((sy > ey) & (sy >= py) & (py >= ey)) | ((ey > sy) & (ey >= py) & (py >= sy)))
+    on |= at_e & (py == ey)
+    px = np.where(at_s | at_e, np.nextafter(px, np.inf), px)
+    rest = ~on & (px >= sx) & (px <= ex)
+    top = np.maximum(sy, ey)
+    bot = np.minimum(sy, ey)
+    below = rest & (py < bot)
+    mid = rest & (py <= top) & (py >= bot)
+    # overflow reads inf, as in Python; x/0 arises only in rows decided above
+    with np.errstate(all="ignore"):
+        rs = (py - sy) / (px - sx)
+        ds = (ey - sy) / (ex - sx)
+    return below | (mid & (rs != ds) & (rs <= ds)), on | (mid & (rs == ds))
+
+
 def _hash_tuple_ring(ring) -> int:
     """Content hash of a scalar-path ring (a list of float tuples) for the
-    dedupe prefilter in _combine_member_level: the same mix of the float
-    bit patterns that it applies to store-handle spans, summed, so it is
-    rotation and reversal invariant."""
+    dedupe prefilter in _combine_member_level (_point_hashes summed)."""
     if not ring:
         return 0
     arr = np.asarray(ring, dtype=np.float64)
-    h = arr[:, 0].view(np.uint64) * _HASH_C1 + arr[:, 1].view(np.uint64) * _HASH_C2
-    return int(h.sum(dtype=np.uint64))
+    return int(_point_hashes(arr[:, 0], arr[:, 1]).sum(dtype=np.uint64))
 
 
 def _combine_member_level(L, r0, r1, lv_i, hit_maps, keep_pl, rev_cfg, store):
@@ -776,10 +972,8 @@ def _combine_member_level(L, r0, r1, lv_i, hit_maps, keep_pl, rev_cfg, store):
         sigs = []
         for ring in outers + inners:
             if isinstance(ring, tuple):
-                a, b, _ = ring
-                hx = fx[a - base : b - base].view(np.uint64) * _HASH_C1
-                hy = fy[a - base : b - base].view(np.uint64) * _HASH_C2
-                sigs.append((b - a, int((hx + hy).sum(dtype=np.uint64))))
+                a, b = ring[0] - base, ring[1] - base
+                sigs.append((b - a, int(_point_hashes(fx[a:b], fy[a:b]).sum(dtype=np.uint64))))
             else:
                 sigs.append((len(ring), _hash_tuple_ring(ring)))
         if len(sigs) != len(set(sigs)):
@@ -788,29 +982,9 @@ def _combine_member_level(L, r0, r1, lv_i, hit_maps, keep_pl, rev_cfg, store):
             outers, inners = _dedupe_inners_outers(outers, inners)
 
     if inners:
-        if len(outers) == 1 and isinstance(outers[0], tuple) and all(
-            isinstance(ih, tuple) for ih in inners
-        ):
-            # single-outer shortcut for _match_inners_to_polygons
-            # (snap.go:277-324): with one candidate polygon the first
-            # inner vertex contained in the outer decides the match, and
-            # an uncontained inner becomes a reversed standalone outer
-            outer_pts = floats(outers[0])
-            poly = [outers[0]]
-            turned = []
-            for ih in inners:
-                for v in floats(ih):
-                    c, _ = ring_contains(outer_pts, v)
-                    if c:
-                        poly.append(ih)
-                        break
-                else:
-                    turned.append((ih[0], ih[1], not ih[2]))
-            polygons = [poly] + [[t] for t in turned]
-        else:
-            outers_m = [floats(r) for r in outers]
-            inners_m = [floats(r) for r in inners]
-            polygons = _match_inners_to_polygons([[o] for o in outers_m], inners_m, (r1 - r0) > 1)
+        outers_m = [floats(r) for r in outers]
+        inners_m = [floats(r) for r in inners]
+        polygons = _match_inners_to_polygons([[o] for o in outers_m], inners_m, (r1 - r0) > 1)
     else:
         polygons = [[o] for o in outers]
 
@@ -824,3 +998,5 @@ def _combine_member_level(L, r0, r1, lv_i, hit_maps, keep_pl, rev_cfg, store):
 
 
 _EMPTY_HITS: dict = {}
+# the columnar lane's geometry table with no rows
+_NO_GEOMETRIES = (*(np.empty(0, dtype=np.int64) for _ in range(6)), np.empty(0, dtype=bool))

@@ -511,18 +511,25 @@ def train_pq_codebooks(
 
 def pq_encode(embeddings: DataFrame, codebooks) -> DataFrame:
     """Encode every vector to its m nearest-codeword indices:
-    (vec_id, codes array<int>) - ONE narrow Arrow pass, no shuffle.
+    (vec_id, codes array<int>) - ONE narrow Arrow pass, no shuffle
+    (_pq_codes)."""
+    import numpy as np
 
-    The (m, n_codes, sub) codebook tensor is broadcast once (kilobytes);
-    each Arrow batch is one reshape + m batched matmuls.  Encoding
-    quantizes the NORMALIZED vector under L2 - on the unit sphere that
-    is the cosine-optimal codeword.  Ties break toward the lower code
-    (np.argmin first-minimum), matching training.
+    bc = embeddings.sparkSession.sparkContext.broadcast(np.asarray(codebooks, dtype=np.float64))
+    return embeddings.select("vec_id", _pq_codes(_as_double("embedding"), bc).alias("codes"))
+
+
+def _pq_codes(v, bc):
+    """The m nearest-codeword indices of each vector ``v`` as array<int>.
+
+    The (m, n_codes, sub) codebook tensor ``bc`` is broadcast once
+    (kilobytes); each Arrow batch is one reshape + m batched matmuls.
+    Encoding quantizes the NORMALIZED vector under L2 - on the unit
+    sphere that is the cosine-optimal codeword.  Ties break toward the
+    lower code (np.argmin first-minimum), matching training.
     """
     import numpy as np
     from pyspark.sql.functions import pandas_udf
-
-    bc = embeddings.sparkSession.sparkContext.broadcast(np.asarray(codebooks, dtype=np.float64))
 
     @pandas_udf("array<int>")
     def enc(col: pd.Series) -> pd.Series:
@@ -540,9 +547,7 @@ def pq_encode(embeddings: DataFrame, codebooks) -> DataFrame:
         return pd.Series(list(codes))
 
     # same inferred-filter duplication guard as _nearest_centroid
-    return embeddings.select(
-        "vec_id", enc.asNondeterministic()(_as_double("embedding")).alias("codes")
-    )
+    return enc.asNondeterministic()(v)
 
 
 def pq_topk(
@@ -712,9 +717,12 @@ def ivf_pq_topk(
 
     emb = embeddings.select("vec_id", _as_double("embedding").alias("v"))
     bc_cells = _centroid_broadcast(emb, centroids)
-    corpus = pq_encode(embeddings, books).join(
-        emb.select("vec_id", _nearest_centroid(F.col("v"), bc_cells).alias("cell")), "vec_id"
-    ).select(F.col("vec_id").alias("neighbor_id"), "codes", "cell")
+    bc_books = embeddings.sparkSession.sparkContext.broadcast(books)
+    corpus = emb.select(
+        F.col("vec_id").alias("neighbor_id"),
+        _pq_codes(F.col("v"), bc_books).alias("codes"),
+        _nearest_centroid(F.col("v"), bc_cells).alias("cell"),
+    )
     queries = (
         emb.where(F.col("vec_id") < n_queries)
         .select(

@@ -111,8 +111,9 @@ def _process_batch(pdf, tms_, tm_ids_, cfg):
 
     Every snapped (row, zoom) polygon geometry lands in one geometry
     table of (a, b, rev) ring handles: the kernel's columnar lane adds
-    its per-zoom arrays (one polygon with one ring each), and the rows
-    with a dict result (holed polygons, multipolygons) add theirs.  One
+    its geometry arrays (one-outer polygons, holed or not), and the rows
+    with a dict result (multipolygons, rare rings the kernel's scalar
+    helpers build) add theirs.  One
     format_polygon_wkts call writes the table's WKT and one reduceat
     pass its bboxes.  Per-row Python only touches rows with a dict
     result, the rare rows the array parser rejects (3D, non-ASCII,
@@ -175,10 +176,9 @@ def _process_batch(pdf, tms_, tm_ids_, cfg):
     dict_geoms = np.asarray(geoms, dtype=np.int64).reshape(-1, 4)
     dict_handles = np.asarray(handles, dtype=np.int64).reshape(-1, 3)
     parts = [(*dict_geoms.T, np.asarray(rings, dtype=np.int64), *dict_handles.T)]
-    for zoom, (mem, a, b, rev) in columnar.items():
-        frows = parsed.member_fastrow[mem]
-        ones = np.ones(mem.size, dtype=np.int64)
-        parts.append((parsed.rows[frows], np.full(mem.size, zoom), parsed.is_multi[frows], ones, ones, a, b, rev))
+    mem, zoom, n_polys, n_rings, ra, rb, rrev = columnar
+    frows = parsed.member_fastrow[mem]
+    parts.append((parsed.rows[frows], zoom, parsed.is_multi[frows] | (n_polys > 1), n_polys, n_rings, ra, rb, rrev))
     row, zoom, is_multi, n_polys, n_rings, ra, rb, rrev = map(np.concatenate, zip(*parts))
     is_multi = is_multi.astype(bool)
     rrev = rrev.astype(bool)
@@ -230,9 +230,10 @@ def snap_documents(
     assembly (kernel/snap_batch.py) -> one digit-exact batch WKT emit
     per Arrow batch (_process_batch).  Every snapped polygon reaches
     that emit as int64 ring handles, so a snapped value has one WKT
-    text wherever it appears.  The dominant single-ring polygon gets
-    there as kernel arrays with no per-row Python; holed polygons and
-    multipolygons cost one Python visit per row.
+    text wherever it appears.  Polygons, holed or not, get there as
+    kernel arrays with no per-row Python; multipolygons and the rare
+    rings the kernel leaves to its scalar helpers cost one Python visit
+    per row.
     """
     spark = docs.sparkSession
     config = config or SnapConfig(keep_points_and_lines=False, ignore_outside_grid=True)

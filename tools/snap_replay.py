@@ -16,6 +16,9 @@ For each config it prints one JSON line:
   n_polys), so it reads the same whichever formatter wrote the text;
 * ``text_hash``: the same over the raw WKT text;
 * ``multi_text_values``: float values printed with more than one text;
+* ``columnar_share``: polygon members the kernel's columnar lane took
+  (``snap_flat_batch`` returned None for them) / all polygon members,
+  the ratio perfbench reports as ``kernel.columnar_share``;
 * ``cpu_s``: median process CPU seconds of one replay over ``--repeats``.
 
 Usage: python3 tools/snap_replay.py [--seed 7] [--docs 4000] [--repeats 3]
@@ -52,19 +55,33 @@ def corpus_spans(seed: int, n_docs: int):
 
 
 def replay(spans, tms, cfg):
-    """Every chunk through _process_batch; returns the row records."""
+    """Every chunk through _process_batch; returns the row records and
+    the columnar lane's share of the kernel's polygon members."""
+    from unittest import mock
+
     import pandas as pd
 
+    from texel_spark.kernel import snap_batch
     from texel_spark.operators.snap_tiles import _process_batch
 
+    snap_flat_batch = snap_batch.snap_flat_batch
+    lanes = {"columnar": 0, "members": 0}
+
+    def counted(*args, **kwargs):
+        results = snap_flat_batch(*args, **kwargs)
+        lanes["columnar"] += sum(r is None for r in results[0])
+        lanes["members"] += len(results[0])
+        return results
+
     out = []
-    for c0 in range(0, len(spans), CHUNK):
-        part = spans[c0 : c0 + CHUNK]
-        pdf = pd.DataFrame(
-            {"doc_id": [s[0] for s in part], "span_idx": [s[1] for s in part], "wkt": [s[2] for s in part]}
-        )
-        out.extend(_process_batch(pdf, tms, ZOOMS, cfg).to_dict("records"))
-    return out
+    with mock.patch.object(snap_batch, "snap_flat_batch", counted):
+        for c0 in range(0, len(spans), CHUNK):
+            part = spans[c0 : c0 + CHUNK]
+            pdf = pd.DataFrame(
+                {"doc_id": [s[0] for s in part], "span_idx": [s[1] for s in part], "wkt": [s[2] for s in part]}
+            )
+            out.extend(_process_batch(pdf, tms, ZOOMS, cfg).to_dict("records"))
+    return out, lanes["columnar"] / max(lanes["members"], 1)
 
 
 def summarize(records) -> dict:
@@ -116,10 +133,11 @@ def main() -> None:
         cpu = []
         for _ in range(max(1, args.repeats)):
             t0 = time.process_time()
-            records = replay(spans, tms, cfg)
+            records, columnar_share = replay(spans, tms, cfg)
             cpu.append(time.process_time() - t0)
         line = {"seed": args.seed, "docs": args.docs, "spans": len(spans), "config": name}
         line.update(summarize(records))
+        line["columnar_share"] = round(columnar_share, 4)
         line["cpu_s"] = round(statistics.median(cpu), 3)
         print(json.dumps(line), flush=True)
 
