@@ -122,6 +122,32 @@ def test_batch_outside_grid_raises_without_ignore():
         stage_rows(_spans([good, bad]), tms, [5], SnapConfig())
 
 
+@pytest.mark.parametrize("ignore_outside_grid", [True, False])
+def test_vertex_just_below_the_grid_origin_is_outside_the_grid(ignore_outside_grid):
+    """A vertex less than one deepest cell below the grid's int origin is
+    outside the grid in both kernels: its member is dropped under
+    ignore_outside_grid (the rest of the batch still snaps), and without
+    it both kernels raise OutsideGridError naming the same cell.
+    Truncating division (the reference's) puts the vertex in cell 0,
+    which does not hold it, so its segments snap to no point and the
+    whole batch fails."""
+    tms = simple_tms(4, 1.0)
+    tm_ids = [0, 2, 4]
+    edge = [[(-1e-9, 3.0), (5.0, 3.0), (5.0, 7.0), (-3e-9, 7.0)]]
+    inside = [[(1.0, 1.0), (9.0, 1.0), (9.0, 9.0), (1.0, 9.0)]]
+    config = SnapConfig(ignore_outside_grid=ignore_outside_grid)
+    if ignore_outside_grid:
+        _assert_stage_matches_scalar(_spans([edge, inside]), tms, tm_ids, config)
+        assert stage_rows(_spans([edge]), tms, tm_ids, config) == []
+        return
+    with pytest.raises(OutsideGridError) as scalar_err:
+        scalar_rows(_spans([edge]), tms, tm_ids, config)
+    with pytest.raises(OutsideGridError) as stage_err:
+        stage_rows(_spans([inside, edge]), tms, tm_ids, config)
+    assert str(stage_err.value) == str(scalar_err.value)
+    assert "(-1, 48)" in str(stage_err.value)
+
+
 def test_batch_matches_scalar_degenerate_and_self_touching():
     """Adversarial shapes: duplicate vertices, collinear runs, bowties,
     spikes, rings collapsing to lines/points - the paths where ring
@@ -233,6 +259,71 @@ def test_batch_matches_scalar_on_holed_polygons(keep_points_and_lines):
     assert n_polys["hole outside the outer", 6] == 2
     assert n_polys["hole collapsing at zoom 1", 1] == (2 if keep_points_and_lines else 1)
     assert stage_rows(spans, tms, tm_ids, config) == want
+
+
+_TINY = [(10.0, 10.0), (10.0, 10.3), (10.3, 10.3), (10.3, 10.0)]
+_SPIKE = [(2.0, 18.0), (6.0, 18.0), (6.0, 22.0), (6.0, 28.0), (6.0, 22.0), (2.0, 22.0)]
+_OUTSIDE = [(40.0, 40.0), (44.0, 40.0), (44.0, 44.0)]
+# the parts of each row, in order (simple_tms(6, 0.5) covers 0..32)
+_MULTI = {
+    "part collapsing at zoom 1": [[_SMALL_OUTER], [_TINY], [_FAR_HOLE]],
+    "parts on different lanes": [[_SMALL_OUTER], [_SPIKE], [_FAR_HOLE]],
+    "holed part": [[_FAR_HOLE], [_OUTER, [(3.0, 3.0), (3.0, 6.0), (6.0, 6.0), (6.0, 3.0)]]],
+    "one part left": [[_OUTSIDE], [_SMALL_OUTER]],
+    "all parts outside the grid": [[_OUTSIDE], [[(x + 10.0, y) for x, y in _OUTSIDE]]],
+}
+
+
+@pytest.mark.parametrize("reverse_winding_order", [False, True])
+@pytest.mark.parametrize("keep_points_and_lines", [False, True])
+def test_batch_matches_scalar_on_multipolygons(keep_points_and_lines, reverse_winding_order):
+    """Multipolygon parts take the kernel's lanes like polygons do and the
+    stage merges them per (row, zoom) in part order: a part collapsing at
+    one zoom, a part left to the scalar helpers between two columnar
+    parts, a holed part, a row with one part left (still a
+    MULTIPOLYGON), a row whose parts all vanish, and a batch whose every
+    polygon vanishes."""
+    from unittest import mock
+
+    from tests.snap_rows import spans_pdf
+    from texel_spark.kernel import snap_batch
+    from texel_spark.operators.snap_tiles import _process_batch
+
+    tms = simple_tms(6, 0.5)
+    tm_ids = [1, 3, 6]
+    config = SnapConfig(
+        keep_points_and_lines=keep_points_and_lines,
+        reverse_winding_order=reverse_winding_order,
+        ignore_outside_grid=True,
+    )
+    spans = [(name, 0, span_wkt(parts, multi=True)) for name, parts in _MULTI.items()]
+    want = scalar_rows(spans, tms, tm_ids, config)
+    shape = {(r[0], r[2]): (r[3], r[-1], r[5].count("[(")) for r in want}
+    # the shapes do what their names say: (kind, polygons, rings)
+    assert shape["part collapsing at zoom 1", 6] == ("multipolygon", 3, 3)
+    # the tiny part is a point polygon of its own at zoom 1, or gone
+    n = 3 if keep_points_and_lines else 2
+    assert shape["part collapsing at zoom 1", 1] == ("multipolygon", n, n)
+    assert shape["holed part", 6] == ("multipolygon", 2, 3)
+    assert shape["one part left", 6] == ("multipolygon", 1, 1)
+    assert not any(r[0] == "all parts outside the grid" for r in want)
+    assert stage_rows(spans, tms, tm_ids, config) == want
+
+    # the spike part goes to the scalar helpers, its neighbours do not
+    snap_flat_batch = snap_batch.snap_flat_batch
+    lanes = []
+
+    def spy(*args, **kwargs):
+        out = snap_flat_batch(*args, **kwargs)
+        lanes.extend(r is None for r in out[0])
+        return out
+
+    with mock.patch.object(snap_batch, "snap_flat_batch", spy):
+        _process_batch(spans_pdf(spans[1:2]), tms, tm_ids, config)
+    assert lanes == [True, False, True]
+
+    vanishing = [spans[-1], ("outside polygon", 0, span_wkt([[_OUTSIDE]]))]
+    assert stage_rows(vanishing, tms, tm_ids, config) == scalar_rows(vanishing, tms, tm_ids, config) == []
 
 
 def _fixed(v: int) -> float:
@@ -467,13 +558,13 @@ def test_ring_handle_maps_centroids_exactly_and_rejects_other_points():
 
 
 def test_kernel_columnar_contract_as_perfbench_replays_it():
-    """perfbench's kernel replay calls snap_flat_batch as below and reads
-    ``results[m] is None`` as "member m took the columnar lane"
-    (kernel.columnar_share).  Pin that contract: every member in
-    ``columnar`` has a None result, one-ring and holed one-outer members
-    take the lane, the parts of a multipolygon come back as dicts (the
-    stage merges them), and the stage rows built from the columnar
-    entries equal the scalar kernel's rows."""
+    """perfbench's kernel replay calls snap_flat_batch as below, with the
+    ``need_dicts`` and ``collect_columnar`` keywords the kernel
+    ignores, and reads ``results[m] is None`` as "member m took the
+    columnar lane" (kernel.columnar_share).  Pin that contract: every
+    member in ``columnar`` has a None result, one-ring and holed
+    one-outer members and the parts of a multipolygon all take the lane,
+    and the stage rows equal the scalar kernel's rows."""
     import numpy as np
 
     from texel_spark.functions.wkt_batch import parse_polygons_batch_resilient
@@ -508,14 +599,10 @@ def test_kernel_columnar_contract_as_perfbench_replays_it():
     )
 
     col_members = set(columnar[0].tolist())
-    assert all(results[m] is None for m in col_members)
-    doc_of_member = [spans[int(parsed.rows[fr])][0] for fr in parsed.member_fastrow]
-    dict_docs = {doc_of_member[m] for m in range(n_members) if results[m] is not None}
-    assert dict_docs == {"multi"}
-    col_docs = {doc_of_member[m] for m in col_members}
-    assert col_docs == {s[0] for s in spans} - {"multi"}
+    assert col_members == set(range(n_members))
+    assert all(r is None for r in results)
 
-    col_spans = [s for s in spans if s[0] in col_docs]
-    got = [r for r in stage_rows(spans, tms, tm_ids, config) if r[0] in col_docs]
-    assert got == scalar_rows(col_spans, tms, tm_ids, config)
+    got = stage_rows(spans, tms, tm_ids, config)
+    assert got == scalar_rows(spans, tms, tm_ids, config)
     assert {r[5].count("[(") for r in got if r[0] == "two-holes"} == {3}
+    assert {(r[3], r[-1]) for r in got if r[0] == "multi"} == {("multipolygon", 2)}

@@ -374,6 +374,14 @@ def _exclusive_cumsum(a: np.ndarray) -> np.ndarray:
     return out
 
 
+def _ragged(lens: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Index spans of ``lens`` items laid end to end: each item's span
+    (owner) and its position within that span (offset)."""
+    owner = np.repeat(np.arange(lens.size, dtype=np.int64), lens)
+    offset = np.arange(owner.size, dtype=np.int64) - _exclusive_cumsum(lens)[owner]
+    return owner, offset
+
+
 def _segment_sums(values: np.ndarray, bounds: np.ndarray) -> np.ndarray:
     """Sum of ``values`` over spans [bounds[i], bounds[i+1])."""
     c = _exclusive_cumsum(values)

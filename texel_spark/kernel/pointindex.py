@@ -106,13 +106,15 @@ class PointIndex:
     def insert_point(self, point) -> None:
         """Quantize a float point to the deepest grid (pointindex.go:134-139).
 
-        Division truncates toward zero like Go int64 division - that is what
-        makes a slightly-negative offset land in cell 0 and only genuinely
-        out-of-range coords fail.
+        Division floors, where the reference's int64 division truncates
+        toward zero: a point below the grid's int origin, even by less
+        than one cell, gets a negative cell and is outside the grid
+        (truncation puts it in cell 0, which does not hold it, so its
+        segments snap to no point; PARITY.md 2.3a).
         """
         ip = from_point(point)
-        deepest_x = go_div(ip[0] - self.int_extent[0], self.deepest_res)
-        deepest_y = go_div(ip[1] - self.int_extent[1], self.deepest_res)
+        deepest_x = (ip[0] - self.int_extent[0]) // self.deepest_res
+        deepest_y = (ip[1] - self.int_extent[1]) // self.deepest_res
         self.insert_coord(deepest_x, deepest_y)
 
     def insert_coord(self, deepest_x: int, deepest_y: int) -> None:

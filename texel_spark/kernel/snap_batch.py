@@ -7,9 +7,10 @@ per-segment quadtree descent, AND the ring-assembly tail - runs as numpy
 array programs over ALL polygons of an Arrow batch at once:
 
 * insertion: quantize every vertex of every polygon with one vectorized
-  fixed-point pass, Morton-encode, and build per-level sorted occupancy
-  arrays keyed by ``(poly_id << 2*level) | z`` (the batched equivalent of
-  pointindex's per-level cell sets);
+  fixed-point pass (floor division, so a vertex below the grid's int
+  origin is outside the grid), Morton-encode, and build per-level sorted
+  occupancy arrays keyed by ``(poly_id << 2*level) | z`` (the batched
+  equivalent of pointindex's per-level cell sets);
 * descent: the (segment, cell) rows with one possible outcome are
   settled from the endpoints' deepest cells - a segment whose endpoints
   share a cell has that cell as its whole frontier, and a cell holding
@@ -33,9 +34,10 @@ array programs over ALL polygons of an Arrow batch at once:
 * combine (snap.go:93-155, 177-324): members with one outer ring and
   any number of inners take the columnar lane, which matches every
   inner to the outer with one even-odd ray cast over all (inner vertex,
-  outer edge) pairs and emits geometry-table arrays; only multipolygon
-  parts, rings left to the scalar helpers and outers equal to two or
-  more inners go through the per-member dict lane.
+  outer edge) pairs and emits geometry-table arrays, multipolygon parts
+  included (the snap stage merges parts per row and zoom); only rings
+  left to the scalar helpers and outers equal to two or more inners go
+  through the per-member dict lane.
 
 Snapped coordinates are carried as int64 fixed-point arrays end-to-end,
 and every ring leaves the kernel as a handle into them, so the Spark
@@ -54,7 +56,7 @@ from __future__ import annotations
 
 import numpy as np
 
-from ..functions.wkt_batch import _exclusive_cumsum
+from ..functions.wkt_batch import _exclusive_cumsum, _ragged
 from ..grid import morton
 from ..grid.fixedpoint import go_div
 from .pointindex import VECTOR_TILE_INTERNAL_PIXEL_RESOLUTION, OutsideGridError
@@ -73,11 +75,6 @@ _HASH_C2 = np.uint64(0xBF58476D1CE4E5B9)
 _FAST = 0
 _PL = 1  # collapsed to < 3 points
 _SCALAR = 2  # backtracks or self-tangency: scalar helpers decide
-
-
-def _go_div_np(a: np.ndarray, b: int) -> np.ndarray:
-    """Vectorized Go int64 division (truncate toward zero), b > 0."""
-    return np.where(a >= 0, a // b, -((-a) // b))
 
 
 def line_intersects_np(p1x, p1y, p2x, p2y, minx, miny, maxx, maxy):
@@ -230,17 +227,22 @@ def snap_flat_batch(
     are appended to ``store`` too (BatchSnapStore.ring_handle), so a
     result never holds float points.
 
-    With ``collect_columnar``, members with one outer ring whose rings
-    all take the fast path (_columnar_level; the overwhelmingly common
-    case, holed or not) skip the per-member dict entirely: results[m] is
-    None and their output lands in ``columnar``, a geometry table of
-    arrays - (member, tm_id, n_polys) per geometry, rings per polygon,
-    (a, b, rev) per ring - with zero per-member Python.  ``need_dicts``
-    (bool per member) forces the dict path for members the caller must
-    merge (multipolygon parts).  The snap stage
-    (operators.snap_tiles._process_batch) appends ``columnar`` to its
-    own geometry table; perfbench's kernel replay counts the None
-    entries of ``results`` as the columnar share."""
+    Members with one outer ring whose rings all take the fast path
+    (_columnar_level; the overwhelmingly common case, holed or not, and
+    whether or not the member is a multipolygon part) skip the
+    per-member dict entirely: results[m] is None and their output lands
+    in ``columnar``, a geometry table of arrays - (member, tm_id,
+    n_polys) per geometry, rings per polygon, (a, b, rev) per ring -
+    with zero per-member Python.  The snap stage
+    (operators.snap_tiles._process_batch) merges ``columnar`` and the
+    dict results into one geometry table per (row, zoom); perfbench's
+    kernel replay counts the None entries of ``results`` as the
+    columnar share.
+
+    ``need_dicts`` and ``collect_columnar`` are accepted and ignored:
+    every member takes the same lane and the columnar table is always
+    collected.  They stay because perfbench's kernel replay still passes
+    both keywords."""
     deepest_id = max(tm_ids)
     level_diff = tms.level_diff(VECTOR_TILE_INTERNAL_PIXEL_RESOLUTION)
     deepest_level = deepest_id + level_diff
@@ -293,8 +295,7 @@ def snap_flat_batch(
             levels,
             tm_ids_by_level,
             config,
-            need_dicts[m0:m1] if need_dicts is not None else None,
-            col_parts if collect_columnar else None,
+            col_parts,
         )
     store.finish()
     columnar = tuple(map(np.concatenate, zip(*col_parts))) if col_parts else _NO_GEOMETRIES
@@ -313,11 +314,10 @@ def _rightmost_lowest_det(x, y, start, end):
         return det
     s, e = start[w], end[w]
     lens = e - s
-    span_off = _exclusive_cumsum(lens)
-    sid = np.repeat(np.arange(w.size, dtype=np.int64), lens)
-    idx = s[sid] + np.arange(int(span_off[-1]), dtype=np.int64) - span_off[:-1][sid]
+    sid, off = _ragged(lens)
+    idx = s[sid] + off
     order = np.lexsort((idx, -x[idx], y[idx], sid))
-    rmli = idx[order[span_off[:-1]]]
+    rmli = idx[order[_exclusive_cumsum(lens)[:-1]]]
     a_idx = np.where(rmli > s, rmli - 1, e - 1)
     c_idx = np.where(rmli < e - 1, rmli + 1, s)
     det[w] = (x[rmli] - x[a_idx]) * (y[c_idx] - y[a_idx]) - (x[c_idx] - x[a_idx]) * (y[rmli] - y[a_idx])
@@ -336,9 +336,7 @@ def _correct_input_winding(xy, ring_start, ring_len, ring_local):
         return xy
     w = np.flatnonzero(wrong)
     lens_w = ring_len[w]
-    total = int(lens_w.sum())
-    rep = np.repeat(np.arange(w.size, dtype=np.int64), lens_w)
-    p = np.arange(total, dtype=np.int64) - _exclusive_cumsum(lens_w)[:-1][rep]
+    rep, p = _ragged(lens_w)
     starts_w = ring_start[w][rep]
     out = xy.copy()
     out[starts_w + p] = xy[starts_w + lens_w[rep] - 1 - p]
@@ -453,8 +451,7 @@ def _snap_chunk(
     levels,
     tm_ids_by_level,
     config,
-    need_dicts=None,
-    col_parts=None,
+    col_parts,
 ):
     int_extent = tms.int_root_extent(0)
     ext0, ext1 = int_extent[0], int_extent[1]
@@ -478,8 +475,10 @@ def _snap_chunk(
     # -- vectorized insertion (pointindex.go:110-181) ------------------------
     iv = (xy * _POW10F).astype(np.int64)
     ivx, ivy = iv[:, 0], iv[:, 1]
-    dxs = _go_div_np(ivx - ext0, deepest_res)
-    dys = _go_div_np(ivy - ext1, deepest_res)
+    # floor division: a vertex below the int origin is outside the grid
+    # (PointIndex.insert_point)
+    dxs = (ivx - ext0) // deepest_res
+    dys = (ivy - ext1) // deepest_res
     bad = (dxs < 0) | (dys < 0) | (dxs > deepest_size - 1) | (dys > deepest_size - 1)
     dead = np.zeros(n_members, dtype=bool)
     if bad.any():
@@ -518,10 +517,8 @@ def _snap_chunk(
     # -- descent (pointindex.go:200-345) -------------------------------------
     # Most (segment, cell) rows of the reference's frontier have one
     # possible outcome, so they are settled from the endpoints' deepest
-    # cells and only the rest walk the levels (_descend_level).  Both
-    # rules need an endpoint inside its own deepest cell ("exact": go_div
-    # truncates a point just below the grid origin into cell 0); segments
-    # with an inexact endpoint walk from the root.
+    # cells and only the rest walk the levels (_descend_level).  Every
+    # live vertex lies inside its own deepest cell.
     # * Before divergence: while both endpoints share their cell, that cell
     #   is the whole frontier (q1 == q2, certain, occupied by p1), so a
     #   segment joins the walk below ``shared``, the deepest shared level.
@@ -532,15 +529,7 @@ def _snap_chunk(
     # p1's cell is always first in a segment's frontier and p2's last, so a
     # level is recorded as [shared] + [settled p1] + [walked] + [settled p2]
     # and the stable argsort by segment below yields the reference order.
-    exact = alive_v & (ivx >= ext0) & (ivy >= ext1)
-    seg_exact = exact & exact[next_idx]
-    live = seg_exact.copy()
-    loose = np.flatnonzero(alive_v & ~seg_exact)
-    if loose.size:
-        live[loose] = line_intersects_np(*(e[loose] for e in ends), *map(np.int64, int_extent))
-    shared = np.where(
-        seg_exact, deepest_level - _bit_length((dxs ^ dx2) | (dys ^ dy2)), np.where(live, 0, -1)
-    )
+    shared = np.where(alive_v, deepest_level - _bit_length((dxs ^ dx2) | (dys ^ dy2)), -1)
     # isolation level of each occupied deepest cell: 1 + the deepest level
     # it shares with another cell of its member (Morton order puts that
     # cell next to it); -1 when it shares no level
@@ -550,10 +539,9 @@ def _snap_chunk(
         s = np.maximum(deepest_level - (_bit_length(occ[1:] ^ occ[:-1]) + 1) // 2, -1)
         near[1:] = s
         near[:-1] = np.maximum(near[:-1], s)
-    iso_v = np.full(n_v, deepest_level + 1, dtype=np.int64)
-    iso_v[exact] = near[np.searchsorted(occ, vkey[exact])] + 1
-    iso1 = np.where(seg_exact, iso_v, deepest_level + 1)
-    iso2 = np.where(seg_exact, iso_v[next_idx], deepest_level + 1)
+    iso1 = np.full(n_v, deepest_level + 1, dtype=np.int64)
+    iso1[alive_v] = near[np.searchsorted(occ, vkey[alive_v])] + 1
+    iso2 = iso1[next_idx]
 
     level_set = set(levels)
     e0 = np.int64(ext0)
@@ -646,22 +634,17 @@ def _snap_chunk(
     #    the scalar dedupe could delete rings (_dict_members) --------------
     keep_pl = config.keep_points_and_lines
     rev_cfg = bool(config.reverse_winding_order)
-    columnar_sel = np.zeros(n_members, dtype=bool)
-    if col_parts is not None:
-        elig = ~dead & (mr_bounds[1:] > mr_bounds[:-1])
-        if need_dicts is not None:
-            elig &= ~need_dicts
+    columnar_sel = ~dead & (mr_bounds[1:] > mr_bounds[:-1])
+    for lv_i in levels:
+        columnar_sel &= ~_dict_members(lvl[lv_i], ring_member, mr_bounds, n_members)
+    if columnar_sel.any():
         for lv_i in levels:
-            elig &= ~_dict_members(lvl[lv_i], ring_member, mr_bounds, n_members)
-        if elig.any():
-            for lv_i in levels:
-                col_parts.append(
-                    _columnar_level(
-                        lvl[lv_i], elig, ring_member, ring_local, mr_bounds, keep_pl, rev_cfg,
-                        res_offset, tm_ids_by_level[lv_i],
-                    )
+            col_parts.append(
+                _columnar_level(
+                    lvl[lv_i], columnar_sel, ring_member, ring_local, mr_bounds, keep_pl, rev_cfg,
+                    res_offset, tm_ids_by_level[lv_i],
                 )
-            columnar_sel = elig
+            )
 
     # -- per-member combine (light Python over ring descriptors) --------------
     for pi in range(n_members):
@@ -871,11 +854,10 @@ def _inners_matched(fx, fy, o_start, o_end, i_start, i_end):
     steps.  The even-odd parity and the boundary test read neither the
     outer's orientation nor its edge order."""
     n_in = i_end - i_start
-    vid = np.repeat(np.arange(n_in.size, dtype=np.int64), n_in)
-    v = i_start[vid] + np.arange(vid.size, dtype=np.int64) - _exclusive_cumsum(n_in)[:-1][vid]
+    vid, off = _ragged(n_in)
+    v = i_start[vid] + off
     n_edges = (o_end - o_start)[vid]
-    pid = np.repeat(np.arange(vid.size, dtype=np.int64), n_edges)
-    k = np.arange(pid.size, dtype=np.int64) - _exclusive_cumsum(n_edges)[:-1][pid]
+    pid, k = _ragged(n_edges)
     o0 = o_start[vid][pid]
     s = o0 + k
     e = o0 + (k + 1) % n_edges[pid]

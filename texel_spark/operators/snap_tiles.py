@@ -109,14 +109,15 @@ def _process_batch(pdf, tms_, tm_ids_, cfg):
     """One Arrow batch through the snap stage: batch WKT parse ->
     flat-array snap kernel -> one digit-exact batch WKT emit.
 
-    Every snapped (row, zoom) polygon geometry lands in one geometry
-    table of (a, b, rev) ring handles: the kernel's columnar lane adds
-    its geometry arrays (one-outer polygons, holed or not), and the rows
-    with a dict result (multipolygons, rare rings the kernel's scalar
-    helpers build) add theirs.  One
-    format_polygon_wkts call writes the table's WKT and one reduceat
-    pass its bboxes.  Per-row Python only touches rows with a dict
-    result, the rare rows the array parser rejects (3D, non-ASCII,
+    Every snapped (member, zoom) geometry lands in one geometry table of
+    (a, b, rev) ring handles: the kernel's columnar lane adds its
+    geometry arrays (one-outer members, holed or not, multipolygon parts
+    included), and the members with a dict result (rare rings the
+    kernel's scalar helpers build) add theirs.  One array pass merges a
+    row's parts per zoom, the way the reference regroups a
+    multipolygon's snapped parts; one format_polygon_wkts call writes
+    the table's WKT and one reduceat pass its bboxes.  Per-row Python
+    only touches the rare rows the array parser rejects (3D, non-ASCII,
     EMPTY, null or malformed WKT, parsed by the scalar codec) and
     non-polygon kinds, which pass through in ``other``.
 
@@ -140,32 +141,19 @@ def _process_batch(pdf, tms_, tm_ids_, cfg):
         parsed = wb.fold_scalar_rows(
             parsed, [(i, *_parse_span(texts[i], doc_ids[i], span_idxs[i])) for i in fb_rows]
         )
-    n_members = parsed.member_fastrow.size
-    row_members = np.searchsorted(parsed.member_fastrow, np.arange(parsed.rows.size + 1))
-    # members of multi-member rows must come back as dicts (merge step)
-    multi_member_row = (row_members[1:] - row_members[:-1]) > 1
-    need_dicts = multi_member_row[parsed.member_fastrow] if n_members else None
     results, store, columnar = snap_flat_batch(
         parsed.xy, parsed.ring_member, parsed.ring_start, parsed.ring_len,
-        n_members, tms_, tm_ids_, cfg, need_dicts=need_dicts, collect_columnar=True,
+        parsed.member_fastrow.size, tms_, tm_ids_, cfg,
     )
 
-    # dict results join the geometry table as (row, zoom, multi,
-    # n_polys), rings per polygon and (a, b, rev) handles
+    # dict results join the geometry table as (member, zoom, n_polys),
+    # rings per polygon and (a, b, rev) handles
     geoms, rings, handles = [], [], []
-    has_dict = np.fromiter((r is not None for r in results), dtype=bool, count=n_members)
-    for fr in np.unique(parsed.member_fastrow[has_dict]).tolist():
-        row_i = int(parsed.rows[fr])
-        rg: dict[int, list] = {}
-        for m in range(row_members[fr], row_members[fr + 1]):
-            for zoom, polys in results[m].items():
-                rg.setdefault(zoom, []).extend(polys)
-        for zoom, polys in rg.items():
-            if not polys:
-                continue
-            geoms.append((row_i, zoom, bool(parsed.is_multi[fr]) or len(polys) > 1, len(polys)))
+    for m, res in enumerate(results):
+        for zoom, polys in (res or {}).items():
+            geoms.append((m, zoom, len(polys)))
+            rings.extend(map(len, polys))
             for p in polys:
-                rings.append(len(p))
                 handles.extend(p)
 
     other = []
@@ -173,24 +161,36 @@ def _process_batch(pdf, tms_, tm_ids_, cfg):
         doc_id, span_idx = doc_ids[row_i], span_idxs[row_i]
         _emit_nonpolygon(other, doc_id, span_idx, *_parse_span(texts[row_i], doc_id, span_idx), tm_ids_)
 
-    dict_geoms = np.asarray(geoms, dtype=np.int64).reshape(-1, 4)
+    dict_geoms = np.asarray(geoms, dtype=np.int64).reshape(-1, 3)
     dict_handles = np.asarray(handles, dtype=np.int64).reshape(-1, 3)
-    parts = [(*dict_geoms.T, np.asarray(rings, dtype=np.int64), *dict_handles.T)]
-    mem, zoom, n_polys, n_rings, ra, rb, rrev = columnar
-    frows = parsed.member_fastrow[mem]
-    parts.append((parsed.rows[frows], zoom, parsed.is_multi[frows] | (n_polys > 1), n_polys, n_rings, ra, rb, rrev))
-    row, zoom, is_multi, n_polys, n_rings, ra, rb, rrev = map(np.concatenate, zip(*parts))
-    is_multi = is_multi.astype(bool)
-    rrev = rrev.astype(bool)
+    dict_part = (*dict_geoms.T, np.asarray(rings, dtype=np.int64), *dict_handles.T)
+    mem, zoom, n_polys, n_rings, ra, rb, rrev = map(np.concatenate, zip(columnar, dict_part))
+
+    # merge each row's parts per zoom, in part order: sort the geometries
+    # by (row, zoom, member), gather their polygons and rings in that
+    # order, and sum n_polys over each (row, zoom) run
+    fr = parsed.member_fastrow[mem]
+    order = np.lexsort((mem, zoom, fr))
+    g, k = wb._ragged(n_polys[order])
+    poly = wb._exclusive_cumsum(n_polys)[order[g]] + k
+    p, j = wb._ragged(n_rings[poly])
+    ring = wb._exclusive_cumsum(n_rings)[poly[p]] + j
+    n_rings, ra, rb, rrev = n_rings[poly], ra[ring], rb[ring], rrev[ring].astype(bool)
+    fr, zoom, n_polys = fr[order], zoom[order], n_polys[order]
+    run = np.ones(fr.size, dtype=bool)
+    run[1:] = (fr[1:] != fr[:-1]) | (zoom[1:] != zoom[:-1])
+    run_start = np.flatnonzero(run)
+    fr, zoom, n_polys = fr[run_start], zoom[run_start], np.add.reduceat(n_polys, run_start)
+    row = parsed.rows[fr]
+    is_multi = parsed.is_multi[fr] | (n_polys > 1)
 
     # gather every handle's points in emit order, then one WKT + bbox pass
     lens = rb - ra
     pt_bounds = wb._exclusive_cumsum(lens)
     ring_bounds = wb._exclusive_cumsum(n_rings)
     poly_bounds = wb._exclusive_cumsum(n_polys)
-    rep = np.repeat(np.arange(lens.size, dtype=np.int64), lens)
-    off = np.arange(int(pt_bounds[-1]), dtype=np.int64) - pt_bounds[:-1][rep]
-    src = np.where(rrev[rep], rb[rep] - 1 - off, ra[rep] + off)
+    h, off = wb._ragged(lens)
+    src = np.where(rrev[h], rb[h] - 1 - off, ra[h] + off)
     px = store.kx[src]
     py = store.ky[src]
     # a geometry's points are one contiguous span of the gathered arrays
@@ -230,10 +230,11 @@ def snap_documents(
     assembly (kernel/snap_batch.py) -> one digit-exact batch WKT emit
     per Arrow batch (_process_batch).  Every snapped polygon reaches
     that emit as int64 ring handles, so a snapped value has one WKT
-    text wherever it appears.  Polygons, holed or not, get there as
-    kernel arrays with no per-row Python; multipolygons and the rare
+    text wherever it appears.  Polygons and multipolygon parts, holed
+    or not, get there as kernel arrays with no per-row Python, and one
+    array pass merges a multipolygon's parts per zoom; only the rare
     rings the kernel leaves to its scalar helpers cost one Python visit
-    per row.
+    per member.
     """
     spark = docs.sparkSession
     config = config or SnapConfig(keep_points_and_lines=False, ignore_outside_grid=True)

@@ -6,9 +6,14 @@ for that seed, without Spark), takes its geometry spans in document
 order, and runs ``operators.snap_tiles._process_batch`` over them in
 2,000-row chunks on NetherlandsRDNewQuad at zooms 5/9/12, under two
 configs: the default (``ignore_outside_grid``) and
-``keep_points_and_lines`` + ``reverse_winding_order``.
+``keep_points_and_lines`` + ``reverse_winding_order``.  Each config
+replays two layouts of the same polygons: ``polygon`` (the corpus as
+written) and ``multi3`` (consecutive runs of three spans, the last run
+possibly shorter, each written as one MULTIPOLYGON keyed by its first
+span's (doc_id, span_idx)), so multipolygon parts take the same kernel
+lanes as polygons.
 
-For each config it prints one JSON line:
+For each config and layout it prints one JSON line:
 
 * ``rows``: snapped rows emitted;
 * ``geom_hash``: sha256 (16 hex digits) of the sorted rows with the WKT
@@ -52,6 +57,16 @@ def corpus_spans(seed: int, n_docs: int):
         doc_id, doc_spans = build_document(seed * n_docs + i)
         spans.extend((doc_id, k, s[1]) for k, s in enumerate(doc_spans) if s[0] == "geom")
     return spans
+
+
+def multi3_spans(spans):
+    """``spans`` grouped into MULTIPOLYGONs of three consecutive spans."""
+    out = []
+    for i in range(0, len(spans), 3):
+        run = spans[i : i + 3]
+        parts = ", ".join(wkt[wkt.index("(") :] for _, _, wkt in run)
+        out.append((run[0][0], run[0][1], "MULTIPOLYGON (" + parts + ")"))
+    return out
 
 
 def replay(spans, tms, cfg):
@@ -122,7 +137,8 @@ def main() -> None:
     from texel_spark.kernel.snap import SnapConfig
 
     tms = load_embedded(GRID)
-    spans = corpus_spans(args.seed, args.docs)
+    polygons = corpus_spans(args.seed, args.docs)
+    layouts = {"polygon": polygons, "multi3": multi3_spans(polygons)}
     configs = {
         "default": SnapConfig(ignore_outside_grid=True),
         "keep_pl_reverse": SnapConfig(
@@ -130,16 +146,17 @@ def main() -> None:
         ),
     }
     for name, cfg in configs.items():
-        cpu = []
-        for _ in range(max(1, args.repeats)):
-            t0 = time.process_time()
-            records, columnar_share = replay(spans, tms, cfg)
-            cpu.append(time.process_time() - t0)
-        line = {"seed": args.seed, "docs": args.docs, "spans": len(spans), "config": name}
-        line.update(summarize(records))
-        line["columnar_share"] = round(columnar_share, 4)
-        line["cpu_s"] = round(statistics.median(cpu), 3)
-        print(json.dumps(line), flush=True)
+        for layout, spans in layouts.items():
+            cpu = []
+            for _ in range(max(1, args.repeats)):
+                t0 = time.process_time()
+                records, columnar_share = replay(spans, tms, cfg)
+                cpu.append(time.process_time() - t0)
+            line = {"seed": args.seed, "docs": args.docs, "spans": len(spans), "config": name, "layout": layout}
+            line.update(summarize(records))
+            line["columnar_share"] = round(columnar_share, 4)
+            line["cpu_s"] = round(statistics.median(cpu), 3)
+            print(json.dumps(line), flush=True)
 
 
 if __name__ == "__main__":
