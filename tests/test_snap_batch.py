@@ -148,6 +148,22 @@ def test_vertex_just_below_the_grid_origin_is_outside_the_grid(ignore_outside_gr
     assert "(-1, 48)" in str(stage_err.value)
 
 
+def test_outside_grid_error_names_the_first_outside_vertex_in_input_order():
+    """The batch kernel reverses a clockwise outer before it quantizes,
+    but names the outside vertex PointIndex.insert_polygon meets first:
+    the first in input order, here (-1, 3) and not (-2, 7)."""
+    tms = simple_tms(4, 1.0)
+    clockwise = [[(-1.0, 3.0), (-2.0, 7.0), (5.0, 7.0), (5.0, 3.0)]]
+    inside = [[(1.0, 1.0), (9.0, 1.0), (9.0, 9.0), (1.0, 9.0)]]
+    errors = []
+    for rows in (scalar_rows, stage_rows):
+        with pytest.raises(OutsideGridError) as err:
+            rows(_spans([inside, clockwise]), tms, [0, 2, 4], SnapConfig())
+        errors.append(str(err.value))
+    assert errors[0] == errors[1]
+    assert "(-16, 48)" in errors[1]
+
+
 def test_batch_matches_scalar_degenerate_and_self_touching():
     """Adversarial shapes: duplicate vertices, collinear runs, bowties,
     spikes, rings collapsing to lines/points - the paths where ring
@@ -201,18 +217,64 @@ def test_batch_matches_scalar_dense_random_lattice():
 
 
 def test_batch_matches_scalar_at_deep_zoom_levels():
-    """ADVICE r2: composite occupancy keys (poly << 2*deepest_level) | z
-    overflow int64 when deepest_level > 30.  The batch kernel must chunk
-    down to 1 member while headroom exists and route to the scalar
-    kernel beyond that, never corrupting keys."""
+    """A cell's occupancy key is its parent's rank << 2 | its quadrant,
+    so keys stay below 4 * n_vertices at any depth and a batch runs as
+    one kernel pass.  Stage == scalar down to level 32, the deepest that
+    morton.to_z's 32 bits per axis allow (the reference's uint64
+    morton.Z).  At level 33 a member snaps while its cells fit 32 bits;
+    one whose first unindexable vertex needs 33 bits makes both kernels
+    raise morton.to_z's ValueError, ignore_outside_grid or not, and one
+    whose first unindexable vertex is outside the grid is dropped."""
     config = SnapConfig(ignore_outside_grid=True)
     square = [[(1.0, 1.0), (9.0, 1.0), (9.0, 9.0), (1.0, 9.0)]]
     polys = [square, [[(2.0, 2.0), (8.0, 2.0), (8.0, 8.0)]], square]
-    # deepest_level = tm_id + 4 on 1px tiles; 28 is the deepest the
-    # reference supports at all (morton.go caps each axis at 32 bits)
+    # deepest_level = tm_id + 4 on 1px tiles
     for tm_id in (24, 25, 26, 27, 28):
         tms = simple_tms(tm_id, 16.0 / (1 << tm_id))
         _assert_stage_matches_scalar(_spans(polys), tms, [tm_id], config)
+    # level 33: x or y >= 8.0 needs a 33-bit cell index
+    tms = simple_tms(29, 16.0 / (1 << 29))
+    low = [[(1.0, 1.0), (7.0, 1.0), (7.0, 7.0), (1.0, 5.0)]]
+    outside_first = [[(-1.0, 1.0), (9.0, 1.0), (9.0, 9.0)]]
+    _assert_stage_matches_scalar(_spans([low, outside_first, low]), tms, [25, 29], config)
+    # clockwise, so the kernels must name (1, 9), the first 33-bit vertex
+    # in input order, not (9, 1), the first after the winding correction
+    clockwise = [square[0][::-1]]
+    errors = []
+    for rows in (scalar_rows, stage_rows):
+        with pytest.raises(ValueError, match="cannot make Z") as err:
+            rows(_spans([low, clockwise] + polys), tms, [29], config)
+        errors.append(str(err.value))
+    assert errors[0] == errors[1]
+    assert errors[1] == "cannot make Z out of 555555555 and 5000000000"  # (1, 9)
+
+
+def test_batch_matches_scalar_on_deep_web_mercator_zooms():
+    """perfbench's seed-7 corpus at WebMercatorQuad zooms 5/12/20 (level
+    28) runs the array kernel, descent included, with stage == scalar."""
+    from unittest import mock
+
+    from texel_spark.kernel import snap_batch
+
+    spans = _corpus_spans(7 * 4000, 170)[:200]
+    assert len(spans) == 200
+    tms = load_embedded("WebMercatorQuad")
+    steps = []
+    descend_level = snap_batch._descend_level
+
+    def count_steps(*args):
+        steps.append(1)
+        return descend_level(*args)
+
+    for config in (
+        SnapConfig(ignore_outside_grid=True),
+        SnapConfig(keep_points_and_lines=True, reverse_winding_order=True, ignore_outside_grid=True),
+    ):
+        want = scalar_rows(spans, tms, [5, 12, 20], config)
+        assert want
+        with mock.patch.object(snap_batch, "_descend_level", count_steps):
+            assert stage_rows(spans, tms, [5, 12, 20], config) == want
+    assert steps
 
 
 _OUTER = [(1.0, 1.0), (15.0, 1.0), (15.0, 15.0), (1.0, 15.0)]
@@ -370,8 +432,8 @@ _CELL_SHAPES = {
 
 @pytest.mark.parametrize(
     "grid, tm_ids",
-    [("NetherlandsRDNewQuad", [5, 9, 12]), ((26, 16.0 / (1 << 26)), [18, 22, 26])],
-    ids=["rd-5-9-12", "deepest-int64-level-30"],
+    [("NetherlandsRDNewQuad", [5, 9, 12]), ((28, 16.0 / (1 << 28)), [20, 24, 28])],
+    ids=["rd-5-9-12", "deepest-level-32"],
 )
 @pytest.mark.parametrize("keep_points_and_lines", [False, True])
 def test_batch_matches_scalar_on_cell_edge_cases(grid, tm_ids, keep_points_and_lines):
@@ -379,16 +441,16 @@ def test_batch_matches_scalar_on_cell_edge_cases(grid, tm_ids, keep_points_and_l
     cells holding one occupied deepest cell) and the columnar lane's
     holed polygons, on shapes placed on the deepest level's cell lattice:
     on the RD grid at the snap stage's zooms, and on a grid whose deepest
-    level is 30, the deepest the int64 occupancy keys allow."""
+    level is 32, the deepest morton.to_z allows."""
     from texel_spark.grid.fixedpoint import go_div
     from texel_spark.kernel.pointindex import VECTOR_TILE_INTERNAL_PIXEL_RESOLUTION
 
     tms = simple_tms(*grid) if isinstance(grid, tuple) else load_embedded(grid)
     deepest = max(tm_ids) + tms.level_diff(VECTOR_TILE_INTERNAL_PIXEL_RESOLUTION)
-    assert deepest in (24, 30)
+    assert deepest in (24, 32)
     ext = tms.int_root_extent(0)
     res = go_div(ext[2] - ext[0], 1 << deepest)
-    # RD: x 150 km, y 450 km; the level-30 grid: 1000 cells from its origin
+    # RD: x 150 km, y 450 km; the level-32 grid: 1000 cells from its origin
     bx, by = ((15 * 10**14 - ext[0]) // res, (45 * 10**14 - ext[1]) // res) if deepest == 24 else (1000, 1000)
 
     def pt(u, v):
@@ -531,6 +593,32 @@ def test_descent_walks_only_undecided_rows():
     assert 0 < sum(tested) <= 248_371 // 5
     assert 0 < sum(walked) <= 450_970 // 5
     assert len(walked) <= 24  # one step per level below the root
+
+
+def test_descent_runs_one_step_per_level_at_deep_zooms():
+    """The occupancy keys hold a whole batch at any depth, so a 2,000-span
+    batch at RD zooms 5/9/16 (level 28) makes at most one descent step
+    per level below the root; member-keyed chunks made 1,636."""
+    from unittest import mock
+
+    from tests.snap_rows import spans_pdf
+    from texel_spark.kernel import snap_batch
+    from texel_spark.operators.snap_tiles import _process_batch
+
+    spans = _corpus_spans(7 * 4000, 1500)[:2000]
+    assert len(spans) == 2000
+    steps = []
+    descend_level = snap_batch._descend_level
+
+    def count_steps(*args):
+        steps.append(1)
+        return descend_level(*args)
+
+    with mock.patch.object(snap_batch, "_descend_level", count_steps):
+        out = _process_batch(spans_pdf(spans), load_embedded("NetherlandsRDNewQuad"), [5, 9, 16],
+                             SnapConfig(ignore_outside_grid=True))
+    assert len(out) == 3 * len(spans)
+    assert 0 < len(steps) <= 28
 
 
 def test_ring_handle_maps_centroids_exactly_and_rejects_other_points():

@@ -47,10 +47,11 @@ def from_z(z: int) -> tuple[int, int]:
 
 
 def to_z_np(x: np.ndarray, y: np.ndarray) -> np.ndarray:
-    """Vectorized interleave for int64 arrays with values < 2^31.
+    """Vectorized interleave for int64 arrays with values below 2^32.
 
-    Tile coords never exceed 2^31 in practice (zoom <= 30), so the result
-    fits in a signed int64 column (Spark LongType).
+    The result is int64 (a Spark LongType column); viewed as uint64 it is
+    the exact code, ``to_z``'s value.  Below 2^31 (tile coords at zoom
+    <= 31) the int64 values are that code too.
     """
     x = x.astype(np.uint64, copy=True)
     y = y.astype(np.uint64, copy=True)

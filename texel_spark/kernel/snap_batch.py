@@ -8,9 +8,13 @@ array programs over ALL polygons of an Arrow batch at once:
 
 * insertion: quantize every vertex of every polygon with one vectorized
   fixed-point pass (floor division, so a vertex below the grid's int
-  origin is outside the grid), Morton-encode, and build per-level sorted
-  occupancy arrays keyed by ``(poly_id << 2*level) | z`` (the batched
-  equivalent of pointindex's per-level cell sets);
+  origin is outside the grid), sort the vertices by (member, Morton
+  code) and build per-level sorted occupancy arrays keyed by rank: a
+  cell's key is its parent's rank (its index among the parent level's
+  occupied (member, cell) pairs) << 2 | its quadrant, below
+  4 * n_vertices at any depth, so the whole batch is one pass down to
+  level 32, morton.to_z's limit (the batched equivalent of pointindex's
+  per-level cell sets);
 * descent: the (segment, cell) rows with one possible outcome are
   settled from the endpoints' deepest cells - a segment whose endpoints
   share a cell has that cell as its whole frontier, and a cell holding
@@ -64,7 +68,6 @@ from .snap import (
     _cleanup_new_ring,
     _dedupe_inners_outers,
     _match_inners_to_polygons,
-    snap_polygon,
 )
 
 _POW10F = 1e10  # == math.Pow(10, 10), exactly representable
@@ -206,102 +209,6 @@ def _ring_floats(fx, fy, a: int, b: int, rev: bool):
     return pts[::-1] if rev else pts
 
 
-def snap_flat_batch(
-    xy,
-    ring_member,
-    ring_start,
-    ring_len,
-    n_members,
-    tms,
-    tm_ids,
-    config,
-    need_dicts=None,
-    collect_columnar=False,
-):
-    """Core batch kernel over flat arrays.
-
-    xy: (n_v, 2) float64; rings are contiguous vertex spans, members
-    contiguous ring spans.  Returns (results, store, columnar):
-    results[m] = {tm_id: [poly]} where each poly is a list of ring
-    handles (a, b, rev) into ``store``; rings the scalar helpers build
-    are appended to ``store`` too (BatchSnapStore.ring_handle), so a
-    result never holds float points.
-
-    Members with one outer ring whose rings all take the fast path
-    (_columnar_level; the overwhelmingly common case, holed or not, and
-    whether or not the member is a multipolygon part) skip the
-    per-member dict entirely: results[m] is None and their output lands
-    in ``columnar``, a geometry table of arrays - (member, tm_id,
-    n_polys) per geometry, rings per polygon, (a, b, rev) per ring -
-    with zero per-member Python.  The snap stage
-    (operators.snap_tiles._process_batch) merges ``columnar`` and the
-    dict results into one geometry table per (row, zoom); perfbench's
-    kernel replay counts the None entries of ``results`` as the
-    columnar share.
-
-    ``need_dicts`` and ``collect_columnar`` are accepted and ignored:
-    every member takes the same lane and the columnar table is always
-    collected.  They stay because perfbench's kernel replay still passes
-    both keywords."""
-    deepest_id = max(tm_ids)
-    level_diff = tms.level_diff(VECTOR_TILE_INTERNAL_PIXEL_RESOLUTION)
-    deepest_level = deepest_id + level_diff
-    tm_ids_by_level = {tm_id + level_diff: tm_id for tm_id in tm_ids}
-    levels = sorted(tm_ids_by_level)
-
-    results: list = [None] * n_members
-    store = BatchSnapStore(tms, deepest_level)
-    col_parts: list = []
-    mr_bounds = np.searchsorted(ring_member, np.arange(n_members + 1))
-
-    if 2 * deepest_level > 60:
-        # composite occupancy keys (member << 2*level) | z would overflow
-        # int64 (ADVICE r2): the scalar kernel (arbitrary-precision
-        # Python ints) handles any depth - route every member through it
-        for m in range(n_members):
-            rings = [
-                [tuple(p) for p in xy[ring_start[r] : ring_start[r] + ring_len[r]]]
-                for r in range(int(mr_bounds[m]), int(mr_bounds[m + 1]))
-            ]
-            results[m] = {
-                tm: [[store.ring_handle(r, tm + level_diff) for r in poly] for poly in polys]
-                for tm, polys in snap_polygon(rings, tms, list(tm_ids), config).items()
-            }
-        store.finish()
-        return results, store, _NO_GEOMETRIES
-
-    # members per chunk so (member << 2*deepest_level) | z fits in int64
-    max_chunk = max(1, 1 << max(0, 60 - 2 * deepest_level))
-    for m0 in range(0, n_members, max_chunk):
-        m1 = min(n_members, m0 + max_chunk)
-        r0, r1 = int(mr_bounds[m0]), int(mr_bounds[m1])
-        if r0 == r1:
-            for m in range(m0, m1):
-                results[m] = {}
-            continue
-        v0 = int(ring_start[r0])
-        v1 = int(ring_start[r1 - 1] + ring_len[r1 - 1])
-        _snap_chunk(
-            xy[v0:v1],
-            ring_member[r0:r1] - m0,
-            ring_start[r0:r1] - v0,
-            ring_len[r0:r1],
-            m1 - m0,
-            results,
-            m0,
-            store,
-            tms,
-            deepest_level,
-            levels,
-            tm_ids_by_level,
-            config,
-            col_parts,
-        )
-    store.finish()
-    columnar = tuple(map(np.concatenate, zip(*col_parts))) if col_parts else _NO_GEOMETRIES
-    return results, store, columnar
-
-
 def _rightmost_lowest_det(x, y, start, end):
     """Winding determinant of each point span [start, end) of ``x``/``y``
     at its rightmost-lowest vertex (min y, then max x, then first index)
@@ -344,27 +251,23 @@ def _correct_input_winding(xy, ring_start, ring_len, ring_local):
 
 
 def _bit_length(a: np.ndarray) -> np.ndarray:
-    """int.bit_length of each non-negative int64 of ``a``."""
-    a = a.copy()
-    n = np.zeros(a.shape, dtype=np.int64)
-    for s in (32, 16, 8, 4, 2, 1):
-        big = a >= (1 << s)
-        n[big] += s
-        a[big] >>= s
-    return n + (a > 0)
+    """int.bit_length of each int64 of ``a`` in [0, 2^53): the binary
+    exponent of its float64 value, which is exact there."""
+    return np.frexp(a.astype(np.float64))[1].astype(np.int64)
 
 
-def _descend_level(seg, x, y, z, bounds, ends, seg_poly, keys, lv, e0, e1, span):
+def _descend_level(seg, x, y, rank, bounds, ends, keys, e0, e1, span):
     """One level of the per-segment quadtree descent (pointindex.go:264-321).
 
     Frontier row i is segment ``seg[i]`` (endpoints from ``ends``, the
     int64 arrays p1x, p1y, p2x, p2y) x the level-``lv - 1`` cell with
-    index ``x[i], y[i]``, Morton code ``z[i]`` and extent ``bounds``.
-    Returns the (seg, x, y, z) rows of the accepted level-``lv`` children
-    (cells of ``span``), row by row in the reference's order: candidate
-    children come from the quadrant case analysis as masked (n, 4)
-    matrices, occupancy is a searchsorted membership test in ``keys``
-    (the level's sorted ``(member << 2*lv) | z`` keys) and the rest go
+    index ``x[i], y[i]``, occupancy rank ``rank[i]`` and extent
+    ``bounds``.  Returns the (seg, x, y, rank) rows of the accepted
+    level-``lv`` children (cells of ``span``), row by row in the
+    reference's order: candidate children come from the quadrant case
+    analysis as masked (n, 4) matrices, occupancy is a searchsorted
+    membership test of ``rank << 2 | quadrant`` in ``keys`` (the level's
+    sorted keys, so a child's rank is its index there) and the rest go
     through line_intersects_np."""
     minx, miny, maxx, maxy = bounds
     cx = minx + span  # the parent's centroid: its children are half its span
@@ -404,10 +307,10 @@ def _descend_level(seg, x, y, z, bounds, ends, seg_poly, keys, lv, e0, e1, span)
     val_idx = np.flatnonzero(valid.ravel())
     rows = val_idx >> 2
     qcv = qc.ravel()[val_idx]
-    pkeys = (seg_poly[seg[rows]] << np.int64(2 * lv)) | (z[rows] << 2) | qcv
+    pkeys = (rank[rows] << 2) | qcv
     idx = np.searchsorted(keys, pkeys)
-    np.clip(idx, 0, max(keys.size - 1, 0), out=idx)
-    occ = (keys[idx] == pkeys) if keys.size else np.zeros(pkeys.size, dtype=bool)
+    np.clip(idx, 0, keys.size - 1, out=idx)
+    occ = keys[idx] == pkeys
     live_pos = val_idx[occ]
     rows_l = rows[occ]
     cert_l = certain.ravel()[live_pos]
@@ -421,38 +324,70 @@ def _descend_level(seg, x, y, z, bounds, ends, seg_poly, keys, lv, e0, e1, span)
         acc[need] = line_intersects_np(
             p1x[rl], p1y[rl], p2x[rl], p2y[rl], minxn, minyn, minxn + span, minyn + span
         )
-    acc_full = np.zeros(n * 4, dtype=bool)
-    acc_full[live_pos[acc]] = True
+    child = np.full(n * 4, -1, dtype=np.int64)
+    child[live_pos[acc]] = idx[occ][acc]
     # mutex pair: the second of (q1^01, q1^10) is skipped when the first
     # was appended (pointindex.go:300-321)
-    acc_full[2::4] &= ~(diag & acc_full[1::4])
-    keep_idx = np.flatnonzero(acc_full)
+    child[2::4][diag & (child[1::4] >= 0)] = -1
+    keep_idx = np.flatnonzero(child >= 0)
     rows_k = keep_idx >> 2
     qck = qc.ravel()[keep_idx]
     return (
         seg[rows_k],
         (x[rows_k] << 1) | (qck & 1),
         (y[rows_k] << 1) | (qck >> 1),
-        (z[rows_k] << 2) | qck,
+        child[keep_idx],
     )
 
 
-def _snap_chunk(
+def snap_flat_batch(
     xy,
     ring_member,
     ring_start,
     ring_len,
     n_members,
-    results,
-    res_offset,
-    store: BatchSnapStore,
     tms,
-    deepest_level,
-    levels,
-    tm_ids_by_level,
+    tm_ids,
     config,
-    col_parts,
+    need_dicts=None,
+    collect_columnar=False,
 ):
+    """Core batch kernel over flat arrays, one pass over the whole batch.
+
+    xy: (n_v, 2) float64; rings are contiguous vertex spans, members
+    contiguous ring spans.  Returns (results, store, columnar):
+    results[m] = {tm_id: [poly]} where each poly is a list of ring
+    handles (a, b, rev) into ``store``; rings the scalar helpers build
+    are appended to ``store`` too (BatchSnapStore.ring_handle), so a
+    result never holds float points.
+
+    Members with one outer ring whose rings all take the fast path
+    (_columnar_level; the overwhelmingly common case, holed or not, and
+    whether or not the member is a multipolygon part) skip the
+    per-member dict entirely: results[m] is None and their output lands
+    in ``columnar``, a geometry table of arrays - (member, tm_id,
+    n_polys) per geometry, rings per polygon, (a, b, rev) per ring -
+    with zero per-member Python.  The snap stage
+    (operators.snap_tiles._process_batch) merges ``columnar`` and the
+    dict results into one geometry table per (row, zoom); perfbench's
+    kernel replay counts the None entries of ``results`` as the
+    columnar share.
+
+    Like the scalar kernel (kernel.snap.snap_polygon), this raises
+    OutsideGridError for a vertex outside the grid unless
+    ``config.ignore_outside_grid``, and morton.to_z's ValueError for a
+    vertex whose deepest cell index needs more than 32 bits.
+
+    ``need_dicts`` and ``collect_columnar`` are accepted and ignored:
+    every member takes the same lane and the columnar table is always
+    collected.  They stay because perfbench's kernel replay still passes
+    both keywords."""
+    level_diff = tms.level_diff(VECTOR_TILE_INTERNAL_PIXEL_RESOLUTION)
+    deepest_level = max(tm_ids) + level_diff
+    tm_ids_by_level = {tm_id + level_diff: tm_id for tm_id in tm_ids}
+    levels = sorted(tm_ids_by_level)
+
+    store = BatchSnapStore(tms, deepest_level)
     int_extent = tms.int_root_extent(0)
     ext0, ext1 = int_extent[0], int_extent[1]
     deepest_size = 1 << deepest_level
@@ -467,6 +402,7 @@ def _snap_chunk(
     ring_local = np.arange(n_rings, dtype=np.int64) - mr_bounds[ring_member]
 
     # winding-correct the input rings (snap.go:50,93), then quantize
+    xy_in = xy
     xy = _correct_input_winding(xy, ring_start, ring_len, ring_local)
     n_v = xy.shape[0]
     vring = np.repeat(np.arange(n_rings, dtype=np.int64), ring_len)
@@ -476,35 +412,46 @@ def _snap_chunk(
     iv = (xy * _POW10F).astype(np.int64)
     ivx, ivy = iv[:, 0], iv[:, 1]
     # floor division: a vertex below the int origin is outside the grid
-    # (PointIndex.insert_point)
+    # (PointIndex.insert_point); a cell index past 32 bits has no Morton
+    # code (morton.to_z)
     dxs = (ivx - ext0) // deepest_res
     dys = (ivy - ext1) // deepest_res
-    bad = (dxs < 0) | (dys < 0) | (dxs > deepest_size - 1) | (dys > deepest_size - 1)
+    lim = min(deepest_size, 1 << 32)
+    bad = (dxs < 0) | (dys < 0) | (dxs >= lim) | (dys >= lim)
     dead = np.zeros(n_members, dtype=bool)
     if bad.any():
-        if not config.ignore_outside_grid:
-            first = int(np.flatnonzero(bad)[0])
-            raise OutsideGridError(int(dxs[first]), int(dys[first]), deepest_size)
-        dead[np.unique(vpoly[bad])] = True
-        for pi in np.flatnonzero(dead):
-            results[res_offset + int(pi)] = {}
+        dead[_unindexable_members(xy_in, vpoly, ext0, ext1, deepest_res, deepest_size, config)] = True
     alive_v = ~dead[vpoly]
     if not alive_v.any():
-        for pi in range(n_members):
-            if results[res_offset + pi] is None:
-                results[res_offset + pi] = {}
-        return
+        store.finish()
+        return [{} for _ in range(n_members)], store, _NO_GEOMETRIES
 
-    zv = np.zeros(n_v, dtype=np.int64)
-    zv[alive_v] = morton.to_z_np(dxs[alive_v], dys[alive_v])
-    vkey = (vpoly << (2 * deepest_level)) | zv
-    key_deep = np.sort(vkey[alive_v])
-    level_keys: dict[int, np.ndarray] = {}
-    for lv in range(deepest_level, -1, -1):
-        arr = key_deep >> (2 * (deepest_level - lv))
-        # already sorted (right shift is monotone); drop consecutive dupes
-        arr = arr[np.concatenate(([True], arr[1:] != arr[:-1]))]
-        level_keys[lv] = arr
+    # Occupancy by rank: with the alive vertices sorted by (member, Morton
+    # code) the occupied cells of every level are runs, and common[i] is
+    # the deepest level at which sorted vertex i's cell is vertex i-1's
+    # (-1 at a member's first vertex).  A cell's rank is its index among
+    # its level's occupied (member, cell) pairs, and its key is its
+    # parent's rank << 2 | its quadrant: sorted, and below 4 * n_v at any
+    # depth.  vrank[lv][i] is the rank of sorted vertex i's level-lv cell,
+    # and spos[v] is alive vertex v's position i in that order.
+    av = np.flatnonzero(alive_v)
+    z = morton.to_z_np(dxs[av], dys[av])
+    order = np.lexsort((z.view(np.uint64), vpoly[av]))
+    sv, sz = av[order], z[order]
+    sx, sy = dxs[sv], dys[sv]
+    common = np.full(sv.size, -1, dtype=np.int64)
+    common[1:] = np.where(
+        vpoly[sv[1:]] == vpoly[sv[:-1]], deepest_level - _bit_length((sx[1:] ^ sx[:-1]) | (sy[1:] ^ sy[:-1])), -1
+    )
+    vrank = [np.cumsum(common < 0) - 1]
+    level_keys = [None]
+    for lv in range(1, deepest_level + 1):
+        new = common < lv
+        at = np.flatnonzero(new)
+        level_keys.append((vrank[-1][at] << 2) | ((sz[at] >> 2 * (deepest_level - lv)) & 3))
+        vrank.append(np.cumsum(new) - 1)
+    spos = np.empty(n_v, dtype=np.int64)
+    spos[sv] = np.arange(sv.size)
 
     # -- segment arrays: segment i = (vertex i, vertex next_idx[i]) ----------
     next_idx = np.arange(1, n_v + 1, dtype=np.int64)
@@ -531,16 +478,12 @@ def _snap_chunk(
     # and the stable argsort by segment below yields the reference order.
     shared = np.where(alive_v, deepest_level - _bit_length((dxs ^ dx2) | (dys ^ dy2)), -1)
     # isolation level of each occupied deepest cell: 1 + the deepest level
-    # it shares with another cell of its member (Morton order puts that
-    # cell next to it); -1 when it shares no level
-    occ = level_keys[deepest_level]
-    near = np.full(occ.size, -1, dtype=np.int64)
-    if occ.size > 1:
-        s = np.maximum(deepest_level - (_bit_length(occ[1:] ^ occ[:-1]) + 1) // 2, -1)
-        near[1:] = s
-        near[:-1] = np.maximum(near[:-1], s)
+    # it shares with a neighbouring cell of its member (Morton order puts
+    # the nearest one next to it); -1 when it shares no level
+    near = common[common < deepest_level]
+    near[:-1] = np.maximum(near[:-1], near[1:])
     iso1 = np.full(n_v, deepest_level + 1, dtype=np.int64)
-    iso1[alive_v] = near[np.searchsorted(occ, vkey[alive_v])] + 1
+    iso1[sv] = near[vrank[deepest_level]] + 1
     iso2 = iso1[next_idx]
 
     level_set = set(levels)
@@ -550,7 +493,7 @@ def _snap_chunk(
     if 0 in level_set:
         whole = np.flatnonzero(shared >= 0)
         recorded[0] = (whole, np.full(whole.size, root_cx), np.full(whole.size, root_cy))
-    f_seg = f_x = f_y = f_z = np.empty(0, dtype=np.int64)
+    f_seg = f_x = f_y = f_rank = np.empty(0, dtype=np.int64)
     for lv in range(1, deepest_level + 1):
         sh = deepest_level - lv
         join = np.flatnonzero(shared == lv - 1)
@@ -558,7 +501,7 @@ def _snap_chunk(
             f_seg = np.concatenate((f_seg, join))
             f_x = np.concatenate((f_x, dxs[join] >> (sh + 1)))
             f_y = np.concatenate((f_y, dys[join] >> (sh + 1)))
-            f_z = np.concatenate((f_z, zv[join] >> (2 * sh + 2)))
+            f_rank = np.concatenate((f_rank, vrank[lv - 1][spos[join]]))
         if f_seg.size:
             if lv == 1:  # the root keeps its int extent
                 bounds = tuple(map(np.int64, int_extent))
@@ -566,15 +509,15 @@ def _snap_chunk(
                 minx = e0 + f_x * spans[lv - 1]
                 miny = e1 + f_y * spans[lv - 1]
                 bounds = (minx, miny, minx + spans[lv - 1], miny + spans[lv - 1])
-            f_seg, f_x, f_y, f_z = _descend_level(
-                f_seg, f_x, f_y, f_z, bounds, ends, vpoly, level_keys[lv], lv, e0, e1, spans[lv]
+            f_seg, f_x, f_y, f_rank = _descend_level(
+                f_seg, f_x, f_y, f_rank, bounds, ends, level_keys[lv], e0, e1, spans[lv]
             )
             settled = ((iso1[f_seg] <= lv) & (f_x == dxs[f_seg] >> sh) & (f_y == dys[f_seg] >> sh)) | (
                 (iso2[f_seg] <= lv) & (f_x == dx2[f_seg] >> sh) & (f_y == dy2[f_seg] >> sh)
             )
             if settled.any():
                 walk = ~settled
-                f_seg, f_x, f_y, f_z = f_seg[walk], f_x[walk], f_y[walk], f_z[walk]
+                f_seg, f_x, f_y, f_rank = f_seg[walk], f_x[walk], f_y[walk], f_rank[walk]
         if lv in level_set:
             whole = np.flatnonzero(shared >= lv)
             first = np.flatnonzero((shared >= 0) & (shared < lv) & (iso1 <= lv))
@@ -637,16 +580,15 @@ def _snap_chunk(
     columnar_sel = ~dead & (mr_bounds[1:] > mr_bounds[:-1])
     for lv_i in levels:
         columnar_sel &= ~_dict_members(lvl[lv_i], ring_member, mr_bounds, n_members)
-    if columnar_sel.any():
-        for lv_i in levels:
-            col_parts.append(
-                _columnar_level(
-                    lvl[lv_i], columnar_sel, ring_member, ring_local, mr_bounds, keep_pl, rev_cfg,
-                    res_offset, tm_ids_by_level[lv_i],
-                )
-            )
+    col_parts = [
+        _columnar_level(
+            lvl[lv_i], columnar_sel, ring_member, ring_local, mr_bounds, keep_pl, rev_cfg, tm_ids_by_level[lv_i]
+        )
+        for lv_i in levels
+    ]
 
     # -- per-member combine (light Python over ring descriptors) --------------
+    results: list = [{} if d else None for d in dead.tolist()]
     for pi in range(n_members):
         if dead[pi] or columnar_sel[pi]:
             continue
@@ -657,7 +599,32 @@ def _snap_chunk(
             out = _combine_member_level(lvl[lv_i], r0, r1, lv_i, hit_maps, keep_pl, rev_cfg, store)
             if out is not None:
                 res[tm_ids_by_level[lv_i]] = out
-        results[res_offset + pi] = res
+        results[pi] = res
+    store.finish()
+    return results, store, tuple(map(np.concatenate, zip(*col_parts)))
+
+
+def _unindexable_members(xy, vpoly, ext0, ext1, deepest_res, deepest_size, config):
+    """Members dropped for a vertex the point index cannot hold, decided
+    in input order (``xy`` before the winding correction), the way
+    PointIndex.insert_polygon stops at a member's first such vertex:
+    outside the grid, it raises OutsideGridError, or drops the member
+    under ``config.ignore_outside_grid``; with a cell index past 32 bits
+    it raises morton.to_z's ValueError either way."""
+    iv = (xy * _POW10F).astype(np.int64)
+    dx = (iv[:, 0] - ext0) // deepest_res
+    dy = (iv[:, 1] - ext1) // deepest_res
+    out = (dx < 0) | (dy < 0) | (dx >= deepest_size) | (dy >= deepest_size)
+    stop = np.flatnonzero(out | (dx >= 1 << 32) | (dy >= 1 << 32))
+    members, first = np.unique(vpoly[stop], return_index=True)
+    first = stop[first]
+    raising = first[~out[first]] if config.ignore_outside_grid else first
+    if raising.size:
+        v = raising[0]
+        if out[v]:
+            raise OutsideGridError(int(dx[v]), int(dy[v]), deepest_size)
+        morton.to_z(int(dx[v]), int(dy[v]))  # raises: 33 bits or more
+    return members
 
 
 def _assembly_arrays(lv_i, seg_s, ix, iy, starts, vring, ring_start, ring_len, alive_seg, hit_maps, store):
@@ -790,7 +757,7 @@ def _dict_members(L, ring_member, mr_bounds, n_members):
     return out
 
 
-def _columnar_level(L, elig, ring_member, ring_local, mr_bounds, keep_pl, rev_cfg, res_offset, tm_id):
+def _columnar_level(L, elig, ring_member, ring_local, mr_bounds, keep_pl, rev_cfg, tm_id):
     """One level of the columnar lane: snap.addPointsAndSnap's tail
     (snap.go:93-155, 277-324) for one-outer members, over all ``elig``
     members at once.  An inner with a vertex in the fast-path outer (or
@@ -836,7 +803,7 @@ def _columnar_level(L, elig, ring_member, ring_local, mr_bounds, keep_pl, rev_cf
     poly_m = m[poly_start]
     geom_start = np.flatnonzero(np.concatenate(([True], poly_m[1:] != poly_m[:-1])))
     return (
-        poly_m[geom_start] + res_offset,
+        poly_m[geom_start],
         np.full(geom_start.size, tm_id, dtype=np.int64),
         np.diff(np.append(geom_start, poly_m.size)),
         np.diff(np.append(poly_start, m.size)),
