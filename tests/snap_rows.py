@@ -10,7 +10,7 @@ wkt is parsed back with the scalar codec, so coordinates compare bit for
 bit whatever formatter wrote them.
 """
 
-import pandas as pd
+import pyarrow as pa
 
 from texel_spark.functions.wkt import geometry_to_wkt, parse_wkt, polygon_bbox, ring_to_wkt_body
 from texel_spark.kernel.snap import snap_polygon
@@ -23,10 +23,14 @@ def span_wkt(polygons, multi=False) -> str:
     return "MULTIPOLYGON (" + ", ".join(bodies) + ")" if multi else "POLYGON " + bodies[0]
 
 
-def spans_pdf(spans) -> pd.DataFrame:
-    return pd.DataFrame(
-        {"doc_id": [s[0] for s in spans], "span_idx": [s[1] for s in spans], "wkt": [s[2] for s in spans]}
-    )
+SPANS_SCHEMA = pa.schema([("doc_id", pa.string()), ("span_idx", pa.int32()), ("wkt", pa.string())])
+
+
+def spans_batch(spans) -> pa.RecordBatch:
+    """(doc_id, span_idx, wkt) spans as one Arrow batch of the snap
+    stage's input (sources.documents.geometry_spans' columns)."""
+    cols = list(zip(*spans)) or [()] * len(SPANS_SCHEMA)
+    return pa.RecordBatch.from_arrays([pa.array(c, f.type) for c, f in zip(cols, SPANS_SCHEMA)], schema=SPANS_SCHEMA)
 
 
 def canon_rows(records) -> list[tuple]:
@@ -77,10 +81,10 @@ def stage_rows(spans, tms, tm_ids, cfg) -> list[tuple]:
 
     snap_flat_batch = snap_batch.snap_flat_batch
     with mock.patch.object(snap_batch, "snap_flat_batch", spy):
-        pdf = _process_batch(spans_pdf(spans), tms, list(tm_ids), cfg)
+        out = _process_batch(spans_batch(spans), tms, list(tm_ids), cfg)
     rings = [r for res in kernel_results for polys in res.values() for p in polys for r in p]
     assert all(map(_is_handle, rings)), [r for r in rings if not _is_handle(r)][:3]
-    return canon_rows(pdf.to_dict("records"))
+    return canon_rows(out.to_pylist())
 
 
 def _points(kind, coords):

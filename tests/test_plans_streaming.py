@@ -73,6 +73,46 @@ def test_snap_pipeline_is_narrow(spark):
     assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
 
 
+def _snap_stage_outputs(df) -> list[list[str]]:
+    """The output columns of every MapInArrow node in ``df``'s plan."""
+    from texel_spark.plans.checks import simple_plan
+
+    stages = [ln.split("MapInArrow ", 1)[1] for ln in simple_plan(df).splitlines() if "MapInArrow " in ln]
+    # "kernel(<input>)#id, [<output>], false"
+    return [[c.split("#")[0] for c in st.split(", [", 1)[1].split("]")[0].split(", ")] for st in stages]
+
+
+def test_snap_stage_emits_wkt_only_where_read(spark, monkeypatch):
+    """The tile fan-out reads only the snapped bbox, so the pipelines
+    that feed it plan one MapInArrow snap stage without a wkt column;
+    snap_documents itself keeps wkt (the geometry sink reads it)."""
+    from texel_spark.grid.tms import load_embedded
+    from texel_spark.operators import snap_tiles
+    from texel_spark.sources.documents import geometry_spans, synth_documents
+
+    docs = synth_documents(spark, 20, partitions=2)
+    rd = load_embedded("NetherlandsRDNewQuad")
+    snapped = snap_tiles.snap_documents(geometry_spans(docs), rd, [5, 9])
+    assert _snap_stage_outputs(snapped) == [snap_tiles.SNAPPED_ARROW_SCHEMA.names]
+    assert "wkt" in snapped.columns
+
+    bbox_only = [c for c in snapped.columns if c != "wkt"]
+    assert _snap_stage_outputs(snap_tiles.snap_pipeline_df(docs, rd, [5, 9])) == [bbox_only]
+
+    # the fan-out writes its snapped bboxes eagerly and returns a frame
+    # over the written file: check the snap stage it built
+    built = []
+
+    def recorded(*args, **kwargs):
+        built.append(snap_documents(*args, **kwargs))
+        return built[-1]
+
+    snap_documents = snap_tiles.snap_documents
+    monkeypatch.setattr(snap_tiles, "snap_documents", recorded)
+    snap_tiles.snap_tile_fanout_df(docs, rd, [5, 9], tag="plan-test")
+    assert [_snap_stage_outputs(df) for df in built] == [[bbox_only]]
+
+
 # py4j commands a pass's operator may send to build its DataFrame; the
 # Column-call forms of these builds sent 942-1,778
 PLAN_BUILD_COMMANDS = 300

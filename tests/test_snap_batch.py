@@ -347,7 +347,7 @@ def test_batch_matches_scalar_on_multipolygons(keep_points_and_lines, reverse_wi
     polygon vanishes."""
     from unittest import mock
 
-    from tests.snap_rows import spans_pdf
+    from tests.snap_rows import spans_batch
     from texel_spark.kernel import snap_batch
     from texel_spark.operators.snap_tiles import _process_batch
 
@@ -381,7 +381,7 @@ def test_batch_matches_scalar_on_multipolygons(keep_points_and_lines, reverse_wi
         return out
 
     with mock.patch.object(snap_batch, "snap_flat_batch", spy):
-        _process_batch(spans_pdf(spans[1:2]), tms, tm_ids, config)
+        _process_batch(spans_batch(spans[1:2]), tms, tm_ids, config)
     assert lanes == [True, False, True]
 
     vanishing = [spans[-1], ("outside polygon", 0, span_wkt([[_OUTSIDE]]))]
@@ -541,7 +541,7 @@ def test_stage_prints_each_snapped_value_one_way():
     formatter for some rings printed 553791.19 as 553791.1899999999)."""
     import re
 
-    from tests.snap_rows import spans_pdf
+    from tests.snap_rows import spans_batch
     from texel_spark.operators.snap_tiles import _process_batch
 
     spans = _corpus_spans(7 * 4000, 4000)
@@ -549,8 +549,8 @@ def test_stage_prints_each_snapped_value_one_way():
     config = SnapConfig(ignore_outside_grid=True)
     texts = {}
     for c0 in range(0, len(spans), 2000):
-        out = _process_batch(spans_pdf(spans[c0 : c0 + 2000]), tms, [5, 9, 12], config)
-        for w in out["wkt"]:
+        out = _process_batch(spans_batch(spans[c0 : c0 + 2000]), tms, [5, 9, 12], config)
+        for w in out["wkt"].to_pylist():
             for tok in re.findall(r"-?[0-9][0-9.e+-]*", w):
                 texts.setdefault(float(tok), set()).add(tok)
     assert len(texts) > 10_000
@@ -566,7 +566,7 @@ def test_descent_walks_only_undecided_rows():
     step; both must stay at a fifth of that or less."""
     from unittest import mock
 
-    from tests.snap_rows import spans_pdf
+    from tests.snap_rows import spans_batch
     from texel_spark.kernel import snap_batch
     from texel_spark.operators.snap_tiles import _process_batch
 
@@ -587,7 +587,7 @@ def test_descent_walks_only_undecided_rows():
     with mock.patch.object(snap_batch, "line_intersects_np", count_tested), mock.patch.object(
         snap_batch, "_descend_level", count_walked
     ):
-        out = _process_batch(spans_pdf(spans), load_embedded("NetherlandsRDNewQuad"), [5, 9, 12],
+        out = _process_batch(spans_batch(spans), load_embedded("NetherlandsRDNewQuad"), [5, 9, 12],
                              SnapConfig(ignore_outside_grid=True))
     assert len(out) == 3 * len(spans)
     assert 0 < sum(tested) <= 248_371 // 5
@@ -601,7 +601,7 @@ def test_descent_runs_one_step_per_level_at_deep_zooms():
     per level below the root; member-keyed chunks made 1,636."""
     from unittest import mock
 
-    from tests.snap_rows import spans_pdf
+    from tests.snap_rows import spans_batch
     from texel_spark.kernel import snap_batch
     from texel_spark.operators.snap_tiles import _process_batch
 
@@ -615,7 +615,7 @@ def test_descent_runs_one_step_per_level_at_deep_zooms():
         return descend_level(*args)
 
     with mock.patch.object(snap_batch, "_descend_level", count_steps):
-        out = _process_batch(spans_pdf(spans), load_embedded("NetherlandsRDNewQuad"), [5, 9, 16],
+        out = _process_batch(spans_batch(spans), load_embedded("NetherlandsRDNewQuad"), [5, 9, 16],
                              SnapConfig(ignore_outside_grid=True))
     assert len(out) == 3 * len(spans)
     assert 0 < len(steps) <= 28

@@ -177,7 +177,7 @@ def _fmt_geoms(geoms):
         np.asarray(closes, bool),
         np.asarray(xs, np.int64),
         np.asarray(ys, np.int64),
-    )
+    ).to_pylist()
 
 
 def test_format_matches_scalar_formatter_in_float_space():

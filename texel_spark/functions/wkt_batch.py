@@ -5,14 +5,16 @@ time in interpreted Python - measured at ~25% of the flagship stage.
 This module does the same work for a whole Arrow batch as array
 programs:
 
-* parse: one structural scan over the concatenated WKT bytes (paren
-  depth via cumsum classifies ring/member boundaries), then ONE
-  C-speed token split + float cast (pyarrow) for every coordinate of
-  every row at once;
+* parse: Arrow kernels classify each row's kind from its prefix; one
+  structural scan runs over the polygon rows' bytes, read in place from
+  the Arrow data buffer with row bounds from its offsets (paren depth
+  via cumsum classifies ring/member boundaries), then ONE C-speed float
+  cast (pyarrow) for every coordinate of every row at once;
 * format: snapped coordinates are exact int64 fixed-point grid values
   (``i / 10^10``), so WKT text is generated digit-by-digit from the
   integers into one shared byte buffer (vectorized over all points of
-  all output geometries), then sliced per geometry.  Each coordinate
+  all output geometries), which becomes the data buffer of the returned
+  Arrow string array, the geometry bounds its offsets.  Each coordinate
   array's digit layout is computed once (fixedpoint_digits) and then
   written.  ``float(text)`` of the exact-decimal form equals
   ``i / 1e10`` bit-for-bit (both are one correctly-rounded operation on
@@ -39,6 +41,8 @@ from __future__ import annotations
 from typing import NamedTuple
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 _OPEN = np.uint8(40)  # (
 _CLOSE = np.uint8(41)  # )
@@ -90,54 +94,60 @@ def _empty_batch(other_rows: list[int]) -> ParsedPolygonBatch:
     )
 
 
+def _as_arrow(texts) -> pa.Array:
+    """``texts`` as an Arrow string array: Arrow arrays pass through,
+    Python sequences of str/None convert once."""
+    return texts if isinstance(texts, pa.Array) else pa.array(texts, pa.string())
+
+
+def _text_bytes(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
+    """The bytes of the rows of ``arr`` end to end, read in place from
+    its data buffer, and each row's bounds in them: row r owns bytes
+    [bounds[r], bounds[r + 1]).  ``arr`` is a string or large_string
+    array, possibly a zero-copy slice (``arr.offset`` > 0)."""
+    width = np.dtype(np.int64 if pa.types.is_large_string(arr.type) else np.int32)
+    _, off_buf, data_buf = arr.buffers()
+    off = np.frombuffer(off_buf, dtype=width, count=len(arr) + 1, offset=arr.offset * width.itemsize)
+    data = np.frombuffer(data_buf, dtype=np.uint8) if data_buf is not None else np.empty(0, np.uint8)
+    return data[off[0] : off[-1]], (off - off[0]).astype(np.int64)
+
+
 def parse_polygons_batch(texts) -> ParsedPolygonBatch:
-    """Parse all POLYGON/MULTIPOLYGON rows of ``texts`` at once.
+    """Parse all POLYGON/MULTIPOLYGON rows of ``texts`` (an Arrow string
+    array, or a list of str) at once.
 
-    Other geometry kinds land in ``other_rows`` (scalar path).  Raises
-    WktBatchFallback when the structural assumptions don't hold.
+    Row kinds are classified by Arrow kernels on a trimmed, upper-cased
+    13-character prefix; the polygon rows' bytes are read from the Arrow
+    data buffer in place.  Other geometry kinds land in ``other_rows``
+    (scalar path).  Raises WktBatchFallback when the structural
+    assumptions don't hold.
     """
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    fast_rows: list[int] = []
-    is_multi_l: list[bool] = []
-    other_rows: list[int] = []
-    parts: list[str] = []
-    for i, s in enumerate(texts):
-        if not isinstance(s, str):
-            raise WktBatchFallback("null WKT")
-        u = s.lstrip()[:13].upper()
-        if u.startswith("MULTIPOLYGON"):
-            fast_rows.append(i)
-            is_multi_l.append(True)
-            parts.append(s)
-        elif u.startswith("POLYGON"):
-            fast_rows.append(i)
-            is_multi_l.append(False)
-            parts.append(s)
-        else:
-            other_rows.append(i)
-    if not fast_rows:
+    arr = _as_arrow(texts)
+    if arr.null_count:
+        raise WktBatchFallback("null WKT")
+    head = pc.utf8_upper(pc.utf8_slice_codeunits(pc.utf8_ltrim_whitespace(arr), 0, 13))
+    multi = pc.starts_with(head, "MULTIPOLYGON").to_numpy(zero_copy_only=False)
+    fast = multi | pc.starts_with(head, "POLYGON").to_numpy(zero_copy_only=False)
+    fast_rows = np.flatnonzero(fast)
+    other_rows = np.flatnonzero(~fast).tolist()
+    if fast_rows.size == 0:
         return _empty_batch(other_rows)
 
-    joined = "\n".join(parts)
-    try:
-        raw = joined.encode("ascii")
-    except UnicodeEncodeError as e:
-        raise WktBatchFallback("non-ascii WKT") from e
-    b = np.frombuffer(raw, dtype=np.uint8)
+    b, bounds = _text_bytes(arr if fast_rows.size == len(arr) else arr.take(fast_rows))
+    if (b >= 128).any():
+        raise WktBatchFallback("non-ascii WKT")
     opens = b == _OPEN
     closes = b == _CLOSE
     depth = np.cumsum(opens.view(np.int8) - closes.view(np.int8), dtype=np.int32)
-    if depth[-1] != 0 or depth.min() < 0:
+    row_end = bounds[1:]  # fast row r owns chars [row_end[r-1], row_end[r])
+    # every row balances on its own: two unbalanced rows that balance
+    # each other must not parse as one structure
+    if depth.min() < 0 or depth[row_end - 1].any():
         raise WktBatchFallback("unbalanced parens")
-    # char row boundaries come from the known part lengths (no cumsum scan)
-    part_lens = np.fromiter((len(p) for p in parts), count=len(parts), dtype=np.int64) + 1
-    char_row_end = np.cumsum(part_lens)  # row r owns chars [end[r-1], end[r])
 
-    is_multi = np.asarray(is_multi_l, dtype=bool)
+    is_multi = multi[fast_rows]
     ring_depth_row = np.where(is_multi, 3, 2).astype(np.int32)
-    rd_of_char = np.repeat(ring_depth_row, part_lens)[: b.size]
+    rd_of_char = np.repeat(ring_depth_row, np.diff(bounds))
 
     ring_open = opens & (depth == rd_of_char)
     member_open = opens & (depth == rd_of_char - 1)
@@ -146,11 +156,11 @@ def parse_polygons_batch(texts) -> ParsedPolygonBatch:
     if ring_pos.size == 0 or member_pos.size == 0:
         raise WktBatchFallback("EMPTY geometry")
     ring_member = np.searchsorted(member_pos, ring_pos, side="right") - 1
-    member_fastrow = np.searchsorted(char_row_end, member_pos, side="right")
+    member_fastrow = np.searchsorted(row_end, member_pos, side="right")
     # every fast row must contribute >= 1 member and every member >= 1 ring
-    if member_fastrow[0] != 0 or np.count_nonzero(np.diff(member_fastrow)) != len(fast_rows) - 1:
+    if member_fastrow[0] != 0 or np.count_nonzero(np.diff(member_fastrow)) != fast_rows.size - 1:
         raise WktBatchFallback("row without polygon body")
-    if (np.bincount(member_fastrow, minlength=len(fast_rows))[~is_multi] != 1).any():
+    if (np.bincount(member_fastrow, minlength=fast_rows.size)[~is_multi] != 1).any():
         raise WktBatchFallback("POLYGON row with more than one body")
     if ring_member[0] != 0 or np.count_nonzero(np.diff(ring_member)) != member_pos.size - 1:
         raise WktBatchFallback("member without rings")
@@ -173,8 +183,9 @@ def parse_polygons_batch(texts) -> ParsedPolygonBatch:
         & (b != 9)
         & (b != 13)
     )
-    # token starts (for the per-ring 2-D sanity check)
+    # tokens are the runs of kept chars
     tok_pos = np.flatnonzero(keep[1:] & ~keep[:-1]) + 1
+    tok_end = np.flatnonzero(keep[:-1] & ~keep[1:]) + 1
     if keep[0]:
         tok_pos = np.concatenate(([0], tok_pos))
     tok_ring = np.searchsorted(ring_pos, tok_pos, side="right") - 1
@@ -186,11 +197,13 @@ def parse_polygons_batch(texts) -> ParsedPolygonBatch:
     if not np.array_equal(toks_per_ring, 2 * ring_len):
         raise WktBatchFallback("non-2D coordinates")
 
-    cleaned = np.where(keep, b, _SPACE).tobytes().decode("ascii")
-    flat = pc.list_flatten(pc.ascii_split_whitespace(pa.array([cleaned])))
-    flat = flat.filter(pc.not_equal(flat, ""))  # split emits empties for runs
+    # the tokens, packed end to end, as one Arrow string array: one
+    # C-speed float cast for every coordinate of every row
+    tokens = pa.LargeStringArray.from_buffers(
+        tok_pos.size, pa.py_buffer(_exclusive_cumsum(tok_end - tok_pos)), pa.py_buffer(b[keep])
+    )
     try:
-        vals = flat.cast(pa.float64()).to_numpy(zero_copy_only=False)
+        vals = tokens.cast(pa.float64()).to_numpy(zero_copy_only=False)
     except (pa.ArrowInvalid, pa.ArrowNotImplementedError) as e:
         raise WktBatchFallback(str(e)) from e
     if vals.size != 2 * int(ring_len.sum()):
@@ -200,7 +213,7 @@ def parse_polygons_batch(texts) -> ParsedPolygonBatch:
     xy = vals.reshape(-1, 2)
 
     return ParsedPolygonBatch(
-        np.asarray(fast_rows, dtype=np.int64),
+        fast_rows,
         is_multi,
         member_fastrow,
         ring_member,
@@ -233,26 +246,29 @@ def parse_polygons_batch_resilient(texts) -> tuple[ParsedPolygonBatch, list[int]
     Tries the whole batch first (zero overhead on the clean path); on
     WktBatchFallback, bisects so only the offending rows are excluded.
     Returns (parsed, fallback_rows): rows in ``fallback_rows`` need the
-    scalar parser, whose results fold_scalar_rows appends to ``parsed``.
+    scalar parser, whose results fold_scalar_rows folds into ``parsed``.
     A single bad row costs O(log n) half-batch reparses - rare by
-    construction.
+    construction.  A list is converted to Arrow once; the halves are
+    zero-copy slices of it.
     """
+    texts = _as_arrow(texts)
     try:
         return parse_polygons_batch(texts), []
     except WktBatchFallback:
         if len(texts) <= 1:
             return _empty_batch([]), list(range(len(texts)))
         mid = len(texts) // 2
-        left, fb_l = parse_polygons_batch_resilient(texts[:mid])
-        right, fb_r = parse_polygons_batch_resilient(texts[mid:])
+        left, fb_l = parse_polygons_batch_resilient(texts.slice(0, mid))
+        right, fb_r = parse_polygons_batch_resilient(texts.slice(mid))
         return _concat_parsed(left, right, mid), fb_l + [r + mid for r in fb_r]
 
 
 def fold_scalar_rows(parsed: ParsedPolygonBatch, scalar_rows) -> ParsedPolygonBatch:
-    """Append rows the scalar codec parsed, as (row, kind, coords), to
-    ``parsed``: (MULTI)POLYGONs with rings join the flat arrays with the
-    first two ordinates of each point; EMPTY geometries and other kinds
-    join ``other_rows``."""
+    """Fold the rows the scalar codec parsed, as (row, kind, coords),
+    into ``parsed``: (MULTI)POLYGONs with rings join the flat arrays with
+    the first two ordinates of each point; EMPTY geometries and other
+    kinds are the result's ``other_rows``.  ``scalar_rows`` covers every
+    row of ``parsed.other_rows``, so the scalar codec's kind decides."""
     rows: list[int] = []
     is_multi: list[bool] = []
     member_fastrow: list[int] = []
@@ -281,9 +297,11 @@ def fold_scalar_rows(parsed: ParsedPolygonBatch, scalar_rows) -> ParsedPolygonBa
         _exclusive_cumsum(lens)[:-1],
         lens,
         np.asarray(pts, dtype=np.float64).reshape(-1, 2),
-        other_rows,
+        [],
     )
-    return _concat_parsed(parsed, folded, 0)
+    out = _concat_parsed(parsed, folded, 0)
+    out.other_rows = other_rows
+    return out
 
 
 # -- fixed-point formatting --------------------------------------------------
@@ -399,8 +417,9 @@ def format_polygon_wkts(
     ring_close: np.ndarray,
     pt_x: np.ndarray,
     pt_y: np.ndarray,
-) -> list[str]:
-    """Build WKT text for many geometries at once.
+) -> pa.StringArray:
+    """Build WKT text for many geometries at once, as one Arrow string
+    array over the byte buffer the text is written into.
 
     geom_is_multi: bool per geometry (chooses POLYGON vs MULTIPOLYGON).
     poly_geom_bounds: int array len n_geoms+1 - geometry g owns polys
@@ -413,7 +432,7 @@ def format_polygon_wkts(
     """
     n_geoms = geom_is_multi.size
     if n_geoms == 0:
-        return []
+        return pa.array([], pa.string())
     pt_ring_bounds = pt_ring_bounds.astype(np.int64, copy=False)
     n_rings = pt_ring_bounds.size - 1
     ring_npts = pt_ring_bounds[1:] - pt_ring_bounds[:-1]
@@ -509,6 +528,6 @@ def format_polygon_wkts(
     if sep_p.size:
         buf[pt_pos[sep_p] + lx[sep_p] + 1 + ly[sep_p]] = _COMMA
 
-    big = buf.tobytes().decode("ascii")
-    off = geom_off.tolist()
-    return [big[off[i] : off[i + 1]] for i in range(n_geoms)]
+    if geom_off[-1] > np.iinfo(np.int32).max:
+        raise ValueError("WKT text of one batch beyond 2 GiB")
+    return pa.StringArray.from_buffers(n_geoms, pa.py_buffer(geom_off.astype(np.int32)), pa.py_buffer(buf))

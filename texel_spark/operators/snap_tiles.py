@@ -4,7 +4,7 @@ Physical plan (SURVEY.md section 4) - one shuffle total:
 
     scan documents (parquet/Iceberg, column-pruned)          [narrow]
     -> posexplode spans, filter kind='geom'                  [narrow]
-    -> snap kernel (mapInPandas, whole-batch numpy, int64)   [narrow, CPU]
+    -> snap kernel (mapInArrow, whole-batch numpy, int64)    [narrow, CPU]
     -> per-zoom covering-tile expansion + Morton tile_id     [narrow, JVM + vectorized numpy]
     -> repartition(zoom, salted tile_id)                     [THE shuffle]
     -> partitioned write + per-partition metrics/lineage     [sink]
@@ -18,9 +18,13 @@ Scale notes
 * The one shuffle is keyed by (zoom, tile_id) with an explicit salt -
   dense urban tiles are Zipfian hot keys, and AQE's skew splitting
   cannot split a skewed *write* partition, salting can.
-* Grid metadata (a few KB) is never joined: the snap kernel gets the
-  grid through ``sc.broadcast``, and the tile fan-out's per-zoom
-  constants are plan literals, so a pass is one Spark job.
+* Grid metadata (a few KB) is never joined: the snap kernel's closure
+  carries the grid (about 2.6 KB pickled, no broadcast round trip), and
+  the tile fan-out's per-zoom constants are plan literals, so a pass is
+  one Spark job.
+* The tile index reads only the snapped bbox, so the pipelines that
+  feed it run the snap stage with ``wkt=False``: no WKT is formatted
+  for a column nobody reads.
 * Resume: the sink records a manifest of completed (zoom, bucket)
   pairs (bucket = feature hash, filter prunes before the tile explode);
   re-running skips them and a mid-zoom kill re-does only unfinished
@@ -37,41 +41,37 @@ import shutil
 import time
 import uuid
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from ..grid.tms import TileMatrixSet, TOP_LEFT
 from ..kernel.snap import SnapConfig
 from ..sources.documents import geometry_spans
 from .sqltext import lit
 
-SNAPPED_SCHEMA = StructType(
+# the snap stage's output, one row per (feature, zoom); the stage builds
+# its Arrow batches against this schema
+SNAPPED_ARROW_SCHEMA = pa.schema(
     [
-        StructField("doc_id", StringType()),
-        StructField("span_idx", IntegerType()),
-        StructField("zoom", IntegerType()),
-        StructField("geom_kind", StringType()),
-        StructField("wkt", StringType()),
-        StructField("minx", DoubleType()),
-        StructField("miny", DoubleType()),
-        StructField("maxx", DoubleType()),
-        StructField("maxy", DoubleType()),
-        StructField("n_polys", IntegerType()),
+        ("doc_id", pa.string()),
+        ("span_idx", pa.int32()),
+        ("zoom", pa.int32()),
+        ("geom_kind", pa.string()),
+        ("wkt", pa.string()),
+        ("minx", pa.float64()),
+        ("miny", pa.float64()),
+        ("maxx", pa.float64()),
+        ("maxy", pa.float64()),
+        ("n_polys", pa.int32()),
     ]
 )
-# the pandas dtype of each SNAPPED_SCHEMA column in a snap-stage frame
-SNAPPED_DTYPES = {
-    f.name: {IntegerType(): "int32", DoubleType(): "float64"}.get(f.dataType, "object")
-    for f in SNAPPED_SCHEMA.fields
-}
+
+
+def _snapped_arrow_schema(wkt: bool) -> pa.Schema:
+    """SNAPPED_ARROW_SCHEMA, without its ``wkt`` column unless ``wkt``."""
+    return SNAPPED_ARROW_SCHEMA if wkt else SNAPPED_ARROW_SCHEMA.remove(SNAPPED_ARROW_SCHEMA.get_field_index("wkt"))
 
 
 def _parse_span(wkt, doc_id, span_idx):
@@ -84,30 +84,20 @@ def _parse_span(wkt, doc_id, span_idx):
         raise ValueError(f"doc_id={doc_id!r} span_idx={span_idx}: {e}") from e
 
 
-def _emit_nonpolygon(rows, doc_id, span_idx, kind, coords, tm_ids_):
-    """Non-polygon spans pass through unchanged to every zoom
-    (processing/processing.go:62-69); EMPTY geometries emit nothing."""
-    from ..functions.wkt import geometry_to_wkt
-
-    if not coords:
-        return
+def _nonpolygon_bbox(kind, coords):
+    """The bbox of a non-polygon geometry's coordinates."""
     if kind == "point":
-        bbox = (coords[0], coords[1], coords[0], coords[1])
-    elif kind == "multilinestring":
-        xs = [p[0] for ln in coords for p in ln]
-        ys = [p[1] for ln in coords for p in ln]
-        bbox = (min(xs), min(ys), max(xs), max(ys))
-    else:
-        xs = [p[0] for p in coords]
-        ys = [p[1] for p in coords]
-        bbox = (min(xs), min(ys), max(xs), max(ys))
-    w = geometry_to_wkt(kind, coords)
-    rows.extend((doc_id, span_idx, zoom, kind, w, *bbox, 0) for zoom in tm_ids_)
+        return (coords[0], coords[1], coords[0], coords[1])
+    pts = [p for ln in coords for p in ln] if kind == "multilinestring" else coords
+    xs = [p[0] for p in pts]
+    ys = [p[1] for p in pts]
+    return (min(xs), min(ys), max(xs), max(ys))
 
 
-def _process_batch(pdf, tms_, tm_ids_, cfg):
-    """One Arrow batch through the snap stage: batch WKT parse ->
-    flat-array snap kernel -> one digit-exact batch WKT emit.
+def _process_batch(batch: pa.RecordBatch, tms_, tm_ids_, cfg, wkt: bool = True) -> pa.RecordBatch:
+    """One Arrow batch of (doc_id, span_idx, wkt) spans through the snap
+    stage: batch WKT parse -> flat-array snap kernel -> one digit-exact
+    batch WKT emit.
 
     Every snapped (member, zoom) geometry lands in one geometry table of
     (a, b, rev) ring handles: the kernel's columnar lane adds its
@@ -116,31 +106,33 @@ def _process_batch(pdf, tms_, tm_ids_, cfg):
     kernel's scalar helpers build) add theirs.  One array pass merges a
     row's parts per zoom, the way the reference regroups a
     multipolygon's snapped parts; one format_polygon_wkts call writes
-    the table's WKT and one reduceat pass its bboxes.  Per-row Python
-    only touches the rare rows the array parser rejects (3D, non-ASCII,
-    EMPTY, null or malformed WKT, parsed by the scalar codec) and
-    non-polygon kinds, which pass through in ``other``.
+    the table's WKT into one Arrow string array and one reduceat pass
+    its bboxes.  Per-row Python only touches the rows the array parser
+    does not take: the rare rows it rejects (3D, non-ASCII, EMPTY, null
+    or malformed WKT) and non-polygon kinds, which the scalar codec
+    parses; polygons among them join the flat arrays, and non-polygon
+    geometries pass through unchanged to every zoom
+    (processing/processing.go:62-69).  EMPTY geometries emit nothing.
 
-    The frame has SNAPPED_DTYPES whatever the batch holds; the order of
-    its rows is unspecified."""
+    ``wkt=False`` skips the WKT emit: the batch has no ``wkt`` column.
+    The batch has _snapped_arrow_schema(wkt) whatever the input holds;
+    the order of its rows is unspecified."""
     import numpy as np
-    import pandas as pd
 
     from ..functions import wkt_batch as wb
+    from ..functions.wkt import geometry_to_wkt
     from ..kernel.snap_batch import snap_flat_batch
 
-    texts = pdf["wkt"].tolist()
-    doc_ids = pdf["doc_id"].tolist()
-    span_idxs = pdf["span_idx"].tolist()
-    # rows the array parser rejects (3D/EMPTY/non-ASCII WKT) are parsed
-    # one by one by the scalar codec and folded into the same flat
-    # arrays, so they share the kernel entry and the digit-exact
-    # formatter with every other row of the batch
+    texts, doc_ids, span_idxs = (batch.column(name) for name in ("wkt", "doc_id", "span_idx"))
+    # rows the array parser does not take are parsed one by one by the
+    # scalar codec; their polygons are folded into the same flat arrays,
+    # so they share the kernel entry and the digit-exact formatter with
+    # every other row of the batch
     parsed, fb_rows = wb.parse_polygons_batch_resilient(texts)
-    if fb_rows:
-        parsed = wb.fold_scalar_rows(
-            parsed, [(i, *_parse_span(texts[i], doc_ids[i], span_idxs[i])) for i in fb_rows]
-        )
+    scalar_rows = np.asarray(fb_rows + parsed.other_rows, dtype=np.int64)
+    scalar_cols = (c.take(scalar_rows).to_pylist() for c in (texts, doc_ids, span_idxs))
+    scalar = {i: _parse_span(*args) for i, *args in zip(scalar_rows.tolist(), *scalar_cols)}
+    parsed = wb.fold_scalar_rows(parsed, [(i, *geom) for i, geom in scalar.items()])
     results, store, columnar = snap_flat_batch(
         parsed.xy, parsed.ring_member, parsed.ring_start, parsed.ring_len,
         parsed.member_fastrow.size, tms_, tm_ids_, cfg,
@@ -155,11 +147,6 @@ def _process_batch(pdf, tms_, tm_ids_, cfg):
             rings.extend(map(len, polys))
             for p in polys:
                 handles.extend(p)
-
-    other = []
-    for row_i in parsed.other_rows:
-        doc_id, span_idx = doc_ids[row_i], span_idxs[row_i]
-        _emit_nonpolygon(other, doc_id, span_idx, *_parse_span(texts[row_i], doc_id, span_idx), tm_ids_)
 
     dict_geoms = np.asarray(geoms, dtype=np.int64).reshape(-1, 3)
     dict_handles = np.asarray(handles, dtype=np.int64).reshape(-1, 3)
@@ -181,7 +168,6 @@ def _process_batch(pdf, tms_, tm_ids_, cfg):
     run[1:] = (fr[1:] != fr[:-1]) | (zoom[1:] != zoom[:-1])
     run_start = np.flatnonzero(run)
     fr, zoom, n_polys = fr[run_start], zoom[run_start], np.add.reduceat(n_polys, run_start)
-    row = parsed.rows[fr]
     is_multi = parsed.is_multi[fr] | (n_polys > 1)
 
     # gather every handle's points in emit order, then one WKT + bbox pass
@@ -195,22 +181,37 @@ def _process_batch(pdf, tms_, tm_ids_, cfg):
     py = store.ky[src]
     # a geometry's points are one contiguous span of the gathered arrays
     geom_pt_start = pt_bounds[ring_bounds[poly_bounds[:-1]]]
-    table = pd.DataFrame(
-        {
-            "doc_id": np.asarray(doc_ids, dtype=object)[row],
-            "span_idx": np.asarray(span_idxs, dtype=np.int64)[row],
-            "zoom": zoom,
-            "geom_kind": np.where(is_multi, "multipolygon", "polygon").astype(object),
-            "wkt": wb.format_polygon_wkts(is_multi, poly_bounds, ring_bounds, pt_bounds, lens >= 2, px, py),
-            "minx": np.minimum.reduceat(px, geom_pt_start) / 1e10,
-            "miny": np.minimum.reduceat(py, geom_pt_start) / 1e10,
-            "maxx": np.maximum.reduceat(px, geom_pt_start) / 1e10,
-            "maxy": np.maximum.reduceat(py, geom_pt_start) / 1e10,
-            "n_polys": n_polys,
-        }
-    )
-    frames = (table, pd.DataFrame(other, columns=table.columns))
-    return pd.concat([f.astype(SNAPPED_DTYPES) for f in frames], ignore_index=True)
+
+    # non-polygon rows pass through, one output row per zoom
+    other = [i for i in parsed.other_rows if scalar[i][1]]
+    n_zooms = len(tm_ids_)
+    other_bbox = np.repeat(np.asarray([_nonpolygon_bbox(*scalar[i]) for i in other]).reshape(-1, 4), n_zooms, axis=0)
+    row = np.concatenate([parsed.rows[fr], np.repeat(np.asarray(other, dtype=np.int64), n_zooms)])
+    columns = {
+        "doc_id": doc_ids.take(row),
+        "span_idx": span_idxs.take(row),
+        "zoom": np.concatenate([zoom, np.tile(np.asarray(tm_ids_, dtype=np.int64), len(other))]),
+        "geom_kind": pa.concat_arrays(
+            [
+                pa.array(["polygon", "multipolygon"]).take(is_multi.view(np.int8)),
+                pa.array([scalar[i][0] for i in other for _ in tm_ids_], pa.string()),
+            ]
+        ),
+        "n_polys": np.concatenate([n_polys, np.zeros(other_bbox.shape[0], dtype=np.int64)]),
+    }
+    for c, (name, reduce, v) in enumerate(
+        (("minx", np.minimum, px), ("miny", np.minimum, py), ("maxx", np.maximum, px), ("maxy", np.maximum, py))
+    ):
+        columns[name] = np.concatenate([reduce.reduceat(v, geom_pt_start) / 1e10, other_bbox[:, c]])
+    if wkt:
+        columns["wkt"] = pa.concat_arrays(
+            [
+                wb.format_polygon_wkts(is_multi, poly_bounds, ring_bounds, pt_bounds, lens >= 2, px, py),
+                pa.array([geometry_to_wkt(*scalar[i]) for i in other for _ in tm_ids_], pa.string()),
+            ]
+        )
+    schema = _snapped_arrow_schema(wkt)
+    return pa.RecordBatch.from_arrays([pa.array(columns[f.name]).cast(f.type) for f in schema], schema=schema)
 
 
 def snap_documents(
@@ -218,6 +219,7 @@ def snap_documents(
     tms: TileMatrixSet,
     tm_ids: list[int],
     config: SnapConfig | None = None,
+    wkt: bool = True,
 ) -> DataFrame:
     """Geometry spans -> snapped geometries, one row per (feature, zoom).
 
@@ -225,28 +227,31 @@ def snap_documents(
     multipolygons are split/snapped/regrouped, exactly like the
     reference's type dispatch (processing/processing.go:22-76).
 
-    Hot path is array programs end-to-end: batch WKT parse
+    Hot path is array programs end-to-end, with Arrow in and out
+    (mapInArrow): batch WKT parse over the input column's Arrow buffers
     (functions/wkt_batch.py) -> flat-array snap kernel + vectorized
     assembly (kernel/snap_batch.py) -> one digit-exact batch WKT emit
-    per Arrow batch (_process_batch).  Every snapped polygon reaches
-    that emit as int64 ring handles, so a snapped value has one WKT
-    text wherever it appears.  Polygons and multipolygon parts, holed
-    or not, get there as kernel arrays with no per-row Python, and one
-    array pass merges a multipolygon's parts per zoom; only the rare
-    rings the kernel leaves to its scalar helpers cost one Python visit
-    per member.
+    per Arrow batch into one Arrow string array (_process_batch).  Every
+    snapped polygon reaches that emit as int64 ring handles, so a
+    snapped value has one WKT text wherever it appears.  Polygons and
+    multipolygon parts, holed or not, get there as kernel arrays with no
+    per-row Python, and one array pass merges a multipolygon's parts per
+    zoom; only the rare rings the kernel leaves to its scalar helpers
+    cost one Python visit per member.
+
+    ``wkt=False`` drops the ``wkt`` column and skips its emit, for
+    consumers that read only the bbox columns (the tile fan-out):
+    Catalyst cannot prune a column a Python function computes.
     """
-    spark = docs.sparkSession
     config = config or SnapConfig(keep_points_and_lines=False, ignore_outside_grid=True)
-    bc = spark.sparkContext.broadcast((tms, tuple(tm_ids), config))
+    tm_ids_ = list(tm_ids)
 
+    # the grid (a few KB pickled) travels in the closure
     def kernel(batches):
-        tms_, tm_ids_, cfg = bc.value
-        tm_ids_ = list(tm_ids_)
-        for pdf in batches:
-            yield _process_batch(pdf, tms_, tm_ids_, cfg)
+        for batch in batches:
+            yield _process_batch(batch, tms, tm_ids_, config, wkt)
 
-    return docs.mapInPandas(kernel, schema=SNAPPED_SCHEMA)
+    return docs.mapInArrow(kernel, schema=from_arrow_schema(_snapped_arrow_schema(wkt)))
 
 
 def morton_z_text(tx: str, ty: str) -> str:
@@ -505,8 +510,9 @@ def run_pipeline(
 def snap_pipeline_df(
     docs: DataFrame, tms: TileMatrixSet, tm_ids: list[int], config: SnapConfig | None = None
 ) -> DataFrame:
-    """The pipeline as a pure DataFrame (no sink) for entry()/bench."""
-    return assign_tiles(snap_documents(geometry_spans(docs), tms, tm_ids, config), tms, tm_ids)
+    """The pipeline as a pure DataFrame (no sink) for entry()/bench.  The
+    tile fan-out reads only the bbox, so the snap stage emits no WKT."""
+    return assign_tiles(snap_documents(geometry_spans(docs), tms, tm_ids, config, wkt=False), tms, tm_ids)
 
 
 # -- DuckDB oracle for the JVM fan-out half (VERDICT r2 item 7) ----------
@@ -560,7 +566,7 @@ def snap_tile_fanout_df(
     """
     spark = docs.sparkSession
     scratch = os.path.join(BBOX_ORACLE_DIR, tag)
-    snapped = snap_documents(geometry_spans(docs), tms, tm_ids, config)
+    snapped = snap_documents(geometry_spans(docs), tms, tm_ids, config, wkt=False)
     (
         snapped.select("doc_id", "span_idx", "zoom", "minx", "miny", "maxx", "maxy")
         .write.mode("overwrite")

@@ -57,5 +57,7 @@ def assert_no_python_stage(df: DataFrame) -> None:
     (row-at-a-time or Arrow) anywhere - the operator's 'no Python in the
     hot path' claim as a test."""
     plan = simple_plan(df)
-    for marker in ("BatchEvalPython", "ArrowEvalPython", "MapInPandas", "FlatMapGroupsInPandas", "PythonUDF"):
+    for marker in (
+        "BatchEvalPython", "ArrowEvalPython", "MapInPandas", "MapInArrow", "FlatMapGroupsInPandas", "PythonUDF"
+    ):
         assert marker not in plan, f"Python stage ({marker}) in plan:\n{plan}"

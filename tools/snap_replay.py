@@ -4,7 +4,8 @@ Builds the synthetic document corpus ``build_document(seed * n_docs + i)``
 for ``i < n_docs`` (the corpus perfbench's snap_tiles workload writes
 for that seed, without Spark), takes its geometry spans in document
 order, and runs ``operators.snap_tiles._process_batch`` over them in
-2,000-row chunks on NetherlandsRDNewQuad at zooms 5/9/12, under two
+2,000-row Arrow batches (doc_id string, span_idx int32, wkt string, the
+stage's input columns) on NetherlandsRDNewQuad at zooms 5/9/12, under two
 configs: the default (``ignore_outside_grid``) and
 ``keep_points_and_lines`` + ``reverse_winding_order``.  Each config
 replays two layouts of the same polygons: ``polygon`` (the corpus as
@@ -74,7 +75,7 @@ def replay(spans, tms, cfg):
     the columnar lane's share of the kernel's polygon members."""
     from unittest import mock
 
-    import pandas as pd
+    import pyarrow as pa
 
     from texel_spark.kernel import snap_batch
     from texel_spark.operators.snap_tiles import _process_batch
@@ -91,11 +92,12 @@ def replay(spans, tms, cfg):
     out = []
     with mock.patch.object(snap_batch, "snap_flat_batch", counted):
         for c0 in range(0, len(spans), CHUNK):
-            part = spans[c0 : c0 + CHUNK]
-            pdf = pd.DataFrame(
-                {"doc_id": [s[0] for s in part], "span_idx": [s[1] for s in part], "wkt": [s[2] for s in part]}
+            doc_ids, span_idxs, wkts = zip(*spans[c0 : c0 + CHUNK])
+            batch = pa.RecordBatch.from_arrays(
+                [pa.array(doc_ids, pa.string()), pa.array(span_idxs, pa.int32()), pa.array(wkts, pa.string())],
+                names=["doc_id", "span_idx", "wkt"],
             )
-            out.extend(_process_batch(pdf, tms, ZOOMS, cfg).to_dict("records"))
+            out.extend(_process_batch(batch, tms, ZOOMS, cfg).to_pylist())
     return out, lanes["columnar"] / max(lanes["members"], 1)
 
 
