@@ -622,10 +622,10 @@ def test_descent_runs_one_step_per_level_at_deep_zooms():
 
 
 def test_ring_handle_maps_centroids_exactly_and_rejects_other_points():
-    """BatchSnapStore.ring_handle puts a scalar helper's float ring back
-    on its level's centroid ints, also where RD y-ordinates exceed 2^51
-    fixed-point units (there rint(f * 1e10) is not exact), and raises on
-    a point that is no centroid of the level."""
+    """BatchSnapStore.ring_handles puts float rings back on their level's
+    centroid ints as one block, a handle per ring in order, also where RD
+    y-ordinates exceed 2^51 fixed-point units (there rint(f * 1e10) is not
+    exact), and raises on a point that is no centroid of the level."""
     from texel_spark.grid.fixedpoint import to_ord
     from texel_spark.kernel.pointindex import VECTOR_TILE_INTERNAL_PIXEL_RESOLUTION, PointIndex
     from texel_spark.kernel.snap_batch import BatchSnapStore
@@ -637,22 +637,25 @@ def test_ring_handle_maps_centroids_exactly_and_rejects_other_points():
     assert max(c[1] for c in centroids) > 2**51
     store = BatchSnapStore(tms, level)
     ring = [(to_ord(cx), to_ord(cy)) for cx, cy in centroids]
-    a, b, rev = store.ring_handle(ring, level)
+    handles = store.ring_handles([ring, ring[:2]], level)
     with pytest.raises(RuntimeError, match="centroid"):
-        store.ring_handle([(ring[0][0] + 0.01, ring[0][1])], level)
+        store.ring_handles([ring[:2], [(ring[0][0] + 0.01, ring[0][1])]], level)
     store.finish()
-    assert (a, b, rev) == (0, 3, False)
-    assert list(zip(store.kx.tolist(), store.ky.tolist())) == centroids
+    assert handles == [(0, 3, False), (3, 5, False)]
+    assert list(zip(store.kx.tolist(), store.ky.tolist())) == centroids + centroids[:2]
 
 
 def test_kernel_columnar_contract_as_perfbench_replays_it():
     """perfbench's kernel replay calls snap_flat_batch as below, with the
     ``need_dicts`` and ``collect_columnar`` keywords the kernel
     ignores, and reads ``results[m] is None`` as "member m took the
-    columnar lane" (kernel.columnar_share).  Pin that contract: every
-    member in ``columnar`` has a None result, one-ring and holed
-    one-outer members and the parts of a multipolygon all take the lane,
-    and the stage rows equal the scalar kernel's rows."""
+    columnar lane" (kernel.columnar_share).  Pin that contract both
+    ways: one-ring and holed one-outer members and the parts of a
+    multipolygon all take the lane, land in ``columnar`` and have a None
+    result; a ring that snaps with a backtrack sends its member to the
+    dict lane, so it is missing from ``columnar`` and its result is a
+    dict of ring-handle lists; and the stage rows equal the scalar
+    kernel's rows."""
     import numpy as np
 
     from texel_spark.functions.wkt_batch import parse_polygons_batch_resilient
@@ -673,6 +676,8 @@ def test_kernel_columnar_contract_as_perfbench_replays_it():
                                              _random_ring(rng, 133_000, 430_000, 1_500, 6)]])))
     spans.append(("multi", 0, span_wkt([[_random_ring(rng, 120_000, 420_000, 2_000, 6)],
                                         [_random_ring(rng, 180_000, 480_000, 2_000, 7)]], multi=True)))
+    # _SPIKE's out-and-back edge, at 1 km a unit
+    spans.append(("backtrack", 0, span_wkt([[[(140_000 + 1_000 * x, 410_000 + 1_000 * y) for x, y in _SPIKE]]])))
 
     parsed, fb_rows = parse_polygons_batch_resilient([s[2] for s in spans])
     assert fb_rows == []
@@ -686,11 +691,86 @@ def test_kernel_columnar_contract_as_perfbench_replays_it():
         collect_columnar=True,
     )
 
-    col_members = set(columnar[0].tolist())
-    assert col_members == set(range(n_members))
-    assert all(r is None for r in results)
+    backtrack = n_members - 1
+    assert set(columnar[0].tolist()) == set(range(backtrack))
+    assert all(r is None for r in results[:backtrack])
+    assert isinstance(results[backtrack], dict) and sorted(results[backtrack]) == tm_ids
+    for polys in results[backtrack].values():
+        assert polys and all(
+            isinstance(ring, tuple) and isinstance(ring[0], int) for poly in polys for ring in poly
+        )
 
     got = stage_rows(spans, tms, tm_ids, config)
     assert got == scalar_rows(spans, tms, tm_ids, config)
     assert {r[5].count("[(") for r in got if r[0] == "two-holes"} == {3}
     assert {(r[3], r[-1]) for r in got if r[0] == "multi"} == {("multipolygon", 2)}
+
+
+def _dense_polygon(rng, cx, cy, holed):
+    """A 60-vertex ring of radius 40 m with +-30% radial noise; ``holed``
+    adds two clockwise 10-vertex holes of radius 8 m."""
+    import math
+
+    rings = [[(cx + r * math.cos(a), cy + r * math.sin(a))
+              for a, r in ((2 * math.pi * k / 60, 40 * rng.uniform(0.7, 1.3)) for k in range(60))]]
+    if holed:
+        for hx in (cx - 15, cx + 15):
+            rings.append([(hx + 8 * math.cos(-2 * math.pi * k / 10), cy + 8 * math.sin(-2 * math.pi * k / 10))
+                          for k in range(10)])
+    return rings
+
+
+def test_batch_matches_scalar_on_dense_vertex_rings():
+    """Dense-vertex rings send nearly every member to the kernel's dict
+    lane (at zoom 5 a 40 m ring of 60 vertices snaps with backtracks and
+    self-tangencies), which runs the scalar kernel's per-ring cleanup and
+    per-level tail.  In the holed members the outer goes to the scalar
+    helpers while the holes take the fast path at the same level.  Stage
+    == scalar under every keep_points_and_lines x reverse_winding_order
+    config."""
+    from unittest import mock
+
+    from tests.snap_rows import spans_batch
+    from texel_spark.kernel import snap_batch
+    from texel_spark.operators.snap_tiles import _process_batch
+
+    rng = random.Random(60)
+    tms = load_embedded("NetherlandsRDNewQuad")
+    tm_ids = [5, 9, 12]
+    spans = _spans(
+        _dense_polygon(rng, rng.uniform(100_000, 200_000), rng.uniform(400_000, 500_000), i % 4 == 3)
+        for i in range(200)
+    )
+    for keep_pl in (False, True):
+        for reverse in (False, True):
+            config = SnapConfig(keep_points_and_lines=keep_pl, reverse_winding_order=reverse)
+            _assert_stage_matches_scalar(spans, tms, tm_ids, config)
+
+    # the lanes, from snap_flat_batch's results and the per-level ring status
+    calls, statuses = [], []
+    snap_flat_batch, assembly_arrays = snap_batch.snap_flat_batch, snap_batch._assembly_arrays
+
+    def spy_kernel(*args, **kwargs):
+        out = snap_flat_batch(*args, **kwargs)
+        calls.append((args[1], out[0]))
+        return out
+
+    def spy_assembly(*args, **kwargs):
+        out = assembly_arrays(*args, **kwargs)
+        statuses.append(out["status"])
+        return out
+
+    with mock.patch.object(snap_batch, "snap_flat_batch", spy_kernel), mock.patch.object(
+        snap_batch, "_assembly_arrays", spy_assembly
+    ):
+        _process_batch(spans_batch(spans), tms, tm_ids, SnapConfig())
+    (ring_member, results), = calls
+    dict_members = {m for m, r in enumerate(results) if r is not None}
+    assert len(dict_members) >= 0.9 * len(results)
+    assert all(isinstance(r, dict) for m, r in enumerate(results) if m in dict_members)
+    mixed = set()
+    for status in statuses:
+        mixed |= set(ring_member[status == snap_batch._SCALAR].tolist()) & set(
+            ring_member[status == snap_batch._FAST].tolist()
+        )
+    assert len(mixed & dict_members) >= 10

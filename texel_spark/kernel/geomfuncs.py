@@ -102,11 +102,10 @@ def winding_of(pts) -> int:
     if n < 3:
         return COLINEAR
     rmli = 0
-    for i in range(1, n):
-        if pts[i][1] < pts[rmli][1]:
-            rmli = i
-        elif pts[i][1] == pts[rmli][1] and pts[i][0] > pts[rmli][0]:
-            rmli = i
+    rx, ry = pts[0]
+    for i, (x, y) in enumerate(pts):
+        if y < ry or (y == ry and x > rx):
+            rmli, rx, ry = i, x, y
     a = pts[rmli - 1] if rmli > 0 else pts[n - 1]
     b = pts[rmli]
     c = pts[(rmli + 1) % n]

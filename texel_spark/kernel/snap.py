@@ -19,6 +19,8 @@ list[ring], result = dict[tm_id, list[polygon]].
 
 from __future__ import annotations
 
+import operator
+
 from ..grid.fixedpoint import from_point
 from ..grid.tms import TileMatrixSet
 from .geomfuncs import CLOCKWISE, COLINEAR, COUNTER_CLOCKWISE, ring_contains, shoelace, winding_of
@@ -100,30 +102,35 @@ def _add_points_and_snap(ix: PointIndex, polygon, levels, config: SnapConfig):
                 continue
             new_outers.setdefault(level, []).extend(outer_rings)
             new_inners.setdefault(level, []).extend(inner_rings)
-            if config.keep_points_and_lines:
-                new_points_and_lines.setdefault(level, []).extend(points_and_lines)
+            new_points_and_lines.setdefault(level, []).extend(points_and_lines)
 
     new_polygons: dict[int, list] = {}
     for level in level_map:
-        outers, inners = _dedupe_inners_outers(new_outers.get(level, []), new_inners.get(level, []))
-        polygons_for_level = _match_inners_to_polygons([[o] for o in outers], inners, len(polygon) > 1)
-        _reverse_winding_order_if_configured(polygons_for_level, config)
+        polygons_for_level = _polygons_for_level(
+            new_outers.get(level, []),
+            new_inners.get(level, []),
+            new_points_and_lines.get(level, []),
+            len(polygon) > 1,
+            config,
+        )
         if polygons_for_level:
             new_polygons[level] = polygons_for_level
-
-    # points and lines at the end, as single-ring "polygons" (snap.go:148-153)
-    for level, points_and_lines in new_points_and_lines.items():
-        for point_or_line in points_and_lines:
-            new_polygons.setdefault(level, []).append([point_or_line])
     return new_polygons
 
 
-def _reverse_winding_order_if_configured(polygons, config: SnapConfig) -> None:
-    if not config.reverse_winding_order:
-        return
-    for poly in polygons:
-        for i in range(len(poly)):
-            poly[i] = list(reversed(poly[i]))
+def _polygons_for_level(outers, inners, points_and_lines, has_inners: bool, config: SnapConfig):
+    """The per-level tail of snap.addPointsAndSnap (snap.go:89-155) after
+    its ring loop, over the cleaned rings of every input ring: dedupe
+    equal rings, match inners to outers, reverse if configured, then
+    points and lines as single-ring "polygons" when kept (snap.go:148-153).  The batch kernel's dict lane
+    (snap_batch._combine_member_level) runs it too."""
+    outers, inners = _dedupe_inners_outers(outers, inners)
+    polygons = _match_inners_to_polygons([[o] for o in outers], inners, has_inners)
+    if config.reverse_winding_order:
+        polygons = [[ring[::-1] for ring in poly] for poly in polygons]
+    if config.keep_points_and_lines:
+        polygons.extend([point_or_line] for point_or_line in points_and_lines)
+    return polygons
 
 
 # -- ring walking helpers --------------------------------------------------
@@ -283,10 +290,7 @@ def _kmp_deduplicate(ring):
     (snap.go:531-639)."""
     # fast path: the walk below only ever acts when some vertex equals the
     # one two steps back (a backtrack); without one it is a no-op
-    for i in range(2, len(ring)):
-        if ring[i] == ring[i - 2]:
-            break
-    else:
+    if not any(map(operator.eq, ring[2:], ring)):
         return ring
     ring_len = len(ring)
     sequences_to_remove: dict[str, tuple[int, int]] = {}

@@ -31,17 +31,23 @@ array programs over ALL polygons of an Arrow batch at once:
   point concatenation/dedup rules (snap.go:366-380), ring closure,
   backtrack detection (the _kmp_deduplicate fast-path test) and the
   winding classification (snap.go:494-526 incl. the colinear quirk) are
-  all computed as per-level array passes; only rings that actually have
-  snapping-created zigzags or self-tangency points (rare) drop to the
-  scalar helpers, which stay the oracle for those behaviors; the rings
-  they return are mapped back onto the level's centroid ints;
+  all computed as per-level array passes, and a ring with
+  snapping-created zigzags or self-tangency points is left to the
+  scalar helpers, which stay the oracle for those behaviors;
 * combine (snap.go:93-155, 177-324): members with one outer ring and
   any number of inners take the columnar lane, which matches every
   inner to the outer with one even-odd ray cast over all (inner vertex,
   outer edge) pairs and emits geometry-table arrays, multipolygon parts
-  included (the snap stage merges parts per row and zoom); only rings
-  left to the scalar helpers and outers equal to two or more inners go
-  through the per-member dict lane.
+  included (the snap stage merges parts per row and zoom).  Members
+  with a ring left to the scalar helpers, or with an outer equal to
+  two or more inners, take the per-member dict lane: it runs the scalar
+  kernel's own ring cleanup and per-level tail (_cleanup_new_ring,
+  _polygons_for_level) and maps the rings they return back onto the
+  level's centroid ints.  Perfbench's corpus sends no member to the
+  dict lane; dense-vertex rings (tools/snap_replay.py's ``dense``
+  layout: 60 vertices on a 40 m ring, RD zooms 5/9/12) send nearly all
+  of them: at zoom 5 their outers snap with backtracks or
+  self-tangencies.
 
 Snapped coordinates are carried as int64 fixed-point arrays end-to-end,
 and every ring leaves the kernel as a handle into them, so the Spark
@@ -58,17 +64,15 @@ golden case and on random polygons.
 
 from __future__ import annotations
 
+from itertools import accumulate, chain
+
 import numpy as np
 
 from ..functions.wkt_batch import _exclusive_cumsum, _ragged
 from ..grid import morton
 from ..grid.fixedpoint import go_div
 from .pointindex import VECTOR_TILE_INTERNAL_PIXEL_RESOLUTION, OutsideGridError
-from .snap import (
-    _cleanup_new_ring,
-    _dedupe_inners_outers,
-    _match_inners_to_polygons,
-)
+from .snap import _cleanup_new_ring, _polygons_for_level
 
 _POW10F = 1e10  # == math.Pow(10, 10), exactly representable
 _HASH_C1 = np.uint64(0x9E3779B97F4A7C15)
@@ -184,29 +188,27 @@ class BatchSnapStore:
         self.total += kx.size
         return base
 
-    def ring_handle(self, ring, level: int) -> tuple:
-        """Append a ring of float points (a scalar helper's output, every
-        point a snapped centroid of ``level``) and return its handle.
-        Each point maps to the nearest centroid int of the level,
-        ``origin + span//2 + i*span``, whose float view ``int / 1e10``
-        must be the point itself."""
+    def ring_handles(self, rings, level: int) -> list:
+        """Append rings of float points (dict-lane rings, every point a
+        snapped centroid of ``level``) as one block and return their
+        handles, in order.  Each point maps to the nearest centroid int of
+        the level, ``origin + span//2 + i*span``, whose float view
+        ``int / 1e10`` must be the point itself."""
         span = self.spans[level]
-        pts = np.asarray(ring, dtype=np.float64).reshape(-1, 2)
+        ends = list(accumulate(map(len, rings), initial=self.total))
+        n = ends[-1] - self.total
+        pts = np.fromiter(chain.from_iterable(chain.from_iterable(rings)), np.float64, 2 * n).reshape(-1, 2)
         c0 = self.origin + (span >> 1)
         k = c0 + np.rint((pts * _POW10F - c0) / span).astype(np.int64) * span
-        if not (k / _POW10F == pts).all():
-            raise RuntimeError(f"ring point is not a level-{level} cell centroid: {ring}")
-        base = self.append(k[:, 0].copy(), k[:, 1].copy())
-        return (base, base + k.shape[0], False)
+        bad = np.flatnonzero((k / _POW10F != pts).any(axis=1))
+        if bad.size:
+            raise RuntimeError(f"ring point is not a level-{level} cell centroid: {tuple(pts[bad[0]].tolist())}")
+        self.append(k[:, 0].copy(), k[:, 1].copy())
+        return [(a, b, False) for a, b in zip(ends, ends[1:])]
 
     def finish(self):
         self.kx = np.concatenate(self.kx) if self.kx else np.empty(0, np.int64)
         self.ky = np.concatenate(self.ky) if self.ky else np.empty(0, np.int64)
-
-
-def _ring_floats(fx, fy, a: int, b: int, rev: bool):
-    pts = list(zip(fx[a:b].tolist(), fy[a:b].tolist()))
-    return pts[::-1] if rev else pts
 
 
 def _rightmost_lowest_det(x, y, start, end):
@@ -357,17 +359,17 @@ def snap_flat_batch(
     xy: (n_v, 2) float64; rings are contiguous vertex spans, members
     contiguous ring spans.  Returns (results, store, columnar):
     results[m] = {tm_id: [poly]} where each poly is a list of ring
-    handles (a, b, rev) into ``store``; rings the scalar helpers build
-    are appended to ``store`` too (BatchSnapStore.ring_handle), so a
-    result never holds float points.
+    handles (a, b, rev) into ``store``; the dict lane appends the rings
+    it builds to ``store`` (BatchSnapStore.ring_handles), so a result
+    never holds float points.
 
     Members with one outer ring whose rings all take the fast path
-    (_columnar_level; the overwhelmingly common case, holed or not, and
-    whether or not the member is a multipolygon part) skip the
-    per-member dict entirely: results[m] is None and their output lands
-    in ``columnar``, a geometry table of arrays - (member, tm_id,
-    n_polys) per geometry, rings per polygon, (a, b, rev) per ring -
-    with zero per-member Python.  The snap stage
+    (_columnar_level; holed or not, and whether or not the member is a
+    multipolygon part: every member of perfbench's corpus, and almost no
+    dense-vertex ring) skip the per-member dict entirely: results[m] is
+    None and their output lands in ``columnar``, a geometry table of
+    arrays - (member, tm_id, n_polys) per geometry, rings per polygon,
+    (a, b, rev) per ring - with zero per-member Python.  The snap stage
     (operators.snap_tiles._process_batch) merges ``columnar`` and the
     dict results into one geometry table per (row, zoom); perfbench's
     kernel replay counts the None entries of ``results`` as the
@@ -587,19 +589,23 @@ def snap_flat_batch(
         for lv_i in levels
     ]
 
-    # -- per-member combine (light Python over ring descriptors) --------------
-    results: list = [{} if d else None for d in dead.tolist()]
-    for pi in range(n_members):
-        if dead[pi] or columnar_sel[pi]:
-            continue
-        r0 = int(mr_bounds[pi])
-        r1 = int(mr_bounds[pi + 1])
-        res: dict[int, list] = {}
-        for lv_i in levels:
-            out = _combine_member_level(lvl[lv_i], r0, r1, lv_i, hit_maps, keep_pl, rev_cfg, store)
-            if out is not None:
-                res[tm_ids_by_level[lv_i]] = out
-        results[pi] = res
+    # -- dict lane: per-member Python over the rings, one store block per
+    #    level for the rings it returns --------------------------------------
+    results: list = [None if c else {} for c in columnar_sel.tolist()]
+    bounds = mr_bounds.tolist()
+    dict_members = np.flatnonzero(~dead & ~columnar_sel).tolist()
+    for lv_i in levels if dict_members else ():
+        L = lvl[lv_i]
+        pts = list(zip(L["fx"].tolist(), L["fy"].tolist()))
+        ring_spans = list(zip((L["cs"] - L["base"]).tolist(), (L["ce"] - L["base"]).tolist()))
+        polys = [
+            (pi, _combine_member_level(pts, ring_spans, bounds[pi], bounds[pi + 1], lv_i, hit_maps, config))
+            for pi in dict_members
+        ]
+        polys = [(pi, p) for pi, p in polys if p]
+        handles = iter(store.ring_handles([ring for _, p in polys for poly in p for ring in poly], lv_i))
+        for pi, p in polys:
+            results[pi][tm_ids_by_level[lv_i]] = [[next(handles) for _ in poly] for poly in p]
     store.finish()
     return results, store, tuple(map(np.concatenate, zip(*col_parts)))
 
@@ -630,11 +636,10 @@ def _unindexable_members(xy, vpoly, ext0, ext1, deepest_res, deepest_size, confi
 def _assembly_arrays(lv_i, seg_s, ix, iy, starts, vring, ring_start, ring_len, alive_seg, hit_maps, store):
     """Vectorized snap.go:366-403 pre-computation for one level.
 
-    Produces, per ring: compact kept-point span [cs, ce2) (store-global
-    offsets), status (_FAST/_PL/_SCALAR) and the winding determinant (for
-    the _classify_rings fast path).  The dedupe prefilter's content hash
-    is computed later, only for members with more than one ring
-    (_combine_member_level)."""
+    Produces, per ring: the kept-point span [cs, ce) and its span
+    [cs, ce2) without the closing point (store-global offsets), status
+    (_FAST/_PL/_SCALAR), the winding determinant (for the _classify_rings
+    fast path) and the kept points' floats ``fx``/``fy``."""
     n_segs = vring.size
     n_rings = ring_start.size
     cnt = starts[1:] - starts[:-1]
@@ -723,9 +728,9 @@ def _assembly_arrays(lv_i, seg_s, ix, iy, starts, vring, ring_start, ring_len, a
 
 
 def _point_hashes(fx, fy):
-    """Per-point mix of the float bit patterns; a ring's content hash for
-    the dedupe prefilter is its sum over the ring (uint64, wrapping), so
-    it is rotation and reversal invariant."""
+    """Per-point mix of the float bit patterns; a ring's content hash
+    (_dict_members) is its sum over the ring (uint64, wrapping), so it
+    is rotation and reversal invariant."""
     return fx.view(np.uint64) * _HASH_C1 + fy.view(np.uint64) * _HASH_C2
 
 
@@ -859,93 +864,29 @@ def _ray_intersect_np(px, py, sx, sy, ex, ey):
     return below | (mid & (rs != ds) & (rs <= ds)), on | (mid & (rs == ds))
 
 
-def _hash_tuple_ring(ring) -> int:
-    """Content hash of a scalar-path ring (a list of float tuples) for the
-    dedupe prefilter in _combine_member_level (_point_hashes summed)."""
-    if not ring:
-        return 0
-    arr = np.asarray(ring, dtype=np.float64)
-    return int(_point_hashes(arr[:, 0], arr[:, 1]).sum(dtype=np.uint64))
-
-
-def _combine_member_level(L, r0, r1, lv_i, hit_maps, keep_pl, rev_cfg, store):
+def _combine_member_level(pts, ring_spans, r0, r1, lv_i, hit_maps, config):
     """snap.addPointsAndSnap's per-ring tail (snap.go:93-155) for one
-    (member, level) over the precomputed ring descriptors.
-
-    Returns the polygons list for the level, or None when the level is
-    dead for this member (outer ring collapsed, snap.go:97-99).  Rings
-    the scalar helpers build (lists of float tuples) are appended to
-    ``store`` at the end, so every returned ring is an (a, b, rev)
-    handle."""
-    status = L["status"]
-    cs = L["cs"]
-    ce = L["ce"]
-    ce2 = L["ce2"]
-    det = L["det"]
-    fx = L["fx"]
-    fy = L["fy"]
-    base = L["base"]
-    outers: list = []  # (a, b, rev) store handles or lists of float tuples
+    (member, level), on the scalar kernel's own helpers: each ring's kept
+    points ``pts[a:b]`` (the level's kept points as float tuples, ``(a, b)
+    = ring_spans[ring]``, the ring's [cs, ce)) go through _cleanup_new_ring
+    with the ring's hit-multiple map, and the cleaned rings through
+    _polygons_for_level.  Returns the level's polygons of float rings,
+    empty when the level has none or is dead for this member (outer ring
+    collapsed, snap.go:97-99)."""
+    outers: list = []
     inners: list = []
-    pls: list = []
+    points_and_lines: list = []
     for gid in range(r0, r1):
         ring_idx = gid - r0
-        is_outer = ring_idx == 0
-        st = status[gid]
-        if st == _SCALAR:
-            acc = _ring_floats(fx, fy, int(cs[gid]) - base, int(ce[gid]) - base, False)
-            hm = hit_maps.get((lv_i, gid), _EMPTY_HITS)
-            o, i, p = _cleanup_new_ring(acc, is_outer, hm, ring_idx)
-            outers.extend(o)
-            inners.extend(i)
-            pls.extend(p)
-        elif st == _PL:
-            pls.append((int(cs[gid]), int(ce2[gid]), False))
-        else:
-            d = det[gid]
-            if is_outer:
-                outers.append((int(cs[gid]), int(ce2[gid]), bool(d < 0)))
-            else:
-                inners.append((int(cs[gid]), int(ce2[gid]), bool(d > 0)))
-        if is_outer and not outers and (not keep_pl or not pls):
-            return None
-
-    def floats(r):
-        return _ring_floats(fx, fy, r[0] - base, r[1] - base, r[2]) if isinstance(r, tuple) else r
-
-    # dedupe equal rings across outers+inners (snap.go:177-249); hashes
-    # are sums over the same floats the scalar compares, so hash-unique
-    # rings are provably unequal and skip the scalar dedupe entirely
-    n_all = len(outers) + len(inners)
-    if n_all > 1:
-        sigs = []
-        for ring in outers + inners:
-            if isinstance(ring, tuple):
-                a, b = ring[0] - base, ring[1] - base
-                sigs.append((b - a, int(_point_hashes(fx[a:b], fy[a:b]).sum(dtype=np.uint64))))
-            else:
-                sigs.append((len(ring), _hash_tuple_ring(ring)))
-        if len(sigs) != len(set(sigs)):
-            outers = [floats(r) for r in outers]
-            inners = [floats(r) for r in inners]
-            outers, inners = _dedupe_inners_outers(outers, inners)
-
-    if inners:
-        outers_m = [floats(r) for r in outers]
-        inners_m = [floats(r) for r in inners]
-        polygons = _match_inners_to_polygons([[o] for o in outers_m], inners_m, (r1 - r0) > 1)
-    else:
-        polygons = [[o] for o in outers]
-
-    def handle(r):
-        return r if isinstance(r, tuple) else store.ring_handle(r, lv_i)
-
-    out = [[(a, b, rev != rev_cfg) for a, b, rev in map(handle, poly)] for poly in polygons]
-    if keep_pl:
-        out += [[handle(pl)] for pl in pls]
-    return out or None
+        a, b = ring_spans[gid]
+        o, i, p = _cleanup_new_ring(pts[a:b], ring_idx == 0, hit_maps.get((lv_i, gid), {}), ring_idx)
+        if ring_idx == 0 and not o and (not config.keep_points_and_lines or not p):
+            return []
+        outers += o
+        inners += i
+        points_and_lines += p
+    return _polygons_for_level(outers, inners, points_and_lines, r1 - r0 > 1, config)
 
 
-_EMPTY_HITS: dict = {}
 # the columnar lane's geometry table with no rows
 _NO_GEOMETRIES = (*(np.empty(0, dtype=np.int64) for _ in range(6)), np.empty(0, dtype=bool))

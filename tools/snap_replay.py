@@ -8,11 +8,16 @@ order, and runs ``operators.snap_tiles._process_batch`` over them in
 stage's input columns) on NetherlandsRDNewQuad at zooms 5/9/12, under two
 configs: the default (``ignore_outside_grid``) and
 ``keep_points_and_lines`` + ``reverse_winding_order``.  Each config
-replays two layouts of the same polygons: ``polygon`` (the corpus as
-written) and ``multi3`` (consecutive runs of three spans, the last run
-possibly shorter, each written as one MULTIPOLYGON keyed by its first
-span's (doc_id, span_idx)), so multipolygon parts take the same kernel
-lanes as polygons.
+replays three layouts: ``polygon`` (the corpus as written), ``multi3``
+(consecutive runs of three spans, the last run possibly shorter, each
+written as one MULTIPOLYGON keyed by its first span's (doc_id,
+span_idx)), so multipolygon parts take the same kernel lanes as
+polygons, and ``dense``: each span's keys, with a seeded 60-vertex ring
+at its first vertex instead of its polygon (radius 40 m, +-30% radial
+noise; every fourth ring has two clockwise 10-vertex holes of radius
+8 m).  At zoom 5 such rings snap with backtracks and self-tangencies,
+so nearly every member takes the kernel's dict lane, which the
+corpus's own polygons never reach.
 
 For each config and layout it prints one JSON line:
 
@@ -35,7 +40,9 @@ from __future__ import annotations
 import argparse
 import hashlib
 import json
+import math
 import os
+import random
 import re
 import statistics
 import sys
@@ -67,6 +74,27 @@ def multi3_spans(spans):
         run = spans[i : i + 3]
         parts = ", ".join(wkt[wkt.index("(") :] for _, _, wkt in run)
         out.append((run[0][0], run[0][1], "MULTIPOLYGON (" + parts + ")"))
+    return out
+
+
+def _ring_text(cx, cy, radii, sign=1) -> str:
+    """A closed WKT ring of ``len(radii)`` points around (cx, cy), counter-
+    clockwise (``sign`` 1) or clockwise (-1)."""
+    angles = [sign * 2 * math.pi * k / len(radii) for k in range(len(radii))]
+    pts = [(cx + r * math.cos(a), cy + r * math.sin(a)) for a, r in zip(angles, radii)]
+    return "(" + ", ".join(f"{x:.3f} {y:.3f}" for x, y in pts + pts[:1]) + ")"
+
+
+def dense_spans(spans, seed: int):
+    """``spans`` rewritten as dense-vertex polygons at their first vertex."""
+    rng = random.Random(seed)
+    out = []
+    for i, (doc_id, span_idx, wkt) in enumerate(spans):
+        cx, cy = (float(m.group()) for _, m in zip(range(2), _NUMBER.finditer(wkt)))
+        rings = [_ring_text(cx, cy, [40 * rng.uniform(0.7, 1.3) for _ in range(60)])]
+        if i % 4 == 3:  # two holes, inside the outer's 28 m minimum radius
+            rings += [_ring_text(hx, cy, [8] * 10, -1) for hx in (cx - 15, cx + 15)]
+        out.append((doc_id, span_idx, "POLYGON (" + ", ".join(rings) + ")"))
     return out
 
 
@@ -140,7 +168,7 @@ def main() -> None:
 
     tms = load_embedded(GRID)
     polygons = corpus_spans(args.seed, args.docs)
-    layouts = {"polygon": polygons, "multi3": multi3_spans(polygons)}
+    layouts = {"polygon": polygons, "multi3": multi3_spans(polygons), "dense": dense_spans(polygons, args.seed)}
     configs = {
         "default": SnapConfig(ignore_outside_grid=True),
         "keep_pl_reverse": SnapConfig(
